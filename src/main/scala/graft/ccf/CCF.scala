@@ -183,12 +183,11 @@ object CCF {
    * reads the deduped blocks directly instead of re-aggregating the
    * pre-dedup emit set in both union branches. Lineage depth stays O(1).
    *
-   * NOT thread-safe per session: the fixpoint scopes
-   * `spark.sql.shuffle.partitions` (and, for sub-100k-pair inputs, disables
-   * AQE — per-stage re-planning latency dominates sub-second rounds) on the
-   * session for the duration of the loop and restores it after; queries
-   * planned concurrently on the SAME session would see the override. Run
-   * concurrent fixpoints on separate sessions (`spark.newSession()`).
+   * NOT thread-safe per session: the declarative loop scopes
+   * `spark.sql.shuffle.partitions` on the session for the duration of the
+   * loop and restores it after; queries planned concurrently on the SAME
+   * session would see the override. Run concurrent fixpoints on separate
+   * sessions (`spark.newSession()`).
    *
    * @param edges two-column DataFrame (src, dst); any orderable column type,
    *              both columns the same type. Column names are irrelevant.
@@ -362,40 +361,12 @@ object CCF {
     // (e.g. 32+) are task-scheduling-bound, ~1 s/fixpoint of pure overhead.
     // Target ~100k pairs/partition, clamped to [1, session default]; restored
     // after the loop (the loop's jobs are all eager, so scoping is exact).
-    // Intermediate growth beyond the estimate is handled by AQE skew/coalesce
-    // — which is itself disabled for toy inputs, where its per-stage
-    // re-planning costs more than any re-plan could save.
+    // Intermediate growth beyond the estimate is handled by AQE skew/coalesce.
     val spark = edges.sparkSession
     val shuffleKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val codegenKey = "spark.sql.codegen.wholeStage"
-    val broadcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val preferSmjKey = "spark.sql.join.preferSortMergeJoin"
     val origShuffle = spark.conf.get(shuffleKey)
-    val origAqe = spark.conf.get(aqeKey)
-    val origCodegen = spark.conf.get(codegenKey)
-    val origBroadcast = spark.conf.get(broadcastKey)
-    val origPreferSmj = spark.conf.get(preferSmjKey)
     val sized = math.max(1L, math.min(origShuffle.toLong, nInput / 100000L + 1L))
-    val toyInput = nInput < 100000L
     spark.conf.set(shuffleKey, sized.toString)
-    if (toyInput) {
-      // Sub-second rounds are latency-bound, not throughput-bound: AQE's
-      // per-stage re-planning and whole-stage codegen's source generation +
-      // compile-cache lookups cost more than they save below ~100k pairs.
-      // Both stay ON for real inputs, where they are the scale path (measured
-      // r4: AQE off on the 1.2M-pair sf0.1 fixpoint is ~30% SLOWER — its
-      // per-exchange coalescing beats the loop's one-size-per-round number).
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(codegenKey, "false")
-      // Prefer a shuffled-hash join over broadcast for the re-emit join: at
-      // toy scale the broadcast's driver collect+publish round-trip per round
-      // costs more than the 1-partition hash join, whose probe-side exchange
-      // is REUSED from the min-aggregation's shuffle (same key) — the round
-      // collapses to one map + one reduce stage, the reference's MR shape.
-      spark.conf.set(broadcastKey, "-1")
-      spark.conf.set(preferSmjKey, "false")
-    }
     // Per-round timing trace for perf work: SPARK_GRAFT_CCF_TRACE=1
     val trace = sys.env.get("SPARK_GRAFT_CCF_TRACE").contains("1")
     // Blowup detector state (see [[auto]]); inert when blowupFactor == 0.
@@ -471,8 +442,8 @@ object CCF {
       // intermediate pair set can blow up orders of magnitude past the input
       // (string-keyed chains — see the class scaladoc), and a partition count
       // sized once from the input would serialize those rounds. This is the
-      // latency path's stand-in for AQE (disabled for toy inputs above); with
-      // AQE on, its coalescing does the same from runtime stats.
+      // path's stand-in for AQE sizing; with AQE on, its coalescing does the
+      // same from runtime stats.
       val resized = math.max(1L, math.min(origShuffle.toLong, rows / 32000L + 1L))
       if (resized != spark.conf.get(shuffleKey).toLong)
         spark.conf.set(shuffleKey, resized.toString)
@@ -482,13 +453,7 @@ object CCF {
       if (trace) System.err.println(f"[ccf-trace] round $iteration%2d rows=$rows%9d " +
         f"newPairs=$newPairs%9d parts=$resized%3d ${(System.nanoTime() - t0) / 1e9}%6.3f s")
     }
-    } finally {
-      spark.conf.set(shuffleKey, origShuffle)
-      spark.conf.set(aqeKey, origAqe)
-      spark.conf.set(codegenKey, origCodegen)
-      spark.conf.set(broadcastKey, origBroadcast)
-      spark.conf.set(preferSmjKey, origPreferSmj)
-    }
+    } finally spark.conf.set(shuffleKey, origShuffle)
     if (switchOut && !converged)
       // Keep BOTH live checkpoints until the successor engine has materialized
       // its own topology from `pairs` (which reads prevCkpt); freed by [[auto]].
@@ -507,11 +472,7 @@ object CCF {
     *
     * Join strategy for the re-emit join (bi ⋈ stats on src) is left to the
     * planner: at scale, AQE picks from observed sizes (stats is bounded by
-    * the node count — broadcast only if it truly fits); on sub-100k-pair
-    * fixpoints [[run]] steers it to a shuffled-hash join whose probe-side
-    * exchange is reused from the aggregation's shuffle (both hash by src),
-    * so a round is one map + one reduce stage — at toy scale a broadcast's
-    * driver collect+publish round-trip per round costs more than the join. */
+    * the node count — broadcast only if it truly fits). */
   private[ccf] def iterateBasic(pairs: DataFrame): DataFrame = {
     val bi = bidirect(pairs)
     val stats = bi.groupBy("src").agg(min("dst").as("mn")).where(col("mn") < col("src"))

@@ -1,7 +1,5 @@
 package graft.ccf
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Runnable worked example — the CCF paper's Figure 5 graph, matching the
  * reference's example driver (`CCFConnectedComponents.scala:234-299`,
@@ -16,13 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Demo {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-ccf-demo")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     val edges = Generators.toDF(spark, Seq(
       "A" -> "B", "B" -> "D", "D" -> "E", "A" -> "C", "A" -> "E",

@@ -64,13 +64,7 @@ object Experiments {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_experiment_results.csv")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     // Untimed JVM/planner warmup: a few throwaway fixpoints per variant so
     // the matrix's first rows don't absorb one-time class-loading/C2-JIT
     // cost. The reference pays the same warmup inside its first row (its

@@ -110,10 +110,10 @@ object PointerJump {
     val nBi = CCF.observedOrCount(inObs, "pj bidirect")(Map("n" -> bi0.count()))("n")
     val bi = org.apache.spark.sql.graft.Bridge.withStats(bi0, nBi)
 
-    // Same toy-input tuning as CCF.run: sub-100k-pair fixpoints are
-    // latency-bound — AQE's per-stage re-planning and codegen compile-cache
-    // lookups dominate sub-second rounds (measured: 1.7 s/round with AQE on
-    // vs ~0.2 s without, at n=5k). Scale-path defaults stay on otherwise.
+    // Toy-input tuning: sub-100k-pair fixpoints are latency-bound — AQE's
+    // per-stage re-planning and codegen compile-cache lookups dominate
+    // sub-second rounds (measured: 1.7 s/round with AQE on vs ~0.2 s
+    // without, at n=5k). Scale-path defaults stay on otherwise.
     val shuffleKey = "spark.sql.shuffle.partitions"
     val aqeKey = "spark.sql.adaptive.enabled"
     val codegenKey = "spark.sql.codegen.wholeStage"

@@ -59,39 +59,18 @@ object GraphQueries {
   private def pagerankOutE(s: SparkSession, dir: String): DataFrame = {
     val e = edges(s, dir)
     val deg = degrees(s, dir)
-    outECache.getOrElseUpdate(s, dir)(SharedBuilds.timed("pagerank_outE")({
+    outECache.getOrElseUpdate(s, dir)(SharedBuilds.timed("pagerank_outE")(
       // deg is O(nodes) — broadcast it below the same node bound the
       // per-round rank broadcast uses; past the bound the planner shuffles
-      // this one-time build join, never the rounds.
-      val joined = CCF.bidirect(e)
+      // this one-time build join, never the rounds. Plain checkpoint, not a
+      // dst-partitioned one: the rounds keep their one contribution
+      // exchange, so partial collect_list and AQE coalescing stay (the
+      // exchange-free r18 build was 5x slower at local[32], OPTIMIZATION_r19).
+      CCF.bidirect(e)
         .join(hint(deg.select(col("node").as("src"), col("deg").as("outdeg")),
           broadcastRanks(s, deg.count())), "src")
-      // r19 (VERDICT r18 #1, driver-measured): the r18 "zero-exchange" g2
-      // rounds — outE hash-partitioned by dst once in the build so each
-      // round's collect_list aggregation rides the fixed layout with NO
-      // exchange — REGRESSED 5x at local[32] in the driver's environment
-      // (g2 2.80 → 14.02 s; the SAME code read 2.27 s at 8 cores, scaling
-      // ratio 0.16). Removing the exchange also removes partial aggregation
-      // and pins the complete-mode ObjectHashAggregate (collect_list +
-      // sortedTermSum — object mode, no codegen, unlike g3's integer
-      // HashAggregate where the same move is a driver-confirmed 2.3x WIN)
-      // to a fixed partition layout AQE can neither coalesce nor skew-split
-      // (guide §2.5: AQE only helps across an exchange). Default is
-      // therefore the r17 shape: plain checkpoint, rounds plan
-      // [broadcast-join ranks → partial collect_list → one Exchange(dst) →
-      // final], AQE free to coalesce — driver-measured 2.80 s at 32 cores.
-      // The zero-exchange build stays available behind this conf for
-      // low-parallelism deployments where it measured faster.
-      if (s.conf.getOption(RideDstPartitioningKey).exists(_.toBoolean))
-        joined.repartition(col("dst")).eagerCheckpointKeepPartitioning()
-      else joined.eagerCheckpoint()
-    }))
+        .eagerCheckpoint()))
   }
-
-  /** Opt-in: build [[pagerankOutE]] hash-partitioned by dst so parity
-    * rounds plan zero exchanges (the r18 shape). Off by default — see the
-    * build-site comment for the driver's 32-core measurement. */
-  private[queries] val RideDstPartitioningKey = "spark.graft.g2.rideBuildPartitioning"
 
   /** Memoized dst-partitioned bidirected edge set for g3 (r18, guide §2.4):
     * every LPA round aggregates by (dst, label) then by dst, so with the
@@ -234,13 +213,14 @@ object GraphQueries {
     // Per-neighbor float sums go through the same order-deterministic
     // (key, term)-sorted sequential fold as t6 (`SortedTermSum` here,
     // `list(x ORDER BY src, x)` + list_reduce in the oracle) so ranks are
-    // bit-identical across engines. At 100 TB you would swap the fold for a
-    // plain codegen SUM (order-free within fp tolerance) — the join/agg
-    // shape per round is unchanged; the fold is the oracle-parity choice.
+    // bit-identical across engines. Past [[MaxParityInDegree]] the core
+    // swaps the fold for a plain codegen SUM by itself (order-free within fp
+    // tolerance; same join/agg shape per round) — every fixture's max degree
+    // is far below it, so g2 stays on the oracle-parity fold.
     "g2_pagerank" -> ((s, dir) =>
       pagerankCore(pagerankOutE(s, dir),
         degrees(s, dir).select(col("node").as("src"), col("deg").as("outdeg")),
-        PagerankIters, pagerankParityStep)),
+        PagerankIters)),
 
     // LABEL PROPAGATION (g3, r10): synchronous community detection over the
     // co-purchase graph — LpaIters fixed rounds of "adopt the most frequent
@@ -269,10 +249,10 @@ object GraphQueries {
     * at this graph's size. */
   private[graft] def g2RoundFrame(s: SparkSession, dir: String): DataFrame = {
     val outE = pagerankOutE(s, dir)
-    val deg = degrees(s, dir)
-    val n = deg.count()
-    val ranks = deg.select(col("node"), lit(1.0 / n).as("rank"))
-    pagerankParityStep(outE, hint(ranks, broadcastRanks(s, n)), 0.15 / n)
+    val deg = degrees(s, dir).select(col("node").as("src"), col("deg").as("outdeg"))
+    val (n, step) = pagerankPlan(deg)
+    val ranks = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
+    step(outE, hint(ranks, broadcastRanks(s, n)), 0.15 / n)
   }
 
   private[graft] def g3RoundFrame(s: SparkSession, dir: String): DataFrame = {
@@ -443,11 +423,9 @@ object GraphQueries {
     // exchanges, and the whole wedge→close→explode→partial-agg chain runs
     // as one map-side pipeline (the only remaining exchange is the final
     // per-node count). Past the bound the self-join keeps the shuffled
-    // equi-join shape, unchanged.
-    val bcastWedge = e.sparkSession.conf
-      .getOption(BroadcastWedgeKey).map(_.toBoolean).getOrElse(true)
+    // equi-join shape, unchanged (PlanSpec pins both shapes).
     val wedgeBuild =
-      if (bcastWedge && nEdges <= maxBroadcast) broadcast(oriented.as("b"))
+      if (nEdges <= maxBroadcast) broadcast(oriented.as("b"))
       else oriented.as("b")
     val wedges = oriented.as("a").join(wedgeBuild,
         col("a.u") === col("b.u") && col("a.vkey") < col("b.vkey"))
@@ -483,47 +461,65 @@ object GraphQueries {
 
   /** Damped (0.85) PageRank over a canonical (src < dst) edge set, treated
     * as undirected via [[CCF.bidirect]] — parametric in rounds for the g2
-    * notes above and the fixture spec.
+    * notes above and the fixture spec. Builds the tables [[pagerankCore]]
+    * takes; `step` as there.
     *
     * Scale shape per round: ONE shuffle of the out-edge stream hash-joined
     * against the O(nodes) rank table, then ONE aggregation exchange keyed by
-    * destination (collect_list is bounded by in-degree; a hub-skewed graph
-    * would swap the fold for plain SUM + AQE skew splitting — see g2 notes).
-    * The out-edge table (edges + contributor degree) is built once and
-    * eagerly checkpointed; each round's rank table is checkpointed so
-    * planning stays O(1) in rounds (same pattern as the CCF fixpoint). */
-  private[queries] def pagerankOf(e0: DataFrame, iters: Int): DataFrame = {
+    * destination. The out-edge table (edges + contributor degree) is built
+    * once and eagerly checkpointed; each round's rank table is checkpointed
+    * so planning stays O(1) in rounds (same pattern as the CCF fixpoint). */
+  private[queries] def pagerankOf(e0: DataFrame, iters: Int,
+                                  step: Option[PagerankStep] = None): DataFrame = {
     val bi = CCF.bidirect(e0)
     val deg = bi.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // the per-round join's build input: each out-edge with its contributor's
     // out-degree attached (materialized once, reused every round)
     val outE = bi.join(deg, "src").eagerCheckpoint()
-    pagerankCore(outE, deg, iters, pagerankParityStep)
+    pagerankCore(outE, deg, iters, step)
   }
 
-  /** The shared round loop: `outE` = (src, dst, outdeg) build input (already
-    * materialized), `deg` = (src, outdeg) for rank init. The gated g2 def
-    * enters here with the MEMOIZED outE/degrees so its bench timing is the
-    * rounds themselves, not a per-query rebuild of the edge stream. */
+  /** One PageRank round: (outE, ranks, base) => next ranks. */
+  private[queries] type PagerankStep = (DataFrame, DataFrame, Double) => DataFrame
+
+  /** The one PageRank round loop: `outE` = (src, dst, outdeg) build input
+    * (already materialized), `deg` = (src, outdeg) for rank init. The gated
+    * g2 def enters here with the MEMOIZED outE/degrees so its bench timing
+    * is the rounds themselves, not a per-query rebuild of the edge stream.
+    *
+    * The step is picked from the degree table: its one aggregate yields the
+    * node count (rank init) and the max degree ([[pagerankStrategy]]) in the
+    * same job. `step` overrides the pick (specs compare the two steps). */
   private[queries] def pagerankCore(outE: DataFrame, deg: DataFrame, iters: Int,
-      step: (DataFrame, DataFrame, Double) => DataFrame): DataFrame = {
-    val n = deg.count()
+                                    step: Option[PagerankStep] = None): DataFrame = {
+    val (n, picked) = pagerankPlan(deg)
+    val round = step.getOrElse(picked)
     var ranks = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
     val bcast = broadcastRanks(deg.sparkSession, n)
     for (_ <- 1 to iters)
-      ranks = step(outE, hint(ranks, bcast), 0.15 / n).eagerCheckpoint()
+      ranks = round(outE, hint(ranks, bcast), 0.15 / n).eagerCheckpoint()
     ranks.select(col("node"), col("rank").as("pagerank"))
+  }
+
+  /** Node count and selected step of a (src, outdeg) degree table, from one
+    * aggregate job. */
+  private def pagerankPlan(deg: DataFrame): (Long, PagerankStep) = {
+    val stats = deg.agg(count(lit(1)), max(col("outdeg"))).head()
+    val maxDeg = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+    val step: PagerankStep =
+      if (pagerankStrategy(maxDeg) == "fast") pagerankFastStep else pagerankParityStep
+    (stats.getLong(0), step)
   }
 
   /** The per-round rank table is O(nodes) x 16 B — broadcast it below
     * [[MaxBroadcastNodes]] (conf-overridable) so each round's join is
     * map-side and the out-edge stream never re-shuffles into the join
     * (measured 6.9 → 5.7 s at sf0.1; the remaining round cost is the
-    * parity fold's per-dst contribution exchange, which plain-SUM
-    * pagerankFastOf avoids). Past the threshold the hint is dropped: the
-    * planner shuffles the exchange-keyed join, the 1000-executor layout
-    * (where you would ALSO pre-partition outE by src once and let every
-    * round reuse that exchange). */
+    * parity fold's per-dst contribution exchange, which the plain-SUM
+    * [[pagerankFastStep]] shrinks to partials). Past the threshold the hint
+    * is dropped: the planner shuffles the exchange-keyed join, the
+    * 1000-executor layout (where you would ALSO pre-partition outE by src
+    * once and let every round reuse that exchange). */
   private def broadcastRanks(s: SparkSession, n: Long): Boolean =
     n <= s.conf.getOption(MaxBroadcastNodesKey)
       .map(_.toLong).getOrElse(MaxBroadcastNodes)
@@ -551,23 +547,13 @@ object GraphQueries {
       .select(col("dst").as("node"),
         (lit(base) + lit(0.85) * col("s")).as("rank"))
 
-  /** The 100 TB path for g2: identical per-round join/agg shape but plain
-    * codegen SUM for the neighbor fold — partial aggregation combines
-    * map-side, so each round's exchange carries one partial per (partition,
-    * dst) instead of EVERY contribution row (the collect_list the
-    * order-deterministic fold forces). Order-nondeterministic float sums:
-    * per-node drift vs [[pagerankOf]] is ≤ in_deg·ulp per round — spec pins
-    * agreement to 1e-12. Same relationship as d5 (labeled parity baseline)
-    * vs d7 (scale path). */
-  private[queries] def pagerankFastOf(e0: DataFrame, iters: Int): DataFrame = {
-    val bi = CCF.bidirect(e0)
-    val deg = bi.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val outE = bi.join(deg, "src").eagerCheckpoint()
-    pagerankCore(outE, deg, iters, pagerankFastStep)
-  }
-
-  /** One fast round (no checkpoint): join, then a plain map-side-combining
-    * SUM per dst. */
+  /** One fast round (no checkpoint), the hub-safe path for g2: identical
+    * per-round join/agg shape but plain codegen SUM for the neighbor fold —
+    * partial aggregation combines map-side, so each round's exchange
+    * carries one partial per (partition, dst) instead of EVERY contribution
+    * row (the collect_list the order-deterministic fold forces).
+    * Order-nondeterministic float sums: per-node drift vs the parity fold is
+    * ≤ in_deg·ulp per round — spec pins agreement to 1e-12. */
   private[queries] def pagerankFastStep(outE: DataFrame, ranks: DataFrame,
                                         base: Double): DataFrame =
     outE.join(ranks, col("src") === col("node"))
@@ -580,41 +566,23 @@ object GraphQueries {
   private[queries] val PagerankIters = 5
 
   /** Above this max in-degree the parity fold's per-dst `collect_list`
-    * state (~24 B/contribution → ~24 MB per hub node at the default) risks
-    * a single-task OOM, and [[pagerankAuto]] swaps in the plain-SUM
-    * [[pagerankFastStep]] (map-side partials, skew-immune, ≤1e-12 drift).
-    * Override per session with [[MaxParityInDegreeKey]]. */
-  private val MaxParityInDegree = 1L * 1000 * 1000
-  private[queries] val MaxParityInDegreeKey = "spark.graft.g2.maxParityInDegree"
+    * state (~24 B/contribution → ~24 MB per hub node) risks a single-task
+    * OOM, and [[pagerankCore]] swaps in the plain-SUM [[pagerankFastStep]]
+    * (map-side partials, skew-immune, ≤1e-12 drift). */
+  private[queries] val MaxParityInDegree = 1L * 1000 * 1000
 
-  /** Strategy pick for [[pagerankAuto]], observed from the degree table the
-    * build already computes (degrees are symmetric here — edges are
-    * bidirected — so max out-degree == max in-degree): "parity" keeps the
-    * order-deterministic fold, "fast" the map-side-partial SUM. The same
-    * observe-then-choose shape as `CCF.auto` (rounds) and g1 (broadcast vs
-    * shuffle) — the third auto-selection. */
-  private[queries] def pagerankStrategy(deg: DataFrame): String = {
-    val cap = deg.sparkSession.conf.getOption(MaxParityInDegreeKey)
-      .map(_.toLong).getOrElse(MaxParityInDegree)
-    val maxDeg = deg.agg(max(col("outdeg"))).head().getLong(0)
-    if (maxDeg > cap) "fast" else "parity"
-  }
-
-  /** Skew-aware PageRank: one pass over the already-materialized degree
-    * table decides between the oracle-parity fold and the hub-safe SUM
-    * path; both share the identical per-round join/agg plan shape. */
-  private[queries] def pagerankAuto(e0: DataFrame, iters: Int): DataFrame = {
-    val bi = CCF.bidirect(e0)
-    val deg = bi.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val outE = bi.join(deg, "src").eagerCheckpoint()
-    val step: (DataFrame, DataFrame, Double) => DataFrame =
-      if (pagerankStrategy(deg) == "fast") pagerankFastStep else pagerankParityStep
-    pagerankCore(outE, deg, iters, step)
-  }
+  /** The step [[pagerankCore]] runs, from the observed max degree (degrees
+    * are symmetric here — edges are bidirected — so max out-degree == max
+    * in-degree): "parity" keeps the order-deterministic fold, "fast" the
+    * map-side-partial SUM. The same observe-then-choose shape as `CCF.auto`
+    * (rounds) and g1 (broadcast vs shuffle). */
+  private[queries] def pagerankStrategy(maxDeg: Long): String =
+    if (maxDeg > MaxParityInDegree) "fast" else "parity"
 
   /** Unrolled PageRank oracle: r0 (uniform) then `iters` chained CTE steps,
-    * each the exact SQL twin of one [[pagerankOf]] round (CAST(0.15/0.85 AS
-    * DOUBLE) so DuckDB's decimal literals don't change the IEEE op chain). */
+    * each the exact SQL twin of one [[pagerankParityStep]] round
+    * (CAST(0.15/0.85 AS DOUBLE) so DuckDB's decimal literals don't change
+    * the IEEE op chain). */
   private def pagerankSql(iters: Int): String = {
     val steps = (1 to iters).map { k =>
       s"""r$k AS (SELECT e2.dst AS node,
@@ -640,12 +608,6 @@ object GraphQueries {
     * over). Override per session with [[MaxBroadcastEdgesKey]]. */
   private val MaxBroadcastEdges = 64L * 1000 * 1000
   private[queries] val MaxBroadcastEdgesKey = "spark.graft.g1.maxBroadcastEdges"
-
-  /** Separate opt-out for the wedge self-join's broadcast (r19): the
-    * closing join's broadcast is long-measured; the wedge broadcast shares
-    * its edge bound but can be disabled independently for A/Bs and for
-    * deployments where the shuffled self-join's AQE rebalancing wins. */
-  private[queries] val BroadcastWedgeKey = "spark.graft.g1.broadcastWedge"
 
   val oracles: Map[String, String] = Map(
     "ccf_components" ->
@@ -712,7 +674,7 @@ object GraphQueries {
          |FROM (SELECT unnest([a, b, c]) AS node FROM tri)
          |GROUP BY node""".stripMargin,
 
-    // exact twin of pagerankOf: same op order, same (src, value) sorted
+    // exact twin of the parity round: same op order, same (src, value) sorted
     // sequential fold per destination — ranks bit-identical across engines
     "g2_pagerank" -> pagerankSql(PagerankIters),
 

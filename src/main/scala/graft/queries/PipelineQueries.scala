@@ -187,11 +187,6 @@ object PipelineQueries {
     })._2
   }
 
-  /** r18 profiler handle: the memoized day-1 stages (package-private so the
-    * optimization-round profiler can time the build + stage frames). */
-  private[queries] def profilingStages(s: SparkSession, d: String): CorpusStages =
-    stagesFor(s, d)
-
   /** Evict one session's memoized day-1 stages, unpersisting their
     * checkpoints (bench per-pass hygiene — without the free(), each pass
     * would stack another full set of stage blocks until GC). */

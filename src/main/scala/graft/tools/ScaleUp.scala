@@ -46,15 +46,7 @@ object ScaleUp {
     val tables: Option[Set[String]] =
       if (args.length == 4) Some(args(3).split(",").toSet) else None
     require(n >= 1, s"copies must be >= 1, got $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     run(spark, src, dst, n, tables)
     spark.stop()
   }

@@ -473,6 +473,29 @@ class PlanSpec extends SparkSpec {
     assert(fast.contains("partial_sum"), fast)
   }
 
+  test("g1 triangles: wedge build and closing edge list broadcast under the edge bound, neither at 0") {
+    // the library's hints only: Spark's own size-based broadcast is off, so
+    // every BroadcastExchange below comes from trianglesOf's edge bound
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val e = GraphBuilders.copurchaseEdges(spark, sf())
+    try {
+      spark.conf.set(key, "-1")
+      val p = finalPlan(GraphQueries.trianglesOf(e))
+      // AQE prints the final plan, then the initial one: count in the first
+      val fin = p.split("== Initial Plan ==")(0)
+      assert("BroadcastExchange".r.findAllIn(fin).size === 2, p)
+      assert("BroadcastHashJoin".r.findAllIn(fin).size === 2, p)
+      spark.conf.set(GraphQueries.MaxBroadcastEdgesKey, "0")
+      val p0 = finalPlan(GraphQueries.trianglesOf(e))
+      assert(!p0.contains("BroadcastExchange"), p0)
+      assert(!p0.contains("BroadcastHashJoin"), p0)
+    } finally {
+      spark.conf.set(key, prev)
+      spark.conf.unset(GraphQueries.MaxBroadcastEdgesKey)
+    }
+  }
+
   test("g3 LPA round: both aggregate levels combine map-side (partial_count, partial_max)") {
     val e = GraphBuilders.copurchaseEdges(spark, sf())
     val lab = e.select(org.apache.spark.sql.functions.col("src").as("node"))

@@ -560,10 +560,10 @@ class QueriesSpec extends SparkSpec {
 
   test("g2 pagerank: map-side-combining fast path agrees with the parity fold to 1e-12") {
     val e = graft.graph.GraphBuilders.copurchaseEdges(spark, sf())
-    val parity = GraphQueries.pagerankOf(e, 3)
+    def ranks(step: GraphQueries.PagerankStep) = GraphQueries.pagerankOf(e, 3, Some(step))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val fast = GraphQueries.pagerankFastOf(e, 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val parity = ranks(GraphQueries.pagerankParityStep)
+    val fast = ranks(GraphQueries.pagerankFastStep)
     assert(fast.keySet === parity.keySet)
     assert(parity.nonEmpty)
     for ((k, v) <- parity) assert(math.abs(fast(k) - v) < 1e-12, s"node $k")
@@ -571,24 +571,25 @@ class QueriesSpec extends SparkSpec {
 
   test("g2 pagerank: auto-selection swaps to the hub-safe SUM path on skew") {
     import spark.implicits._
+    // the pick is a pure function of the observed max degree, cut at the cap
+    val cap = GraphQueries.MaxParityInDegree
+    assert(GraphQueries.pagerankStrategy(cap) === "parity")
+    assert(GraphQueries.pagerankStrategy(cap + 1) === "fast")
+    // co-purchase degrees are modest: the core keeps the oracle-parity fold,
+    // bit for bit
     val e = graft.graph.GraphBuilders.copurchaseEdges(spark, sf())
-    // co-purchase degrees are modest: auto keeps the oracle-parity fold
-    assert(GraphQueries.pagerankStrategy(
-      graft.ccf.CCF.bidirect(e).groupBy("src").agg(count(lit(1)).as("outdeg"))) === "parity")
-    // force a "hub": drop the threshold below the star center's degree
+    val maxDeg = graft.ccf.CCF.bidirect(e).groupBy("src").count()
+      .agg(max(col("count"))).head().getLong(0)
+    assert(GraphQueries.pagerankStrategy(maxDeg) === "parity")
+    def ranks(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(ranks(GraphQueries.pagerankOf(e, 3)) ===
+      ranks(GraphQueries.pagerankOf(e, 3, Some(GraphQueries.pagerankParityStep))))
+    // the fast result on a hub-skewed star still agrees with parity
     val star = (2L to 40L).map(l => (1L, l)).toDF("src", "dst")
-    val starDeg = graft.ccf.CCF.bidirect(star).groupBy("src").agg(count(lit(1)).as("outdeg"))
-    spark.conf.set(GraphQueries.MaxParityInDegreeKey, "10")
-    try {
-      assert(GraphQueries.pagerankStrategy(starDeg) === "fast")
-      // and the auto result on the skewed graph still agrees with parity
-      val auto = GraphQueries.pagerankAuto(star, 3)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val parity = GraphQueries.pagerankOf(star, 3)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(auto.keySet === parity.keySet)
-      for ((k, v) <- parity) assert(math.abs(auto(k) - v) < 1e-12, s"node $k")
-    } finally spark.conf.unset(GraphQueries.MaxParityInDegreeKey)
+    val fast = ranks(GraphQueries.pagerankOf(star, 3, Some(GraphQueries.pagerankFastStep)))
+    val parity = ranks(GraphQueries.pagerankOf(star, 3, Some(GraphQueries.pagerankParityStep)))
+    assert(fast.keySet === parity.keySet)
+    for ((k, v) <- parity) assert(math.abs(fast(k) - v) < 1e-12, s"node $k")
   }
 
   test("e10 funnel: planted fixture — strict ordering, out-of-order stages don't count") {
