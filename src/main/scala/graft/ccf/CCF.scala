@@ -1,7 +1,7 @@
 package graft.ccf
 
 import graft.Checkpoints.EagerOps
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /**
@@ -49,9 +49,12 @@ import org.apache.spark.sql.functions._
  *    skew weakness the reference flags (`RESULTS.md:119`) disappears for the
  *    aggregation; the remaining join skew is handled by AQE skew-join splitting.
  *  - The whole round stays inside whole-stage codegen (no opaque lambdas).
- *  - The shuffle of `bi` by `src` is REUSED between the aggregation and the
- *    join (same exchange), so a round costs ~2 big shuffles, same as the
- *    reference's groupByKey+reduceByKey.
+ *  - A round costs one shuffle of partial minima, plus one of `bi` when
+ *    `stats` is too large to broadcast. Both union branches read `stats`
+ *    through the same exchange (the join side as a reused exchange); when
+ *    `stats` is broadcast, `bi` is not shuffled at all, otherwise the join
+ *    is a sort-merge join with its own `bi` exchange on `src` (PlanSpec pins
+ *    both shapes).
  *  - `newPairs` is a count over a materialized dataset, not an accumulator:
  *    accumulators in transformations over-count on task retry/recompute; a
  *    count is deterministic and drives convergence reproducibly.
@@ -82,10 +85,14 @@ import org.apache.spark.sql.functions._
  */
 object CCF {
 
-  /** Which iterate kernel to use; both produce identical results (reference
-    * `report.md:161`). Basic = declarative min-agg + join (preferred, codegen).
-    * SecondarySort = sort-within-partitions streaming kernel, the honest Spark
-    * analogue of the paper's Fig. 3 O(1)-memory reducer. */
+  /** The reference's kernel label (paper Fig. 2 Basic, Fig. 3 SecondarySort;
+    * identical results, reference `report.md:161`). Both labels run the one
+    * kernel on both engines: [[iterateBasic]] on the declarative engine,
+    * [[MicroFixpoint]]'s grouped kernel on the micro engine. Fig. 3's
+    * secondary sort exists to bound the reducer's state, and Basic's
+    * map-side partial `min` never builds a per-key neighbour list, so the
+    * sort buys nothing here; the sort-based kernel lost every same-window
+    * A/B once CCF-Dedup moved into the checkpoint (CHANGES.md). */
   sealed trait Variant
   case object Basic extends Variant
   case object SecondarySort extends Variant
@@ -191,9 +198,11 @@ object CCF {
    *
    * @param edges two-column DataFrame (src, dst); any orderable column type,
    *              both columns the same type. Column names are irrelevant.
+   * @param variant the reference's kernel label; both labels run the same
+   *                kernel (see [[Variant]])
    */
   def run(edges: DataFrame, variant: Variant = Basic, maxIterations: Int = 100): CCFResult =
-    runSwitchable(edges, variant, maxIterations, blowupFactor = 0L) match {
+    runSwitchable(edges, maxIterations, blowupFactor = 0L) match {
       case Left(r) => r
       case Right(_) => throw new IllegalStateException("unreachable: blowup switch disabled")
     }
@@ -244,15 +253,9 @@ object CCF {
    * graph runs ~4 extra cheap rounds and hands PointerJump a pair set
    * O(blowupFactor x |E|), while a web/social-shaped graph (pair sets peak
    * ~2-3x input) never switches and keeps CCF's cheaper rounds.
-   *
-   * `variant` picks the kernel for the CCF phase (VERDICT r06 #6): on shapes
-   * that trip the blowup detector, [[SecondarySort]]'s fused dedup rides the
-   * sort shuffle and roughly halves per-round shuffle volume on exactly the
-   * blowup rounds that dominate before the switch; results are identical
-   * either way (variant agreement is spec-proven).
    */
   def auto(edges: DataFrame, maxIterations: Int = 100, blowupFactor: Long = 8L,
-           denseDegree: Double = 16.0, variant: Variant = Basic): CCFResult = {
+           denseDegree: Double = 16.0): CCFResult = {
     require(edges.columns.length == 2,
       s"edge list must have 2 columns, got ${edges.columns.mkString(", ")}")
     if (denseDegree > 0) {
@@ -267,14 +270,14 @@ object CCF {
       if (m > 0 && 2.0 * m / nV > denseDegree)
         return PointerJump.run(edges, maxIterations)
     }
-    runSwitchable(edges, variant, maxIterations, blowupFactor) match {
+    runSwitchable(edges, maxIterations, blowupFactor) match {
       case Left(r) => r
       case Right(sw) if sw.iterations >= maxIterations =>
         // budget exhausted exactly at the switch point: honor the cap the
-        // way run() does — current pair set as-is, converged = false, zero
-        // extra rounds (previously PointerJump was granted a bonus round
-        // past the caller's maxIterations)
-        CCFResult(sw.pairs.toDF("node", "component"), sw.iterations,
+        // way run() does — converged = false, zero extra rounds. The micro
+        // engine hands over its pair set pre-dedup, so deduplicate here as
+        // run()'s cap path does.
+        CCFResult(sw.pairs.distinct().toDF("node", "component"), sw.iterations,
           converged = false, sw.history, engine = "ccf")
       case Right(sw) =>
         val pj = PointerJump.run(sw.pairs, maxIterations - sw.iterations)
@@ -294,7 +297,7 @@ object CCF {
   private[ccf] final case class Switched(pairs: DataFrame, ckpts: Seq[DataFrame],
                                          iterations: Int, history: Seq[Long])
 
-  private def runSwitchable(edges: DataFrame, variant: Variant, maxIterations: Int,
+  private def runSwitchable(edges: DataFrame, maxIterations: Int,
                             blowupFactor: Long): Either[CCFResult, Switched] = {
     muteCheckpointWarnsOnce()
     require(edges.columns.length == 2, s"edge list must have 2 columns, got ${edges.columns.length}")
@@ -348,7 +351,7 @@ object CCF {
       .getOption(graft.Checkpoints.DirKey).exists(_.nonEmpty)
     if (!reliableCkpt && nInput < MicroFixpoint.Threshold) {
       val parts = math.max(1, (nInput / 32000L + 1L).toInt)
-      MicroFixpoint.runDF(pairs, variant, maxIterations, parts, blowupFactor, nInput) match {
+      MicroFixpoint.runDF(pairs, maxIterations, parts, blowupFactor, nInput) match {
         case Some(r) => return r
         case None    => () // unsupported key type: declarative path below
       }
@@ -378,17 +381,14 @@ object CCF {
       val t0 = if (trace) System.nanoTime() else 0L
       // tagged = (src, dst, isNew); isNew marks the (value, min) emits that the
       // reference counts in its NewPair counter.
-      val tagged = variant match {
-        case Basic         => iterateBasic(pairs)
-        case SecondarySort => iterateSecondarySort(pairs, dedupAdjacent = iteration > 1)
-      }
+      val tagged = iterateBasic(pairs)
       val obs = Observation()
       val observed = tagged
         .observe(obs, coalesce(sum(when(col("isNew"), 1L)), lit(0L)).as("newPairs"),
           count(lit(1)).as("rows"))
-      // CCF-Dedup placement (r18, guide §2.4/§7.2): for the Basic kernel the
-      // distinct used to stay LAZY and fuse into the NEXT round's plan — but
-      // bidirect unions two branches over it, so the dedup's final
+      // CCF-Dedup placement (r18, guide §2.4/§7.2): the distinct used to
+      // stay LAZY and fuse into the NEXT round's plan — but bidirect unions
+      // two branches over it, so the dedup's final
       // HashAggregate executed TWICE per round over the full pre-dedup emit
       // set (the exchange is reused, the aggregate above it is not; measured
       // at sf0.1 co-purchase: round 3 re-aggregates round 2's 3.88M-row
@@ -399,12 +399,7 @@ object CCF {
       // the observe sits BELOW the distinct, so it still counts pre-dedup
       // per-occurrence emits exactly like the reference's reduce-side
       // counter (iteration parity with the reference CSV is re-verified in
-      // the Experiments matrix). Applies to BOTH kernels: SecondarySort's
-      // within-group adjacent dedup (dedupAdjacent) masked duplicates from
-      // the emitted stream but still SHUFFLED the full pre-dedup set into
-      // every round's sort (measured at sf0.1 co-purchase: round 3 sorted
-      // 2x3.88M pre-dedup rows to emit 273k); deduping in the checkpoint
-      // shrinks the sort input to the distinct pair set instead.
+      // the Experiments matrix).
       // r19 (ADVICE r18, medium): a second observation ON TOP of the
       // distinct rides the same checkpoint job and yields the DEDUPED row
       // count — the one the materialized checkpoint actually holds. Stamping
@@ -423,7 +418,7 @@ object CCF {
       prevCkpt = emitted0
       // Fallback recomputes the round's TAGGED plan (pre-dedup) over the
       // previous checkpoint — the checkpointed frame no longer carries
-      // isNew on the Basic path; loud + one extra job, like before.
+      // isNew; loud + one extra job, like before.
       val ms = observedOrCount(obs, s"round $iteration")(Map(
         "newPairs" -> tagged.where(col("isNew")).count(), "rows" -> tagged.count()))
       val newPairs = ms("newPairs")
@@ -461,8 +456,8 @@ object CCF {
         Seq(prevCkpt, olderCkpt).filter(_ != null), iteration, history.toSeq))
     if (olderCkpt != null) freeCheckpoint(olderCkpt)
 
-    // Between-round pairs are globally deduped in the checkpoint (r18) for
-    // both kernels — no defensive final distinct needed.
+    // Between-round pairs are globally deduped in the checkpoint (r18) —
+    // no defensive final distinct needed.
     Left(CCFResult(pairs.toDF("node", "component"), iteration, converged, history.toSeq))
   }
 
@@ -473,7 +468,7 @@ object CCF {
     * Join strategy for the re-emit join (bi ⋈ stats on src) is left to the
     * planner: at scale, AQE picks from observed sizes (stats is bounded by
     * the node count — broadcast only if it truly fits). */
-  private[ccf] def iterateBasic(pairs: DataFrame): DataFrame = {
+  private[graft] def iterateBasic(pairs: DataFrame): DataFrame = {
     val bi = bidirect(pairs)
     val stats = bi.groupBy("src").agg(min("dst").as("mn")).where(col("mn") < col("src"))
     val emit1 = stats.select(col("src"), col("mn").as("dst"), lit(false).as("isNew"))
@@ -483,40 +478,6 @@ object CCF {
       .select(col("dst").as("src"), col("mn").as("dst"), lit(true).as("isNew"))
     emit1.unionAll(emit2)
   }
-
-  /**
-   * One CCF-Iterate round, SecondarySort kernel (paper Fig. 3; reference
-   * `CCFConnectedComponents.scala:104-140`). The reference's RDD port sorts a
-   * materialized per-key list — losing the paper's O(1) reducer memory
-   * (`report.md:151`). This is the REAL Spark analogue: hash-repartition by
-   * key, sort within partitions on (key, value), then stream each group once —
-   * first value is the group min, no list is ever built. `mapPartitions` is
-   * justified here (SURVEY.md §7.3 escape hatch): the semantics are genuinely
-   * per-group imperative streaming, and this variant exists precisely to
-   * demonstrate the O(1)-memory shape.
-   *
-   * @param dedupAdjacent CCF-Dedup fused into the streaming reducer: the
-   *   caller passes PRE-dedup pairs (skipping the separate distinct shuffle)
-   *   and the reducer drops duplicate values, which the sort has made
-   *   adjacent — the MapReduce-combiner move, one full shuffle per round
-   *   cheaper. Only valid from round 2 on (emits are single-orientation
-   *   src > dst, so ordered-pair dedup == pair dedup); round 1 must count
-   *   per-occurrence on raw input exactly like the reference's first iterate.
-   */
-  private[ccf] def iterateSecondarySort(pairs: DataFrame, dedupAdjacent: Boolean = false): DataFrame =
-    pairs.schema.fields(0).dataType.typeName match {
-      case "string" => secondarySortString(pairs, dedupAdjacent)
-      case "long"   => secondarySortLong(pairs, dedupAdjacent)
-      case "integer" =>
-        // Run the long kernel, then cast back so both variants return the
-        // input's column type (int32-keyed graphs would otherwise diverge
-        // from the Basic variant's schema).
-        secondarySortLong(pairs, dedupAdjacent).select(
-          col("src").cast("int").as("src"),
-          col("dst").cast("int").as("dst"),
-          col("isNew"))
-      case _ => iterateBasic(pairs) // equivalent declarative plan
-    }
 
   /** Explicitly free the block-manager storage behind an eager
     * `localCheckpoint` so peak storage stays at ~2 rounds of pairs. The
@@ -530,86 +491,6 @@ object CCF {
         case _ => ()
       }
     } catch { case _: Throwable => () } // best-effort; ContextCleaner is the backstop
-
-  private def secondarySortString(pairs: DataFrame, dedupAdjacent: Boolean): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val bi = bidirect(pairs).as[(String, String)]
-    val sorted = bi
-      .repartition(col("src"))
-      .sortWithinPartitions(col("src"), col("dst"))
-      .as[(String, String)]
-    val out = sorted.mapPartitions { it =>
-      streamGroups[String](it, dedupAdjacent)(Ordering.String)
-    }
-    out.toDF("src", "dst", "isNew")
-  }
-
-  private def secondarySortLong(pairs: DataFrame, dedupAdjacent: Boolean): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val bi = bidirect(pairs.select(col("src").cast("long"), col("dst").cast("long"))).as[(Long, Long)]
-    val sorted = bi
-      .repartition(col("src"))
-      .sortWithinPartitions(col("src"), col("dst"))
-      .as[(Long, Long)]
-    val out = sorted.mapPartitions { it =>
-      streamGroups[Long](it, dedupAdjacent)(Ordering.Long)
-    }
-    out.toDF("src", "dst", "isNew")
-  }
-
-  /** Stream a (key, value) iterator sorted by (key, value): per group, head
-    * value is the min; emit (key, min) then (value, min) for the rest — exactly
-    * the paper's Fig. 3 reducer, O(1) memory. With `dedupAdjacent`, duplicate
-    * values within a group (adjacent after the sort) are emitted once — the
-    * fused CCF-Dedup (see [[iterateSecondarySort]]). */
-  private[ccf] def streamGroups[K](it: Iterator[(K, K)], dedupAdjacent: Boolean = false)(implicit ord: Ordering[K]): Iterator[(K, K, Boolean)] = {
-    new Iterator[(K, K, Boolean)] {
-      private var nextRow: (K, K, Boolean) = _
-      private var cur: Option[(K, K)] = if (it.hasNext) Some(it.next()) else None
-      private var groupKey: K = _
-      private var groupMin: K = _
-      private var prevVal: K = _ // last value seen in the group (sorted: dups adjacent)
-      private var inGroup = false // emitting (value, min) tail of a re-labeled group
-
-      private def advance(): Boolean = {
-        while (true) {
-          if (inGroup) {
-            cur match {
-              case Some((k, v)) if k == groupKey =>
-                cur = if (it.hasNext) Some(it.next()) else None
-                val dup = dedupAdjacent && ord.equiv(v, prevVal)
-                prevVal = v
-                if (!dup && !ord.equiv(v, groupMin)) { nextRow = (v, groupMin, true); return true }
-              case _ => inGroup = false
-            }
-          } else {
-            cur match {
-              case None => return false
-              case Some((k, v)) =>
-                // start of a new group; v is the min (sorted within key)
-                groupKey = k; groupMin = v; prevVal = v
-                cur = if (it.hasNext) Some(it.next()) else None
-                if (ord.lt(groupMin, k)) {
-                  inGroup = true
-                  nextRow = (k, groupMin, false)
-                  return true
-                } else {
-                  // min >= key: skip the whole group
-                  while (cur.exists(_._1 == k)) cur = if (it.hasNext) Some(it.next()) else None
-                }
-            }
-          }
-        }
-        false
-      }
-
-      private var ready = false
-      override def hasNext: Boolean = { if (!ready) ready = advance(); ready }
-      override def next(): (K, K, Boolean) = { if (!ready && !advance()) throw new NoSuchElementException; ready = false; nextRow }
-    }
-  }
 
   /** O2: emit both orientations of every pair (UNION ALL keeps multiplicity,
     * matching the reference's flatMap double-emit). */

@@ -156,9 +156,8 @@ class CCFSpec extends SparkSpec {
   }
 
   test("SS fallback pin: non-streaming key types (decimal, date) agree with Basic") {
-    // VERDICT r05 #8: for key types outside {string, long, int} the
-    // SecondarySort variant silently runs the Basic declarative plan
-    // (CCF.iterateSecondarySort's catch-all). Pin that fallback: same
+    // Key types outside {string, long, int} have no micro-engine kernel, so
+    // both labels take the declarative path. Pin it for both: same
     // assignments, same round count, same column type out.
     import org.apache.spark.sql.functions._
     import spark.implicits._

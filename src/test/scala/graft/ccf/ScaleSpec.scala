@@ -93,6 +93,12 @@ class ScaleSpec extends SparkSpec {
     assert(r.engine === "ccf")
     assert(r.newPairsHistory.length === 2)
     assert(r.assignments.columns.toSeq === Seq("node", "component"))
+    // the micro engine hands over its pair set pre-dedup: the capped result
+    // must still hold each pair once, the same set run()'s cap returns
+    val rows = r.assignments.collect().toSeq
+    assert(rows.size === rows.distinct.size)
+    val capped = CCF.run(Generators.chainDF(spark, 500), maxIterations = 2)
+    assert(rows.toSet === capped.assignments.collect().toSet)
     // and with one round of slack the switch still hands over within budget
     val r3 = CCF.auto(Generators.chainDF(spark, 500),
       maxIterations = 3, blowupFactor = 1L)

@@ -3,6 +3,8 @@ package graft.queries
 import graft.SparkSpec
 import graft.graph.GraphBuilders
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Physical-plan assertions (the "would this survive a 100× scale-up" gate):
   * filters/projections reach the parquet scan, small dims broadcast, partial
@@ -18,6 +20,15 @@ class PlanSpec extends SparkSpec {
   private def finalPlan(df: DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString
+  }
+
+  /** Every node of the executed plan. AQE (with Spark 4's result stage)
+    * nests the whole finalized plan inside AdaptiveSparkPlanExec /
+    * QueryStageExec wrappers whose children are Nil — expand them all. */
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+    case q: QueryStageExec => q +: flatten(q.plan)
+    case _ => p +: p.children.flatMap(flatten)
   }
 
   test("q2 filter+project: predicates pushed, columns pruned at the scan") {
@@ -294,16 +305,6 @@ class PlanSpec extends SparkSpec {
     // condition must now compare two DISTINCT kind attributes.
     val df = graft.queries.MultimodalQueries.defs("m7_media_ann")(spark, sf())
     df.collect()
-    // AQE (with Spark 4's result stage) nests the whole finalized plan
-    // inside AdaptiveSparkPlanExec / QueryStageExec wrappers whose children
-    // are Nil — expand them all before collecting joins
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => q +: flatten(q.plan)
-      case _ => p +: p.children.flatMap(flatten)
-    }
     // the equality may plan as equi-join keys or as a residual condition —
     // gather both forms as (left, right) expression-string pairs
     val pairs = flatten(df.queryExecution.executedPlan).collect {
@@ -494,6 +495,37 @@ class PlanSpec extends SparkSpec {
       spark.conf.set(key, prev)
       spark.conf.unset(GraphQueries.MaxBroadcastEdgesKey)
     }
+  }
+
+  test("ccf declarative round: one partial-min shuffle, plus bi's only when stats is not broadcast") {
+    import spark.implicits._
+    import graft.Checkpoints.EagerOps
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    // (shuffle, reused, broadcast) exchange nodes of the final plan tree —
+    // counted on nodes, not on the plan string, which also holds AQE's
+    // initial plan and the reused exchange's description
+    def exchanges(df: DataFrame): (Int, Int, Int) = {
+      df.collect()
+      val nodes = flatten(df.queryExecution.executedPlan)
+      (nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
+        nodes.count(_.isInstanceOf[ReusedExchangeExec]),
+        nodes.count(_.isInstanceOf[BroadcastExchangeExec]))
+    }
+    val pairs = Seq((2L, 1L), (3L, 2L), (4L, 3L), (9L, 7L)).toDF("src", "dst").eagerCheckpoint()
+    // stats broadcast: the emit1 branch shuffles the partial minima, the
+    // broadcast side reads that exchange again, and bi is never shuffled
+    assert(exchanges(graft.ccf.CCF.iterateBasic(pairs)) === ((1, 1, 1)))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      // no broadcast: a sort-merge join, and bi gets its own src exchange
+      val smj = graft.ccf.CCF.iterateBasic(pairs)
+      assert(exchanges(smj) === ((2, 1, 0)))
+      assert(flatten(smj.queryExecution.executedPlan).exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]))
+    } finally spark.conf.set(key, prev)
   }
 
   test("g3 LPA round: both aggregate levels combine map-side (partial_count, partial_max)") {
