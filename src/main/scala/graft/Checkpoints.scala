@@ -46,24 +46,19 @@ object Checkpoints {
   }
 
   /** Eager checkpoint that PRESERVES the plan's output partitioning in the
-    * resulting LogicalRDD (r18, guide §2.4). Under AQE, `localCheckpoint`
+    * resulting LogicalRDD (r18, guide §2.4). Under AQE, a checkpoint
     * records `UnknownPartitioning` — `AdaptiveSparkPlanExec`'s partitioning
     * is not final at checkpoint time — so a build that ends in
-    * `repartition(key)` loses its layout and every consumer keyed the same
-    * way re-shuffles (measured: probe in BENCH_NOTES r18; with AQE off
-    * during the materialization the LogicalRDD keeps HashPartitioning and
-    * consumers planned WITH AQE elide their exchanges). Scopes
-    * `spark.sql.adaptive.enabled=false` around this one materialization;
-    * same session-scoping caveat as the CCF fixpoint loop (not thread-safe
-    * per session). Use for builds whose final operator establishes a
-    * partitioning that downstream plans are meant to reuse. */
-  def eagerKeepPartitioning(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val orig = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try eager(df) finally spark.conf.set(key, orig)
-  }
+    * `repartition(key)` would lose its layout and every consumer keyed the
+    * same way would re-shuffle (probe in BENCH_NOTES r18). The
+    * materialization therefore runs on a private session clone with AQE
+    * off ([[org.apache.spark.sql.graft.Bridge.materializeWithoutAqe]]), and
+    * the LogicalRDD, which then keeps the HashPartitioning Spark recorded,
+    * is rebound to the caller's session, whose conf is never written.
+    * Use for builds whose final operator establishes a partitioning that
+    * downstream plans are meant to reuse. */
+  def eagerKeepPartitioning(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.Bridge.materializeWithoutAqe(df)(eager)
 
   /** Postfix syntax so call sites read like the `localCheckpoint` they
     * replace: `df.eagerCheckpoint()`. */

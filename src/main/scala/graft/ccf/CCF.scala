@@ -190,12 +190,6 @@ object CCF {
    * reads the deduped blocks directly instead of re-aggregating the
    * pre-dedup emit set in both union branches. Lineage depth stays O(1).
    *
-   * NOT thread-safe per session: the declarative loop scopes
-   * `spark.sql.shuffle.partitions` on the session for the duration of the
-   * loop and restores it after; queries planned concurrently on the SAME
-   * session would see the override. Run concurrent fixpoints on separate
-   * sessions (`spark.newSession()`).
-   *
    * @param edges two-column DataFrame (src, dst); any orderable column type,
    *              both columns the same type. Column names are irrelevant.
    * @param variant the reference's kernel label; both labels run the same
@@ -360,22 +354,13 @@ object CCF {
     var iteration = 0
     var converged = false
     val history = scala.collection.mutable.ArrayBuffer.empty[Long]
-    // Right-size the per-round shuffles: small graphs at the session default
-    // (e.g. 32+) are task-scheduling-bound, ~1 s/fixpoint of pure overhead.
-    // Target ~100k pairs/partition, clamped to [1, session default]; restored
-    // after the loop (the loop's jobs are all eager, so scoping is exact).
-    // Intermediate growth beyond the estimate is handled by AQE skew/coalesce.
-    val spark = edges.sparkSession
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val origShuffle = spark.conf.get(shuffleKey)
-    val sized = math.max(1L, math.min(origShuffle.toLong, nInput / 100000L + 1L))
-    spark.conf.set(shuffleKey, sized.toString)
+    // The per-round shuffles run at the session's partition count; AQE's
+    // partition coalescing sizes each reduce side from runtime stats.
     // Per-round timing trace for perf work: SPARK_GRAFT_CCF_TRACE=1
     val trace = sys.env.get("SPARK_GRAFT_CCF_TRACE").contains("1")
     // Blowup detector state (see [[auto]]); inert when blowupFactor == 0.
     var consecutiveBlowups = 0
     var switchOut = false
-    try {
     while (iteration < maxIterations && !converged && !switchOut) {
       iteration += 1
       val t0 = if (trace) System.nanoTime() else 0L
@@ -406,7 +391,7 @@ object CCF {
       // the checkpoint with the pre-dedup count (up to ~14x larger on
       // blowup rounds) broke the "exact leaf stats" invariant and inflated
       // next-round join-size estimates. Pre-dedup `rows` still feeds
-      // newPairs/blowup/shuffle sizing below, unchanged.
+      // the blowup detector below, unchanged.
       val dedupObs = Observation()
       val emitted0 = observed.select("src", "dst").distinct()
         .observe(dedupObs, count(lit(1)).as("rows"))
@@ -433,22 +418,12 @@ object CCF {
         consecutiveBlowups += 1
         if (consecutiveBlowups >= 2) switchOut = true
       } else consecutiveBlowups = 0
-      // Re-size next round's shuffles from the OBSERVED pair count: the
-      // intermediate pair set can blow up orders of magnitude past the input
-      // (string-keyed chains — see the class scaladoc), and a partition count
-      // sized once from the input would serialize those rounds. This is the
-      // path's stand-in for AQE sizing; with AQE on, its coalescing does the
-      // same from runtime stats.
-      val resized = math.max(1L, math.min(origShuffle.toLong, rows / 32000L + 1L))
-      if (resized != spark.conf.get(shuffleKey).toLong)
-        spark.conf.set(shuffleKey, resized.toString)
       // CCF-Dedup: already materialized in the checkpoint above (r18).
       pairs = emitted
       converged = newPairs == 0L
       if (trace) System.err.println(f"[ccf-trace] round $iteration%2d rows=$rows%9d " +
-        f"newPairs=$newPairs%9d parts=$resized%3d ${(System.nanoTime() - t0) / 1e9}%6.3f s")
+        f"newPairs=$newPairs%9d ${(System.nanoTime() - t0) / 1e9}%6.3f s")
     }
-    } finally spark.conf.set(shuffleKey, origShuffle)
     if (switchOut && !converged)
       // Keep BOTH live checkpoints until the successor engine has materialized
       // its own topology from `pairs` (which reads prevCkpt); freed by [[auto]].

@@ -36,11 +36,6 @@ import org.apache.spark.sql.functions._
  * neighbor-min condition forces lab constant across every edge, and the
  * component minimum m keeps lab(m) = m throughout, so the constant is m.
  *
- * NOT thread-safe per session (same contract as [[CCF.run]]): the fixpoint
- * scopes shuffle-partition / AQE / codegen settings on the session for the
- * loop's duration; run concurrent fixpoints on separate sessions
- * (`spark.newSession()`).
- *
  * 100 TB notes: both joins hash-partition by node id; the label table is
  * n rows regardless of round; the static bidirected edge set is checkpointed
  * once and re-read each round (on a cluster: reliable-checkpoint / cache it).
@@ -110,23 +105,6 @@ object PointerJump {
     val nBi = CCF.observedOrCount(inObs, "pj bidirect")(Map("n" -> bi0.count()))("n")
     val bi = org.apache.spark.sql.graft.Bridge.withStats(bi0, nBi)
 
-    // Toy-input tuning: sub-100k-pair fixpoints are latency-bound — AQE's
-    // per-stage re-planning and codegen compile-cache lookups dominate
-    // sub-second rounds (measured: 1.7 s/round with AQE on vs ~0.2 s
-    // without, at n=5k). Scale-path defaults stay on otherwise.
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val codegenKey = "spark.sql.codegen.wholeStage"
-    val origShuffle = spark.conf.get(shuffleKey)
-    val origAqe = spark.conf.get(aqeKey)
-    val origCodegen = spark.conf.get(codegenKey)
-    val sized = math.max(1L, math.min(origShuffle.toLong, nBi / 100000L + 1L))
-    spark.conf.set(shuffleKey, sized.toString)
-    if (nBi < 100000L) {
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(codegenKey, "false")
-    }
-
     val lblObs = Observation()
     val lbl0 = bi.groupBy(col("src").as("node"))
       .agg(least(col("src"), min(col("dst"))).as("lab"))
@@ -148,56 +126,55 @@ object PointerJump {
     // broadcasts. Past the bound the rounds keep the shuffled-join shape
     // and bi keeps the distinct()'s layout (a src repartition would be a
     // wasted extra shuffle there — the shuffled round joins by dst).
+    // The rounds inherit the repartition's partition count, so it is sized
+    // here: ~100k pairs per partition, at most the session's count — a small
+    // graph runs each round as one task at any cpu count.
     val bcastLbl = nNodes <= spark.conf.getOption(MaxBroadcastNodesKey)
       .map(_.toLong).getOrElse(MaxBroadcastNodes)
     val biRounds =
       if (bcastLbl) {
-        val b = bi.repartition(col("src")).eagerCheckpointKeepPartitioning()
+        val parts = math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong,
+          nBi / 100000L + 1L).toInt
+        val b = bi.repartition(parts, col("src")).eagerCheckpointKeepPartitioning()
         CCF.freeCheckpoint(bi0)
         org.apache.spark.sql.graft.Bridge.withStats(b, nBi)
       } else bi
 
-    try {
-      while (iteration < maxIterations && !converged) {
-        iteration += 1
-        val lt = lbl.select(col("node").as("_t"), col("lab").as("_tl"))
-        val obs = Observation()
-        val next0 = (if (bcastLbl) {
-          bcastRound(biRounds, lt)
-        } else {
-          // ONE lookup join serves both steps: look up the labels of
-          // N(u) ∪ {lab(u)} — the neighbor-min AND the pointer jump
-          // (lab(lab(u))) — then take the running min. Fixpoint condition is
-          // identical to applying the two steps separately: lab(u) ≤ lab(v)
-          // for every neighbor v and lab(u) ≤ lab(lab(u)).
-          val targets = biRounds.unionAll(
-            lbl.select(col("node").as("src"), col("lab").as("dst")))
-          // inner joins are total: every target is a node id, every node has a row
-          val looked = targets.join(lt, col("dst") === col("_t"))
-            .groupBy(col("src"))
-            .agg(min(col("_tl")).as("nm"))
-          lbl.join(looked, col("node") === col("src"))
-            .select(col("node"), col("lab"), least(col("lab"), col("nm")).as("newlab"))
-        })
-          .observe(obs, coalesce(sum(when(col("newlab") =!= col("lab"), 1L)), lit(0L)).as("changed"))
-          .select(col("node"), col("newlab").as("lab"))
-          .eagerCheckpoint()
-        // fallback recomputes changed by diffing the materialized checkpoint
-        // against the still-live previous label table — read BEFORE freeing it
-        val changed = CCF.observedOrCount(obs, s"pj round $iteration")(Map(
-          "changed" -> next0.select(col("node"), col("lab").as("nl"))
-            .join(lbl.select(col("node"), col("lab").as("ol")), "node")
-            .where(col("nl") =!= col("ol")).count()))("changed")
-        if (olderCkpt != null) CCF.freeCheckpoint(olderCkpt)
-        olderCkpt = lbl
-        lbl = org.apache.spark.sql.graft.Bridge.withStats(next0, nNodes)
-        history += changed
-        converged = changed == 0L
-      }
-    } finally {
-      spark.conf.set(shuffleKey, origShuffle)
-      spark.conf.set(aqeKey, origAqe)
-      spark.conf.set(codegenKey, origCodegen)
+    while (iteration < maxIterations && !converged) {
+      iteration += 1
+      val lt = lbl.select(col("node").as("_t"), col("lab").as("_tl"))
+      val obs = Observation()
+      val next0 = (if (bcastLbl) {
+        bcastRound(biRounds, lt)
+      } else {
+        // ONE lookup join serves both steps: look up the labels of
+        // N(u) ∪ {lab(u)} — the neighbor-min AND the pointer jump
+        // (lab(lab(u))) — then take the running min. Fixpoint condition is
+        // identical to applying the two steps separately: lab(u) ≤ lab(v)
+        // for every neighbor v and lab(u) ≤ lab(lab(u)).
+        val targets = biRounds.unionAll(
+          lbl.select(col("node").as("src"), col("lab").as("dst")))
+        // inner joins are total: every target is a node id, every node has a row
+        val looked = targets.join(lt, col("dst") === col("_t"))
+          .groupBy(col("src"))
+          .agg(min(col("_tl")).as("nm"))
+        lbl.join(looked, col("node") === col("src"))
+          .select(col("node"), col("lab"), least(col("lab"), col("nm")).as("newlab"))
+      })
+        .observe(obs, coalesce(sum(when(col("newlab") =!= col("lab"), 1L)), lit(0L)).as("changed"))
+        .select(col("node"), col("newlab").as("lab"))
+        .eagerCheckpoint()
+      // fallback recomputes changed by diffing the materialized checkpoint
+      // against the still-live previous label table — read BEFORE freeing it
+      val changed = CCF.observedOrCount(obs, s"pj round $iteration")(Map(
+        "changed" -> next0.select(col("node"), col("lab").as("nl"))
+          .join(lbl.select(col("node"), col("lab").as("ol")), "node")
+          .where(col("nl") =!= col("ol")).count()))("changed")
+      if (olderCkpt != null) CCF.freeCheckpoint(olderCkpt)
+      olderCkpt = lbl
+      lbl = org.apache.spark.sql.graft.Bridge.withStats(next0, nNodes)
+      history += changed
+      converged = changed == 0L
     }
     if (olderCkpt != null) CCF.freeCheckpoint(olderCkpt)
     // r19 (ADVICE r18): free exactly the live topology checkpoint — on the

@@ -190,9 +190,8 @@ object MultimodalQueries {
     // resolves through them (VERDICT r17 wrong #1): `q` is a projection of
     // `f`, so a bare q("kind") === f("kind") is ambiguous and survived only
     // via the analyzer's dataset-id rescue — a guard that a session-wide
-    // failAmbiguousSelfJoin=false (the Spark 4.1.2 rollup workaround, which
-    // q8_rollup scopes to its own analysis) would turn off, one refactor
-    // away from a silently trivially-true join.
+    // failAmbiguousSelfJoin=false would turn off, one refactor away from a
+    // silently trivially-true join.
     // PlanSpec pins the executed condition to reference BOTH sides.
     val q = f.where(col("media_id") < 10)
       .select(col("media_id").as("query_id"), col("kind"),

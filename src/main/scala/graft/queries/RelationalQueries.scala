@@ -99,32 +99,21 @@ object RelationalQueries {
     // ROLLUP grouping sets; NULL grouping slots coalesced to a sentinel so the
     // hash compare is null-free.
     "q8_rollup" -> ((s, d) => {
-      // Spark 4.1 false-positive: any join -> rollup trips
-      // DetectAmbiguousSelfJoin with no self join present. Scope the
-      // workaround to THIS query only (ADVICE r02: a session-wide disable
-      // silently turned the check off for every other query): flip the flag,
-      // force analysis while it is down — the analyzed plan is cached in the
-      // Dataset's QueryExecution, so later execution never re-analyzes —
-      // then restore the session's setting.
-      val flag = "spark.sql.analyzer.failAmbiguousSelfJoin"
-      val prev = s.conf.get(flag)
-      s.conf.set(flag, "false")
-      try {
-        val c = cust(s, d); val n = nat(s, d)
-        val df = c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_mktsegment").as("mktseg"),
-                  col("n_name").as("natname"),
-                  col("c_acctbal").as("acctbal"))
-          .rollup("mktseg", "natname")
-          .agg(count(lit(1)).as("n_cust"),
-               expr("CAST(SUM(CAST(acctbal AS DECIMAL(12,2))) AS DOUBLE)").as("sum_acctbal"))
-          .select(
-            coalesce(col("mktseg"), lit("ALL")).as("mktsegment"),
-            coalesce(col("natname"), lit("ALL")).as("nation"),
-            col("n_cust"), col("sum_acctbal"))
-        df.queryExecution.analyzed // eager analysis inside the scope
-        df
-      } finally s.conf.set(flag, prev)
+      // Group by Columns: Spark 4.1's string overload of rollup fails the
+      // join's output as ambiguous (DetectAmbiguousSelfJoin, no self join
+      // present); the Column overload resolves normally.
+      val c = cust(s, d); val n = nat(s, d)
+      c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+        .select(col("c_mktsegment").as("mktseg"),
+                col("n_name").as("natname"),
+                col("c_acctbal").as("acctbal"))
+        .rollup(col("mktseg"), col("natname"))
+        .agg(count(lit(1)).as("n_cust"),
+             expr("CAST(SUM(CAST(acctbal AS DECIMAL(12,2))) AS DOUBLE)").as("sum_acctbal"))
+        .select(
+          coalesce(col("mktseg"), lit("ALL")).as("mktsegment"),
+          coalesce(col("natname"), lit("ALL")).as("nation"),
+          col("n_cust"), col("sum_acctbal"))
     }),
 
     // DISTINCT projection.

@@ -87,6 +87,24 @@ object Bridge {
     }
   }
 
+  /** Run `materialize` (an eager checkpoint) on a private clone of `df`'s
+    * session with AQE off, and rebind the resulting `LogicalRDD` to `df`'s
+    * own session. With AQE on, a checkpoint records `UnknownPartitioning`
+    * (the adaptive plan's partitioning is not final when the RDD is cut);
+    * with it off, Spark records the plan's real output partitioning, which
+    * consumers planned on the caller's session (AQE on) then reuse without
+    * an exchange. The clone copies the caller's conf and nobody else holds
+    * it, so the caller's conf is never written. */
+  def materializeWithoutAqe(df: org.apache.spark.sql.DataFrame)(
+      materialize: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val caller = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val clone = caller.cloneSession()
+    clone.conf.set(org.apache.spark.sql.internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
+    val onClone = org.apache.spark.sql.classic.Dataset.ofRows(clone, df.queryExecution.analyzed)
+    CheckpointHandle.of(materialize(onClone)).toDF(caller)
+  }
+
   def withStats(df: org.apache.spark.sql.DataFrame, rowCount: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.Statistics
     import org.apache.spark.sql.execution.LogicalRDD

@@ -577,6 +577,19 @@ class PlanSpec extends SparkSpec {
     import graft.Checkpoints.EagerOps
     val bi = graft.ccf.CCF.bidirect(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
       .distinct().repartition(col("src")).eagerCheckpointKeepPartitioning()
+    // the layout is recorded by Spark on the checkpoint's LogicalRDD, and the
+    // caller's session still runs with AQE on
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    bi.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.outputPartitioning match {
+          case org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
+              Seq(a: org.apache.spark.sql.catalyst.expressions.Attribute), _) =>
+            assert(a.name === "src", lr.outputPartitioning)
+          case other => fail(s"expected HashPartitioning on src, got $other")
+        }
+      case other => fail(s"expected a LogicalRDD, got ${other.getClass.getName}")
+    }
     val lbl = Seq((1L, 1L), (2L, 1L), (3L, 2L)).toDF("node", "lab")
     val lt = lbl.select(col("node").as("_t"), col("lab").as("_tl"))
     val p = finalPlan(graft.ccf.PointerJump.bcastRound(bi, lt))
