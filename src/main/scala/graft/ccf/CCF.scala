@@ -172,8 +172,10 @@ object CCF {
    * ENGINE SELECTION BY SIZE (observe-then-choose, like [[auto]]'s density
    * rule): below [[MicroFixpoint.Threshold]] input pairs (when the kernel
    * supports the key type), the whole fixpoint runs on [[MicroFixpoint]] —
-   * the same algorithm on the RDD layer, where a round costs one lightweight
-   * job with zero per-round Catalyst planning. Measured on the reference's
+   * the same algorithm on the RDD layer, with zero per-round Catalyst
+   * planning: while the pair set fits one partition, consecutive rounds run
+   * inside one task, so a small fixpoint is typically one job, and a larger
+   * round is one lightweight job. Measured on the reference's
    * 34-run matrix, per-round planning + exchange setup for the declarative
    * path is ~150 ms while the data is <100k rows — two orders of magnitude
    * over the compute. At scale the declarative path below wins (codegen,
@@ -333,7 +335,7 @@ object CCF {
 
     // Size-gated engine choice (see class scaladoc of [[MicroFixpoint]]):
     // sub-threshold graphs run the identical algorithm on the RDD layer,
-    // where a round is one lightweight job with no per-round planning cost.
+    // with no per-round planning cost (single-partition rounds share a task).
     // The armed blowup detector ([[auto]], blowupFactor > 0) runs inside the
     // micro loop on the same observed row counts, so the auto path gets the
     // same latency rounds and the same mid-fixpoint hand-off. Not taken for
@@ -344,8 +346,7 @@ object CCF {
     val reliableCkpt = edges.sparkSession.conf
       .getOption(graft.Checkpoints.DirKey).exists(_.nonEmpty)
     if (!reliableCkpt && nInput < MicroFixpoint.Threshold) {
-      val parts = math.max(1, (nInput / 32000L + 1L).toInt)
-      MicroFixpoint.runDF(pairs, maxIterations, parts, blowupFactor, nInput) match {
+      MicroFixpoint.runDF(pairs, maxIterations, blowupFactor, nInput) match {
         case Some(r) => return r
         case None    => () // unsupported key type: declarative path below
       }

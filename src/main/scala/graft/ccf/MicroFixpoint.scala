@@ -5,6 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
 /**
@@ -17,11 +18,14 @@ import scala.reflect.ClassTag
  * per iteration on this box — Catalyst analysis/optimization of a fresh
  * ~20-node plan, three exchange setups, checkpoint materialization — while
  * the per-round DATA is at most a few hundred KB. The RDD layer runs the
- * identical algorithm with none of that: a round is ONE job whose closures
- * are compiled once, and the NewPair/row counters ride the same job that
- * materializes the round (per-partition counts returned through `runJob`'s
- * result handler over the persisted blocks — deterministic, no
- * accumulator-retry hazard, no extra action).
+ * identical algorithm with none of that: closures are compiled once, and
+ * while the pair set fits one partition ([[RowsPerPartition]]) consecutive
+ * rounds run inside ONE task, in memory (a FUSED block), so a whole small
+ * fixpoint is typically one job. A larger round is one job of two stages
+ * over the spill-backed `groupByKey`. Either way the NewPair/row counters
+ * ride the job that materializes the rounds (per-partition counts returned
+ * through `runJob`'s result handler over the persisted blocks —
+ * deterministic, no accumulator-retry hazard, no extra action).
  *
  * This is an explicit size-gated engine choice, not a departure from the
  * Spark-first design: at scale the declarative path in [[CCF]] wins
@@ -48,6 +52,11 @@ object MicroFixpoint {
     * themselves. */
   val Threshold: Long = 100000L
 
+  /** Rows one partition holds. A round over `rows` input pairs runs on
+    * `rows / RowsPerPartition + 1` partitions, and a round whose input is
+    * below it runs fused: in one task, with the rounds after it. */
+  val RowsPerPartition: Long = 32000L
+
   /** Fixpoint outcome on the RDD layer; `assignments` is (node, component),
     * representative has no row — the same contract as [[CCF.CCFResult]].
     * When `switched` (blowup detector fired — see [[CCF.auto]]), it is the
@@ -56,65 +65,93 @@ object MicroFixpoint {
                                   converged: Boolean, history: Seq[Long],
                                   switched: Boolean = false)
 
-  /** Run the fixpoint for any ordered key type. `parts0` sizes the first
-    * round's shuffles; later rounds re-size from the OBSERVED pair count up
-    * to `maxParts` (the session's shuffle-partition default) — intermediate
-    * pair sets can blow up orders of magnitude past the input (string-keyed
-    * chains), and a cap derived from the input size would serialize exactly
-    * those rounds. With `blowupFactor > 0`, runs [[CCF.auto]]'s blowup
-    * detector on the same observed per-round row counts: 2 consecutive
-    * rounds past `blowupFactor x nInput` end the run with
-    * `switched = true`. */
-  def run[K: ClassTag](pairs0: RDD[(K, K)], maxIterations: Int,
-                       parts0: Int, blowupFactor: Long = 0L, nInput: Long = 0L,
-                       maxParts: Int = 32)(implicit ord: Ordering[K]): MicroResult[K] = {
+  /** Loop state after each round. The driver and the fused task both step
+    * it, so they stop on the same round: the iteration cap, convergence (a
+    * round with 0 NewPairs) or [[CCF.auto]]'s blowup detector (2 consecutive
+    * rounds past `blowupAt` rows). */
+  private final case class Progress(maxIterations: Int, blowupAt: Long, iterations: Int = 0,
+                                    converged: Boolean = false, blowups: Int = 0) {
+    def switched: Boolean = blowups >= 2
+    def done: Boolean = iterations >= maxIterations || converged || switched
+    def after(newPairs: Long, rows: Long): Progress =
+      copy(iterations = iterations + 1, converged = newPairs == 0L,
+        blowups = if (rows > blowupAt) blowups + 1 else 0)
+  }
+
+  /** A fused block's output: the pair set after its last round, and each
+    * round's (newPairs, rows), oldest first. */
+  private final case class Block[K](pairs: ArrayBuffer[(K, K)], rounds: Seq[(Long, Long)])
+
+  /** Run the fixpoint over `nInput` input pairs for any ordered key type.
+    * Each round is sized from the OBSERVED row count of the round before it
+    * (round 1: `nInput`). Below [[RowsPerPartition]] the round runs fused;
+    * otherwise it is one job on up to `maxParts` partitions (the session's
+    * shuffle-partition default) — intermediate pair sets can blow up orders
+    * of magnitude past the input (string-keyed chains), and a cap derived
+    * from the input size would serialize exactly those rounds. With
+    * `blowupFactor > 0`, runs [[CCF.auto]]'s blowup detector on the same
+    * observed per-round row counts: 2 consecutive rounds past
+    * `blowupFactor x nInput` end the run with `switched = true`. */
+  def run[K: ClassTag](pairs0: RDD[(K, K)], maxIterations: Int, nInput: Long,
+                       blowupFactor: Long = 0L, maxParts: Int = 32)
+                      (implicit ord: Ordering[K]): MicroResult[K] = {
     val sc = pairs0.sparkContext
+    def partsFor(rows: Long): Int =
+      math.max(1, math.min(maxParts, (rows / RowsPerPartition + 1L).toInt))
+    var progress = Progress(maxIterations,
+      blowupAt = if (blowupFactor > 0L) blowupFactor * math.max(1L, nInput) else Long.MaxValue)
     var pairs = pairs0
+    var rows = nInput
     var prevCached: RDD[_] = null
     var olderCached: RDD[_] = null
-    var iteration = 0
-    var converged = false
-    var switched = false
-    var consecutiveBlowups = 0
-    var parts = math.max(1, parts0)
-    val history = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val trace = sys.env.get("SPARK_GRAFT_CCF_TRACE").contains("1")
-    while (iteration < maxIterations && !converged && !switched) {
-      iteration += 1
-      val t0 = if (trace) System.nanoTime() else 0L
-      val tagged = iterate(pairs, dedupAdjacent = iteration > 1, parts)
-      // Materialize + count in ONE job: persist, then runJob's per-partition
-      // result handler counts (newPairs, rows) while the block manager is
-      // writing the same iterator to cache. MEMORY_AND_DISK so memory
-      // pressure spills rather than evicts (an evicted round would recompute
-      // its whole lineage).
-      tagged.persist(StorageLevel.MEMORY_AND_DISK)
-      var newPairs = 0L
-      var rows = 0L
-      val countOne = (it: Iterator[(K, K, Boolean)]) => {
-        var n = 0L; var t = 0L
-        it.foreach { e => t += 1; if (e._3) n += 1 }
-        (n, t)
-      }
-      sc.runJob(tagged, countOne).foreach { case (n, t) => newPairs += n; rows += t }
+    def keep(cached: RDD[_]): Unit = {
       if (olderCached != null) olderCached.unpersist(false)
-      olderCached = if (prevCached != null) prevCached else null
-      prevCached = tagged
-      history += newPairs
-      converged = newPairs == 0L
-      if (blowupFactor > 0L && rows > blowupFactor * math.max(1L, nInput)) {
-        consecutiveBlowups += 1
-        if (consecutiveBlowups >= 2) switched = true
-      } else consecutiveBlowups = 0
-      parts = math.max(1, math.min(maxParts, (rows / 32000L + 1L).toInt))
-      // CCF-Dedup is FUSED into the next round's group stage (per-key
-      // value set) — round-2+ emits are single-orientation
-      // (src > dst always), so per-key value dedup after bidirect equals
-      // pair-distinct before it, one shuffle cheaper. A round is exactly
-      // TWO stages: [map+bidirect+shuffle-write] and [group+emit+count].
-      pairs = tagged.map(e => (e._1, e._2))
-      if (trace) System.err.println(f"[ccf-micro] round $iteration%2d rows=$rows%9d " +
-        f"newPairs=$newPairs%9d parts=$parts%3d ${(System.nanoTime() - t0) / 1e9}%6.3f s")
+      olderCached = prevCached
+      prevCached = cached
+    }
+    val history = ArrayBuffer.empty[Long]
+    val trace = sys.env.get("SPARK_GRAFT_CCF_TRACE").contains("1")
+    while (!progress.done) {
+      val t0 = if (trace) System.nanoTime() else 0L
+      val start = progress
+      val fuse = rows < RowsPerPartition
+      val parts = partsFor(rows)
+      // Materialize + count in ONE job: persist, then runJob's per-partition
+      // result handler reads the counts while the block manager is writing
+      // the same iterator to cache. MEMORY_AND_DISK so memory pressure spills
+      // rather than evicts (an evicted round would recompute its whole
+      // lineage).
+      val rounds: Seq[(Long, Long)] =
+        if (fuse) {
+          // an empty input RDD has 0 partitions, which coalesce(1) keeps
+          val one = if (pairs.partitions.isEmpty) sc.parallelize(Seq.empty[(K, K)], 1)
+                    else pairs.coalesce(1)
+          val block = one.mapPartitions(it => Iterator.single(fused(it, start)))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val stats = sc.runJob(block, (it: Iterator[Block[K]]) => it.next().rounds).head
+          keep(block)
+          pairs = block.flatMap(_.pairs)
+          stats
+        } else {
+          val tagged = iterate(pairs, dedupAdjacent = start.iterations > 0, parts)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val counts = sc.runJob(tagged, (it: Iterator[(K, K, Boolean)]) => {
+            var n = 0L; var t = 0L
+            it.foreach { e => t += 1; if (e._3) n += 1 }
+            (n, t)
+          })
+          keep(tagged)
+          pairs = tagged.map(e => (e._1, e._2))
+          Seq((counts.map(_._1).sum, counts.map(_._2).sum))
+        }
+      for (((newPairs, r), i) <- rounds.zipWithIndex) {
+        history += newPairs
+        progress = progress.after(newPairs, r)
+        rows = r
+        if (trace) System.err.println(f"[ccf-micro] round ${progress.iterations}%2d rows=$r%9d " +
+          f"newPairs=$newPairs%9d " + (if (fuse) "fused   " else f"parts=$parts%3d") +
+          (if (i == rounds.size - 1) f" ${(System.nanoTime() - t0) / 1e9}%6.3f s" else ""))
+      }
     }
     // Converged emits are one (key, min) row per key — already distinct; the
     // maxIterations-without-convergence path deduplicates defensively (its
@@ -122,45 +159,81 @@ object MicroFixpoint {
     // switched hand-off passes the pre-dedup pair set as-is (the successor
     // engine's topology build tolerates duplicates).
     val assignments =
-      if (converged || switched) pairs else pairs.distinct(parts)
-    MicroResult(assignments, iteration, converged, history.toSeq, switched)
+      if (progress.converged || progress.switched) pairs else pairs.distinct(partsFor(rows))
+    MicroResult(assignments, progress.iterations, progress.converged, history.toSeq,
+      progress.switched)
+  }
+
+  /** Rounds run in memory inside one task, from loop state `start` on, until
+    * the loop is done or a round's output reaches [[RowsPerPartition]]; the
+    * next round then goes back to [[iterate]], which can spill. Each round
+    * is bidirect → per-key group → [[emit]], the distributed round's
+    * multiset. */
+  private def fused[K](input: Iterator[(K, K)], start: Progress)
+                      (implicit ord: Ordering[K]): Block[K] = {
+    var pairs = ArrayBuffer.from(input)
+    var progress = start
+    val rounds = ArrayBuffer.empty[(Long, Long)]
+    do {
+      val groups = scala.collection.mutable.HashMap.empty[K, ArrayBuffer[K]]
+      pairs.foreach { case (a, b) =>
+        groups.getOrElseUpdate(a, ArrayBuffer.empty[K]) += b
+        groups.getOrElseUpdate(b, ArrayBuffer.empty[K]) += a
+      }
+      val next = ArrayBuffer.empty[(K, K)]
+      var newPairs = 0L
+      groups.foreach { case (k, vs) =>
+        emit(k, vs, dedup = progress.iterations > 0).foreach { e =>
+          next += ((e._1, e._2))
+          if (e._3) newPairs += 1
+        }
+      }
+      pairs = next
+      rounds += ((newPairs, next.size.toLong))
+      progress = progress.after(newPairs, next.size.toLong)
+    } while (!progress.done && pairs.size < RowsPerPartition)
+    Block(pairs, rounds.toSeq)
   }
 
   /** One CCF-Iterate round → (src, dst, isNew) rows, pre-dedup. A sorted
     * (Fig. 3) kernel would emit the same multiset in another order, which
-    * the next round's shuffle discards.
-    *
-    * Kernel shape: per-key neighbor pass over the spill-backed groupByKey
-    * buffer (bounded by the max degree of a <100k-pair graph) — min sweep,
-    * then emit. From round 2 on (`dedupAdjacent`) the between-round
-    * CCF-Dedup is fused as the per-key value SET: emits are
-    * single-orientation, so deduping a key's neighbor multiset equals
-    * pair-distinct before bidirect — same counts as the declarative path's
-    * lazy distinct, one shuffle cheaper. Round 1 keeps raw multiplicity
-    * (the reference's first iterate counts per occurrence). */
+    * the next round's shuffle discards. Per-key neighbor pass over the
+    * spill-backed groupByKey buffer (bounded by the max degree of a
+    * <100k-pair graph). */
   private def iterate[K: ClassTag](pairs: RDD[(K, K)], dedupAdjacent: Boolean, parts: Int)
-                                  (implicit ord: Ordering[K]): RDD[(K, K, Boolean)] = {
-    val bi = pairs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-    bi.groupByKey(new HashPartitioner(parts)).flatMap { case (k, vs) =>
-      val values: Iterable[K] =
-        if (dedupAdjacent) {
-          val seen = scala.collection.mutable.LinkedHashSet.empty[K]
-          vs.iterator.foreach(seen.add)
-          seen
-        } else vs
-      var mn = null.asInstanceOf[K]
-      var first = true
-      val it0 = values.iterator
-      while (it0.hasNext) {
-        val v = it0.next()
-        if (first || ord.lt(v, mn)) { mn = v; first = false }
-      }
-      if (!first && ord.lt(mn, k)) {
-        val m = mn
-        Iterator.single((k, m, false)) ++
-          values.iterator.filter(v => !ord.equiv(v, m)).map(v => (v, m, true))
-      } else Iterator.empty
+                                  (implicit ord: Ordering[K]): RDD[(K, K, Boolean)] =
+    pairs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .groupByKey(new HashPartitioner(parts))
+      .flatMap { case (k, vs) => emit(k, vs, dedupAdjacent) }
+
+  /** One key's emits, shared by both round shapes: min sweep over the
+    * neighbors, then (key, min) plus (value, min) tagged new for every
+    * non-min neighbor occurrence, when min < key. With `dedup` (round 2 on)
+    * the between-round CCF-Dedup is fused as the per-key value SET: emits
+    * are single-orientation, so deduping a key's neighbor multiset equals
+    * pair-distinct before bidirect — same counts as the declarative path's
+    * distinct, one shuffle cheaper. Round 1 keeps raw multiplicity (the
+    * reference's first iterate counts per occurrence). */
+  private def emit[K](k: K, vs: Iterable[K], dedup: Boolean)
+                     (implicit ord: Ordering[K]): Iterator[(K, K, Boolean)] = {
+    val values: Iterable[K] =
+      if (dedup) {
+        val seen = scala.collection.mutable.LinkedHashSet.empty[K]
+        vs.iterator.foreach(seen.add)
+        seen
+      } else vs
+    var mn = null.asInstanceOf[K]
+    var first = true
+    val it0 = values.iterator
+    while (it0.hasNext) {
+      val v = it0.next()
+      if (first || ord.lt(v, mn)) { mn = v; first = false }
     }
+    if (!first && ord.lt(mn, k)) {
+      val m = mn
+      Iterator.single((k, m, false)) ++
+        values.iterator.filter(v => !ord.equiv(v, m)).map(v => (v, m, true))
+    } else Iterator.empty
   }
 
   /** DataFrame adapter: run the micro engine when the key type has a kernel
@@ -169,7 +242,7 @@ object MicroFixpoint {
     * Returns Left(result) on convergence / iteration cap, Right(switched
     * hand-off) when the armed blowup detector fired (see [[CCF.auto]]). */
   private[ccf] def runDF(pairs: DataFrame, maxIterations: Int,
-                         parts: Int, blowupFactor: Long, nInput: Long)
+                         blowupFactor: Long, nInput: Long)
       : Option[Either[CCF.CCFResult, CCF.Switched]] = {
     val spark = pairs.sparkSession
     import spark.implicits._
@@ -187,13 +260,13 @@ object MicroFixpoint {
     pairs.schema.fields(0).dataType.typeName match {
       case "string" =>
         val rdd = tupled.as[(String, String)].rdd
-        Some(toResult[String](run(rdd, maxIterations, parts, blowupFactor, nInput, maxParts), _.toDF()))
+        Some(toResult[String](run(rdd, maxIterations, nInput, blowupFactor, maxParts), _.toDF()))
       case "long" =>
         val rdd = tupled.as[(Long, Long)].rdd
-        Some(toResult[Long](run(rdd, maxIterations, parts, blowupFactor, nInput, maxParts), _.toDF()))
+        Some(toResult[Long](run(rdd, maxIterations, nInput, blowupFactor, maxParts), _.toDF()))
       case "integer" =>
         val rdd = tupled.as[(Int, Int)].rdd
-        Some(toResult[Int](run(rdd, maxIterations, parts, blowupFactor, nInput, maxParts), _.toDF()))
+        Some(toResult[Int](run(rdd, maxIterations, nInput, blowupFactor, maxParts), _.toDF()))
       case _ => None
     }
   }

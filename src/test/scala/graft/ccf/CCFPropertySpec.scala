@@ -91,6 +91,11 @@ class CCFPropertySpec extends SparkSpec {
     // every leaf
     "200-leaf string star" -> strEdges((1 to 200).map(i => "zhub" -> f"leaf$i%03d")),
     "empty" -> strEdges(Seq.empty),
+    // the next three cross between fused and distributed rounds mid-run
+    // (MicroFixpoint.RowsPerPartition)
+    "random 5000/15000" -> strEdges(Generators.randomGraph(5000, 15000)),
+    "cluster 20x50/0" -> strEdges(Generators.clusterGraph(20, 50)),
+    "string chain 500" -> strEdges(Generators.chainGraph(500)),
     "long ids >= 2^31" -> { s =>
       import s.implicits._
       Seq((big + 5, big + 3), (big + 3, big + 10), (big + 10, 3000000000L),
@@ -120,5 +125,20 @@ class CCFPropertySpec extends SparkSpec {
       assert(micro.converged)
       assert(rows(PointerJump.run(input(spark)).assignments) === expected)
     }
+  }
+
+  test("maxIterations inside a fused block: the micro engine equals the declarative loop") {
+    // chain 50 fits one partition in every round, so the cap stops a fused block
+    val input = strEdges(Generators.chainGraph(50))
+    val micro = CCF.run(input(spark), maxIterations = 3)
+    val declarative = CCF.run(input(declSession), maxIterations = 3)
+    for (r <- Seq(micro, declarative)) {
+      assert(r.iterations === 3)
+      assert(!r.converged)
+    }
+    assert(micro.newPairsHistory === declarative.newPairsHistory)
+    val got = rows(micro.assignments)
+    assert(got === got.distinct)
+    assert(got === rows(declarative.assignments))
   }
 }

@@ -119,6 +119,39 @@ class CCFSpec extends SparkSpec {
     assert(r.iterations === 2)
   }
 
+  test("micro engine: a fixpoint that fits one partition runs as one job") {
+    // string chain 200 peaks far below MicroFixpoint.RowsPerPartition, so all
+    // 10 rounds run fused in one task
+    val sc = spark.sparkContext
+    val (group, markerGroup) = ("ccf-one-job", "ccf-one-job-marker")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`markerGroup`) => marker.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "CCF.run")
+      val r = CCF.run(Generators.toDF(spark, Generators.chainGraph(200)))
+      // the bus delivers events in order: once the marker job's start has
+      // arrived, so has every job CCF.run started
+      sc.setJobGroup(markerGroup, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(r.converged)
+      assert(r.iterations === 10)
+      assert(jobs.get === 1)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("iteration counts match the reference on chain graphs (BASELINE.md exp 2)") {
     // (n, expected iterations) from experiment_results_scala.csv rows 14-23
     for ((n, iters) <- Seq(10 -> 6, 50 -> 8, 100 -> 9)) {
