@@ -13,11 +13,18 @@ They are the trend counts of ROADMAP aim 2 (one default path per operator):
   cpus_env_reads       "SPARK_GRAFT_CPUS" string literals
   eager_checkpoints    .eagerCheckpoint() / .eagerCheckpointKeepPartitioning()
                        call sites
+  unreferenced         top-level objects and object members of src/main whose
+                       name appears nowhere else in src/main, src/test or
+                       perfbench/scala; the names are printed to stderr
 
 Every count except scala_lines is taken with comments removed, so a
-scaladoc that mentions a call does not count as one.
+scaladoc that mentions a call does not count as one. unreferenced skips
+objects with a `def main` (entry points), GraftExtensions (Spark loads it
+by name), and members the compiler calls for the code: override, implicit,
+apply/unapply.
 """
 import json
+from collections import Counter
 import os
 import re
 import sys
@@ -62,17 +69,84 @@ def strip_comments(src):
     return "".join(out)
 
 
+STRING = re.compile(r'"""[\s\S]*?"""+|"(?:\\.|[^"\\\n])*"')
+DECL = re.compile(
+    r"^\s*((?:(?:private|protected)(?:\[\w+\])?|override|final|implicit|lazy"
+    r"|case|sealed|abstract)\s+)*(def|val|var|object|class|trait|type)\s+(\w+)")
+LOADED_BY_NAME = {"GraftExtensions"}  # named in spark.sql.extensions, not in code
+CALLED_BY_COMPILER = {"apply", "unapply", "unapplySeq"}
+
+
+class ObjectScope:
+    def __init__(self):
+        self.has_main = False
+
+
+def declarations(code):
+    """(name, object) of each top-level object and each member declared
+    directly in an object body; `object` is the ObjectScope of a declared
+    object, else None. `code` has its comments stripped; one declaration per line."""
+    code = STRING.sub('""', code)  # a brace in a string opens no scope
+    found, scopes, pending, top = [], [], None, None
+    for line in code.split("\n"):
+        m = DECL.match(line)
+        if m:
+            mods, kind, name = set((m.group(1) or "").split()), m.group(2), m.group(3)
+            owner = scopes[-1] if scopes and isinstance(scopes[-1], ObjectScope) else None
+            top = len(scopes) if top is None else top
+            obj = ObjectScope() if kind == "object" else None
+            if (obj and len(scopes) == top) or (
+                    owner and not mods & {"override", "implicit"}
+                    and name not in CALLED_BY_COMPILER):
+                found.append((name, obj))
+            if owner and kind == "def" and name == "main":
+                owner.has_main = True
+            # the next "{" opens this declaration's body, if it has one
+            pending = obj or ("class" if kind in ("class", "trait") else None)
+        for ch in line:
+            if ch == "{":
+                scopes.append(pending or "block")
+                pending = None
+            elif ch == "}":
+                pending = None
+                if scopes:
+                    scopes.pop()
+    return found
+
+
+def unreferenced(root, main_code):
+    """path:name of each declaration in main_code (path -> stripped source)
+    whose name appears nowhere else in src/main, src/test or perfbench/scala.
+    Objects with a `def main` are entry points and are not listed."""
+    corpus = list(main_code.values())
+    for sub in (("src", "test"), ("perfbench", "scala")):
+        for d, _, names in os.walk(os.path.join(root, *sub)):
+            for f in names:
+                if f.endswith(".scala"):
+                    with open(os.path.join(d, f), encoding="utf-8") as fh:
+                        corpus.append(strip_comments(fh.read()))
+    uses = Counter(w for text in corpus for w in re.findall(r"\w+", text))
+    return [f"{os.path.relpath(path, root)}:{name}"
+            for path, code in sorted(main_code.items())
+            for name, obj in declarations(code)
+            if uses[name] <= 1 and name not in LOADED_BY_NAME
+            and not (obj and obj.has_main)]
+
+
 def metrics(root):
     files = []
     for d, _, names in os.walk(os.path.join(root, "src", "main")):
         files += [os.path.join(d, f) for f in names if f.endswith(".scala")]
-    lines, code = 0, []
+    lines, code = 0, {}
     for path in sorted(files):
         with open(path, encoding="utf-8") as f:
             src = f.read()
         lines += src.count("\n")
-        code.append(strip_comments(src))
-    text = "\n".join(code)
+        code[path] = strip_comments(src)
+    text = "\n".join(code.values())
+    dead = unreferenced(root, code)
+    for name in dead:
+        print(f"unreferenced: {name}", file=sys.stderr)
     return {
         "scala_lines": lines,
         "graft_conf_keys": len(set(re.findall(r'"spark\.graft\.[A-Za-z0-9_.]+"', text))),
@@ -80,6 +154,7 @@ def metrics(root):
         "session_builders": len(re.findall(r"\bSparkSession\.builder\b", text)),
         "cpus_env_reads": text.count('"SPARK_GRAFT_CPUS"'),
         "eager_checkpoints": len(re.findall(r"\.eagerCheckpoint(?:KeepPartitioning)?\(", text)),
+        "unreferenced": len(dead),
     }
 
 

@@ -357,14 +357,11 @@ object CCF {
     val history = scala.collection.mutable.ArrayBuffer.empty[Long]
     // The per-round shuffles run at the session's partition count; AQE's
     // partition coalescing sizes each reduce side from runtime stats.
-    // Per-round timing trace for perf work: SPARK_GRAFT_CCF_TRACE=1
-    val trace = sys.env.get("SPARK_GRAFT_CCF_TRACE").contains("1")
     // Blowup detector state (see [[auto]]); inert when blowupFactor == 0.
     var consecutiveBlowups = 0
     var switchOut = false
     while (iteration < maxIterations && !converged && !switchOut) {
       iteration += 1
-      val t0 = if (trace) System.nanoTime() else 0L
       // tagged = (src, dst, isNew); isNew marks the (value, min) emits that the
       // reference counts in its NewPair counter.
       val tagged = iterateBasic(pairs)
@@ -422,8 +419,6 @@ object CCF {
       // CCF-Dedup: already materialized in the checkpoint above (r18).
       pairs = emitted
       converged = newPairs == 0L
-      if (trace) System.err.println(f"[ccf-trace] round $iteration%2d rows=$rows%9d " +
-        f"newPairs=$newPairs%9d ${(System.nanoTime() - t0) / 1e9}%6.3f s")
     }
     if (switchOut && !converged)
       // Keep BOTH live checkpoints until the successor engine has materialized

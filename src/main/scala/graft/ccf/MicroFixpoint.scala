@@ -2,7 +2,7 @@ package graft.ccf
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
@@ -91,10 +91,11 @@ object MicroFixpoint {
     * from the input size would serialize exactly those rounds. With
     * `blowupFactor > 0`, runs [[CCF.auto]]'s blowup detector on the same
     * observed per-round row counts: 2 consecutive rounds past
-    * `blowupFactor x nInput` end the run with `switched = true`. */
-  def run[K: ClassTag](pairs0: RDD[(K, K)], maxIterations: Int, nInput: Long,
-                       blowupFactor: Long = 0L, maxParts: Int = 32)
-                      (implicit ord: Ordering[K]): MicroResult[K] = {
+    * `blowupFactor x nInput` end the run with `switched = true`; 0 disarms
+    * it. */
+  private[ccf] def run[K: ClassTag](pairs0: RDD[(K, K)], maxIterations: Int, nInput: Long,
+                                    blowupFactor: Long, maxParts: Int)
+                                   (implicit ord: Ordering[K]): MicroResult[K] = {
     val sc = pairs0.sparkContext
     def partsFor(rows: Long): Int =
       math.max(1, math.min(maxParts, (rows / RowsPerPartition + 1L).toInt))
@@ -110,19 +111,15 @@ object MicroFixpoint {
       prevCached = cached
     }
     val history = ArrayBuffer.empty[Long]
-    val trace = sys.env.get("SPARK_GRAFT_CCF_TRACE").contains("1")
     while (!progress.done) {
-      val t0 = if (trace) System.nanoTime() else 0L
       val start = progress
-      val fuse = rows < RowsPerPartition
-      val parts = partsFor(rows)
       // Materialize + count in ONE job: persist, then runJob's per-partition
       // result handler reads the counts while the block manager is writing
       // the same iterator to cache. MEMORY_AND_DISK so memory pressure spills
       // rather than evicts (an evicted round would recompute its whole
       // lineage).
       val rounds: Seq[(Long, Long)] =
-        if (fuse) {
+        if (rows < RowsPerPartition) {
           // an empty input RDD has 0 partitions, which coalesce(1) keeps
           val one = if (pairs.partitions.isEmpty) sc.parallelize(Seq.empty[(K, K)], 1)
                     else pairs.coalesce(1)
@@ -133,7 +130,7 @@ object MicroFixpoint {
           pairs = block.flatMap(_.pairs)
           stats
         } else {
-          val tagged = iterate(pairs, dedupAdjacent = start.iterations > 0, parts)
+          val tagged = iterate(pairs, dedupAdjacent = start.iterations > 0, partsFor(rows))
             .persist(StorageLevel.MEMORY_AND_DISK)
           val counts = sc.runJob(tagged, (it: Iterator[(K, K, Boolean)]) => {
             var n = 0L; var t = 0L
@@ -144,13 +141,10 @@ object MicroFixpoint {
           pairs = tagged.map(e => (e._1, e._2))
           Seq((counts.map(_._1).sum, counts.map(_._2).sum))
         }
-      for (((newPairs, r), i) <- rounds.zipWithIndex) {
+      rounds.foreach { case (newPairs, r) =>
         history += newPairs
         progress = progress.after(newPairs, r)
         rows = r
-        if (trace) System.err.println(f"[ccf-micro] round ${progress.iterations}%2d rows=$r%9d " +
-          f"newPairs=$newPairs%9d " + (if (fuse) "fused   " else f"parts=$parts%3d") +
-          (if (i == rounds.size - 1) f" ${(System.nanoTime() - t0) / 1e9}%6.3f s" else ""))
       }
     }
     // Converged emits are one (key, min) row per key — already distinct; the

@@ -246,23 +246,15 @@ object DedupQueries {
   private[queries] def substringDedupOf(documents: DataFrame): DataFrame =
     spansFromCapped(cappedGramPostings(documents, SpanLen))
 
-  /** The span pipeline with the raw gram postings routed through a
-    * caller-supplied staging hook (eager checkpoint + ownership) — for
-    * composed flows that span-detect a DERIVED doc set (p4's quality
-    * survivors) and manage their own block lifecycle, the same
-    * re-scan-per-branch rationale as [[gramPostings]]. */
-  private[queries] def substringDedupStagedBy(documents: DataFrame)
-                                             (stage: DataFrame => DataFrame): DataFrame =
-    spansFromCapped(capPostings(stage(allGramPostings(documents, SpanLen)), MaxGramDf))
-
   /** Raw all-position gram postings of a derived doc set — the shared
     * staging input when a composed flow needs BOTH the exact span build and
     * the anchor dial over one materialized gram scan (p4/p4-anchored). */
   private[queries] def rawGramPostings(documents: DataFrame): DataFrame =
     allGramPostings(documents, SpanLen)
 
-  /** Exact maximal spans from an already-staged raw posting frame —
-    * [[substringDedupStagedBy]] with the staging done by the caller. */
+  /** Exact maximal spans from an already-staged raw posting frame (the
+    * caller stages [[rawGramPostings]]): [[substringDedupOf]]'s pipeline
+    * with the gram scan materialized once. */
   private[queries] def spansFromRaw(raw: DataFrame): DataFrame =
     spansFromCapped(capPostings(raw, MaxGramDf))
 

@@ -236,36 +236,6 @@ object GraphQueries {
         bcastLabels = broadcastRanks(s, degrees(s, dir).count())))
   )
 
-  /** Plan-evidence frames for the iterative keys' PER-ROUND shapes, over
-    * the REAL memoized builds (VERDICT r18 #8: for fixpoint keys a dump of
-    * the declared query shows only the final checkpoint scan — vacuous; the
-    * judged shape is the round). Used by [[graft.tools.PlanDump]]; each
-    * frame is one un-checkpointed round exactly as the gated loop plans it
-    * at this graph's size. */
-  private[graft] def g2RoundFrame(s: SparkSession, dir: String): DataFrame = {
-    val outE = pagerankOutE(s, dir)
-    val deg = degrees(s, dir).select(col("node").as("src"), col("deg").as("outdeg"))
-    val (n, step) = pagerankPlan(deg)
-    val ranks = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
-    step(outE, hint(ranks, broadcastRanks(s, n)), 0.15 / n)
-  }
-
-  private[graft] def g3RoundFrame(s: SparkSession, dir: String): DataFrame = {
-    val bi = bidirectByDst(s, dir)
-    lpaStep(bi, lpaStep1(bi).eagerCheckpoint(),
-      bcastLabels = broadcastRanks(s, degrees(s, dir).count()))
-  }
-
-  private[graft] def pjRoundFrame(s: SparkSession, dir: String): DataFrame = {
-    import graft.Checkpoints.EagerOps
-    val bi = CCF.bidirect(edges(s, dir)).distinct()
-      .repartition(col("src")).eagerCheckpointKeepPartitioning()
-    val lbl = bi.groupBy(col("src").as("node"))
-      .agg(least(col("src"), min(col("dst"))).as("lab")).eagerCheckpoint()
-    graft.ccf.PointerJump.bcastRound(bi,
-      lbl.select(col("node").as("_t"), col("lab").as("_tl")))
-  }
-
   /** g3 round count (communities stabilize on the planted fixture in 3;
     * the gated value is part of the oracle contract). */
   val LpaIters = 3

@@ -60,10 +60,6 @@ object PipelineQueries {
     * never mixes the two keys' bitmaps. */
   val BitDomainCap = 16
   val BitTempMix = 32
-  /** All p5 stages passed — the curated trained-on set. */
-  val KeptAllCurated: Int =
-    BitSampled | BitDecontam | BitQuality | BitNearDup | BitDomainCap | BitTempMix
-
   /** p5's recipe dials, replayed verbatim in the oracle: the composed cap
     * and mix run over the SURVIVOR set (a quality-gated, deduped fraction
     * of the corpus), so the standalone keys' corpus-sized constants
@@ -997,7 +993,6 @@ object PipelineQueries {
   private lazy val corpusCascadeSql: String = {
     val toks = tokensSql("text")
     val gram8 = CurationQueries.gram8Sql
-    import DedupQueries.{JaccardT, ShingleK}
     s"""s1 AS MATERIALIZED (
        |  SELECT doc_id, lang, source, n_chars, text FROM documents
        |  WHERE ${CurationQueries.saltedHashSql("smpl", "doc_id")} % 100 < 10),

@@ -250,7 +250,6 @@ object RelationalQueries {
     // Frame windows: running revenue + 3-row moving average per customer.
     "q24_window_frames" -> ((s, d) => {
       val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      val priceDec = expr("CAST(o_totalprice AS DECIMAL(14,2))")
       ord(s, d).select(
         col("o_custkey"), col("o_orderkey"),
         expr("CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)").as("running_rev"),

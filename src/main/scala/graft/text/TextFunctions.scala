@@ -79,11 +79,6 @@ object TextFunctions {
         i => concat_ws(" ", slice(toks, i + 1, lit(k))))))
       .otherwise(array().cast("array<string>"))
 
-  def shinglesSql(toks: String, k: Int): String =
-    s"CASE WHEN len($toks) >= $k THEN list_distinct(" +
-      s"[array_to_string($toks[i+1:i+$k], ' ') for i in range(0, len($toks) - ${k - 1})]) " +
-      s"ELSE [] END"
-
   // ---------------------------------------------------------------- minhash
 
   /** MinHash signature (array of NumHashes longs) over a shingle-hash array.

@@ -72,8 +72,8 @@ class CCFPropertySpec extends SparkSpec {
   // Engine differential (ROADMAP item 5): every input below is under
   // MicroFixpoint.Threshold, so CCF.run on the shared session takes the
   // micro engine, while a session with reliable checkpoints runs the
-  // declarative loop. Both must agree on the whole result, and PointerJump
-  // on the assignments.
+  // declarative loop. Both must agree on the whole result; PointerJump, and
+  // CCF.auto handing off from either engine, on the assignments.
   private def strEdges(edges: Seq[(String, String)]): SparkSession => DataFrame =
     s => Generators.toDF(s, edges)
 
@@ -124,6 +124,15 @@ class CCFPropertySpec extends SparkSpec {
       assert(declarative.converged === micro.converged)
       assert(micro.converged)
       assert(rows(PointerJump.run(input(spark)).assignments) === expected)
+      // CCF.auto with the dense rule off and the blowup detector at 1x: each
+      // engine may hand its pair set to PointerJump mid-run
+      for ((engine, s) <- Seq("micro" -> spark, "declarative" -> declSession)) {
+        val auto = CCF.auto(input(s), blowupFactor = 1, denseDegree = 0)
+        assert(rows(auto.assignments) === expected, s"auto on the $engine engine")
+        assert(auto.converged === micro.converged, s"auto on the $engine engine")
+        if (name == "string chain 500")
+          assert(auto.engine === "ccf+pj", s"auto on the $engine engine")
+      }
     }
   }
 
