@@ -35,10 +35,12 @@ def run_once(checkout, workload, seed, seconds, trace):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     out = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
-                         stderr=subprocess.DEVNULL, text=True)
+                         stderr=subprocess.PIPE, text=True)
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if out.returncode != 0 or not lines:
-        raise SystemExit(f"bench_ab: run failed in {checkout} (seed {seed}, exit {out.returncode})")
+        tail = "\n".join(out.stderr.splitlines()[-20:])
+        raise SystemExit(f"bench_ab: run failed in {checkout} (seed {seed}, exit {out.returncode})"
+                         f"; last lines of its stderr:\n{tail}")
     return json.loads(lines[-1])
 
 

@@ -102,7 +102,8 @@ object CCF {
     * @param converged false iff maxIterations hit first
     * @param newPairsHistory newPairs per round, oldest first
     * @param engine which kernel(s) produced the result: "ccf", "pj", or
-    *               "ccf+pj" (auto's mid-fixpoint rescue) */
+    *               "ccf+pj" ([[auto]]'s CCF rounds up to the blowup, then
+    *               PointerJump restarted on the input) */
   final case class CCFResult(
       assignments: DataFrame,
       iterations: Int,
@@ -198,103 +199,89 @@ object CCF {
    *                kernel (see [[Variant]])
    */
   def run(edges: DataFrame, variant: Variant = Basic, maxIterations: Int = 100): CCFResult =
-    runSwitchable(edges, maxIterations, blowupFactor = 0L) match {
+    runSwitchable(edges, maxIterations, armed = false) match {
       case Left(r) => r
       case Right(_) => throw new IllegalStateException("unreachable: blowup switch disabled")
     }
+
+  /** [[auto]]'s blowup detector fires after 2 consecutive CCF rounds emit
+    * more than this many times the input's pairs. */
+  private[ccf] val BlowupFactor = 8L
+
+  /** [[auto]] sends graphs whose estimated mean degree exceeds this straight
+    * to [[PointerJump]]. */
+  private val DenseDegree = 16.0
 
   /**
    * Engine auto-selection (VERDICT r05 #4): run [[CCF]] — the right engine for
    * the short-effective-diameter graphs real corpora produce — but watch the
    * per-round OBSERVED pair count the loop already collects, and when it
-   * exceeds `blowupFactor x nInput` for 2 consecutive rounds (the long-diameter
-   * doubling signature from the class scaladoc), abandon the edge-rewriting
-   * fixpoint and finish with [[PointerJump]] on the CURRENT pair set. The
-   * caller never has to know which shape their graph is.
-   *
-   * Soundness of the mid-fixpoint hand-off — each CCF round preserves exactly
-   * what connected components need:
-   *  - Node set: every node of the current graph survives into the next pair
-   *    set. The larger endpoint u of any edge has a neighbor < u, so u is
-   *    re-labeled and emits (u, mn); a group-local minimum survives as the
-   *    `mn` target of its neighbors' emits (each neighbor sees it in its
-   *    neighborhood, so their group min is <= it, and equality puts it in
-   *    emit1's dst).
-   *  - Component partition: every emitted pair (x, mn) links nodes of one
-   *    original component (mn is a neighborhood min), so components never
-   *    merge; and each original edge (k, v)'s endpoints stay connected through
-   *    the re-labeled endpoint's star center mn, so components never split.
-   * PointerJump on that pair set therefore yields the same (node, component)
-   * assignment — same minima, same rep-has-no-row contract — as CCF would
-   * have at convergence.
+   * exceeds [[BlowupFactor]] x the input for 2 consecutive rounds (the
+   * long-diameter doubling signature from the class scaladoc), abandon the
+   * edge-rewriting fixpoint and restart with [[PointerJump]] on the INPUT
+   * edges, which the loop materialized once at entry. The caller never has
+   * to know which shape their graph is. Both engines answer from the input,
+   * so the result is the one [[PointerJump.run]] gives; PointerJump's rounds
+   * cost O(|E| + |V|), so they are cheaper on the input than on a pair set
+   * already past 8x of it.
    *
    * Iterations/history report the CCF rounds run plus PointerJump's rounds
-   * (its changed-label counts), oldest first.
+   * (its changed-label counts), oldest first. The cap wins over a switch: a
+   * switch fires only while rounds are left, so a run capped at the switch
+   * round ends as [[run]]'s capped result does.
    *
    * Second rule, decided UP FRONT: DENSE graphs (mean degree >
-   * `denseDegree`) go straight to [[PointerJump]]. CCF's re-emit step
+   * [[DenseDegree]]) go straight to [[PointerJump]]. CCF's re-emit step
    * multiplies every re-labeled key's full neighborhood each round — on the
    * sf0.1 co-purchase graph (20k nodes, 1.2M edges, degree ~120) round 2
    * alone emits 3.9M pairs and CCF runs 2.5x slower than the n-row label
    * table (BENCH_NOTES r06). The density estimate is one pass over the edge
    * list with sketch cardinality (approx_count_distinct, ±5%) — a 16x
    * threshold needs no better — and at 100 TB that pass is a map-side
-   * partial aggregate, not a shuffle of the key space. A mid-fixpoint switch
-   * cannot recover this case: by the time pair counts look bad, the pair set
-   * handed over is already degree-amplified past the original edge list.
+   * partial aggregate, not a shuffle of the key space. The blowup detector
+   * would catch this case only after the amplified rounds it exists to avoid.
    *
    * 100 TB notes: the runtime detector costs nothing (the row count is
    * already an observed metric of the round's checkpoint job) and triggers
-   * before the exponential rounds dominate — at `blowupFactor`=8 a doubling
-   * graph runs ~4 extra cheap rounds and hands PointerJump a pair set
-   * O(blowupFactor x |E|), while a web/social-shaped graph (pair sets peak
-   * ~2-3x input) never switches and keeps CCF's cheaper rounds.
+   * before the exponential rounds dominate — a doubling graph runs ~5 cheap
+   * CCF rounds before the restart, while a web/social-shaped graph (pair
+   * sets peak ~2-3x input) never switches and keeps CCF's cheaper rounds.
    */
-  def auto(edges: DataFrame, maxIterations: Int = 100, blowupFactor: Long = 8L,
-           denseDegree: Double = 16.0): CCFResult = {
+  def auto(edges: DataFrame, maxIterations: Int = 100): CCFResult = {
     require(edges.columns.length == 2,
       s"edge list must have 2 columns, got ${edges.columns.mkString(", ")}")
-    if (denseDegree > 0) {
-      val Array(a, b) = edges.columns
-      val est = edges.agg(count(lit(1)).as("m"),
-        approx_count_distinct(col(a), 0.05).as("na"),
-        approx_count_distinct(col(b), 0.05).as("nb")).head()
-      val m = est.getLong(0)
-      // |V| >= max(nd(a), nd(b)); mean degree 2|E|/|V| <= 2m/max — an upper
-      // bound tight enough for a 16x threshold (exact |V| needs the union)
-      val nV = math.max(1L, math.max(est.getLong(1), est.getLong(2)))
-      if (m > 0 && 2.0 * m / nV > denseDegree)
-        return PointerJump.run(edges, maxIterations)
-    }
-    runSwitchable(edges, maxIterations, blowupFactor) match {
+    val Array(a, b) = edges.columns
+    val est = edges.agg(count(lit(1)).as("m"),
+      approx_count_distinct(col(a), 0.05).as("na"),
+      approx_count_distinct(col(b), 0.05).as("nb")).head()
+    val m = est.getLong(0)
+    // |V| >= max(nd(a), nd(b)); mean degree 2|E|/|V| <= 2m/max — an upper
+    // bound tight enough for a 16x threshold (exact |V| needs the union)
+    val nV = math.max(1L, math.max(est.getLong(1), est.getLong(2)))
+    if (m > 0 && 2.0 * m / nV > DenseDegree)
+      return PointerJump.run(edges, maxIterations)
+    runSwitchable(edges, maxIterations, armed = true) match {
       case Left(r) => r
-      case Right(sw) if sw.iterations >= maxIterations =>
-        // budget exhausted exactly at the switch point: honor the cap the
-        // way run() does — converged = false, zero extra rounds. The micro
-        // engine hands over its pair set pre-dedup, so deduplicate here as
-        // run()'s cap path does.
-        CCFResult(sw.pairs.distinct().toDF("node", "component"), sw.iterations,
-          converged = false, sw.history, engine = "ccf")
       case Right(sw) =>
-        val pj = PointerJump.run(sw.pairs, maxIterations - sw.iterations)
-        // PointerJump has eagerly materialized its own topology checkpoint;
-        // the CCF rounds' backing blocks are no longer referenced.
-        sw.ckpts.foreach(freeCheckpoint)
+        val pj = PointerJump.run(sw.input, maxIterations - sw.iterations)
+        // PointerJump has eagerly materialized its own topology checkpoint.
+        // A driver-local input has no checkpoint leaf, so this frees only
+        // the input checkpoint runSwitchable made.
+        freeCheckpoint(sw.input)
         CCFResult(pj.assignments, sw.iterations + pj.iterations, pj.converged,
           sw.history ++ pj.newPairsHistory, engine = "ccf+pj")
     }
   }
 
-  /** Hand-off state when the blowup detector fires: the current pair set (same
-    * components as the input — see [[auto]]), the checkpoints backing it (for
-    * the caller to free once done; empty from the micro engine, whose rounds
-    * live in persist blocks the ContextCleaner reclaims), and the
-    * rounds/history so far. */
-  private[ccf] final case class Switched(pairs: DataFrame, ckpts: Seq[DataFrame],
-                                         iterations: Int, history: Seq[Long])
+  /** Hand-off state when [[auto]]'s blowup detector fires: the input as
+    * materialized at entry (its checkpoint, or the driver-local relation;
+    * the caller frees it once done), and the CCF rounds/history so far. */
+  private[ccf] final case class Switched(input: DataFrame, iterations: Int, history: Seq[Long])
 
+  /** The CCF fixpoint on either engine. `armed` runs [[auto]]'s blowup
+    * detector, which ends the run with Right(Switched) when it fires. */
   private def runSwitchable(edges: DataFrame, maxIterations: Int,
-                            blowupFactor: Long): Either[CCFResult, Switched] = {
+                            armed: Boolean): Either[CCFResult, Switched] = {
     muteCheckpointWarnsOnce()
     require(edges.columns.length == 2, s"edge list must have 2 columns, got ${edges.columns.length}")
 
@@ -312,7 +299,7 @@ object CCF {
         case _ => None
       }
     var pairs: DataFrame = null
-    var prevCkpt: DataFrame = null // checkpoint backing `pairs` (null: local input)
+    var prevCkpt: DataFrame = null // checkpoint backing `pairs` (null: local or armed input)
     val nInput = localCount match {
       case Some(n) =>
         pairs = inputDF
@@ -329,24 +316,26 @@ object CCF {
         // estimates compound (square) across checkpoints until planning time
         // drowns in BigInteger arithmetic (see Bridge.withStats).
         pairs = org.apache.spark.sql.graft.Bridge.withStats(inCkpt, n)
-        prevCkpt = pairs
+        // armed, the input checkpoint outlives the rounds: a switch restarts on it
+        if (!armed) prevCkpt = pairs
         n
     }
+    val input = pairs
 
     // Size-gated engine choice (see class scaladoc of [[MicroFixpoint]]):
     // sub-threshold graphs run the identical algorithm on the RDD layer,
     // with no per-round planning cost (single-partition rounds share a task).
-    // The armed blowup detector ([[auto]], blowupFactor > 0) runs inside the
-    // micro loop on the same observed row counts, so the auto path gets the
-    // same latency rounds and the same mid-fixpoint hand-off. Not taken for
-    // key types without a typed kernel, or when the session opted into
-    // reliable checkpoints (spark.graft.checkpointDir signals a preemptible
-    // cluster, where the declarative loop's per-round DFS checkpoint is the
-    // point — the micro engine keeps state in executor blocks only).
+    // The armed blowup detector ([[auto]]) runs inside the micro loop on the
+    // same observed row counts, so the auto path gets the same latency
+    // rounds and the same switch. Not taken for key types without a typed
+    // kernel, or when the session opted into reliable checkpoints
+    // (spark.graft.checkpointDir signals a preemptible cluster, where the
+    // declarative loop's per-round DFS checkpoint is the point — the micro
+    // engine keeps state in executor blocks only).
     val reliableCkpt = edges.sparkSession.conf
       .getOption(graft.Checkpoints.DirKey).exists(_.nonEmpty)
     if (!reliableCkpt && nInput < MicroFixpoint.Threshold) {
-      MicroFixpoint.runDF(pairs, maxIterations, blowupFactor, nInput) match {
+      MicroFixpoint.runDF(pairs, maxIterations, armed, nInput) match {
         case Some(r) => return r
         case None    => () // unsupported key type: declarative path below
       }
@@ -357,10 +346,10 @@ object CCF {
     val history = scala.collection.mutable.ArrayBuffer.empty[Long]
     // The per-round shuffles run at the session's partition count; AQE's
     // partition coalescing sizes each reduce side from runtime stats.
-    // Blowup detector state (see [[auto]]); inert when blowupFactor == 0.
-    var consecutiveBlowups = 0
-    var switchOut = false
-    while (iteration < maxIterations && !converged && !switchOut) {
+    // Blowup detector state (see [[auto]]); inert when disarmed.
+    val blowupAt = BlowupFactor * math.max(1L, nInput)
+    var blowups = 0
+    while (iteration < maxIterations && !converged && blowups < 2) {
       iteration += 1
       // tagged = (src, dst, isNew); isNew marks the (value, min) emits that the
       // reference counts in its NewPair counter.
@@ -412,20 +401,18 @@ object CCF {
         Map("rows" -> emitted0.count()))("rows")
       val emitted = org.apache.spark.sql.graft.Bridge.withStats(emitted0, dedupRows)
       history += newPairs
-      if (blowupFactor > 0L && rows > blowupFactor * math.max(1L, nInput)) {
-        consecutiveBlowups += 1
-        if (consecutiveBlowups >= 2) switchOut = true
-      } else consecutiveBlowups = 0
+      blowups = if (armed && rows > blowupAt) blowups + 1 else 0
       // CCF-Dedup: already materialized in the checkpoint above (r18).
       pairs = emitted
       converged = newPairs == 0L
     }
-    if (switchOut && !converged)
-      // Keep BOTH live checkpoints until the successor engine has materialized
-      // its own topology from `pairs` (which reads prevCkpt); freed by [[auto]].
-      return Right(Switched(pairs.toDF("src", "dst"),
-        Seq(prevCkpt, olderCkpt).filter(_ != null), iteration, history.toSeq))
     if (olderCkpt != null) freeCheckpoint(olderCkpt)
+    // the cap wins: a switch needs rounds left (see [[auto]])
+    if (blowups >= 2 && !converged && iteration < maxIterations) {
+      if (prevCkpt != null) freeCheckpoint(prevCkpt)
+      return Right(Switched(input, iteration, history.toSeq))
+    }
+    if (armed && localCount.isEmpty && iteration > 0) freeCheckpoint(input)
 
     // Between-round pairs are globally deduped in the checkpoint (r18) —
     // no defensive final distinct needed.
@@ -461,7 +448,7 @@ object CCF {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
         case _ => ()
       }
-    } catch { case _: Throwable => () } // best-effort; ContextCleaner is the backstop
+    } catch { case scala.util.control.NonFatal(_) => () } // best-effort; ContextCleaner is the backstop
 
   /** O2: emit both orientations of every pair (UNION ALL keeps multiplicity,
     * matching the reference's flatMap double-emit). */

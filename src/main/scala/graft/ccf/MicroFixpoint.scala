@@ -58,24 +58,25 @@ object MicroFixpoint {
   val RowsPerPartition: Long = 32000L
 
   /** Fixpoint outcome on the RDD layer; `assignments` is (node, component),
-    * representative has no row — the same contract as [[CCF.CCFResult]].
-    * When `switched` (blowup detector fired — see [[CCF.auto]]), it is the
-    * CURRENT pair set instead (same components as the input; pre-dedup). */
-  final case class MicroResult[K](assignments: RDD[(K, K)], iterations: Int,
-                                  converged: Boolean, history: Seq[Long],
-                                  switched: Boolean = false)
+    * representative has no row — the same contract as [[CCF.CCFResult]] —
+    * or None when the blowup detector fired ([[CCF.auto]] then restarts on
+    * the input). */
+  final case class MicroResult[K](assignments: Option[RDD[(K, K)]], iterations: Int,
+                                  converged: Boolean, history: Seq[Long])
 
   /** Loop state after each round. The driver and the fused task both step
     * it, so they stop on the same round: the iteration cap, convergence (a
     * round with 0 NewPairs) or [[CCF.auto]]'s blowup detector (2 consecutive
-    * rounds past `blowupAt` rows). */
-  private final case class Progress(maxIterations: Int, blowupAt: Long, iterations: Int = 0,
-                                    converged: Boolean = false, blowups: Int = 0) {
-    def switched: Boolean = blowups >= 2
-    def done: Boolean = iterations >= maxIterations || converged || switched
+    * rounds past `blowupAt` rows; None disarms it). */
+  private final case class Progress(maxIterations: Int, blowupAt: Option[Long],
+                                    iterations: Int = 0, converged: Boolean = false,
+                                    blowups: Int = 0) {
+    /** The detector fired with rounds left: the cap wins over a switch. */
+    def switched: Boolean = blowups >= 2 && !converged && iterations < maxIterations
+    def done: Boolean = iterations >= maxIterations || converged || blowups >= 2
     def after(newPairs: Long, rows: Long): Progress =
       copy(iterations = iterations + 1, converged = newPairs == 0L,
-        blowups = if (rows > blowupAt) blowups + 1 else 0)
+        blowups = if (blowupAt.exists(rows > _)) blowups + 1 else 0)
   }
 
   /** A fused block's output: the pair set after its last round, and each
@@ -88,19 +89,18 @@ object MicroFixpoint {
     * otherwise it is one job on up to `maxParts` partitions (the session's
     * shuffle-partition default) — intermediate pair sets can blow up orders
     * of magnitude past the input (string-keyed chains), and a cap derived
-    * from the input size would serialize exactly those rounds. With
-    * `blowupFactor > 0`, runs [[CCF.auto]]'s blowup detector on the same
-    * observed per-round row counts: 2 consecutive rounds past
-    * `blowupFactor x nInput` end the run with `switched = true`; 0 disarms
-    * it. */
+    * from the input size would serialize exactly those rounds. `armed`
+    * runs [[CCF.auto]]'s blowup detector on the same observed per-round row
+    * counts: 2 consecutive rounds past [[CCF.BlowupFactor]] x `nInput` end
+    * the run with no assignments. */
   private[ccf] def run[K: ClassTag](pairs0: RDD[(K, K)], maxIterations: Int, nInput: Long,
-                                    blowupFactor: Long, maxParts: Int)
+                                    armed: Boolean, maxParts: Int)
                                    (implicit ord: Ordering[K]): MicroResult[K] = {
     val sc = pairs0.sparkContext
     def partsFor(rows: Long): Int =
       math.max(1, math.min(maxParts, (rows / RowsPerPartition + 1L).toInt))
     var progress = Progress(maxIterations,
-      blowupAt = if (blowupFactor > 0L) blowupFactor * math.max(1L, nInput) else Long.MaxValue)
+      blowupAt = Option.when(armed)(CCF.BlowupFactor * math.max(1L, nInput)))
     var pairs = pairs0
     var rows = nInput
     var prevCached: RDD[_] = null
@@ -147,15 +147,15 @@ object MicroFixpoint {
         rows = r
       }
     }
-    // Converged emits are one (key, min) row per key — already distinct; the
-    // maxIterations-without-convergence path deduplicates defensively (its
-    // pair set is pre-dedup), matching the declarative loop's tail. The
-    // switched hand-off passes the pre-dedup pair set as-is (the successor
-    // engine's topology build tolerates duplicates).
-    val assignments =
-      if (progress.converged || progress.switched) pairs else pairs.distinct(partsFor(rows))
-    MicroResult(assignments, progress.iterations, progress.converged, history.toSeq,
-      progress.switched)
+    if (progress.switched)
+      MicroResult(None, progress.iterations, converged = false, history.toSeq)
+    else {
+      // Converged emits are one (key, min) row per key — already distinct;
+      // the maxIterations-without-convergence path deduplicates defensively
+      // (its pair set is pre-dedup), matching the declarative loop's tail.
+      val assignments = if (progress.converged) pairs else pairs.distinct(partsFor(rows))
+      MicroResult(Some(assignments), progress.iterations, progress.converged, history.toSeq)
+    }
   }
 
   /** Rounds run in memory inside one task, from loop state `start` on, until
@@ -233,34 +233,33 @@ object MicroFixpoint {
   /** DataFrame adapter: run the micro engine when the key type has a kernel
     * (string/long/int), else None and the caller stays on the declarative path.
     * `pairs` must be a materialized-or-cheap 2-column (src, dst) frame.
-    * Returns Left(result) on convergence / iteration cap, Right(switched
-    * hand-off) when the armed blowup detector fired (see [[CCF.auto]]). */
-  private[ccf] def runDF(pairs: DataFrame, maxIterations: Int,
-                         blowupFactor: Long, nInput: Long)
+    * Returns Left(result) on convergence / iteration cap, Right(Switched)
+    * carrying `pairs` itself when the armed blowup detector fired (see
+    * [[CCF.auto]]). */
+  private[ccf] def runDF(pairs: DataFrame, maxIterations: Int, armed: Boolean, nInput: Long)
       : Option[Either[CCF.CCFResult, CCF.Switched]] = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val maxParts = math.max(1,
-      try spark.conf.get("spark.sql.shuffle.partitions").toInt catch { case _: Throwable => 32 })
+    val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     def toResult[K](r: MicroResult[K], toDF: RDD[(K, K)] => DataFrame)
         : Either[CCF.CCFResult, CCF.Switched] =
-      if (r.switched)
-        Right(CCF.Switched(toDF(r.assignments).toDF("src", "dst"),
-          Seq.empty, r.iterations, r.history))
-      else
-        Left(CCF.CCFResult(toDF(r.assignments).toDF("node", "component"), r.iterations,
-          r.converged, r.history, engine = "ccf"))
+      r.assignments match {
+        case Some(a) =>
+          Left(CCF.CCFResult(toDF(a).toDF("node", "component"), r.iterations,
+            r.converged, r.history, engine = "ccf"))
+        case None => Right(CCF.Switched(pairs, r.iterations, r.history))
+      }
     val tupled = pairs.toDF("_1", "_2")
     pairs.schema.fields(0).dataType.typeName match {
       case "string" =>
         val rdd = tupled.as[(String, String)].rdd
-        Some(toResult[String](run(rdd, maxIterations, nInput, blowupFactor, maxParts), _.toDF()))
+        Some(toResult[String](run(rdd, maxIterations, nInput, armed, maxParts), _.toDF()))
       case "long" =>
         val rdd = tupled.as[(Long, Long)].rdd
-        Some(toResult[Long](run(rdd, maxIterations, nInput, blowupFactor, maxParts), _.toDF()))
+        Some(toResult[Long](run(rdd, maxIterations, nInput, armed, maxParts), _.toDF()))
       case "integer" =>
         val rdd = tupled.as[(Int, Int)].rdd
-        Some(toResult[Int](run(rdd, maxIterations, nInput, blowupFactor, maxParts), _.toDF()))
+        Some(toResult[Int](run(rdd, maxIterations, nInput, armed, maxParts), _.toDF()))
       case _ => None
     }
   }

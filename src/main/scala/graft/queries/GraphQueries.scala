@@ -181,9 +181,9 @@ object GraphQueries {
     // Engine auto-selection (§2c; VERDICT r05 #4): CCF with the blowup
     // detector, on the exact shape that needs it — the string chain's
     // intermediate pair set doubles per round, so the run starts as CCF and
-    // finishes under PointerJump, with no caller hint. Same fixpoint answer
-    // either way (CCF.auto scaladoc proves the hand-off invariant); same
-    // oracle as ccf_chain.
+    // restarts as PointerJump on the input edges, with no caller hint. Same
+    // answer either way (both engines compute components of the input);
+    // same oracle as ccf_chain.
     "ccf_auto_chain" -> ((s, _) =>
       CCF.auto(Generators.chainDF(s, 500)).assignments),
 

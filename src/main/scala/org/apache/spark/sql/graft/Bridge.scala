@@ -71,7 +71,8 @@ object Bridge {
     }
 
     /** Drop the checkpoint's block-manager storage (safe once unreferenced). */
-    def free(): Unit = try rdd.unpersist(false) catch { case _: Throwable => () }
+    def free(): Unit =
+      try rdd.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
   }
 
   object CheckpointHandle {

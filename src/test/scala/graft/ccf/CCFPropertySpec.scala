@@ -73,7 +73,7 @@ class CCFPropertySpec extends SparkSpec {
   // MicroFixpoint.Threshold, so CCF.run on the shared session takes the
   // micro engine, while a session with reliable checkpoints runs the
   // declarative loop. Both must agree on the whole result; PointerJump, and
-  // CCF.auto handing off from either engine, on the assignments.
+  // CCF.auto on either engine, on the assignments.
   private def strEdges(edges: Seq[(String, String)]): SparkSession => DataFrame =
     s => Generators.toDF(s, edges)
 
@@ -96,6 +96,9 @@ class CCFPropertySpec extends SparkSpec {
     "random 5000/15000" -> strEdges(Generators.randomGraph(5000, 15000)),
     "cluster 20x50/0" -> strEdges(Generators.clusterGraph(20, 50)),
     "string chain 500" -> strEdges(Generators.chainGraph(500)),
+    // mean degree 2 * 3000 / 100 = 60: CCF.auto's dense rule sends it
+    // straight to PointerJump
+    "dense random 100/3000" -> strEdges(Generators.randomGraph(100, 3000, seed = 11)),
     "long ids >= 2^31" -> { s =>
       import s.implicits._
       Seq((big + 5, big + 3), (big + 3, big + 10), (big + 10, 3000000000L),
@@ -124,15 +127,28 @@ class CCFPropertySpec extends SparkSpec {
       assert(declarative.converged === micro.converged)
       assert(micro.converged)
       assert(rows(PointerJump.run(input(spark)).assignments) === expected)
-      // CCF.auto with the dense rule off and the blowup detector at 1x: each
-      // engine may hand its pair set to PointerJump mid-run
       for ((engine, s) <- Seq("micro" -> spark, "declarative" -> declSession)) {
-        val auto = CCF.auto(input(s), blowupFactor = 1, denseDegree = 0)
+        val auto = CCF.auto(input(s))
         assert(rows(auto.assignments) === expected, s"auto on the $engine engine")
         assert(auto.converged === micro.converged, s"auto on the $engine engine")
         if (name == "string chain 500")
           assert(auto.engine === "ccf+pj", s"auto on the $engine engine")
+        if (name == "dense random 100/3000")
+          assert(auto.engine === "pj", s"auto on the $engine engine")
       }
+    }
+  }
+
+  test("auto on string chain 500: CCF's rounds up to the switch, then PointerJump on the input") {
+    val input = strEdges(Generators.chainGraph(500))
+    val ccf = CCF.run(input(spark)).newPairsHistory
+    val pj = PointerJump.run(input(spark)).newPairsHistory
+    for ((engine, s) <- Seq("micro" -> spark, "declarative" -> declSession)) {
+      val auto = CCF.auto(input(s))
+      assert(auto.engine === "ccf+pj", s"auto on the $engine engine")
+      val k = auto.newPairsHistory.length - pj.length
+      assert(k > 0, s"auto on the $engine engine")
+      assert(auto.newPairsHistory === ccf.take(k) ++ pj, s"auto on the $engine engine")
     }
   }
 
