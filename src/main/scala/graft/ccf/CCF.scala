@@ -341,16 +341,12 @@ object CCF {
       }
     }
     var olderCkpt: DataFrame = null // checkpoint 2 rounds back (freeable)
-    var iteration = 0
-    var converged = false
+    var progress = MicroFixpoint.Progress.start(maxIterations, armed, nInput)
     val history = scala.collection.mutable.ArrayBuffer.empty[Long]
     // The per-round shuffles run at the session's partition count; AQE's
     // partition coalescing sizes each reduce side from runtime stats.
-    // Blowup detector state (see [[auto]]); inert when disarmed.
-    val blowupAt = BlowupFactor * math.max(1L, nInput)
-    var blowups = 0
-    while (iteration < maxIterations && !converged && blowups < 2) {
-      iteration += 1
+    while (!progress.done) {
+      val iteration = progress.iterations + 1
       // tagged = (src, dst, isNew); isNew marks the (value, min) emits that the
       // reference counts in its NewPair counter.
       val tagged = iterateBasic(pairs)
@@ -401,22 +397,21 @@ object CCF {
         Map("rows" -> emitted0.count()))("rows")
       val emitted = org.apache.spark.sql.graft.Bridge.withStats(emitted0, dedupRows)
       history += newPairs
-      blowups = if (armed && rows > blowupAt) blowups + 1 else 0
+      progress = progress.after(newPairs, rows)
       // CCF-Dedup: already materialized in the checkpoint above (r18).
       pairs = emitted
-      converged = newPairs == 0L
     }
     if (olderCkpt != null) freeCheckpoint(olderCkpt)
-    // the cap wins: a switch needs rounds left (see [[auto]])
-    if (blowups >= 2 && !converged && iteration < maxIterations) {
+    if (progress.switched) {
       if (prevCkpt != null) freeCheckpoint(prevCkpt)
-      return Right(Switched(input, iteration, history.toSeq))
+      return Right(Switched(input, progress.iterations, history.toSeq))
     }
-    if (armed && localCount.isEmpty && iteration > 0) freeCheckpoint(input)
+    if (armed && localCount.isEmpty && progress.iterations > 0) freeCheckpoint(input)
 
     // Between-round pairs are globally deduped in the checkpoint (r18) —
     // no defensive final distinct needed.
-    Left(CCFResult(pairs.toDF("node", "component"), iteration, converged, history.toSeq))
+    Left(CCFResult(pairs.toDF("node", "component"), progress.iterations, progress.converged,
+      history.toSeq))
   }
 
   /** One CCF-Iterate round, Basic kernel (paper Fig. 2; reference

@@ -64,19 +64,27 @@ object MicroFixpoint {
   final case class MicroResult[K](assignments: Option[RDD[(K, K)]], iterations: Int,
                                   converged: Boolean, history: Seq[Long])
 
-  /** Loop state after each round. The driver and the fused task both step
-    * it, so they stop on the same round: the iteration cap, convergence (a
-    * round with 0 NewPairs) or [[CCF.auto]]'s blowup detector (2 consecutive
-    * rounds past `blowupAt` rows; None disarms it). */
-  private final case class Progress(maxIterations: Int, blowupAt: Option[Long],
-                                    iterations: Int = 0, converged: Boolean = false,
-                                    blowups: Int = 0) {
+  /** Loop state after each round, stepped by both engines (here by the
+    * driver and the fused task alike), so every loop stops on the same
+    * round: the iteration cap, convergence (a round with 0 NewPairs) or
+    * [[CCF.auto]]'s blowup detector (2 consecutive rounds past `blowupAt`
+    * rows; None disarms it). */
+  private[ccf] final case class Progress(maxIterations: Int, blowupAt: Option[Long],
+                                         iterations: Int = 0, converged: Boolean = false,
+                                         blowups: Int = 0) {
     /** The detector fired with rounds left: the cap wins over a switch. */
     def switched: Boolean = blowups >= 2 && !converged && iterations < maxIterations
     def done: Boolean = iterations >= maxIterations || converged || blowups >= 2
     def after(newPairs: Long, rows: Long): Progress =
       copy(iterations = iterations + 1, converged = newPairs == 0L,
         blowups = if (blowupAt.exists(rows > _)) blowups + 1 else 0)
+  }
+
+  private[ccf] object Progress {
+    /** Before round 1 over `nInput` pairs; `armed` sets the detector at
+      * [[CCF.BlowupFactor]] x `nInput`. */
+    def start(maxIterations: Int, armed: Boolean, nInput: Long): Progress =
+      Progress(maxIterations, Option.when(armed)(CCF.BlowupFactor * math.max(1L, nInput)))
   }
 
   /** A fused block's output: the pair set after its last round, and each
@@ -99,8 +107,7 @@ object MicroFixpoint {
     val sc = pairs0.sparkContext
     def partsFor(rows: Long): Int =
       math.max(1, math.min(maxParts, (rows / RowsPerPartition + 1L).toInt))
-    var progress = Progress(maxIterations,
-      blowupAt = Option.when(armed)(CCF.BlowupFactor * math.max(1L, nInput)))
+    var progress = Progress.start(maxIterations, armed, nInput)
     var pairs = pairs0
     var rows = nInput
     var prevCached: RDD[_] = null
@@ -147,9 +154,11 @@ object MicroFixpoint {
         rows = r
       }
     }
-    if (progress.switched)
+    if (progress.switched) {
+      // the restart reads the input, not these rounds
+      Seq(prevCached, olderCached).filter(_ != null).foreach(_.unpersist(false))
       MicroResult(None, progress.iterations, converged = false, history.toSeq)
-    else {
+    } else {
       // Converged emits are one (key, min) row per key — already distinct;
       // the maxIterations-without-convergence path deduplicates defensively
       // (its pair set is pre-dedup), matching the declarative loop's tail.

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
  * LABEL TABLE (exactly n rows, forever):
  *
  *   init       lab(u) = min(u, min neighbors(u))
- *   per round  lab'(u) = min over t in N(u) ∪ {lab(u), u} of lab(t)
+ *   per round  new(u)  = min over t in N(u) ∪ {lab(u), u} of lab(t)
  *              -- neighbor-min AND the pointer jump lab(lab(u)), one join
+ *              lab'(m) = min(new(m), min over u with lab(u) = m of new(u))
+ *              -- the hook: a label takes the best its members found
  *   stop when no label changed (observed metric, same one-job-per-round
  *   shape as CCF.run).
  *
@@ -25,6 +27,10 @@ import org.apache.spark.sql.functions._
  * round, giving O(log d)-ish convergence with per-round work bounded by
  * O(|E| + |V|) — no intermediate blowup, the standard trade (pointer
  * jumping, cf. the "Connected Components in MapReduce and Beyond" family).
+ * The jump moves labels down from a label's node; the hook moves them up.
+ * Without it a local minimum ("10000" on a string-keyed chain) learns a
+ * smaller label only hop by hop through its neighbours: the 20k-node
+ * string chain took 32 rounds, and takes 16 with it.
  * The price vs CCF: a per-round join of the label table against the static
  * bidirected edge set, which CCF's self-rewriting pair set avoids on
  * SHORT-diameter graphs. Use CCF for web/social-shaped graphs, this for
@@ -32,9 +38,11 @@ import org.apache.spark.sql.functions._
  *
  * Semantics match [[CCF.run]] exactly: any orderable key type, lexicographic
  * minima for strings, representative has no output row. Fixpoint correctness:
- * labels only decrease and stay within the component; at a fixpoint the
- * neighbor-min condition forces lab constant across every edge, and the
- * component minimum m keeps lab(m) = m throughout, so the constant is m.
+ * labels only decrease and stay within the component (a hooked label is
+ * the new label of a node labelled m, so it lies in m's component); at a
+ * fixpoint the neighbor-min condition forces lab constant across every
+ * edge, and the component minimum m keeps lab(m) = m throughout, so the
+ * constant is m.
  *
  * 100 TB notes: both joins hash-partition by node id; the label table is
  * n rows regardless of round; the static bidirected edge set is checkpointed
@@ -49,7 +57,8 @@ object PointerJump {
     * (r18, the g2/g3 move — guide §2.4/§3.1): with the static bidirected
     * topology hash-partitioned by src once at build, a round is then
     * [broadcast-join labels → groupBy src] + [broadcast-join the n-row jump
-    * table] — ZERO exchanges (plan-pinned in PlanSpec) instead of
+    * table] — ZERO exchanges over the edges (plan-pinned in PlanSpec;
+    * the [[hooked]] step adds one over the label rows) instead of
     * re-shuffling the full edge stream every round. 8M nodes × ~16 B/row
     * ≈ 128 MB per round, the same bound and rationale as g2's rank table;
     * past it the rounds keep the shuffled-join shape. */
@@ -64,18 +73,10 @@ object PointerJump {
     * PlanSpec), and both the lab(u) and lab(lab(u)) terms are row-local
     * broadcast lookups INTO the same n-row label table. Inner joins stay
     * total: every node appears as src in the bidirected frame, and every
-    * lab is a node id.
-    *
-    * r19 (ADVICE r18): the round previously also broadcast a JOINED n-row
-    * "jumped" table — a distributed pre-job plus an extra n-row driver
-    * collect+broadcast every round, several hundred MB through the driver
-    * near the 8M-node bound. Now the only broadcast payload per round is
-    * the label table itself (three renamed projections of `lt`; the jump
-    * is a second lookup, not a second table), and lab(u) is read from the
-    * same lookup — identical update values. Driver-memory sizing note: one
-    * n-row table per round still transits the driver; the
-    * [[MaxBroadcastNodesKey]] bound (~128 MB at 8M nodes) is sized for
-    * that, so a conf override inherits this warning. */
+    * lab is a node id. The only broadcast payload is the label table (the
+    * jump is a second lookup into it, not a second table): one n-row table
+    * per round transits the driver, which the [[MaxBroadcastNodesKey]]
+    * bound (~128 MB at 8M nodes) is sized for. */
   private[graft] def bcastRound(biRounds: DataFrame, lt: DataFrame): DataFrame = {
     val nm = biRounds.join(broadcast(lt), col("dst") === col("_t"))
       .groupBy(col("src")).agg(min(col("_tl")).as("nm"))
@@ -85,6 +86,15 @@ object PointerJump {
       .join(broadcast(lt2), col("_tl1") === col("_t2")) // _tl2 = lab(lab(u))
       .select(col("src").as("node"), col("_tl1").as("lab"),
         least(col("_tl1"), col("_tl2"), col("nm")).as("newlab"))
+  }
+
+  /** The hook over a round's (node, lab, newlab) frame: each label m also
+    * takes the smallest new label among the nodes labelled m. The round is
+    * planned twice; the hook's aggregate shuffles at most n label rows. */
+  private def hooked(round: DataFrame): DataFrame = {
+    val hooks = round.groupBy(col("lab").as("_m")).agg(min(col("newlab")).as("_hk"))
+    round.join(hooks, col("node") === col("_m"), "left")
+      .select(col("node"), col("lab"), least(col("newlab"), col("_hk")).as("newlab"))
   }
 
   def run(edges: DataFrame, maxIterations: Int = 100): CCF.CCFResult = {
@@ -120,10 +130,10 @@ object PointerJump {
 
     // r18 (guide §2.4): with the label table under the broadcast bound, the
     // rounds' only distributed frame is the STATIC topology — partition it
-    // by src ONCE (checkpoint preserving the layout) and every round plans
-    // zero exchanges: the neighbor-min groupBy(src) rides the build
+    // by src ONCE (checkpoint preserving the layout) and no round shuffles
+    // the edges: the neighbor-min groupBy(src) rides the build
     // partitioning, the label lookup and the n-row jump table are
-    // broadcasts. Past the bound the rounds keep the shuffled-join shape
+    // broadcasts (the hook shuffles only label rows). Past the bound the rounds keep the shuffled-join shape
     // and bi keeps the distinct()'s layout (a src repartition would be a
     // wasted extra shuffle there — the shuffled round joins by dst).
     // The rounds inherit the repartition's partition count, so it is sized
@@ -144,7 +154,7 @@ object PointerJump {
       iteration += 1
       val lt = lbl.select(col("node").as("_t"), col("lab").as("_tl"))
       val obs = Observation()
-      val next0 = (if (bcastLbl) {
+      val next0 = hooked(if (bcastLbl) {
         bcastRound(biRounds, lt)
       } else {
         // ONE lookup join serves both steps: look up the labels of
@@ -177,11 +187,7 @@ object PointerJump {
       converged = changed == 0L
     }
     if (olderCkpt != null) CCF.freeCheckpoint(olderCkpt)
-    // r19 (ADVICE r18): free exactly the live topology checkpoint — on the
-    // bcast path bi0 was already freed when the src-partitioned copy was
-    // made, so freeing `bi` again would be a misleading re-free; on the
-    // non-bcast path biRounds IS bi, one free suffices.
-    if (biRounds ne bi) CCF.freeCheckpoint(biRounds) else CCF.freeCheckpoint(bi)
+    CCF.freeCheckpoint(biRounds) // the live topology checkpoint (bi itself off the bcast path)
 
     val assignments = lbl.where(col("lab") =!= col("node"))
       .select(col("node"), col("lab").as("component"))

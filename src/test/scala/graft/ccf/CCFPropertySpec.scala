@@ -143,12 +143,52 @@ class CCFPropertySpec extends SparkSpec {
     val input = strEdges(Generators.chainGraph(500))
     val ccf = CCF.run(input(spark)).newPairsHistory
     val pj = PointerJump.run(input(spark)).newPairsHistory
-    for ((engine, s) <- Seq("micro" -> spark, "declarative" -> declSession)) {
-      val auto = CCF.auto(input(s))
+    // a driver-local input is read in place; a planned one (chainDF) is
+    // checkpointed at entry, and the restart reads that checkpoint
+    for ((engine, edges) <- Seq("micro" -> input(spark), "declarative" -> input(declSession),
+        "declarative, checkpointed input" -> Generators.chainDF(declSession, 500))) {
+      val auto = CCF.auto(edges)
       assert(auto.engine === "ccf+pj", s"auto on the $engine engine")
       val k = auto.newPairsHistory.length - pj.length
       assert(k > 0, s"auto on the $engine engine")
       assert(auto.newPairsHistory === ccf.take(k) ++ pj, s"auto on the $engine engine")
+      assert(rows(auto.assignments) === rows(PointerJump.run(input(spark)).assignments),
+        s"auto on the $engine engine")
+    }
+  }
+
+  /** Changed-label counts per round of PointerJump's update on the driver:
+    * new(u) = min of lab over N(u) ∪ {u, lab(u)}, then each label m takes
+    * the smallest new(u) among the nodes u labelled m. */
+  private def pointerJumpModel(edges: Seq[(String, String)]): Seq[Long] = {
+    val nbrs = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+    var lab = nbrs.map { case (u, vs) => u -> (vs :+ u).min }
+    val history = scala.collection.mutable.ArrayBuffer.empty[Long]
+    while (history.lastOption != Some(0L)) {
+      val next = nbrs.map { case (u, vs) => u -> (vs.map(lab) :+ lab(u) :+ lab(lab(u))).min }
+      val hooks = next.groupMapReduce { case (u, _) => lab(u) }(_._2)((a, b) => if (a < b) a else b)
+      val hooked = next.map { case (u, l) => u -> hooks.get(u).fold(l)(h => if (h < l) h else l) }
+      history += hooked.count { case (u, l) => l != lab(u) }.toLong
+      lab = hooked
+    }
+    history.toSeq
+  }
+
+  test("PointerJump equals its driver-side model on both round shapes, string chain 500") {
+    // "10" and "100" are lexicographic local minima of the chain: the hook
+    // lets each take the best label its members found (11 rounds) instead of
+    // waiting for one to arrive hop by hop (18 rounds without it)
+    val edges = Generators.chainGraph(500)
+    val expected = pointerJumpModel(edges)
+    assert(expected.length === 11)
+    val shuffled = spark.newSession()
+    shuffled.conf.set(PointerJump.MaxBroadcastNodesKey, "0")
+    for ((shape, s) <- Seq("broadcast" -> spark, "shuffled" -> shuffled)) {
+      val r = PointerJump.run(Generators.toDF(s, edges))
+      assert(r.newPairsHistory === expected, s"$shape rounds")
+      assert(r.converged, s"$shape rounds")
+      assert(rows(r.assignments) === rows(CCF.run(Generators.toDF(spark, edges)).assignments),
+        s"$shape rounds")
     }
   }
 

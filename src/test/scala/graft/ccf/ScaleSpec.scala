@@ -56,22 +56,18 @@ class ScaleSpec extends SparkSpec {
   test("auto: 20k-node STRING chain switches to pointer jumping, no caller hint") {
     // VERDICT r05 #4: the blowup detector must rescue CCF's pathological shape
     // in PJ-like time. Pure CCF here peaks at ~40M intermediate pairs and runs
-    // minutes; auto caps the CCF phase at ~5 cheap doubling rounds.
+    // minutes; auto caps the CCF phase at ~4 cheap doubling rounds.
     val t0 = System.nanoTime()
     val r = CCF.auto(Generators.chainDF(spark, 20000))
     assert(r.converged)
     assert(r.assignments.where(col("component") === "0").count() === 19999L)
     assert(r.assignments.count() === 19999L)
+    // history = CCF rounds then PJ changed-counts; the switch must have fired
+    // well before CCF's ~17-round full fixpoint inflated the pair set
     assert(r.engine === "ccf+pj")
+    assert(r.iterations < 30, s"iterations=${r.iterations}")
     val secs = (System.nanoTime() - t0) / 1e9
     assert(secs < 45.0, f"took $secs%.1f s")
-    // history = CCF rounds, then PointerJump's changed-counts on the input
-    // edges (PointerJump alone needs 32 rounds here); the switch must have
-    // fired well before CCF's ~17-round full fixpoint inflated the pair set
-    val pj = PointerJump.run(Generators.chainDF(spark, 20000))
-    val ccfRounds = r.iterations - pj.iterations
-    assert(ccfRounds < 8, s"iterations=${r.iterations}, PointerJump's ${pj.iterations}")
-    assert(r.newPairsHistory.drop(ccfRounds) === pj.newPairsHistory)
   }
 
   test("auto: short-diameter sparse graph stays on CCF and matches CCF.run exactly") {
