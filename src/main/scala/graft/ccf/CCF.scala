@@ -174,9 +174,10 @@ object CCF {
    * rule): below [[MicroFixpoint.Threshold]] input pairs (when the kernel
    * supports the key type), the whole fixpoint runs on [[MicroFixpoint]] —
    * the same algorithm on the RDD layer, with zero per-round Catalyst
-   * planning: while the pair set fits one partition, consecutive rounds run
-   * inside one task, so a small fixpoint is typically one job, and a larger
-   * round is one lightweight job. Measured on the reference's
+   * planning: while the pair set stays below [[MicroFixpoint.FusedRows]],
+   * consecutive rounds run inside one task with no shuffle, so each of the
+   * reference matrix's fixpoints is one job, and a larger round is one
+   * lightweight job. Measured on the reference's
    * 34-run matrix, per-round planning + exchange setup for the declarative
    * path is ~150 ms while the data is <100k rows — two orders of magnitude
    * over the compute. At scale the declarative path below wins (codegen,
@@ -324,7 +325,8 @@ object CCF {
 
     // Size-gated engine choice (see class scaladoc of [[MicroFixpoint]]):
     // sub-threshold graphs run the identical algorithm on the RDD layer,
-    // with no per-round planning cost (single-partition rounds share a task).
+    // with no per-round planning cost (rounds below MicroFixpoint.FusedRows
+    // share a task).
     // The armed blowup detector ([[auto]]) runs inside the micro loop on the
     // same observed row counts, so the auto path gets the same latency
     // rounds and the same switch. Not taken for key types without a typed

@@ -19,13 +19,14 @@ import scala.reflect.ClassTag
  * ~20-node plan, three exchange setups, checkpoint materialization — while
  * the per-round DATA is at most a few hundred KB. The RDD layer runs the
  * identical algorithm with none of that: closures are compiled once, and
- * while the pair set fits one partition ([[RowsPerPartition]]) consecutive
- * rounds run inside ONE task, in memory (a FUSED block), so a whole small
- * fixpoint is typically one job. A larger round is one job of two stages
- * over the spill-backed `groupByKey`. Either way the NewPair/row counters
- * ride the job that materializes the rounds (per-partition counts returned
- * through `runJob`'s result handler over the persisted blocks —
- * deterministic, no accumulator-retry hazard, no extra action).
+ * while the pair set stays below [[FusedRows]] consecutive rounds run inside
+ * ONE task, in memory (a FUSED block), so a whole fixpoint of the
+ * reference's matrix is one job with no shuffle. A larger round is one job
+ * of two stages over the spill-backed `groupByKey`. Either way the
+ * NewPair/row counters ride the job that materializes the rounds
+ * (per-partition counts returned through `runJob`'s result handler over
+ * the persisted blocks — deterministic, no accumulator-retry hazard, no
+ * extra action).
  *
  * This is an explicit size-gated engine choice, not a departure from the
  * Spark-first design: at scale the declarative path in [[CCF]] wins
@@ -47,15 +48,27 @@ import scala.reflect.ClassTag
 object MicroFixpoint {
 
   /** Input-pair count below which [[CCF.run]] routes here. At 100k pairs a
-    * round's data comfortably fits one partition and per-round planning
-    * dominates; above it, codegen + partial aggregation start paying for
-    * themselves. */
+    * round's data is a few MB and per-round planning dominates; above it,
+    * codegen + partial aggregation start paying for themselves. */
   val Threshold: Long = 100000L
 
-  /** Rows one partition holds. A round over `rows` input pairs runs on
-    * `rows / RowsPerPartition + 1` partitions, and a round whose input is
-    * below it runs fused: in one task, with the rounds after it. */
+  /** Rows one partition of a distributed round holds: a round over `rows`
+    * input pairs runs on `rows / RowsPerPartition + 1` partitions, capped
+    * at the session's shuffle-partition count. */
   val RowsPerPartition: Long = 32000L
+
+  /** Input rows below which a round runs fused: in one task, in memory,
+    * with the rounds after it. A round emits, per re-labeled key, one
+    * (key, min) row plus one row per non-min neighbour occurrence: at most
+    * |V| + 2 x input rows, and in fact at most 2 x input, since the min is
+    * one of the key's own occurrences. A fused task therefore holds
+    * O(FusedRows) pairs: a round's input (below FusedRows), its per-key
+    * neighbour lists (2 x input) and its output. Sized by a per-round A/B
+    * of fused against distributed rounds inside real fixpoints on a 4-cpu
+    * host (ROADMAP item 6): fused won at 32k, 128k, 256k and 512k input
+    * rows. 2^19 keeps every fixpoint of the reference's matrix (largest
+    * pair set 107,620 rows) in one task. */
+  val FusedRows: Long = 1L << 19
 
   /** Fixpoint outcome on the RDD layer; `assignments` is (node, component),
     * representative has no row — the same contract as [[CCF.CCFResult]] —
@@ -93,10 +106,11 @@ object MicroFixpoint {
 
   /** Run the fixpoint over `nInput` input pairs for any ordered key type.
     * Each round is sized from the OBSERVED row count of the round before it
-    * (round 1: `nInput`). Below [[RowsPerPartition]] the round runs fused;
+    * (round 1: `nInput`). Below [[FusedRows]] the round runs fused;
     * otherwise it is one job on up to `maxParts` partitions (the session's
-    * shuffle-partition default) — intermediate pair sets can blow up orders
-    * of magnitude past the input (string-keyed chains), and a cap derived
+    * shuffle-partition default), [[RowsPerPartition]] rows each —
+    * intermediate pair sets can blow up orders of magnitude past the input
+    * (string-keyed chains), and a cap derived
     * from the input size would serialize exactly those rounds. `armed`
     * runs [[CCF.auto]]'s blowup detector on the same observed per-round row
     * counts: 2 consecutive rounds past [[CCF.BlowupFactor]] x `nInput` end
@@ -126,7 +140,7 @@ object MicroFixpoint {
       // rather than evicts (an evicted round would recompute its whole
       // lineage).
       val rounds: Seq[(Long, Long)] =
-        if (rows < RowsPerPartition) {
+        if (rows < FusedRows) {
           // an empty input RDD has 0 partitions, which coalesce(1) keeps
           val one = if (pairs.partitions.isEmpty) sc.parallelize(Seq.empty[(K, K)], 1)
                     else pairs.coalesce(1)
@@ -168,8 +182,8 @@ object MicroFixpoint {
   }
 
   /** Rounds run in memory inside one task, from loop state `start` on, until
-    * the loop is done or a round's output reaches [[RowsPerPartition]]; the
-    * next round then goes back to [[iterate]], which can spill. Each round
+    * the loop is done or a round's output reaches [[FusedRows]]; the next
+    * round then goes back to [[iterate]], which can spill. Each round
     * is bidirect → per-key group → [[emit]], the distributed round's
     * multiset. */
   private def fused[K](input: Iterator[(K, K)], start: Progress)
@@ -194,7 +208,7 @@ object MicroFixpoint {
       pairs = next
       rounds += ((newPairs, next.size.toLong))
       progress = progress.after(newPairs, next.size.toLong)
-    } while (!progress.done && pairs.size < RowsPerPartition)
+    } while (!progress.done && pairs.size < FusedRows)
     Block(pairs, rounds.toSeq)
   }
 

@@ -91,11 +91,13 @@ class CCFPropertySpec extends SparkSpec {
     // every leaf
     "200-leaf string star" -> strEdges((1 to 200).map(i => "zhub" -> f"leaf$i%03d")),
     "empty" -> strEdges(Seq.empty),
-    // the next three cross between fused and distributed rounds mid-run
-    // (MicroFixpoint.RowsPerPartition)
     "random 5000/15000" -> strEdges(Generators.randomGraph(5000, 15000)),
     "cluster 20x50/0" -> strEdges(Generators.clusterGraph(20, 50)),
     "string chain 500" -> strEdges(Generators.chainGraph(500)),
+    // the next two cross between fused and distributed rounds mid-run: their
+    // pair sets peak at 530,916 and 684,715 rows, past MicroFixpoint.FusedRows
+    "string chain 1000" -> strEdges(Generators.chainGraph(1000)),
+    "random 30000/90000" -> strEdges(Generators.randomGraph(30000, 90000)),
     // mean degree 2 * 3000 / 100 = 60: CCF.auto's dense rule sends it
     // straight to PointerJump
     "dense random 100/3000" -> strEdges(Generators.randomGraph(100, 3000, seed = 11)),
@@ -193,7 +195,8 @@ class CCFPropertySpec extends SparkSpec {
   }
 
   test("maxIterations inside a fused block: the micro engine equals the declarative loop") {
-    // chain 50 fits one partition in every round, so the cap stops a fused block
+    // chain 50 stays below MicroFixpoint.FusedRows in every round, so the cap
+    // stops a fused block
     val input = strEdges(Generators.chainGraph(50))
     val micro = CCF.run(input(spark), maxIterations = 3)
     val declarative = CCF.run(input(declSession), maxIterations = 3)

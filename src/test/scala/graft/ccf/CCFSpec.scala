@@ -119,11 +119,11 @@ class CCFSpec extends SparkSpec {
     assert(r.iterations === 2)
   }
 
-  test("micro engine: a fixpoint that fits one partition runs as one job") {
-    // string chain 200 peaks far below MicroFixpoint.RowsPerPartition, so all
-    // 10 rounds run fused in one task
+  /** The jobs `body` starts, counted by a job-start listener filtered by
+    * job group; an in-order marker job proves every start has arrived. */
+  private def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    val (group, markerGroup) = ("ccf-one-job", "ccf-one-job-marker")
+    val (group, markerGroup) = ("ccf-jobs", "ccf-jobs-marker")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val marker = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -136,20 +136,40 @@ class CCFSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "CCF.run")
-      val r = CCF.run(Generators.toDF(spark, Generators.chainGraph(200)))
+      sc.setJobGroup(group, "measured")
+      val r = body
       // the bus delivers events in order: once the marker job's start has
-      // arrived, so has every job CCF.run started
+      // arrived, so has every job the body started
       sc.setJobGroup(markerGroup, "marker")
       sc.parallelize(Seq(1), 1).count()
       assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(r.converged)
-      assert(r.iterations === 10)
-      assert(jobs.get === 1)
+      (r, jobs.get)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("micro engine: a fixpoint below the fused budget runs as one job") {
+    // string chain 200 peaks far below MicroFixpoint.FusedRows, and string
+    // chain 500 at 107,620 rows, so every round of both runs fused in one task
+    for ((n, iters) <- Seq(200 -> 10, 500 -> 12)) {
+      val (r, jobs) = jobsOf(CCF.run(Generators.toDF(spark, Generators.chainGraph(n))))
+      assert(r.converged, s"chain $n")
+      assert(r.iterations === iters, s"chain $n")
+      assert(jobs === 1, s"chain $n")
+    }
+  }
+
+  test("micro engine: a pair set past the fused budget leaves the fused block") {
+    // string chain 1000's round 10 emits 530,916 rows, past
+    // MicroFixpoint.FusedRows: rounds 1-10 are one fused job, round 11 runs
+    // distributed as its own job, and rounds 12-13 (306,082 rows and less)
+    // are fused again
+    val (r, jobs) = jobsOf(CCF.run(Generators.toDF(spark, Generators.chainGraph(1000))))
+    assert(r.converged)
+    assert(r.iterations === 13)
+    assert(jobs === 3)
   }
 
   test("iteration counts match the reference on chain graphs (BASELINE.md exp 2)") {
