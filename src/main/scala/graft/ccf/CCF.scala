@@ -175,13 +175,17 @@ object CCF {
    * supports the key type), the whole fixpoint runs on [[MicroFixpoint]] —
    * the same algorithm on the RDD layer, with zero per-round Catalyst
    * planning: while the pair set stays below [[MicroFixpoint.FusedRows]],
-   * consecutive rounds run inside one task with no shuffle, so each of the
-   * reference matrix's fixpoints is one job, and a larger round is one
-   * lightweight job. Measured on the reference's
-   * 34-run matrix, per-round planning + exchange setup for the declarative
-   * path is ~150 ms while the data is <100k rows — two orders of magnitude
-   * over the compute. At scale the declarative path below wins (codegen,
-   * AQE skew handling, partial aggregation) and is the engine of record.
+   * consecutive rounds run fused in driver memory with no job, and the
+   * result comes back as a driver-local `LocalRelation` DataFrame (same
+   * schema as the declarative loop's), so each of the reference matrix's
+   * fixpoints and its [[componentCount]] start no job from a driver-local
+   * input. The driver then holds O([[MicroFixpoint.FusedRows]]) pairs, the
+   * bound a fused task held before. A larger round is one lightweight
+   * job. Measured on the reference's 34-run matrix, per-round planning +
+   * exchange setup for the declarative path is ~150 ms while the data is
+   * <100k rows — two orders of magnitude over the compute. At scale the
+   * declarative path below wins (codegen, AQE skew handling, partial
+   * aggregation) and is the engine of record.
    *
    * Declarative path: per round, ONE Spark job — the round's tagged emits
    * are eagerly `localCheckpoint`'ed (truncating lineage), and the NewPair
@@ -338,7 +342,11 @@ object CCF {
       .getOption(graft.Checkpoints.DirKey).exists(_.nonEmpty)
     if (!reliableCkpt && nInput < MicroFixpoint.Threshold) {
       MicroFixpoint.runDF(pairs, maxIterations, armed, nInput) match {
-        case Some(r) => return r
+        case Some(r) =>
+          // the micro engine read its input onto the driver at entry; only a
+          // switch restarts on the input checkpoint
+          if (r.isLeft && localCount.isEmpty) freeCheckpoint(input)
+          return r
         case None    => () // unsupported key type: declarative path below
       }
     }
@@ -456,9 +464,20 @@ object CCF {
   }
 
   /** O10: number of components = distinct component labels in the converged
-    * assignment (reference `ccf_experiments.py:137`). */
-  def componentCount(assignments: DataFrame): Long =
-    assignments.select("component").distinct().count()
+    * assignment (reference `ccf_experiments.py:137`). A result whose
+    * optimized plan is a driver-local `LocalRelation` (the micro engine's,
+    * see [[run]]) is counted on the driver: `collect()` reads it without a
+    * job, while `distinct().count()` plans an aggregate over it and runs
+    * jobs like any other plan. Any other result keeps `distinct().count()`.
+    * This mirrors [[runSwitchable]]'s `LocalRelation` input shortcut. */
+  def componentCount(assignments: DataFrame): Long = {
+    val components = assignments.select("component")
+    components.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        components.collect().distinct.length.toLong
+      case _ => components.distinct().count()
+    }
+  }
 
   /** O11: component → sorted member list, re-adding the representative (which
     * has no assignment row) — reference `CCFConnectedComponents.scala:287-295`. */

@@ -2,10 +2,12 @@ package graft.ccf
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 /**
@@ -19,14 +21,15 @@ import scala.reflect.ClassTag
  * ~20-node plan, three exchange setups, checkpoint materialization — while
  * the per-round DATA is at most a few hundred KB. The RDD layer runs the
  * identical algorithm with none of that: closures are compiled once, and
- * while the pair set stays below [[FusedRows]] consecutive rounds run inside
- * ONE task, in memory (a FUSED block), so a whole fixpoint of the
- * reference's matrix is one job with no shuffle. A larger round is one job
- * of two stages over the spill-backed `groupByKey`. Either way the
- * NewPair/row counters ride the job that materializes the rounds
- * (per-partition counts returned through `runJob`'s result handler over
- * the persisted blocks — deterministic, no accumulator-retry hazard, no
- * extra action).
+ * while the pair set stays below [[FusedRows]] consecutive rounds run FUSED,
+ * in driver memory, so a whole fixpoint of the reference's matrix starts no
+ * job from a driver-local input and returns its assignments as a
+ * driver-local `LocalRelation`. A larger round is one job of two stages
+ * over the spill-backed `groupByKey`. A fused round counts its NewPairs and
+ * rows as it emits; a distributed round's counters ride the job that
+ * materializes it (per-partition counts returned through `runJob`'s result
+ * handler over the persisted round — deterministic, no accumulator-retry
+ * hazard, no extra action).
  *
  * This is an explicit size-gated engine choice, not a departure from the
  * Spark-first design: at scale the declarative path in [[CCF]] wins
@@ -57,28 +60,31 @@ object MicroFixpoint {
     * at the session's shuffle-partition count. */
   val RowsPerPartition: Long = 32000L
 
-  /** Input rows below which a round runs fused: in one task, in memory,
+  /** Input rows below which a round runs fused: on the driver, in memory,
     * with the rounds after it. A round emits, per re-labeled key, one
     * (key, min) row plus one row per non-min neighbour occurrence: at most
     * |V| + 2 x input rows, and in fact at most 2 x input, since the min is
-    * one of the key's own occurrences. A fused task therefore holds
-    * O(FusedRows) pairs: a round's input (below FusedRows), its per-key
-    * neighbour lists (2 x input) and its output. Sized by a per-round A/B
-    * of fused against distributed rounds inside real fixpoints on a 4-cpu
-    * host (ROADMAP item 6): fused won at 32k, 128k, 256k and 512k input
-    * rows. 2^19 keeps every fixpoint of the reference's matrix (largest
-    * pair set 107,620 rows) in one task. */
+    * one of the key's own occurrences. Fused rounds therefore hold
+    * O(FusedRows) pairs on the driver: a round's input (below FusedRows), its
+    * per-key neighbour lists (2 x input) and its output — the bound a fused
+    * task held when these rounds ran inside a one-task job. Sized by a
+    * per-round A/B of fused against distributed rounds inside real fixpoints
+    * on a 4-cpu host (ROADMAP item 6): fused won at 32k, 128k, 256k and 512k
+    * input rows. 2^19 keeps every fixpoint of the reference's matrix
+    * (largest pair set 107,620 rows) on the driver. */
   val FusedRows: Long = 1L << 19
 
-  /** Fixpoint outcome on the RDD layer; `assignments` is (node, component),
-    * representative has no row — the same contract as [[CCF.CCFResult]] —
-    * or None when the blowup detector fired ([[CCF.auto]] then restarts on
-    * the input). */
-  final case class MicroResult[K](assignments: Option[RDD[(K, K)]], iterations: Int,
-                                  converged: Boolean, history: Seq[Long])
+  /** Fixpoint outcome; `assignments` is (node, component), representative
+    * has no row — the same contract as [[CCF.CCFResult]]. Left holds the
+    * rows on the driver (a run whose last round ran fused), Right a
+    * distributed pair set (a run whose last round ran distributed). None
+    * when the blowup detector fired ([[CCF.auto]] then restarts on the
+    * input). */
+  final case class MicroResult[K](assignments: Option[Either[Seq[(K, K)], RDD[(K, K)]]],
+                                  iterations: Int, converged: Boolean, history: Seq[Long])
 
-  /** Loop state after each round, stepped by both engines (here by the
-    * driver and the fused task alike), so every loop stops on the same
+  /** Loop state after each round, stepped by both engines (here once per
+    * round, fused or distributed), so every loop stops on the same
     * round: the iteration cap, convergence (a round with 0 NewPairs) or
     * [[CCF.auto]]'s blowup detector (2 consecutive rounds past `blowupAt`
     * rows; None disarms it). */
@@ -100,66 +106,64 @@ object MicroFixpoint {
       Progress(maxIterations, Option.when(armed)(CCF.BlowupFactor * math.max(1L, nInput)))
   }
 
-  /** A fused block's output: the pair set after its last round, and each
-    * round's (newPairs, rows), oldest first. */
-  private final case class Block[K](pairs: ArrayBuffer[(K, K)], rounds: Seq[(Long, Long)])
-
   /** Run the fixpoint over `nInput` input pairs for any ordered key type.
     * Each round is sized from the OBSERVED row count of the round before it
-    * (round 1: `nInput`). Below [[FusedRows]] the round runs fused;
-    * otherwise it is one job on up to `maxParts` partitions (the session's
-    * shuffle-partition default), [[RowsPerPartition]] rows each —
+    * (round 1: `nInput`). A round below [[FusedRows]] runs fused, on the
+    * driver: the pair set is read there first, which costs no job from a
+    * driver-local input (a `LocalRelation`) and one collect job from a
+    * checkpoint or a distributed round, whose persisted blocks are then
+    * freed. Round 1 always runs fused, since [[Threshold]] < [[FusedRows]].
+    * A larger round is one job on up to `maxParts` partitions (the
+    * session's shuffle-partition default), [[RowsPerPartition]] rows each —
     * intermediate pair sets can blow up orders of magnitude past the input
-    * (string-keyed chains), and a cap derived
-    * from the input size would serialize exactly those rounds. `armed`
-    * runs [[CCF.auto]]'s blowup detector on the same observed per-round row
-    * counts: 2 consecutive rounds past [[CCF.BlowupFactor]] x `nInput` end
-    * the run with no assignments. */
-  private[ccf] def run[K: ClassTag](pairs0: RDD[(K, K)], maxIterations: Int, nInput: Long,
+    * (string-keyed chains), and a cap derived from the input size would
+    * serialize exactly those rounds. `armed` runs [[CCF.auto]]'s blowup
+    * detector on the same observed per-round row counts: 2 consecutive
+    * rounds past [[CCF.BlowupFactor]] x `nInput` end the run with no
+    * assignments. */
+  private[ccf] def run[K: ClassTag](input: Dataset[(K, K)], maxIterations: Int, nInput: Long,
                                     armed: Boolean, maxParts: Int)
                                    (implicit ord: Ordering[K]): MicroResult[K] = {
-    val sc = pairs0.sparkContext
+    val sc = input.sparkSession.sparkContext
     def partsFor(rows: Long): Int =
       math.max(1, math.min(maxParts, (rows / RowsPerPartition + 1L).toInt))
     var progress = Progress.start(maxIterations, armed, nInput)
-    var pairs = pairs0
+    var pairs: Either[ArrayBuffer[(K, K)], RDD[(K, K)]] = Left(ArrayBuffer.from(input.collect()))
     var rows = nInput
-    var prevCached: RDD[_] = null
-    var olderCached: RDD[_] = null
-    def keep(cached: RDD[_]): Unit = {
-      if (olderCached != null) olderCached.unpersist(false)
-      olderCached = prevCached
-      prevCached = cached
-    }
+    var cached: RDD[_] = null // the persisted round a distributed `pairs` reads
+    def uncache(): Unit = if (cached != null) { cached.unpersist(false); cached = null }
     val history = ArrayBuffer.empty[Long]
     while (!progress.done) {
       val start = progress
-      // Materialize + count in ONE job: persist, then runJob's per-partition
-      // result handler reads the counts while the block manager is writing
-      // the same iterator to cache. MEMORY_AND_DISK so memory pressure spills
-      // rather than evicts (an evicted round would recompute its whole
-      // lineage).
       val rounds: Seq[(Long, Long)] =
         if (rows < FusedRows) {
-          // an empty input RDD has 0 partitions, which coalesce(1) keeps
-          val one = if (pairs.partitions.isEmpty) sc.parallelize(Seq.empty[(K, K)], 1)
-                    else pairs.coalesce(1)
-          val block = one.mapPartitions(it => Iterator.single(fused(it, start)))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val stats = sc.runJob(block, (it: Iterator[Block[K]]) => it.next().rounds).head
-          keep(block)
-          pairs = block.flatMap(_.pairs)
+          val local = pairs match {
+            case Left(l) => l
+            case Right(rdd) => val l = ArrayBuffer.from(rdd.collect()); uncache(); l
+          }
+          val (next, stats) = fused(local, start)
+          pairs = Left(next)
           stats
         } else {
-          val tagged = iterate(pairs, dedupAdjacent = start.iterations > 0, partsFor(rows))
+          val rdd = pairs match {
+            case Left(l) => sc.parallelize(l.toSeq, partsFor(rows))
+            case Right(r) => r
+          }
+          // Materialize + count in ONE job: persist, then runJob's
+          // per-partition result handler reads the counts while the block
+          // manager is writing the same iterator to cache. MEMORY_AND_DISK so
+          // memory pressure spills rather than evicts (an evicted round would
+          // recompute its whole lineage).
+          val tagged = iterate(rdd, dedupAdjacent = start.iterations > 0, partsFor(rows))
             .persist(StorageLevel.MEMORY_AND_DISK)
           val counts = sc.runJob(tagged, (it: Iterator[(K, K, Boolean)]) => {
             var n = 0L; var t = 0L
             it.foreach { e => t += 1; if (e._3) n += 1 }
             (n, t)
           })
-          keep(tagged)
-          pairs = tagged.map(e => (e._1, e._2))
+          uncache() // the round before has been read
+          cached = tagged
+          pairs = Right(tagged.map(e => (e._1, e._2)))
           Seq((counts.map(_._1).sum, counts.map(_._2).sum))
         }
       rounds.foreach { case (newPairs, r) =>
@@ -170,25 +174,30 @@ object MicroFixpoint {
     }
     if (progress.switched) {
       // the restart reads the input, not these rounds
-      Seq(prevCached, olderCached).filter(_ != null).foreach(_.unpersist(false))
+      uncache()
       MicroResult(None, progress.iterations, converged = false, history.toSeq)
     } else {
       // Converged emits are one (key, min) row per key — already distinct;
       // the maxIterations-without-convergence path deduplicates defensively
       // (its pair set is pre-dedup), matching the declarative loop's tail.
-      val assignments = if (progress.converged) pairs else pairs.distinct(partsFor(rows))
+      val assignments = pairs match {
+        case Left(l) => Left(if (progress.converged) l.toSeq else l.distinct.toSeq)
+        case Right(rdd) => Right(if (progress.converged) rdd else rdd.distinct(partsFor(rows)))
+      }
       MicroResult(Some(assignments), progress.iterations, progress.converged, history.toSeq)
     }
   }
 
-  /** Rounds run in memory inside one task, from loop state `start` on, until
-    * the loop is done or a round's output reaches [[FusedRows]]; the next
-    * round then goes back to [[iterate]], which can spill. Each round
-    * is bidirect → per-key group → [[emit]], the distributed round's
-    * multiset. */
-  private def fused[K](input: Iterator[(K, K)], start: Progress)
-                      (implicit ord: Ordering[K]): Block[K] = {
-    var pairs = ArrayBuffer.from(input)
+  /** Rounds run in driver memory, from loop state `start` on, until the loop
+    * is done or a round's output reaches [[FusedRows]]; the next round then
+    * goes back to [[iterate]], which can spill. Each round is bidirect →
+    * per-key group → [[emit]], the distributed round's multiset. Returns the
+    * last round's pairs and each round's (newPairs, rows), oldest first. The
+    * driver holds O([[FusedRows]]) pairs, the bound a fused task held when
+    * these rounds ran inside a one-task job. */
+  private def fused[K](input: ArrayBuffer[(K, K)], start: Progress)
+                      (implicit ord: Ordering[K]): (ArrayBuffer[(K, K)], Seq[(Long, Long)]) = {
+    var pairs = input
     var progress = start
     val rounds = ArrayBuffer.empty[(Long, Long)]
     do {
@@ -209,7 +218,7 @@ object MicroFixpoint {
       rounds += ((newPairs, next.size.toLong))
       progress = progress.after(newPairs, next.size.toLong)
     } while (!progress.done && pairs.size < FusedRows)
-    Block(pairs, rounds.toSeq)
+    (pairs, rounds.toSeq)
   }
 
   /** One CCF-Iterate round → (src, dst, isNew) rows, pre-dedup. A sorted
@@ -258,31 +267,42 @@ object MicroFixpoint {
     * `pairs` must be a materialized-or-cheap 2-column (src, dst) frame.
     * Returns Left(result) on convergence / iteration cap, Right(Switched)
     * carrying `pairs` itself when the armed blowup detector fired (see
-    * [[CCF.auto]]). */
+    * [[CCF.auto]]). Rows on the driver become a `LocalRelation` DataFrame,
+    * which [[CCF.componentCount]] and collects read without a job; either
+    * shape has the declarative loop's schema. */
   private[ccf] def runDF(pairs: DataFrame, maxIterations: Int, armed: Boolean, nInput: Long)
       : Option[Either[CCF.CCFResult, CCF.Switched]] = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def toResult[K](r: MicroResult[K], toDF: RDD[(K, K)] => DataFrame)
-        : Either[CCF.CCFResult, CCF.Switched] =
+    val keyType = pairs.schema.fields(0).dataType
+    val inputNullable = pairs.schema.exists(_.nullable)
+    def toResult[K](r: MicroResult[K]): Either[CCF.CCFResult, CCF.Switched] =
       r.assignments match {
         case Some(a) =>
-          Left(CCF.CCFResult(toDF(a).toDF("node", "component"), r.iterations,
-            r.converged, r.history, engine = "ccf"))
+          // The declarative loop's schema, nullability included: its round 1
+          // emits (key, min of the key's neighbours), a nullable aggregate,
+          // and every later round reads both columns through a bidirect union
+          // with that min.
+          val schema = StructType(Seq(
+            StructField("node", keyType, nullable = inputNullable || r.iterations > 1),
+            StructField("component", keyType)))
+          val df = a match {
+            case Left(rows) =>
+              spark.createDataFrame(rows.map { case (n, c) => Row(n, c) }.asJava, schema)
+            case Right(rdd) => spark.createDataFrame(rdd.map { case (n, c) => Row(n, c) }, schema)
+          }
+          Left(CCF.CCFResult(df, r.iterations, r.converged, r.history, engine = "ccf"))
         case None => Right(CCF.Switched(pairs, r.iterations, r.history))
       }
     val tupled = pairs.toDF("_1", "_2")
-    pairs.schema.fields(0).dataType.typeName match {
+    keyType.typeName match {
       case "string" =>
-        val rdd = tupled.as[(String, String)].rdd
-        Some(toResult[String](run(rdd, maxIterations, nInput, armed, maxParts), _.toDF()))
+        Some(toResult(run(tupled.as[(String, String)], maxIterations, nInput, armed, maxParts)))
       case "long" =>
-        val rdd = tupled.as[(Long, Long)].rdd
-        Some(toResult[Long](run(rdd, maxIterations, nInput, armed, maxParts), _.toDF()))
+        Some(toResult(run(tupled.as[(Long, Long)], maxIterations, nInput, armed, maxParts)))
       case "integer" =>
-        val rdd = tupled.as[(Int, Int)].rdd
-        Some(toResult[Int](run(rdd, maxIterations, nInput, armed, maxParts), _.toDF()))
+        Some(toResult(run(tupled.as[(Int, Int)], maxIterations, nInput, armed, maxParts)))
       case _ => None
     }
   }

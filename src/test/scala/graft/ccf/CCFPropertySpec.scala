@@ -118,10 +118,16 @@ class CCFPropertySpec extends SparkSpec {
     s
   }
 
+  /** The declarative loop's result per input, run once for the specs that
+    * compare against it. */
+  private val declarativeRuns = scala.collection.mutable.Map.empty[String, CCF.CCFResult]
+  private def declarativeRun(name: String, input: SparkSession => DataFrame): CCF.CCFResult =
+    declarativeRuns.getOrElseUpdate(name, CCF.run(input(declSession)))
+
   for ((name, input) <- engineInputs) {
     test(s"engines agree on $name: micro engine, declarative loop, PointerJump") {
       val micro = CCF.run(input(spark))
-      val declarative = CCF.run(input(declSession))
+      val declarative = declarativeRun(name, input)
       val expected = rows(micro.assignments)
       assert(rows(declarative.assignments) === expected)
       assert(declarative.iterations === micro.iterations)
@@ -138,6 +144,44 @@ class CCFPropertySpec extends SparkSpec {
         if (name == "dense random 100/3000")
           assert(auto.engine === "pj", s"auto on the $engine engine")
       }
+    }
+  }
+
+  // Driver-local results (the micro engine's LocalRelation) against the
+  // declarative loop's checkpointed ones: the same schema, names, types and
+  // nullability included, and the same rows; and CCF.componentCount's
+  // driver-side count against Spark's on RDD-backed and checkpointed copies.
+  private val keyedInputs: Seq[(String, SparkSession => DataFrame)] = Seq(
+    "empty, long-keyed" -> { s =>
+      import s.implicits._
+      Seq.empty[(Long, Long)].toDF("src", "dst")
+    },
+    // converges in round 1: the declarative loop's node column keeps the
+    // input's nullability
+    "one long edge" -> { s =>
+      import s.implicits._
+      Seq((2L, 1L)).toDF("src", "dst")
+    },
+    "int ids" -> { s =>
+      import s.implicits._
+      Seq((5, 3), (3, 10), (10, 2), (100, 101), (101, 99), (7, 7)).toDF("src", "dst")
+    })
+
+  for ((name, input) <- engineInputs ++ keyedInputs) {
+    test(s"driver-local result on $name: declarative schema and rows, one component count") {
+      val local = CCF.run(input(spark)).assignments
+      assert(local.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      val declarative = declarativeRun(name, input).assignments
+      // StructType equality covers names, types, nullability and metadata
+      assert(local.schema === declarative.schema)
+      assert(rows(local) === rows(declarative))
+      val n = CCF.componentCount(local)
+      assert(n === CCF.componentCount(declarative))
+      for ((copy, df) <- Seq(
+          "RDD-backed" -> spark.createDataFrame(local.rdd, local.schema),
+          "checkpointed" -> graft.Checkpoints.eager(local)))
+        assert(CCF.componentCount(df) === n, copy)
     }
   }
 

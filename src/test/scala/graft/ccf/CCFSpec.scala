@@ -150,26 +150,55 @@ class CCFSpec extends SparkSpec {
     }
   }
 
-  test("micro engine: a fixpoint below the fused budget runs as one job") {
+  test("micro engine: a fixpoint below the fused budget runs on the driver") {
     // string chain 200 peaks far below MicroFixpoint.FusedRows, and string
-    // chain 500 at 107,620 rows, so every round of both runs fused in one task
+    // chain 500 at 107,620 rows, so every round of both runs fused on the
+    // driver: from a driver-local input the fixpoint and the component count
+    // start no job
     for ((n, iters) <- Seq(200 -> 10, 500 -> 12)) {
-      val (r, jobs) = jobsOf(CCF.run(Generators.toDF(spark, Generators.chainGraph(n))))
+      val ((r, comps), jobs) = jobsOf {
+        val r = CCF.run(Generators.toDF(spark, Generators.chainGraph(n)))
+        (r, CCF.componentCount(r.assignments))
+      }
       assert(r.converged, s"chain $n")
       assert(r.iterations === iters, s"chain $n")
-      assert(jobs === 1, s"chain $n")
+      assert(comps === 1L, s"chain $n")
+      assert(jobs === 0, s"chain $n")
     }
+    // a planned input is checkpointed at entry (one job), then collected
+    // onto the driver (one job)
+    val ((r, comps), jobs) = jobsOf {
+      val r = CCF.run(Generators.chainDF(spark, 500))
+      (r, CCF.componentCount(r.assignments))
+    }
+    assert(r.iterations === 12)
+    assert(comps === 1L)
+    assert(jobs === 2)
   }
 
   test("micro engine: a pair set past the fused budget leaves the fused block") {
     // string chain 1000's round 10 emits 530,916 rows, past
-    // MicroFixpoint.FusedRows: rounds 1-10 are one fused job, round 11 runs
-    // distributed as its own job, and rounds 12-13 (306,082 rows and less)
-    // are fused again
+    // MicroFixpoint.FusedRows: rounds 1-10 run fused on the driver, round 11
+    // runs distributed as its own job, and one collect job brings its
+    // output back for rounds 12-13 (306,082 rows and less), fused again
     val (r, jobs) = jobsOf(CCF.run(Generators.toDF(spark, Generators.chainGraph(1000))))
     assert(r.converged)
     assert(r.iterations === 13)
-    assert(jobs === 3)
+    assert(jobs === 2)
+  }
+
+  test("micro engine: a finished fixpoint leaves no RDD persisted") {
+    // string chain 1000 persists its distributed round 11 and reads it back
+    // onto the driver; chainDF's input is also checkpointed at entry
+    val sc = spark.sparkContext
+    for ((name, input) <- Seq("driver-local input" -> Generators.toDF(spark, Generators.chainGraph(1000)),
+        "checkpointed input" -> Generators.chainDF(spark, 1000))) {
+      val before = sc.getRDDStorageInfo.map(_.id).toSet
+      val r = CCF.run(input)
+      assert(r.iterations === 13, name)
+      val left = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+      assert(left.isEmpty, s"$name: ${left.map(i => s"${i.name} (${i.memSize} B)").mkString(", ")}")
+    }
   }
 
   test("iteration counts match the reference on chain graphs (BASELINE.md exp 2)") {
