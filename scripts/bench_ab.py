@@ -14,6 +14,12 @@ pairs the change won (ties count for neither side), the ratio of the medians
 (change / parent), and whether the medians differ by more than the parent's
 interquartile range. A metric is better when lower unless CHANGE's
 BENCHMARK.json says otherwise. Failed operations are summed per side.
+
+A run that fails (non-zero exit, or no result line) is recorded with its
+side, seed, exit code and the last lines of its stderr, and the A/B goes
+on; the summary covers the finished runs (a pair with a failed side does not
+count towards wins), lists the failed runs per side, and the script exits 1
+if any run failed.
 """
 import argparse
 import json
@@ -32,15 +38,14 @@ def quantile(xs, q):
 
 
 def run_once(checkout, workload, seed, seconds, trace):
+    """The run's result dict, or (exit code, last 20 stderr lines) if it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     out = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                          stderr=subprocess.PIPE, text=True)
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if out.returncode != 0 or not lines:
-        tail = "\n".join(out.stderr.splitlines()[-20:])
-        raise SystemExit(f"bench_ab: run failed in {checkout} (seed {seed}, exit {out.returncode})"
-                         f"; last lines of its stderr:\n{tail}")
+        return out.returncode, "\n".join(out.stderr.splitlines()[-20:])
     return json.loads(lines[-1])
 
 
@@ -63,37 +68,56 @@ def main():
     a = ap.parse_args()
 
     sides = {"parent": a.parent, "change": a.change}
+    # per side, one entry per pair: the result dict, or None if the run failed
     runs = {"parent": [], "change": []}
+    failures = {"parent": [], "change": []}
     for i in range(a.pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            r = run_once(sides[side], a.workload, a.seed + i, a.seconds, a.trace)
-            runs[side].append(r)
-            print(f"pair {i + 1} {side}: " + json.dumps(r), file=sys.stderr, flush=True)
+            seed = a.seed + i
+            r = run_once(sides[side], a.workload, seed, a.seconds, a.trace)
+            if isinstance(r, tuple):
+                code, tail = r
+                failures[side].append((seed, code, tail))
+                runs[side].append(None)
+                print(f"pair {i + 1} {side}: run failed (seed {seed}, exit {code}); "
+                      f"last lines of its stderr:\n{tail}", file=sys.stderr, flush=True)
+            else:
+                runs[side].append(r)
+                print(f"pair {i + 1} {side}: " + json.dumps(r), file=sys.stderr, flush=True)
 
     better = directions(a.change)
-    names = [n for n in runs["parent"][0]["metrics"] if n in runs["change"][0]["metrics"]]
+    done = {side: [r for r in runs[side] if r is not None] for side in sides}
+    pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"])
+             if p is not None and c is not None]
     print(f"{a.workload}: {a.pairs} pairs, seeds {a.seed}-{a.seed + a.pairs - 1}, "
-          f"--seconds {a.seconds} --trace {a.trace}")
-    print(f"{'metric':<28} {'parent median [q1-q3]':>28} {'change median [q1-q3]':>28} "
-          f"{'wins':>6} {'ratio':>6}  gap>IQR")
-    for name in names:
-        p = [r["metrics"][name]["value"] for r in runs["parent"]]
-        c = [r["metrics"][name]["value"] for r in runs["change"]]
-        lower = better.get(name, "lower") == "lower"
-        wins = sum(1 for x, y in zip(p, c) if (y < x if lower else y > x))
-        pm, cm = quantile(p, 0.5), quantile(c, 0.5)
-        iqr = quantile(p, 0.75) - quantile(p, 0.25)
-        ratio = cm / pm if pm else float("nan")
-        gap = (pm - cm) if lower else (cm - pm)
-        print(f"{name:<28} {pm:>10.3f} [{quantile(p, 0.25):.3f}-{quantile(p, 0.75):.3f}]"
-              f"{'':>1} {cm:>10.3f} [{quantile(c, 0.25):.3f}-{quantile(c, 0.75):.3f}]"
-              f" {wins:>3}/{a.pairs:<2} {ratio:>6.3f}  {'yes' if gap > iqr else 'no'}")
+          f"--seconds {a.seconds} --trace {a.trace}; {len(pairs)} pairs with both runs finished")
+    if done["parent"] and done["change"]:
+        names = [n for n in done["parent"][0]["metrics"] if n in done["change"][0]["metrics"]]
+        print(f"{'metric':<28} {'parent median [q1-q3]':>28} {'change median [q1-q3]':>28} "
+              f"{'wins':>6} {'ratio':>6}  gap>IQR")
+        for name in names:
+            p = [r["metrics"][name]["value"] for r in done["parent"]]
+            c = [r["metrics"][name]["value"] for r in done["change"]]
+            lower = better.get(name, "lower") == "lower"
+            paired = [(x["metrics"][name]["value"], y["metrics"][name]["value"]) for x, y in pairs]
+            wins = sum(1 for x, y in paired if (y < x if lower else y > x))
+            pm, cm = quantile(p, 0.5), quantile(c, 0.5)
+            iqr = quantile(p, 0.75) - quantile(p, 0.25)
+            ratio = cm / pm if pm else float("nan")
+            gap = (pm - cm) if lower else (cm - pm)
+            print(f"{name:<28} {pm:>10.3f} [{quantile(p, 0.25):.3f}-{quantile(p, 0.75):.3f}]"
+                  f"{'':>1} {cm:>10.3f} [{quantile(c, 0.25):.3f}-{quantile(c, 0.75):.3f}]"
+                  f" {wins:>3}/{len(pairs):<2} {ratio:>6.3f}  {'yes' if gap > iqr else 'no'}")
     for side in ("parent", "change"):
-        failed = sum(int(r["failed"]) for r in runs[side])
-        attempted = sum(int(r["attempted"]) for r in runs[side])
-        print(f"{side}: failed {failed} of {attempted} operations")
-    return 0
+        failed = sum(int(r["failed"]) for r in done[side])
+        attempted = sum(int(r["attempted"]) for r in done[side])
+        print(f"{side}: failed {failed} of {attempted} operations; "
+              f"{len(failures[side])} of {a.pairs} runs failed")
+        for seed, code, tail in failures[side]:
+            last = tail.splitlines()[-1] if tail else ""
+            print(f"  {side} run failed: seed {seed}, exit {code}: {last}")
+    return 1 if failures["parent"] or failures["change"] else 0
 
 
 if __name__ == "__main__":

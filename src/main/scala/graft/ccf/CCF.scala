@@ -1,15 +1,21 @@
 package graft.ccf
 
 import graft.Checkpoints.EagerOps
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /**
  * CCF (Connected Component Finder) — Spark-DataFrame-native implementation of
  * the min-label-propagation fixpoint from Kardes, Agrawal, Wang & Sun,
  * "CCF: Fast and Scalable Connected Component Computation in MapReduce"
- * (CIKM 2014), the algorithm the reference implements with RDD
- * `groupByKey`/`flatMap` kernels (reference: `ccf_connected_components.py:44-154`,
+ * (CIKM 2014), the algorithm the reference implements with grouped RDD
+ * kernels (reference: `ccf_connected_components.py:44-154`,
  * `CCFConnectedComponents.scala:45-140`).
  *
  * Semantics (exactly the reference's — see SURVEY.md §1.1 / §2a):
@@ -30,9 +36,11 @@ import org.apache.spark.sql.functions._
  *    (`CCFConnectedComponents.scala:192-224`).
  *
  * Spark-first formulation (NOT a port of the RDD kernel): instead of
- * materializing per-key neighbor lists with `groupByKey` + a handwritten
- * reducer, each round is a declarative plan that Catalyst fully optimizes and
- * whole-stage-codegens:
+ * materializing per-key neighbor lists in a grouped RDD + a handwritten
+ * reducer, each round at scale is a declarative plan that Catalyst fully
+ * optimizes and whole-stage-codegens (a round over fewer than
+ * [[MicroFixpoint.FusedRows]] rows runs the same rule on the driver, see
+ * [[run]]):
  *
  *   bi     = pairs UNION ALL swap(pairs)                    -- O2 bidirect
  *   stats  = bi GROUP BY src AGG min(dst) AS mn             -- partial+final hash agg
@@ -87,8 +95,8 @@ object CCF {
 
   /** The reference's kernel label (paper Fig. 2 Basic, Fig. 3 SecondarySort;
     * identical results, reference `report.md:161`). Both labels run the one
-    * kernel on both engines: [[iterateBasic]] on the declarative engine,
-    * [[MicroFixpoint]]'s grouped kernel on the micro engine. Fig. 3's
+    * kernel in both round shapes: [[iterateBasic]] in a declarative round,
+    * [[MicroFixpoint.driverRound]] in a driver round. Fig. 3's
     * secondary sort exists to bound the reducer's state, and Basic's
     * map-side partial `min` never builds a per-key neighbour list, so the
     * sort buys nothing here; the sort-based kernel lost every same-window
@@ -142,7 +150,7 @@ object CCF {
     * that has a correct recovery path one count() away. */
   private[graft] def observedOrCount(obs: Observation, what: String, deadlineMs: Long = 30000L)
                              (fallback: => Map[String, Long]): Map[String, Long] =
-    pollMetrics(() => org.apache.spark.sql.graft.Bridge.observedOrEmpty(obs),
+    pollMetrics(() => Bridge.observedOrEmpty(obs),
       what, deadlineMs)(fallback)
 
   /** The poll loop behind [[observedOrCount]], parametric in the read so the
@@ -170,33 +178,38 @@ object CCF {
   /**
    * Run CCF to convergence.
    *
-   * ENGINE SELECTION BY SIZE (observe-then-choose, like [[auto]]'s density
-   * rule): below [[MicroFixpoint.Threshold]] input pairs (when the kernel
-   * supports the key type), the whole fixpoint runs on [[MicroFixpoint]] —
-   * the same algorithm on the RDD layer, with zero per-round Catalyst
-   * planning: while the pair set stays below [[MicroFixpoint.FusedRows]],
-   * consecutive rounds run fused in driver memory with no job, and the
-   * result comes back as a driver-local `LocalRelation` DataFrame (same
-   * schema as the declarative loop's), so each of the reference matrix's
-   * fixpoints and its [[componentCount]] start no job from a driver-local
-   * input. The driver then holds O([[MicroFixpoint.FusedRows]]) pairs, the
-   * bound a fused task held before. A larger round is one lightweight
-   * job. Measured on the reference's 34-run matrix, per-round planning +
-   * exchange setup for the declarative path is ~150 ms while the data is
-   * <100k rows — two orders of magnitude over the compute. At scale the
-   * declarative path below wins (codegen, AQE skew handling, partial
-   * aggregation) and is the engine of record.
+   * ONE LOOP, EACH ROUND SHAPED BY ITS OBSERVED INPUT SIZE (observe-then-
+   * choose, like [[auto]]'s density rule): a round whose input is below
+   * [[MicroFixpoint.FusedRows]] rows runs on the driver, in memory, with no
+   * plan and no job ([[MicroFixpoint]]); a larger round runs declaratively.
+   * Round 1 is sized by the input: a driver-local `LocalRelation`'s length,
+   * or the count observed while the input is checkpointed at entry. Measured
+   * on the reference's 34-run matrix, a declarative round's planning +
+   * exchange setup is ~150 ms while the data is <100k rows — two orders of
+   * magnitude over the compute; the driver round won every per-round A/B up
+   * to 684,715 input rows (ROADMAP item 6). At scale the declarative round
+   * wins (codegen, AQE skew handling, partial aggregation) and is the engine
+   * of record. A run that ends on the driver returns a driver-local
+   * `LocalRelation`, so each of the reference matrix's fixpoints and its
+   * [[componentCount]] start no job from a driver-local input. The driver
+   * holds O([[MicroFixpoint.FusedRows]]) pairs.
    *
-   * Declarative path: per round, ONE Spark job — the round's tagged emits
-   * are eagerly `localCheckpoint`'ed (truncating lineage), and the NewPair
-   * counter rides that same materialization as an observed metric
-   * (`Dataset.observe` — computed task-side during the checkpoint job,
-   * delivered with its completion event), instead of a second count() job
-   * over the checkpoint. The CCF-Dedup `distinct` is folded INTO the
-   * checkpoint job (r18; below the observe, so the counter still sees
-   * pre-dedup emits): dedup once per round, and the next round's bidirect
-   * reads the deduped blocks directly instead of re-aggregating the
-   * pre-dedup emit set in both union branches. Lineage depth stays O(1).
+   * Hand-offs: driver → declarative deduplicates the driver rows (every emit
+   * has src > dst, so `distinct` is CCF-Dedup) into an RDD-backed frame with
+   * exact row stats; declarative → driver collects the round's checkpoint
+   * (one job) and frees it. Checkpoints are freed once no round reads them.
+   *
+   * Declarative round: ONE action — the round's tagged emits are
+   * deduplicated and eagerly `localCheckpoint`'ed (truncating lineage), and
+   * the NewPair counter rides that same materialization as an observed
+   * metric (`Dataset.observe` — computed task-side during the checkpoint
+   * job, delivered with its completion event), instead of a second count()
+   * action. The CCF-Dedup `distinct` sits above the observe, so the counter
+   * sees pre-dedup emits, and the next round reads the deduped blocks.
+   * Lineage depth stays O(1).
+   *
+   * The result's schema is the same for every round shape and round count:
+   * (node, component), both of the key type, both nullable.
    *
    * @param edges two-column DataFrame (src, dst); any orderable column type,
    *              both columns the same type. Column names are irrelevant.
@@ -283,36 +296,39 @@ object CCF {
     * the caller frees it once done), and the CCF rounds/history so far. */
   private[ccf] final case class Switched(input: DataFrame, iterations: Int, history: Seq[Long])
 
-  /** The CCF fixpoint on either engine. `armed` runs [[auto]]'s blowup
-    * detector, which ends the run with Right(Switched) when it fires. */
+  /** The CCF fixpoint: one loop, one round per step, each round shaped by
+    * the observed row count of its input (round 1: the input's). Below
+    * [[MicroFixpoint.FusedRows]] the round runs on the driver
+    * ([[MicroFixpoint.driverRound]]); otherwise it runs declaratively
+    * ([[declarativeRound]]). Key types without a driver kernel, and sessions
+    * with reliable checkpoints (`spark.graft.checkpointDir`: a preemptible
+    * cluster, where each round's DFS checkpoint is the point), run every
+    * round declaratively. `armed` runs [[auto]]'s blowup detector, which
+    * ends the run with Right(Switched) when it fires. */
   private def runSwitchable(edges: DataFrame, maxIterations: Int,
                             armed: Boolean): Either[CCFResult, Switched] = {
     muteCheckpointWarnsOnce()
     require(edges.columns.length == 2, s"edge list must have 2 columns, got ${edges.columns.length}")
-
+    val spark = edges.sparkSession
     val inputDF = edges.toDF("src", "dst")
-    // When the optimized input is a driver-local relation its row count is
-    // already known — skip the materialization job entirely; round 1 reads the
-    // local rows directly (they appear twice in the plan via bidirect, which
-    // is free for driver-local data). Arbitrary plans (scans, joins, prior
-    // fixpoint outputs) keep the observe+checkpoint job so they are evaluated
-    // exactly once.
-    val localCount: Option[Long] =
-      inputDF.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          Some(lr.data.length.toLong)
-        case _ => None
-      }
-    var pairs: DataFrame = null
-    var prevCkpt: DataFrame = null // checkpoint backing `pairs` (null: local or armed input)
-    val nInput = localCount match {
-      case Some(n) =>
-        pairs = inputDF
-        n
-      case None =>
-        // Initial materialization + size estimate in one job: count(*)
-        // observed on the input's checkpoint (a prior version ran a separate
-        // count()).
+    val keyType = inputDF.schema.fields(0).dataType
+    // One schema for every round shape and round count: both columns of the
+    // key type, both nullable (a declarative round's min is a nullable
+    // aggregate; the rounds after it read it through a bidirect union).
+    def schemaOf(a: String, b: String) =
+      StructType(Seq(StructField(a, keyType), StructField(b, keyType)))
+
+    // The pair set between rounds: `frame` ahead of a declarative round,
+    // `local` (rows on the driver) ahead of a driver round; one is null.
+    var frame: DataFrame = inputDF
+    var local: ArrayBuffer[(Any, Any)] = null
+    var ckpt: DataFrame = null // the checkpoint behind `frame`, if this loop made one
+    // A driver-local input's row count is known: no job. Any other plan
+    // (scans, joins, prior fixpoint outputs) is checkpointed once, and its
+    // row count rides that job as an observed metric.
+    val nInput = inputDF.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => lr.data.length.toLong
+      case _ =>
         val inObs = Observation()
         val inCkpt = inputDF.observe(inObs, count(lit(1)).as("n")).eagerCheckpoint()
         val n = observedOrCount(inObs, "input")(Map("n" -> inCkpt.count()))("n")
@@ -320,108 +336,127 @@ object CCF {
         // localCheckpoint copies the origin plan's ESTIMATE, and per-round join
         // estimates compound (square) across checkpoints until planning time
         // drowns in BigInteger arithmetic (see Bridge.withStats).
-        pairs = org.apache.spark.sql.graft.Bridge.withStats(inCkpt, n)
-        // armed, the input checkpoint outlives the rounds: a switch restarts on it
-        if (!armed) prevCkpt = pairs
+        frame = Bridge.withStats(inCkpt, n)
+        ckpt = frame
         n
     }
-    val input = pairs
-
-    // Size-gated engine choice (see class scaladoc of [[MicroFixpoint]]):
-    // sub-threshold graphs run the identical algorithm on the RDD layer,
-    // with no per-round planning cost (rounds below MicroFixpoint.FusedRows
-    // share a task).
-    // The armed blowup detector ([[auto]]) runs inside the micro loop on the
-    // same observed row counts, so the auto path gets the same latency
-    // rounds and the same switch. Not taken for key types without a typed
-    // kernel, or when the session opted into reliable checkpoints
-    // (spark.graft.checkpointDir signals a preemptible cluster, where the
-    // declarative loop's per-round DFS checkpoint is the point — the micro
-    // engine keeps state in executor blocks only).
-    val reliableCkpt = edges.sparkSession.conf
-      .getOption(graft.Checkpoints.DirKey).exists(_.nonEmpty)
-    if (!reliableCkpt && nInput < MicroFixpoint.Threshold) {
-      MicroFixpoint.runDF(pairs, maxIterations, armed, nInput) match {
-        case Some(r) =>
-          // the micro engine read its input onto the driver at entry; only a
-          // switch restarts on the input checkpoint
-          if (r.isLeft && localCount.isEmpty) freeCheckpoint(input)
-          return r
-        case None    => () // unsupported key type: declarative path below
-      }
+    val input = frame
+    // Armed, the input checkpoint outlives the rounds: a switch restarts on it.
+    val kept = if (armed) ckpt else null
+    // Free the checkpoint behind `frame` once no round reads it.
+    def release(): Unit = {
+      if (ckpt != null && (ckpt ne kept)) freeCheckpoint(ckpt)
+      ckpt = null
     }
-    var olderCkpt: DataFrame = null // checkpoint 2 rounds back (freeable)
+    val reliableCkpt = spark.conf.getOption(graft.Checkpoints.DirKey).exists(_.nonEmpty)
+    val driverOrd = if (reliableCkpt) None else MicroFixpoint.ordering(keyType)
+
+    var inputRows = nInput
     var progress = MicroFixpoint.Progress.start(maxIterations, armed, nInput)
-    val history = scala.collection.mutable.ArrayBuffer.empty[Long]
-    // The per-round shuffles run at the session's partition count; AQE's
-    // partition coalescing sizes each reduce side from runtime stats.
+    val history = ArrayBuffer.empty[Long]
     while (!progress.done) {
-      val iteration = progress.iterations + 1
-      // tagged = (src, dst, isNew); isNew marks the (value, min) emits that the
-      // reference counts in its NewPair counter.
-      val tagged = iterateBasic(pairs)
-      val obs = Observation()
-      val observed = tagged
-        .observe(obs, coalesce(sum(when(col("isNew"), 1L)), lit(0L)).as("newPairs"),
-          count(lit(1)).as("rows"))
-      // CCF-Dedup placement (r18, guide §2.4/§7.2): the distinct used to
-      // stay LAZY and fuse into the NEXT round's plan — but bidirect unions
-      // two branches over it, so the dedup's final
-      // HashAggregate executed TWICE per round over the full pre-dedup emit
-      // set (the exchange is reused, the aggregate above it is not; measured
-      // at sf0.1 co-purchase: round 3 re-aggregates round 2's 3.88M-row
-      // checkpoint in both branches). Folding the distinct INTO the
-      // checkpoint job dedups once, materializes the (often far smaller)
-      // deduped set with 2 columns instead of 3, and next round's bidirect
-      // reads materialized blocks directly. newPairs semantics unchanged:
-      // the observe sits BELOW the distinct, so it still counts pre-dedup
-      // per-occurrence emits exactly like the reference's reduce-side
-      // counter (iteration parity with the reference CSV is re-verified in
-      // the Experiments matrix).
-      // r19 (ADVICE r18, medium): a second observation ON TOP of the
-      // distinct rides the same checkpoint job and yields the DEDUPED row
-      // count — the one the materialized checkpoint actually holds. Stamping
-      // the checkpoint with the pre-dedup count (up to ~14x larger on
-      // blowup rounds) broke the "exact leaf stats" invariant and inflated
-      // next-round join-size estimates. Pre-dedup `rows` still feeds
-      // the blowup detector below, unchanged.
-      val dedupObs = Observation()
-      val emitted0 = observed.select("src", "dst").distinct()
-        .observe(dedupObs, count(lit(1)).as("rows"))
-        .eagerCheckpoint() // materialize once, truncate lineage
-      // the previous round's checkpoint is no longer referenced (this round's
-      // emits have been evaluated into `emitted0`)
-      if (olderCkpt != null) freeCheckpoint(olderCkpt)
-      olderCkpt = prevCkpt
-      prevCkpt = emitted0
-      // Fallback recomputes the round's TAGGED plan (pre-dedup) over the
-      // previous checkpoint — the checkpointed frame no longer carries
-      // isNew; loud + one extra job, like before.
-      val ms = observedOrCount(obs, s"round $iteration")(Map(
-        "newPairs" -> tagged.where(col("isNew")).count(), "rows" -> tagged.count()))
-      val newPairs = ms("newPairs")
-      val rows = ms("rows")
-      // observed DEDUPED row count → exact leaf stats (anti-compounding);
-      // fallback counts the materialized checkpoint blocks directly
-      val dedupRows = observedOrCount(dedupObs, s"round $iteration dedup")(
-        Map("rows" -> emitted0.count()))("rows")
-      val emitted = org.apache.spark.sql.graft.Bridge.withStats(emitted0, dedupRows)
+      val (newPairs, rows) = driverOrd match {
+        case Some(ord) if inputRows < MicroFixpoint.FusedRows =>
+          if (local == null) {
+            local = MicroFixpoint.collect(frame)
+            release()
+            frame = null
+          }
+          val (next, n) = MicroFixpoint.driverRound(local, dedup = progress.iterations > 0)(ord)
+          local = next
+          inputRows = next.size.toLong
+          (n, inputRows)
+        case _ =>
+          if (frame == null) {
+            // Driver rows are pre-dedup emits, each with src > dst, so
+            // `distinct` is the CCF-Dedup the declarative round expects. An
+            // RDD-backed frame, not a `LocalRelation`: Catalyst optimizes a
+            // round over a 153k-row `LocalRelation` in ~4.8 s, over an RDD in
+            // ~0.1 s (string chain 1000's round 11).
+            val deduped = local.distinct
+            frame = Bridge.withStats(spark.createDataFrame(
+              spark.sparkContext.parallelize(deduped.map { case (a, b) => Row(a, b) }.toSeq),
+              schemaOf("src", "dst")), deduped.size.toLong)
+            local = null
+          }
+          val (emitted, n, rows, dedupRows) = declarativeRound(frame, progress.iterations + 1)
+          release()
+          frame = emitted
+          ckpt = emitted
+          inputRows = dedupRows
+          (n, rows)
+      }
       history += newPairs
       progress = progress.after(newPairs, rows)
-      // CCF-Dedup: already materialized in the checkpoint above (r18).
-      pairs = emitted
     }
-    if (olderCkpt != null) freeCheckpoint(olderCkpt)
     if (progress.switched) {
-      if (prevCkpt != null) freeCheckpoint(prevCkpt)
+      release()
       return Right(Switched(input, progress.iterations, history.toSeq))
     }
-    if (armed && localCount.isEmpty && progress.iterations > 0) freeCheckpoint(input)
+    if (kept != null && (ckpt ne kept)) freeCheckpoint(kept)
+    // A run capped before convergence keeps pre-dedup driver rows: dedup them.
+    val assignments =
+      if (local != null)
+        spark.createDataFrame((if (progress.converged) local else local.distinct)
+          .map { case (a, b) => Row(a, b) }.asJava, schemaOf("node", "component"))
+      else {
+        def nullable(c: String) = Bridge.column(KnownNullable(Bridge.expression(col(c))))
+        frame.select(nullable("src").as("node"), nullable("dst").as("component"))
+      }
+    Left(CCFResult(assignments, progress.iterations, progress.converged, history.toSeq))
+  }
 
-    // Between-round pairs are globally deduped in the checkpoint (r18) —
-    // no defensive final distinct needed.
-    Left(CCFResult(pairs.toDF("node", "component"), progress.iterations, progress.converged,
-      history.toSeq))
+  /** One declarative round over `pairs`, in ONE action: the round's
+    * tagged emits are deduplicated and eagerly checkpointed (truncating
+    * lineage), and the NewPair counter, the emitted rows and the deduped
+    * rows ride that action as observed metrics (`Dataset.observe`, computed
+    * task-side and delivered with the checkpoint job's completion event).
+    * Returns the checkpoint, with exact row stats, and (newPairs, emitted
+    * rows, deduped rows). The caller frees `pairs`' checkpoint only after
+    * this returns: a metrics fallback recomputes the round over it. */
+  private def declarativeRound(pairs: DataFrame, iteration: Int): (DataFrame, Long, Long, Long) = {
+    // tagged = (src, dst, isNew); isNew marks the (value, min) emits that the
+    // reference counts in its NewPair counter.
+    val tagged = iterateBasic(pairs)
+    val obs = Observation()
+    val observed = tagged
+      .observe(obs, coalesce(sum(when(col("isNew"), 1L)), lit(0L)).as("newPairs"),
+        count(lit(1)).as("rows"))
+    // CCF-Dedup placement (r18, guide §2.4/§7.2): the distinct used to
+    // stay LAZY and fuse into the NEXT round's plan — but bidirect unions
+    // two branches over it, so the dedup's final
+    // HashAggregate executed TWICE per round over the full pre-dedup emit
+    // set (the exchange is reused, the aggregate above it is not; measured
+    // at sf0.1 co-purchase: round 3 re-aggregates round 2's 3.88M-row
+    // checkpoint in both branches). Folding the distinct INTO the
+    // checkpoint job dedups once, materializes the (often far smaller)
+    // deduped set with 2 columns instead of 3, and next round's bidirect
+    // reads materialized blocks directly. newPairs semantics unchanged:
+    // the observe sits BELOW the distinct, so it still counts pre-dedup
+    // per-occurrence emits exactly like the reference's reduce-side
+    // counter (iteration parity with the reference CSV is re-verified in
+    // the Experiments matrix).
+    // r19 (ADVICE r18, medium): a second observation ON TOP of the
+    // distinct rides the same checkpoint job and yields the DEDUPED row
+    // count — the one the materialized checkpoint actually holds. Stamping
+    // the checkpoint with the pre-dedup count (up to ~14x larger on
+    // blowup rounds) broke the "exact leaf stats" invariant and inflated
+    // next-round join-size estimates. Pre-dedup `rows` still feeds
+    // the blowup detector, unchanged.
+    val dedupObs = Observation()
+    val emitted = observed.select("src", "dst").distinct()
+      .observe(dedupObs, count(lit(1)).as("rows"))
+      .eagerCheckpoint() // materialize once, truncate lineage
+    // Fallback recomputes the round's TAGGED plan (pre-dedup) over `pairs`
+    // — the checkpointed frame no longer carries isNew; loud + one extra job.
+    val ms = observedOrCount(obs, s"round $iteration")(Map(
+      "newPairs" -> tagged.where(col("isNew")).count(), "rows" -> tagged.count()))
+    // observed DEDUPED row count → exact leaf stats (anti-compounding);
+    // fallback counts the materialized checkpoint blocks directly
+    val dedupRows = observedOrCount(dedupObs, s"round $iteration dedup")(
+      Map("rows" -> emitted.count()))("rows")
+    (Bridge.withStats(emitted, dedupRows), ms("newPairs"), ms("rows"),
+      dedupRows)
   }
 
   /** One CCF-Iterate round, Basic kernel (paper Fig. 2; reference
@@ -465,8 +500,8 @@ object CCF {
 
   /** O10: number of components = distinct component labels in the converged
     * assignment (reference `ccf_experiments.py:137`). A result whose
-    * optimized plan is a driver-local `LocalRelation` (the micro engine's,
-    * see [[run]]) is counted on the driver: `collect()` reads it without a
+    * optimized plan is a driver-local `LocalRelation` (a run whose last round
+    * ran on the driver, see [[run]]) is counted on the driver: `collect()` reads it without a
     * job, while `distinct().count()` plans an aggregate over it and runs
     * jobs like any other plan. Any other result keeps `distinct().count()`.
     * This mirrors [[runSwitchable]]'s `LocalRelation` input shortcut. */

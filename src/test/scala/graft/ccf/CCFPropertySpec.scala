@@ -2,6 +2,7 @@ package graft.ccf
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import scala.util.Random
 
@@ -69,11 +70,12 @@ class CCFPropertySpec extends SparkSpec {
     }
   }
 
-  // Engine differential (ROADMAP item 5): every input below is under
-  // MicroFixpoint.Threshold, so CCF.run on the shared session takes the
-  // micro engine, while a session with reliable checkpoints runs the
-  // declarative loop. Both must agree on the whole result; PointerJump, and
-  // CCF.auto on either engine, on the assignments.
+  // Round-shape differential (ROADMAP item 4): on the shared session each
+  // round below MicroFixpoint.FusedRows input rows runs on the driver and
+  // each larger one declaratively, while a session with reliable
+  // checkpoints runs every round declaratively. Both must agree on the
+  // whole result; PointerJump, and CCF.auto on either session, on the
+  // assignments.
   private def strEdges(edges: Seq[(String, String)]): SparkSession => DataFrame =
     s => Generators.toDF(s, edges)
 
@@ -94,13 +96,20 @@ class CCFPropertySpec extends SparkSpec {
     "random 5000/15000" -> strEdges(Generators.randomGraph(5000, 15000)),
     "cluster 20x50/0" -> strEdges(Generators.clusterGraph(20, 50)),
     "string chain 500" -> strEdges(Generators.chainGraph(500)),
-    // the next two cross between fused and distributed rounds mid-run: their
-    // pair sets peak at 530,916 and 684,715 rows, past MicroFixpoint.FusedRows
+    // the next two cross from driver rounds to a declarative round and back
+    // mid-run: their pair sets peak at 530,916 and 684,715 rows, past
+    // MicroFixpoint.FusedRows
     "string chain 1000" -> strEdges(Generators.chainGraph(1000)),
     "random 30000/90000" -> strEdges(Generators.randomGraph(30000, 90000)),
     // mean degree 2 * 3000 / 100 = 60: CCF.auto's dense rule sends it
     // straight to PointerJump
     "dense random 100/3000" -> strEdges(Generators.randomGraph(100, 3000, seed = 11)),
+    // 120,000 input pairs, every round below MicroFixpoint.FusedRows
+    "dense random 2000/120000" -> strEdges(Generators.randomGraph(2000, 120000)),
+    // 533,247 long-keyed input pairs from a plan: round 1 runs declaratively
+    // over the entry checkpoint, its deduplicated output drops below
+    // MicroFixpoint.FusedRows, and rounds 2-3 run on the driver
+    "dense randomDF 2000/620000" -> (s => Generators.randomDF(s, 2000, 620000)),
     "long ids >= 2^31" -> { s =>
       import s.implicits._
       Seq((big + 5, big + 3), (big + 3, big + 10), (big + 10, 3000000000L),
@@ -141,26 +150,31 @@ class CCFPropertySpec extends SparkSpec {
         assert(auto.converged === micro.converged, s"auto on the $engine engine")
         if (name == "string chain 500")
           assert(auto.engine === "ccf+pj", s"auto on the $engine engine")
-        if (name == "dense random 100/3000")
+        if (name.startsWith("dense"))
           assert(auto.engine === "pj", s"auto on the $engine engine")
       }
     }
   }
 
-  // Driver-local results (the micro engine's LocalRelation) against the
-  // declarative loop's checkpointed ones: the same schema, names, types and
-  // nullability included, and the same rows; and CCF.componentCount's
-  // driver-side count against Spark's on RDD-backed and checkpointed copies.
+  // Driver-local results (a LocalRelation, when the last round ran on the
+  // driver) against the declarative loop's checkpointed ones: one schema,
+  // names, types and nullability included, whatever shape and number of
+  // rounds ran; the same rows; and CCF.componentCount's driver-side count
+  // against Spark's on RDD-backed and checkpointed copies.
   private val keyedInputs: Seq[(String, SparkSession => DataFrame)] = Seq(
     "empty, long-keyed" -> { s =>
       import s.implicits._
       Seq.empty[(Long, Long)].toDF("src", "dst")
     },
-    // converges in round 1: the declarative loop's node column keeps the
-    // input's nullability
+    // converges in round 1, over non-null input columns
     "one long edge" -> { s =>
       import s.implicits._
       Seq((2L, 1L)).toDF("src", "dst")
+    },
+    // a declarative round never groups, emits or counts a null endpoint
+    "null endpoints" -> { s =>
+      import s.implicits._
+      Seq(("b", "a"), (null, "c"), ("c", null), ("c", "b"), ("d", null)).toDF("src", "dst")
     },
     "int ids" -> { s =>
       import s.implicits._
@@ -174,7 +188,12 @@ class CCFPropertySpec extends SparkSpec {
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
       val declarative = declarativeRun(name, input).assignments
       // StructType equality covers names, types, nullability and metadata
-      assert(local.schema === declarative.schema)
+      val keyType = input(spark).schema.fields(0).dataType
+      val schema = StructType(Seq(StructField("node", keyType), StructField("component", keyType)))
+      for ((run, df) <- Seq("driver rounds" -> local, "declarative rounds" -> declarative,
+          "one driver round" -> CCF.run(input(spark), maxIterations = 1).assignments,
+          "one declarative round" -> CCF.run(input(declSession), maxIterations = 1).assignments))
+        assert(df.schema === schema, run)
       assert(rows(local) === rows(declarative))
       val n = CCF.componentCount(local)
       assert(n === CCF.componentCount(declarative))
@@ -240,7 +259,7 @@ class CCFPropertySpec extends SparkSpec {
 
   test("maxIterations inside a fused block: the micro engine equals the declarative loop") {
     // chain 50 stays below MicroFixpoint.FusedRows in every round, so the cap
-    // stops a fused block
+    // stops a run whose rounds all ran on the driver
     val input = strEdges(Generators.chainGraph(50))
     val micro = CCF.run(input(spark), maxIterations = 3)
     val declarative = CCF.run(input(declSession), maxIterations = 3)

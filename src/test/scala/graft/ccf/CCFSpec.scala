@@ -151,19 +151,23 @@ class CCFSpec extends SparkSpec {
   }
 
   test("micro engine: a fixpoint below the fused budget runs on the driver") {
-    // string chain 200 peaks far below MicroFixpoint.FusedRows, and string
-    // chain 500 at 107,620 rows, so every round of both runs fused on the
-    // driver: from a driver-local input the fixpoint and the component count
-    // start no job
-    for ((n, iters) <- Seq(200 -> 10, 500 -> 12)) {
+    // string chain 200 peaks far below MicroFixpoint.FusedRows, string chain
+    // 500 at 107,620 rows, and random 2000/120000 (120,000 input pairs) at
+    // 237,801, so every round of all three runs on the driver, round 1
+    // included: from a driver-local input the fixpoint and the component
+    // count start no job
+    for ((name, edges, iters) <- Seq(
+        ("chain 200", Generators.chainGraph(200), 10),
+        ("chain 500", Generators.chainGraph(500), 12),
+        ("random 2000/120000", Generators.randomGraph(2000, 120000), 4))) {
       val ((r, comps), jobs) = jobsOf {
-        val r = CCF.run(Generators.toDF(spark, Generators.chainGraph(n)))
+        val r = CCF.run(Generators.toDF(spark, edges))
         (r, CCF.componentCount(r.assignments))
       }
-      assert(r.converged, s"chain $n")
-      assert(r.iterations === iters, s"chain $n")
-      assert(comps === 1L, s"chain $n")
-      assert(jobs === 0, s"chain $n")
+      assert(r.converged, name)
+      assert(r.iterations === iters, name)
+      assert(comps === 1L, name)
+      assert(jobs === 0, name)
     }
     // a planned input is checkpointed at entry (one job), then collected
     // onto the driver (one job)
@@ -178,18 +182,20 @@ class CCFSpec extends SparkSpec {
 
   test("micro engine: a pair set past the fused budget leaves the fused block") {
     // string chain 1000's round 10 emits 530,916 rows, past
-    // MicroFixpoint.FusedRows: rounds 1-10 run fused on the driver, round 11
-    // runs distributed as its own job, and one collect job brings its
-    // output back for rounds 12-13 (306,082 rows and less), fused again
+    // MicroFixpoint.FusedRows: rounds 1-10 run on the driver, round 11 runs
+    // declaratively over the 153,539 rows the driver deduplicates them to,
+    // and one collect job brings its 1,011-row checkpoint back for rounds
+    // 12-13 on the driver: 6 jobs in all
     val (r, jobs) = jobsOf(CCF.run(Generators.toDF(spark, Generators.chainGraph(1000))))
     assert(r.converged)
     assert(r.iterations === 13)
-    assert(jobs === 2)
+    assert(jobs === 6)
   }
 
   test("micro engine: a finished fixpoint leaves no RDD persisted") {
-    // string chain 1000 persists its distributed round 11 and reads it back
-    // onto the driver; chainDF's input is also checkpointed at entry
+    // string chain 1000 hands round 11 from the driver to a declarative
+    // round, whose checkpoint is read back onto the driver; chainDF's input
+    // is also checkpointed at entry
     val sc = spark.sparkContext
     for ((name, input) <- Seq("driver-local input" -> Generators.toDF(spark, Generators.chainGraph(1000)),
         "checkpointed input" -> Generators.chainDF(spark, 1000))) {

@@ -9,10 +9,10 @@ import scala.concurrent.ExecutionContext.Implicits.global
   * concurrent calls are safe both on separate `newSession()`s and on one
   * shared session. Every concurrent result must equal its serial run.
   *
-  * The separate-session test's `CCF.run` input (chain 120) is below
-  * [[MicroFixpoint.Threshold]], so it runs on the micro engine and never
-  * reaches the declarative loop; the same-session test sets
-  * `spark.graft.checkpointDir`, which routes `CCF.run` to that loop. */
+  * The separate-session test's `CCF.run` input (chain 120) stays below
+  * [[MicroFixpoint.FusedRows]], so every round runs on the driver; the
+  * same-session test sets `spark.graft.checkpointDir`, which runs every
+  * round of `CCF.run` declaratively. */
 class ConcurrencySpec extends SparkSpec {
 
   test("concurrent fixpoints on separate sessions produce serial results") {
