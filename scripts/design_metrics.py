@@ -7,12 +7,14 @@ ROOT defaults to the current directory; the counts cover ROOT/src/main.
 They are the trend counts of ROADMAP aim 2 (one default path per operator):
 
   scala_lines          lines of src/main/**/*.scala, comments included
+  code_lines           non-blank lines of the same files with comments removed
   graft_conf_keys      distinct "spark.graft.*" string literals
   conf_set_calls       conf.set( calls
   session_builders     SparkSession.builder calls
   cpus_env_reads       "SPARK_GRAFT_CPUS" string literals
   eager_checkpoints    .eagerCheckpoint() / .eagerCheckpointKeepPartitioning()
-                       call sites
+                       / Checkpoints.materialize( call sites
+  observations         Observation( sites (observed-metric points)
   unreferenced         top-level objects and object members of src/main whose
                        name appears nowhere else in src/main, src/test or
                        perfbench/scala; the names are printed to stderr
@@ -137,23 +139,27 @@ def metrics(root):
     files = []
     for d, _, names in os.walk(os.path.join(root, "src", "main")):
         files += [os.path.join(d, f) for f in names if f.endswith(".scala")]
-    lines, code = 0, {}
+    lines, code_lines, code = 0, 0, {}
     for path in sorted(files):
         with open(path, encoding="utf-8") as f:
             src = f.read()
         lines += src.count("\n")
         code[path] = strip_comments(src)
+        code_lines += sum(1 for line in code[path].split("\n") if line.strip())
     text = "\n".join(code.values())
     dead = unreferenced(root, code)
     for name in dead:
         print(f"unreferenced: {name}", file=sys.stderr)
     return {
         "scala_lines": lines,
+        "code_lines": code_lines,
         "graft_conf_keys": len(set(re.findall(r'"spark\.graft\.[A-Za-z0-9_.]+"', text))),
         "conf_set_calls": len(re.findall(r"\bconf\.set\(", text)),
         "session_builders": len(re.findall(r"\bSparkSession\.builder\b", text)),
         "cpus_env_reads": text.count('"SPARK_GRAFT_CPUS"'),
-        "eager_checkpoints": len(re.findall(r"\.eagerCheckpoint(?:KeepPartitioning)?\(", text)),
+        "eager_checkpoints": len(re.findall(
+            r"\.eagerCheckpoint(?:KeepPartitioning)?\(|\bCheckpoints\.materialize\(", text)),
+        "observations": len(re.findall(r"\bObservation\(", text)),
         "unreferenced": len(dead),
     }
 

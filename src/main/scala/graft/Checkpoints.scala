@@ -1,11 +1,15 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graft.Bridge
 
 /**
  * Central eager-materialization point for every fixpoint round and memoized
- * shared build (CCF/PointerJump rounds, SessionCache entries, staged TF-IDF
- * tables, incremental-dedup batches).
+ * shared build (CCF/PointerJump/LPA/PageRank/Lloyd rounds, SessionCache
+ * entries, staged TF-IDF tables, incremental-dedup batches), and the one
+ * round skeleton of the label fixpoints: [[materialize]], [[free]] and
+ * [[fixpoint]].
  *
  * Default is `localCheckpoint(eager = true)`: blocks live on executors —
  * fastest, but a lost executor loses its blocks and the job must rerun
@@ -18,10 +22,14 @@ import org.apache.spark.sql.DataFrame
  * files survive executor loss. The flag also wires
  * `spark.sparkContext.setCheckpointDir` on first use if unset.
  *
- * Freeing: [[graft.ccf.CCF.freeCheckpoint]] unpersists executor blocks —
- * for reliable checkpoints that is a no-op on the DFS files, which are
- * reclaimed by `spark.cleaner.referenceTracking.cleanCheckpoints=true` or a
- * dir-level TTL sweep; peak DFS usage for a fixpoint is ~2 rounds of pairs.
+ * The free rule, the one every fixpoint follows: a round's input checkpoint
+ * is freed once the round's own metrics have been read — a metrics fallback
+ * re-reads that input, so it lives until then, and nothing reads it after.
+ * A fixpoint therefore holds at most two round checkpoints at a time. Only a
+ * checkpoint the fixpoint made is freed, never a frame its caller passed
+ * in. [[free]] unpersists executor blocks; for reliable checkpoints the DFS
+ * files are reclaimed by `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+ * or a dir-level TTL sweep.
  */
 object Checkpoints {
 
@@ -58,7 +66,7 @@ object Checkpoints {
     * Use for builds whose final operator establishes a partitioning that
     * downstream plans are meant to reuse. */
   def eagerKeepPartitioning(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.Bridge.materializeWithoutAqe(df)(eager)
+    Bridge.materializeWithoutAqe(df)(eager)
 
   /** Postfix syntax so call sites read like the `localCheckpoint` they
     * replace: `df.eagerCheckpoint()`. */
@@ -66,5 +74,119 @@ object Checkpoints {
     def eagerCheckpoint(): DataFrame = Checkpoints.eager(df)
     def eagerCheckpointKeepPartitioning(): DataFrame =
       Checkpoints.eagerKeepPartitioning(df)
+  }
+
+  /** An eager checkpoint stamped with its exact row count, and the `Long`
+    * metrics observed on the job that made it. `metrics` always holds the
+    * row count under "rows". */
+  final case class Materialized(df: DataFrame, metrics: Map[String, Long]) {
+    def rows: Long = metrics("rows")
+  }
+
+  /** Eagerly checkpoint `finish(df)` in ONE job, with `metrics` (named
+    * `Long` aggregates over `df`) and the checkpoint's row count riding that
+    * job as observed metrics (`Dataset.observe`) instead of count() actions.
+    * `finish` is what the metrics must not see: a projection that drops a
+    * column they read, or CCF-Dedup's `distinct`. When metrics are not
+    * delivered ([[observedOrCount]]), `fallback` recomputes the caller's
+    * from the checkpoint and the row count is counted. No metric may be
+    * named "rows". The checkpoint is stamped with exact stats
+    * ([[Bridge.withStats]]): `localCheckpoint` copies the origin plan's
+    * ESTIMATE, which compounds (squares) through per-round joins until
+    * planning drowns in BigInteger arithmetic. */
+  def materialize(df: DataFrame, what: String, metrics: Column*)(
+      fallback: DataFrame => Map[String, Long] = _ => Map.empty,
+      finish: DataFrame => DataFrame = identity): Materialized = {
+    val observed = Option.when(metrics.nonEmpty)(Observation())
+    val rowsObs = Observation()
+    val ckpt = eager(finish(observed.fold(df)(o => df.observe(o, metrics.head, metrics.tail: _*)))
+      .observe(rowsObs, count(lit(1)).as("rows")))
+    val rows = observedOrCount(rowsObs, what)(Map("rows" -> ckpt.count()))
+    val ms = observed.fold(rows)(o => observedOrCount(o, what)(fallback(ckpt)) ++ rows)
+    Materialized(Bridge.withStats(ckpt, ms("rows")), ms)
+  }
+
+  // Freeing a local checkpoint that is never re-read is intentional; silence
+  // Spark's per-RDD "cannot be recomputed after unpersisting" warning once per
+  // JVM (the muted logger carries nothing but this warning).
+  private val unpersistWarnsMuted = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Free the block-manager storage behind a checkpoint: a frame whose plan
+    * IS a checkpoint's `LogicalRDD`. Any other frame, such as a projection
+    * over a memoized entry, is left alone. `Dataset.unpersist` only knows
+    * cacheManager entries, so the RDD is unpersisted directly; the frame
+    * must not be read again. Best-effort: the ContextCleaner is the
+    * backstop. */
+  def free(df: DataFrame): Unit = {
+    if (unpersistWarnsMuted.compareAndSet(false, true))
+      try org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+      catch { case _: Throwable => () }
+    try df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    } catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  /** A finished [[fixpoint]]: its last state, the rounds run, whether the
+    * `until` metric reached 0, and that metric per round, oldest first. */
+  final case class Fixpoint(result: DataFrame, rounds: Int, converged: Boolean,
+                            history: Seq[Long])
+
+  /** The round loop of the label fixpoints: from `start`, run `round(state,
+    * i)` for i = 1, 2, ... up to `maxRounds`, stopping once a round's
+    * `until` metric is 0 (none: always `maxRounds` rounds). Each round
+    * returns its state [[materialize]]d. The class scaladoc's free rule is
+    * applied here: a round's input is freed once the round returns, if this
+    * loop made it — every round's output, and `start` when `ownsStart` (a
+    * checkpoint made for the loop alone). */
+  def fixpoint(start: DataFrame, maxRounds: Int, until: Option[String] = None,
+               ownsStart: Boolean = false)(round: (DataFrame, Int) => Materialized): Fixpoint = {
+    @annotation.tailrec
+    def step(state: DataFrame, owned: Boolean, history: Vector[Long], rounds: Int): Fixpoint = {
+      val converged = history.lastOption.contains(0L)
+      if (rounds >= maxRounds || converged) Fixpoint(state, rounds, converged, history)
+      else {
+        val next = round(state, rounds + 1)
+        if (owned) free(state)
+        step(next.df, owned = true, history ++ until.map(next.metrics), rounds + 1)
+      }
+    }
+    step(start, ownsStart, Vector.empty, 0)
+  }
+
+  /** Observed metrics with a bounded wait (ADVICE r03): `Observation.get`
+    * blocks forever if a Spark version/config ever stops routing the eager
+    * checkpoint through `withAction` metric delivery. The checkpoint job has
+    * completed by now, so metrics normally arrive on the first poll; past
+    * the deadline, fall back LOUDLY to counting — correct, one extra job —
+    * rather than hanging. EXCEPTION-SAFE (VERDICT r11 #1):
+    * `Observation.getOrEmpty` can THROW when the metrics `Row` arrives
+    * without its schema under concurrent load (an NPE in ScaleSpec); a
+    * throwing poll counts as a not-yet-delivered one. */
+  private def observedOrCount(obs: Observation, what: String)
+                             (fallback: => Map[String, Long]): Map[String, Long] =
+    pollMetrics(() => Bridge.observedOrEmpty(obs), what, deadlineMs = 30000L)(fallback)
+
+  /** The poll loop behind [[observedOrCount]], parametric in the read so the
+    * throwing-read path is unit-testable without racing a real Observation.
+    * `read` normally blocks ≤100 ms internally; the extra 5 ms sleep only
+    * runs after a FAILED poll, so the delivered-first-try path pays nothing. */
+  private[graft] def pollMetrics(read: () => Map[String, Any], what: String,
+                                 deadlineMs: Long)
+                                (fallback: => Map[String, Long]): Map[String, Long] = {
+    val deadline = System.nanoTime() + deadlineMs * 1000000L
+    val safeRead = () => try read() catch { case scala.util.control.NonFatal(_) => Map.empty[String, Any] }
+    var got = safeRead()
+    while (got.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(5)
+      got = safeRead()
+    }
+    if (got.nonEmpty) got.map { case (k, v) => k -> v.asInstanceOf[Number].longValue() }
+    else {
+      System.err.println(s"[graft] observed metrics for $what not delivered within " +
+        s"${deadlineMs}ms; falling back to count() over the checkpoint")
+      fallback
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.ccf
 
-import graft.Checkpoints.EagerOps
-import org.apache.spark.sql.{DataFrame, Observation, Row}
+import graft.Checkpoints
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
@@ -79,8 +79,8 @@ import scala.jdk.CollectionConverters._
  * 100 TB notes: each round shuffles O(|pairs|) rows hash-partitioned by node
  * id — the same distribution as the reference's MapReduce jobs, which the CCF
  * paper scaled to 6B nodes / 92B edges. Iteration count is O(log d) in the
- * component diameter. Old checkpoint blocks are dropped explicitly each round,
- * so peak storage is ~2 rounds of pairs.
+ * component diameter. Round checkpoints are freed by the one free rule of
+ * [[graft.Checkpoints]].
  *
  * Intermediate-data caveat (measured, intrinsic to CCF — not this port): on
  * LONG-DIAMETER graphs the per-round pair set grows ~2x per round until
@@ -119,62 +119,6 @@ object CCF {
       newPairsHistory: Seq[Long],
       engine: String = "ccf")
 
-  // Freeing a local checkpoint that is never re-read is intentional; silence
-  // Spark's per-RDD "cannot be recomputed after unpersisting" warning once per
-  // JVM (a prior version saved/restored the level around every run — 2 log4j
-  // Configurator round-trips per fixpoint, pure overhead on the 34-run
-  // experiment matrix; the muted logger carries nothing but this warning).
-  private val checkpointWarnsMuted = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def muteCheckpointWarnsOnce(): Unit =
-    if (checkpointWarnsMuted.compareAndSet(false, true)) {
-      try org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
-      catch { case _: Throwable => () }
-    }
-
-  /** Observed metrics with a bounded wait (ADVICE r03): `Observation.get`
-    * blocks forever if a Spark version/config ever stops routing the eager
-    * checkpoint through `withAction` metric delivery. The checkpoint action
-    * has completed by the time this is called, so metrics normally arrive on
-    * the first poll (`getOrEmpty` itself waits ≤100 ms per call); past the
-    * deadline, fall back LOUDLY to counting the materialized checkpoint —
-    * correct, one extra job — rather than hanging.
-    *
-    * EXCEPTION-SAFE (VERDICT r11 #1): `Observation.getOrEmpty` converts the
-    * stored metrics `Row` lazily via `row.schema()`, which can be null when
-    * the row is delivered without schema under concurrent load — the read
-    * then THROWS (observed: NPE in ScaleSpec under full-suite concurrency)
-    * instead of returning empty. A throwing poll is treated exactly like a
-    * not-yet-delivered one: keep polling until the deadline, then take the
-    * same loud count() fallback. A metrics race must never kill a fixpoint
-    * that has a correct recovery path one count() away. */
-  private[graft] def observedOrCount(obs: Observation, what: String, deadlineMs: Long = 30000L)
-                             (fallback: => Map[String, Long]): Map[String, Long] =
-    pollMetrics(() => Bridge.observedOrEmpty(obs),
-      what, deadlineMs)(fallback)
-
-  /** The poll loop behind [[observedOrCount]], parametric in the read so the
-    * throwing-read path is unit-testable without racing a real Observation.
-    * `read` normally blocks ≤100 ms internally; the extra 5 ms sleep only
-    * runs after a FAILED poll, so the delivered-first-try path pays nothing. */
-  private[graft] def pollMetrics(read: () => Map[String, Any], what: String,
-                                 deadlineMs: Long)
-                                (fallback: => Map[String, Long]): Map[String, Long] = {
-    val deadline = System.nanoTime() + deadlineMs * 1000000L
-    val safeRead = () => try read() catch { case scala.util.control.NonFatal(_) => Map.empty[String, Any] }
-    var got = safeRead()
-    while (got.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(5)
-      got = safeRead()
-    }
-    if (got.nonEmpty) got.map { case (k, v) => k -> v.asInstanceOf[Number].longValue() }
-    else {
-      System.err.println(s"[graft.ccf] observed metrics for $what not delivered within " +
-        s"${deadlineMs}ms; falling back to count() over the checkpoint")
-      fallback
-    }
-  }
-
   /**
    * Run CCF to convergence.
    *
@@ -197,7 +141,10 @@ object CCF {
    * Hand-offs: driver → declarative deduplicates the driver rows (every emit
    * has src > dst, so `distinct` is CCF-Dedup) into an RDD-backed frame with
    * exact row stats; declarative → driver collects the round's checkpoint
-   * (one job) and frees it. Checkpoints are freed once no round reads them.
+   * (one job) and frees it. A driver-local input is read onto the driver at
+   * entry (no job), so a declarative round 1 over it reads the same hand-off
+   * frame, with the input's raw multiplicity. Checkpoints follow the free
+   * rule of [[graft.Checkpoints]].
    *
    * Declarative round: ONE action — the round's tagged emits are
    * deduplicated and eagerly `localCheckpoint`'ed (truncating lineage), and
@@ -285,7 +232,7 @@ object CCF {
         // PointerJump has eagerly materialized its own topology checkpoint.
         // A driver-local input has no checkpoint leaf, so this frees only
         // the input checkpoint runSwitchable made.
-        freeCheckpoint(sw.input)
+        Checkpoints.free(sw.input)
         CCFResult(pj.assignments, sw.iterations + pj.iterations, pj.converged,
           sw.history ++ pj.newPairsHistory, engine = "ccf+pj")
     }
@@ -307,7 +254,6 @@ object CCF {
     * ends the run with Right(Switched) when it fires. */
   private def runSwitchable(edges: DataFrame, maxIterations: Int,
                             armed: Boolean): Either[CCFResult, Switched] = {
-    muteCheckpointWarnsOnce()
     require(edges.columns.length == 2, s"edge list must have 2 columns, got ${edges.columns.length}")
     val spark = edges.sparkSession
     val inputDF = edges.toDF("src", "dst")
@@ -320,35 +266,32 @@ object CCF {
 
     // The pair set between rounds: `frame` ahead of a declarative round,
     // `local` (rows on the driver) ahead of a driver round; one is null.
-    var frame: DataFrame = inputDF
+    var frame: DataFrame = null
     var local: ArrayBuffer[(Any, Any)] = null
     var ckpt: DataFrame = null // the checkpoint behind `frame`, if this loop made one
-    // A driver-local input's row count is known: no job. Any other plan
-    // (scans, joins, prior fixpoint outputs) is checkpointed once, and its
-    // row count rides that job as an observed metric.
-    val nInput = inputDF.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => lr.data.length.toLong
+    // A driver-local input is read onto the driver in place (no job; its
+    // row count is known), so even a declarative round 1 reads the
+    // RDD-backed hand-off frame, never the `LocalRelation` itself. Any other
+    // plan (scans, joins, prior fixpoint outputs) is checkpointed once, and
+    // its row count rides that job as an observed metric.
+    val (input, nInput) = inputDF.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        local = MicroFixpoint.collect(inputDF)
+        (inputDF, lr.data.length.toLong)
       case _ =>
-        val inObs = Observation()
-        val inCkpt = inputDF.observe(inObs, count(lit(1)).as("n")).eagerCheckpoint()
-        val n = observedOrCount(inObs, "input")(Map("n" -> inCkpt.count()))("n")
-        // Reset the checkpoint's carried-over Statistics to the observed truth —
-        // localCheckpoint copies the origin plan's ESTIMATE, and per-round join
-        // estimates compound (square) across checkpoints until planning time
-        // drowns in BigInteger arithmetic (see Bridge.withStats).
-        frame = Bridge.withStats(inCkpt, n)
+        val m = Checkpoints.materialize(inputDF, "ccf input")()
+        frame = m.df
         ckpt = frame
-        n
+        (frame, m.rows)
     }
-    val input = frame
     // Armed, the input checkpoint outlives the rounds: a switch restarts on it.
     val kept = if (armed) ckpt else null
     // Free the checkpoint behind `frame` once no round reads it.
     def release(): Unit = {
-      if (ckpt != null && (ckpt ne kept)) freeCheckpoint(ckpt)
+      if (ckpt != null && (ckpt ne kept)) Checkpoints.free(ckpt)
       ckpt = null
     }
-    val reliableCkpt = spark.conf.getOption(graft.Checkpoints.DirKey).exists(_.nonEmpty)
+    val reliableCkpt = spark.conf.getOption(Checkpoints.DirKey).exists(_.nonEmpty)
     val driverOrd = if (reliableCkpt) None else MicroFixpoint.ordering(keyType)
 
     var inputRows = nInput
@@ -368,23 +311,24 @@ object CCF {
           (n, inputRows)
         case _ =>
           if (frame == null) {
-            // Driver rows are pre-dedup emits, each with src > dst, so
-            // `distinct` is the CCF-Dedup the declarative round expects. An
-            // RDD-backed frame, not a `LocalRelation`: Catalyst optimizes a
-            // round over a 153k-row `LocalRelation` in ~4.8 s, over an RDD in
-            // ~0.1 s (string chain 1000's round 11).
-            val deduped = local.distinct
+            // Driver rows after round 1 are pre-dedup emits, each with
+            // src > dst, so `distinct` is the CCF-Dedup the declarative round
+            // expects; round 1 reads the input as it is (raw multiplicity).
+            // An RDD-backed frame, not a `LocalRelation`: Catalyst optimizes
+            // a round over a 153k-row `LocalRelation` in ~4.8 s, over an RDD
+            // in ~0.1 s (string chain 1000's round 11).
+            val pairs = if (progress.iterations > 0) local.distinct else local
             frame = Bridge.withStats(spark.createDataFrame(
-              spark.sparkContext.parallelize(deduped.map { case (a, b) => Row(a, b) }.toSeq),
-              schemaOf("src", "dst")), deduped.size.toLong)
+              spark.sparkContext.parallelize(pairs.map { case (a, b) => Row(a, b) }.toSeq),
+              schemaOf("src", "dst")), pairs.size.toLong)
             local = null
           }
-          val (emitted, n, rows, dedupRows) = declarativeRound(frame, progress.iterations + 1)
+          val round = declarativeRound(frame, progress.iterations + 1)
           release()
-          frame = emitted
-          ckpt = emitted
-          inputRows = dedupRows
-          (n, rows)
+          frame = round.df
+          ckpt = frame
+          inputRows = round.rows
+          (round.metrics("newPairs"), round.metrics("emitted"))
       }
       history += newPairs
       progress = progress.after(newPairs, rows)
@@ -393,7 +337,7 @@ object CCF {
       release()
       return Right(Switched(input, progress.iterations, history.toSeq))
     }
-    if (kept != null && (ckpt ne kept)) freeCheckpoint(kept)
+    if (kept != null && (ckpt ne kept)) Checkpoints.free(kept)
     // A run capped before convergence keeps pre-dedup driver rows: dedup them.
     val assignments =
       if (local != null)
@@ -406,22 +350,17 @@ object CCF {
     Left(CCFResult(assignments, progress.iterations, progress.converged, history.toSeq))
   }
 
-  /** One declarative round over `pairs`, in ONE action: the round's
-    * tagged emits are deduplicated and eagerly checkpointed (truncating
-    * lineage), and the NewPair counter, the emitted rows and the deduped
-    * rows ride that action as observed metrics (`Dataset.observe`, computed
-    * task-side and delivered with the checkpoint job's completion event).
-    * Returns the checkpoint, with exact row stats, and (newPairs, emitted
-    * rows, deduped rows). The caller frees `pairs`' checkpoint only after
-    * this returns: a metrics fallback recomputes the round over it. */
-  private def declarativeRound(pairs: DataFrame, iteration: Int): (DataFrame, Long, Long, Long) = {
+  /** One declarative round over `pairs`, materialized in ONE action
+    * ([[Checkpoints.materialize]]): the round's tagged emits are
+    * deduplicated and eagerly checkpointed (truncating lineage), and the
+    * NewPair counter, the emitted rows and the deduped rows ride that
+    * action as observed metrics ("newPairs", "emitted", "rows"). The caller
+    * frees `pairs`' checkpoint only after this returns: a metrics fallback
+    * recomputes the round over it. */
+  private def declarativeRound(pairs: DataFrame, iteration: Int): Checkpoints.Materialized = {
     // tagged = (src, dst, isNew); isNew marks the (value, min) emits that the
     // reference counts in its NewPair counter.
     val tagged = iterateBasic(pairs)
-    val obs = Observation()
-    val observed = tagged
-      .observe(obs, coalesce(sum(when(col("isNew"), 1L)), lit(0L)).as("newPairs"),
-        count(lit(1)).as("rows"))
     // CCF-Dedup placement (r18, guide §2.4/§7.2): the distinct used to
     // stay LAZY and fuse into the NEXT round's plan — but bidirect unions
     // two branches over it, so the dedup's final
@@ -432,31 +371,20 @@ object CCF {
     // checkpoint job dedups once, materializes the (often far smaller)
     // deduped set with 2 columns instead of 3, and next round's bidirect
     // reads materialized blocks directly. newPairs semantics unchanged:
-    // the observe sits BELOW the distinct, so it still counts pre-dedup
+    // the counters sit BELOW the distinct, so they still count pre-dedup
     // per-occurrence emits exactly like the reference's reduce-side
     // counter (iteration parity with the reference CSV is re-verified in
-    // the Experiments matrix).
-    // r19 (ADVICE r18, medium): a second observation ON TOP of the
-    // distinct rides the same checkpoint job and yields the DEDUPED row
-    // count — the one the materialized checkpoint actually holds. Stamping
-    // the checkpoint with the pre-dedup count (up to ~14x larger on
-    // blowup rounds) broke the "exact leaf stats" invariant and inflated
-    // next-round join-size estimates. Pre-dedup `rows` still feeds
-    // the blowup detector, unchanged.
-    val dedupObs = Observation()
-    val emitted = observed.select("src", "dst").distinct()
-      .observe(dedupObs, count(lit(1)).as("rows"))
-      .eagerCheckpoint() // materialize once, truncate lineage
-    // Fallback recomputes the round's TAGGED plan (pre-dedup) over `pairs`
-    // — the checkpointed frame no longer carries isNew; loud + one extra job.
-    val ms = observedOrCount(obs, s"round $iteration")(Map(
-      "newPairs" -> tagged.where(col("isNew")).count(), "rows" -> tagged.count()))
-    // observed DEDUPED row count → exact leaf stats (anti-compounding);
-    // fallback counts the materialized checkpoint blocks directly
-    val dedupRows = observedOrCount(dedupObs, s"round $iteration dedup")(
-      Map("rows" -> emitted.count()))("rows")
-    (Bridge.withStats(emitted, dedupRows), ms("newPairs"), ms("rows"),
-      dedupRows)
+    // the Experiments matrix). The row count above the distinct is the
+    // DEDUPED one the checkpoint holds and is stamped with (r19, ADVICE
+    // r18); pre-dedup "emitted" feeds the blowup detector.
+    Checkpoints.materialize(tagged, s"ccf round $iteration",
+        coalesce(sum(when(col("isNew"), 1L)), lit(0L)).as("newPairs"),
+        count(lit(1)).as("emitted"))(
+      // the checkpoint no longer carries isNew: recompute the round's TAGGED
+      // plan (pre-dedup) over `pairs`; loud + one extra job
+      fallback = _ => Map("newPairs" -> tagged.where(col("isNew")).count(),
+        "emitted" -> tagged.count()),
+      finish = _.select("src", "dst").distinct())
   }
 
   /** One CCF-Iterate round, Basic kernel (paper Fig. 2; reference
@@ -476,19 +404,6 @@ object CCF {
       .select(col("dst").as("src"), col("mn").as("dst"), lit(true).as("isNew"))
     emit1.unionAll(emit2)
   }
-
-  /** Explicitly free the block-manager storage behind an eager
-    * `localCheckpoint` so peak storage stays at ~2 rounds of pairs. The
-    * checkpointed RDD sits behind a `LogicalRDD` plan leaf; `Dataset.unpersist`
-    * only knows cacheManager entries, so unpersist the RDD directly. Safe
-    * because the DataFrame is never used again after this call. */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    try {
-      df.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-        case _ => ()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () } // best-effort; ContextCleaner is the backstop
 
   /** O2: emit both orientations of every pair (UNION ALL keeps multiplicity,
     * matching the reference's flatMap double-emit). */

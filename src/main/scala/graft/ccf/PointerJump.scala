@@ -1,7 +1,8 @@
 package graft.ccf
 
+import graft.Checkpoints
 import graft.Checkpoints.EagerOps
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -97,36 +98,20 @@ object PointerJump {
       .select(col("node"), col("lab"), least(col("newlab"), col("_hk")).as("newlab"))
   }
 
+  /** Runs the label fixpoint. Rounds and their checkpoints go through
+    * [[graft.Checkpoints.fixpoint]], which frees them by its one rule. */
   def run(edges: DataFrame, maxIterations: Int = 100): CCF.CCFResult = {
     require(edges.columns.length == 2, s"edge list must have 2 columns, got ${edges.columns.length}")
     val spark = edges.sparkSession
 
-    // Static topology: canonical bidirected distinct edges, materialized once.
-    // withStats: reset each checkpoint's carried-over Statistics to observed
-    // truth — estimates otherwise compound (square) through the per-round
-    // joins until planning drowns in BigInteger arithmetic (Bridge.withStats).
-    val inObs = Observation()
-    val bi0 = CCF.bidirect(edges.toDF("src", "dst")).distinct()
-      .observe(inObs, count(lit(1)).as("n"))
-      .eagerCheckpoint()
-    // bounded-wait metric reads throughout (VERDICT r06 #2): raw
-    // Observation.get hangs forever if metric delivery ever breaks;
-    // CCF.observedOrCount falls back loudly to counting the checkpoint.
-    val nBi = CCF.observedOrCount(inObs, "pj bidirect")(Map("n" -> bi0.count()))("n")
-    val bi = org.apache.spark.sql.graft.Bridge.withStats(bi0, nBi)
-
-    val lblObs = Observation()
-    val lbl0 = bi.groupBy(col("src").as("node"))
-      .agg(least(col("src"), min(col("dst"))).as("lab"))
-      .observe(lblObs, count(lit(1)).as("n"))
-      .eagerCheckpoint()
+    // Static topology: canonical bidirected distinct edges, materialized once
+    // with exact stats (estimates otherwise compound through the per-round
+    // joins, Bridge.withStats).
+    val bi = Checkpoints.materialize(
+      CCF.bidirect(edges.toDF("src", "dst")).distinct(), "pj bidirect")()
     // the label table is exactly one row per node, every round
-    val nNodes = CCF.observedOrCount(lblObs, "pj labels")(Map("n" -> lbl0.count()))("n")
-    var lbl = org.apache.spark.sql.graft.Bridge.withStats(lbl0, nNodes)
-    var olderCkpt: DataFrame = null
-    var iteration = 0
-    var converged = false
-    val history = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val lbl = Checkpoints.materialize(bi.df.groupBy(col("src").as("node"))
+      .agg(least(col("src"), min(col("dst"))).as("lab")), "pj labels")()
 
     // r18 (guide §2.4): with the label table under the broadcast bound, the
     // rounds' only distributed frame is the STATIC topology — partition it
@@ -139,22 +124,21 @@ object PointerJump {
     // The rounds inherit the repartition's partition count, so it is sized
     // here: ~100k pairs per partition, at most the session's count — a small
     // graph runs each round as one task at any cpu count.
-    val bcastLbl = nNodes <= spark.conf.getOption(MaxBroadcastNodesKey)
+    val bcastLbl = lbl.rows <= spark.conf.getOption(MaxBroadcastNodesKey)
       .map(_.toLong).getOrElse(MaxBroadcastNodes)
     val biRounds =
       if (bcastLbl) {
         val parts = math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong,
-          nBi / 100000L + 1L).toInt
-        val b = bi.repartition(parts, col("src")).eagerCheckpointKeepPartitioning()
-        CCF.freeCheckpoint(bi0)
-        org.apache.spark.sql.graft.Bridge.withStats(b, nBi)
-      } else bi
+          bi.rows / 100000L + 1L).toInt
+        val b = bi.df.repartition(parts, col("src")).eagerCheckpointKeepPartitioning()
+        Checkpoints.free(bi.df)
+        org.apache.spark.sql.graft.Bridge.withStats(b, bi.rows)
+      } else bi.df
 
-    while (iteration < maxIterations && !converged) {
-      iteration += 1
+    val fix = Checkpoints.fixpoint(lbl.df, maxIterations, until = Some("changed"),
+        ownsStart = true) { (lbl, iteration) =>
       val lt = lbl.select(col("node").as("_t"), col("lab").as("_tl"))
-      val obs = Observation()
-      val next0 = hooked(if (bcastLbl) {
+      val round = hooked(if (bcastLbl) {
         bcastRound(biRounds, lt)
       } else {
         // ONE lookup join serves both steps: look up the labels of
@@ -171,26 +155,19 @@ object PointerJump {
         lbl.join(looked, col("node") === col("src"))
           .select(col("node"), col("lab"), least(col("lab"), col("nm")).as("newlab"))
       })
-        .observe(obs, coalesce(sum(when(col("newlab") =!= col("lab"), 1L)), lit(0L)).as("changed"))
-        .select(col("node"), col("newlab").as("lab"))
-        .eagerCheckpoint()
-      // fallback recomputes changed by diffing the materialized checkpoint
-      // against the still-live previous label table — read BEFORE freeing it
-      val changed = CCF.observedOrCount(obs, s"pj round $iteration")(Map(
-        "changed" -> next0.select(col("node"), col("lab").as("nl"))
+      Checkpoints.materialize(round, s"pj round $iteration",
+          coalesce(sum(when(col("newlab") =!= col("lab"), 1L)), lit(0L)).as("changed"))(
+        // the fallback diffs the new checkpoint against the previous label
+        // table, which the loop frees only after this returns
+        fallback = next => Map("changed" -> next.select(col("node"), col("lab").as("nl"))
           .join(lbl.select(col("node"), col("lab").as("ol")), "node")
-          .where(col("nl") =!= col("ol")).count()))("changed")
-      if (olderCkpt != null) CCF.freeCheckpoint(olderCkpt)
-      olderCkpt = lbl
-      lbl = org.apache.spark.sql.graft.Bridge.withStats(next0, nNodes)
-      history += changed
-      converged = changed == 0L
+          .where(col("nl") =!= col("ol")).count()),
+        finish = _.select(col("node"), col("newlab").as("lab")))
     }
-    if (olderCkpt != null) CCF.freeCheckpoint(olderCkpt)
-    CCF.freeCheckpoint(biRounds) // the live topology checkpoint (bi itself off the bcast path)
+    Checkpoints.free(biRounds) // the live topology checkpoint (bi itself off the bcast path)
 
-    val assignments = lbl.where(col("lab") =!= col("node"))
+    val assignments = fix.result.where(col("lab") =!= col("node"))
       .select(col("node"), col("lab").as("component"))
-    CCF.CCFResult(assignments, iteration, converged, history.toSeq, engine = "pj")
+    CCF.CCFResult(assignments, fix.rounds, fix.converged, fix.history, engine = "pj")
   }
 }

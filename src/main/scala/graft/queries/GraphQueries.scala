@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Checkpoints
 import graft.Checkpoints.EagerOps
 import graft.ccf.{CCF, Generators}
 import graft.graph.GraphBuilders
@@ -245,22 +246,23 @@ object GraphQueries {
     * desc, label asc — the (c, -label) composite max, CCF/kmeans style).
     * Per-round cost: one join keyed src + two map-side-combinable
     * aggregates; the n-row label table is checkpointed per round (lineage
-    * cut, same as the PageRank rank table). At 100 TB the label table
-    * co-partitions with the edge list's src shuffle, so rounds reuse one
-    * exchange layout. */
-  private[queries] def lpaOf(bi: DataFrame, iters: Int,
-                             bcastLabels: Boolean = false): DataFrame = {
+    * cut, same as the PageRank rank table) by [[graft.Checkpoints.fixpoint]],
+    * which frees the rounds by its one rule and never frees `bi`. At 100 TB
+    * the label table co-partitions with the edge list's src shuffle, so
+    * rounds reuse one exchange layout. */
+  private[graft] def lpaOf(bi: DataFrame, iters: Int,
+                           bcastLabels: Boolean = false): DataFrame = {
     require(iters >= 1, s"lpa needs >= 1 round, got $iters")
     // Round 1 fused (r11): labels start as identity, so round 1's src-keyed
     // label join maps label := src — a no-op worth one m-row shuffle join
     // PLUS the distinct-node init build it feeds. Round 1 is therefore the
     // two-level mode-vote aggregate alone, straight off the edge list
-    // (identical output: every node appears as dst in a bidirected frame).
-    var lab = lpaStep1(bi).eagerCheckpoint()
-    for (_ <- 2 to iters) {
-      lab = lpaStep(bi, lab, bcastLabels).eagerCheckpoint()
-    }
-    lab
+    // (identical output: every node appears as dst in a bidirected frame),
+    // and the loop starts from `bi` itself.
+    Checkpoints.fixpoint(bi, iters) { (lab, i) =>
+      Checkpoints.materialize(if (i == 1) lpaStep1(bi) else lpaStep(bi, lab, bcastLabels),
+        s"lpa round $i")()
+    }.result
   }
 
   /** Round 1 of synchronous LPA with identity labels, join-free (see
@@ -282,39 +284,30 @@ object GraphQueries {
     * gated definition (a fixed round count is what makes g3
     * oracle-unrollable); a user running community detection calls this.
     *
-    * Convergence detection is the CCF machinery verbatim: each round's
-    * changed-label count rides the SAME job that materializes the round's
-    * checkpoint (`Dataset.observe` on the new-vs-previous label join — one
-    * extra broadcast-free join keyed node, co-partitioned with the label
-    * shuffle), with [[graft.ccf.CCF.observedOrCount]]'s bounded-wait
-    * fallback. Per round: one job, no second count() action; the previous
-    * round's checkpoint blocks are freed once the round's own checkpoint
-    * has materialized. Note synchronous LPA can 2-cycle on bipartite-ish structures
+    * Convergence detection is the CCF skeleton ([[graft.Checkpoints.fixpoint]]):
+    * each round's changed-label count rides the SAME job that materializes
+    * the round's checkpoint (`Dataset.observe` on the new-vs-previous label
+    * join — one extra broadcast-free join keyed node, co-partitioned with
+    * the label shuffle), with a bounded-wait fallback. Per round: one job,
+    * no second count() action; checkpoints follow the loop's one free rule.
+    * Note synchronous LPA can 2-cycle on bipartite-ish structures
     * (labels oscillating between two assignments) — `maxIters` bounds that;
     * `converged=false` reports it honestly. */
   def lpaUntilStable(bi: DataFrame, maxIters: Int = 100): LpaResult = {
-    var lab = bi.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .eagerCheckpoint()
-    var rounds = 0
-    var changed = -1L
-    while (changed != 0L && rounds < maxIters) {
-      rounds += 1
-      val obs = org.apache.spark.sql.Observation()
-      val prev = lab
-      lab = lpaStep(bi, prev)
-        .join(prev.select(col("node"), col("label").as("prev_label")), "node")
-        .observe(obs, coalesce(sum(when(col("label") =!= col("prev_label"), 1L)
-          .otherwise(0L)), lit(0L)).as("changed"))
-        .select(col("node"), col("label"))
-        .eagerCheckpoint()
-      changed = CCF.observedOrCount(obs, s"lpa round $rounds") {
-        Map("changed" -> lab.join(prev.select(col("node"), col("label").as("prev_label")), "node")
-          .where(col("label") =!= col("prev_label")).count())
-      }("changed")
-      CCF.freeCheckpoint(prev)
+    val start = Checkpoints.materialize(bi.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")), "lpa labels")()
+    def diff(lab: DataFrame, prev: DataFrame): DataFrame =
+      lab.join(prev.select(col("node"), col("label").as("prev_label")), "node")
+    val fix = Checkpoints.fixpoint(start.df, maxIters, until = Some("changed"),
+        ownsStart = true) { (prev, i) =>
+      Checkpoints.materialize(diff(lpaStep(bi, prev), prev), s"lpa round $i",
+          coalesce(sum(when(col("label") =!= col("prev_label"), 1L)
+            .otherwise(0L)), lit(0L)).as("changed"))(
+        fallback = lab => Map("changed" ->
+          diff(lab, prev).where(col("label") =!= col("prev_label")).count()),
+        finish = _.select(col("node"), col("label")))
     }
-    LpaResult(lab, rounds, changed == 0L)
+    LpaResult(fix.result, fix.rounds, fix.converged)
   }
 
   /** One synchronous LPA round (un-checkpointed — PlanSpec pins that both
@@ -432,20 +425,23 @@ object GraphQueries {
     * Scale shape per round: ONE shuffle of the out-edge stream hash-joined
     * against the O(nodes) rank table, then ONE aggregation exchange keyed by
     * destination. The out-edge table (edges + contributor degree) is built
-    * once and eagerly checkpointed; each round's rank table is checkpointed
-    * so planning stays O(1) in rounds (same pattern as the CCF fixpoint). */
-  private[queries] def pagerankOf(e0: DataFrame, iters: Int,
-                                  step: Option[PagerankStep] = None): DataFrame = {
+    * once and eagerly checkpointed, and freed once the rounds are done; each
+    * round's rank table is checkpointed so planning stays O(1) in rounds
+    * (same pattern as the CCF fixpoint). */
+  private[graft] def pagerankOf(e0: DataFrame, iters: Int,
+                                step: Option[PagerankStep] = None): DataFrame = {
     val bi = CCF.bidirect(e0)
     val deg = bi.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // the per-round join's build input: each out-edge with its contributor's
     // out-degree attached (materialized once, reused every round)
     val outE = bi.join(deg, "src").eagerCheckpoint()
-    pagerankCore(outE, deg, iters, step)
+    val ranks = pagerankCore(outE, deg, iters, step)
+    Checkpoints.free(outE)
+    ranks
   }
 
   /** One PageRank round: (outE, ranks, base) => next ranks. */
-  private[queries] type PagerankStep = (DataFrame, DataFrame, Double) => DataFrame
+  private[graft] type PagerankStep = (DataFrame, DataFrame, Double) => DataFrame
 
   /** The one PageRank round loop: `outE` = (src, dst, outdeg) build input
     * (already materialized), `deg` = (src, outdeg) for rank init. The gated
@@ -454,16 +450,18 @@ object GraphQueries {
     *
     * The step is picked from the degree table: its one aggregate yields the
     * node count (rank init) and the max degree ([[pagerankStrategy]]) in the
-    * same job. `step` overrides the pick (specs compare the two steps). */
-  private[queries] def pagerankCore(outE: DataFrame, deg: DataFrame, iters: Int,
-                                    step: Option[PagerankStep] = None): DataFrame = {
+    * same job. `step` overrides the pick (specs compare the two steps).
+    * Rounds run in [[graft.Checkpoints.fixpoint]] and follow its free rule;
+    * the initial ranks read the caller's `deg`, which is never freed. */
+  private[graft] def pagerankCore(outE: DataFrame, deg: DataFrame, iters: Int,
+                                  step: Option[PagerankStep] = None): DataFrame = {
     val (n, picked) = pagerankPlan(deg)
     val round = step.getOrElse(picked)
-    var ranks = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
     val bcast = broadcastRanks(deg.sparkSession, n)
-    for (_ <- 1 to iters)
-      ranks = round(outE, hint(ranks, bcast), 0.15 / n).eagerCheckpoint()
-    ranks.select(col("node"), col("rank").as("pagerank"))
+    Checkpoints.fixpoint(deg.select(col("src").as("node"), lit(1.0 / n).as("rank")), iters) {
+      (ranks, i) => Checkpoints.materialize(round(outE, hint(ranks, bcast), 0.15 / n),
+        s"pagerank round $i")()
+    }.result.select(col("node"), col("rank").as("pagerank"))
   }
 
   /** Node count and selected step of a (src, outdeg) degree table, from one
@@ -502,8 +500,8 @@ object GraphQueries {
 
   /** One parity round (no checkpoint — PlanSpec plans it raw): join, then
     * the order-deterministic per-dst fold over collected contributions. */
-  private[queries] def pagerankParityStep(outE: DataFrame, ranks: DataFrame,
-                                          base: Double): DataFrame =
+  private[graft] def pagerankParityStep(outE: DataFrame, ranks: DataFrame,
+                                        base: Double): DataFrame =
     outE.join(ranks, col("src") === col("node"))
       .select(col("dst"),
         struct(col("src").as("g"), (col("rank") / col("outdeg")).as("t")).as("c"))
@@ -519,8 +517,8 @@ object GraphQueries {
     * row (the collect_list the order-deterministic fold forces).
     * Order-nondeterministic float sums: per-node drift vs the parity fold is
     * ≤ in_deg·ulp per round — spec pins agreement to 1e-12. */
-  private[queries] def pagerankFastStep(outE: DataFrame, ranks: DataFrame,
-                                        base: Double): DataFrame =
+  private[graft] def pagerankFastStep(outE: DataFrame, ranks: DataFrame,
+                                      base: Double): DataFrame =
     outE.join(ranks, col("src") === col("node"))
       .select(col("dst"), (col("rank") / col("outdeg")).as("t"))
       .groupBy("dst")

@@ -95,7 +95,7 @@ object IvfIndex {
     // — free the assignment checkpoint's blocks now instead of leaving them
     // to the GC-driven ContextCleaner (one leaked pair per ingest batch on
     // a long-lived ingest loop).
-    graft.ccf.CCF.freeCheckpoint(asgn)
+    graft.Checkpoints.free(asgn)
   }
 
   /** Per-cell population stats maintained by [[build]]/[[append]] — ≤ k

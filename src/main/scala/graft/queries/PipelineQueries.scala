@@ -226,7 +226,7 @@ object PipelineQueries {
     private[queries] def ownEager(df: DataFrame): DataFrame = own(df.eagerCheckpoint())
     /** Unpersist every checkpoint this instance forced (best-effort). */
     def free(): Unit = owned.synchronized {
-      owned.foreach(graft.ccf.CCF.freeCheckpoint); owned.clear()
+      owned.foreach(graft.Checkpoints.free); owned.clear()
     }
 
     val documents: DataFrame = own(documents0

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Checkpoints
 import graft.Checkpoints.EagerOps
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -400,10 +401,12 @@ object SimilarityQueries {
   private def lloydTrain(ed: DataFrame, seeds: DataFrame, iters: Int): DataFrame =
     lloydTrainEn(enOf(ed), seeds, iters)
 
-  private def lloydTrainEn(en: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
-    var cents = seeds
-    for (_ <- 1 to iters) {
-      val a = assignCells(en, cents)
+  /** `iters` Lloyd rounds from `seeds`, in [[graft.Checkpoints.fixpoint]]:
+    * each round's centroid table is checkpointed and freed by the loop's one
+    * rule; `seeds` and `en` are the caller's and never freed. */
+  private[graft] def lloydTrainEn(en: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
+    val cents = Checkpoints.fixpoint(seeds, iters) { (prev, i) =>
+      val a = assignCells(en, prev)
       // per-(cell, dim) mean: sorted-by-vec_id sequential fold over exact
       // count — the oracle twin is list(x ORDER BY vec_id) + list_reduce
       val sums = en.join(a, "vec_id")
@@ -419,10 +422,9 @@ object SimilarityQueries {
       // references cents from the cell assignment, the probe ranking AND
       // the next round — without truncation every reference re-executes
       // the whole training lineage (k rows to materialize, at any scale)
-      cents = cents.as("c").join(fresh.as("f"), Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("f.cv"), col("c.cv")).as("cv"))
-        .eagerCheckpoint()
-    }
+      Checkpoints.materialize(prev.as("c").join(fresh.as("f"), Seq("cid"), "left")
+        .select(col("cid"), coalesce(col("f.cv"), col("c.cv")).as("cv")), s"lloyd round $i")()
+    }.result
     // iters=0 (the untrained seed, used by the objective spec) must still be
     // materialized: the SessionCache entry holds a checkpoint handle
     if (iters == 0) cents.eagerCheckpoint() else cents

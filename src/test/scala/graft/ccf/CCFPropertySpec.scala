@@ -110,6 +110,14 @@ class CCFPropertySpec extends SparkSpec {
     // over the entry checkpoint, its deduplicated output drops below
     // MicroFixpoint.FusedRows, and rounds 2-3 run on the driver
     "dense randomDF 2000/620000" -> (s => Generators.randomDF(s, 2000, 620000)),
+    // 529,000 driver-local pairs, past MicroFixpoint.FusedRows, 2,000 of them
+    // repeated and 2,000 reversed: round 1 runs declaratively over the
+    // RDD-backed hand-off frame, not the LocalRelation, and counts NewPairs
+    // over the input's raw multiplicity
+    "dense random 2000/525000, duplicated edges" -> {
+      val g = Generators.randomGraph(2000, 525000)
+      strEdges(g ++ g.take(2000) ++ g.takeRight(2000).map(_.swap))
+    },
     "long ids >= 2^31" -> { s =>
       import s.implicits._
       Seq((big + 5, big + 3), (big + 3, big + 10), (big + 10, 3000000000L),

@@ -193,18 +193,79 @@ class CCFSpec extends SparkSpec {
   }
 
   test("micro engine: a finished fixpoint leaves no RDD persisted") {
-    // string chain 1000 hands round 11 from the driver to a declarative
-    // round, whose checkpoint is read back onto the driver; chainDF's input
-    // is also checkpointed at entry
+    // Every label fixpoint, in each of its round shapes: every RDD a run
+    // leaves persisted is a leaf of its result's own plan (the last round's
+    // checkpoint), and no checkpoint its caller passed in is freed.
+    import graft.Checkpoints.EagerOps
+    import graft.queries.{GraphQueries, SimilarityQueries}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
     val sc = spark.sparkContext
-    for ((name, input) <- Seq("driver-local input" -> Generators.toDF(spark, Generators.chainGraph(1000)),
-        "checkpointed input" -> Generators.chainDF(spark, 1000))) {
-      val before = sc.getRDDStorageInfo.map(_.id).toSet
-      val r = CCF.run(input)
-      assert(r.iterations === 13, name)
-      val left = sc.getRDDStorageInfo.filterNot(i => before(i.id))
-      assert(left.isEmpty, s"$name: ${left.map(i => s"${i.name} (${i.memSize} B)").mkString(", ")}")
+    def persisted(): Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet
+    def leaves(df: DataFrame): Set[Int] = df.queryExecution.analyzed.collectLeaves()
+      .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+
+    // the callers' checkpoints: a long-keyed canonical edge set, its
+    // bidirected frame, PageRank's build tables, and Lloyd's vectors and seeds
+    val e = Generators.randomDF(spark, 100, 300).eagerCheckpoint()
+    val bi = CCF.bidirect(e).eagerCheckpoint()
+    val deg = CCF.bidirect(e).groupBy("src").agg(count(lit(1)).as("outdeg")).eagerCheckpoint()
+    val outE = CCF.bidirect(e).join(deg, "src").eagerCheckpoint()
+    val en = Seq.tabulate(40) { i =>
+      val v = Seq(math.cos(i.toDouble), math.sin(i.toDouble), (i % 3).toDouble)
+      (i.toLong, v, math.sqrt(v.map(x => x * x).sum))
+    }.toDF("vec_id", "v", "nrm").eagerCheckpoint()
+    val seeds = en.where(col("vec_id") < 4)
+      .select(col("vec_id").as("cid"), col("v").as("cv")).eagerCheckpoint()
+    val callers = Seq(e, bi, deg, outE, en, seeds).flatMap(leaves).toSet
+
+    val shuffled = spark.newSession()
+    shuffled.conf.set(PointerJump.MaxBroadcastNodesKey, "0")
+    val chain = Generators.chainGraph(200)
+    def decimalChain = Generators.chainLongDF(spark, 50)
+      .select(col("src").cast("decimal(20,0)"), col("dst").cast("decimal(20,0)"))
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      // string chain 1000 hands round 11 from the driver to a declarative
+      // round, whose checkpoint is read back onto the driver; chainDF's
+      // input is also checkpointed at entry
+      "CCF.run, driver-local input" -> { () =>
+        val r = CCF.run(Generators.toDF(spark, Generators.chainGraph(1000)))
+        assert(r.iterations === 13)
+        r.assignments
+      },
+      "CCF.run, checkpointed input" -> { () =>
+        val r = CCF.run(Generators.chainDF(spark, 1000))
+        assert(r.iterations === 13)
+        r.assignments
+      },
+      // decimal keys have no driver kernel: every round is declarative
+      "CCF.run ending declaratively" -> (() => CCF.run(decimalChain).assignments),
+      "PointerJump, broadcast rounds" -> (() =>
+        PointerJump.run(Generators.toDF(spark, chain)).assignments),
+      "PointerJump, shuffled rounds" -> (() =>
+        PointerJump.run(Generators.toDF(shuffled, chain)).assignments),
+      "lpaUntilStable" -> (() => GraphQueries.lpaUntilStable(bi, maxIters = 10).labels),
+      "lpaOf" -> (() => GraphQueries.lpaOf(bi, 3)),
+      "lpaOf, broadcast labels" -> (() => GraphQueries.lpaOf(bi, 3, bcastLabels = true)),
+      "pagerankOf, parity step" -> (() =>
+        GraphQueries.pagerankOf(e, 3, Some(GraphQueries.pagerankParityStep))),
+      "pagerankOf, fast step" -> (() =>
+        GraphQueries.pagerankOf(e, 3, Some(GraphQueries.pagerankFastStep))),
+      "pagerankCore over the caller's tables" -> (() => GraphQueries.pagerankCore(outE, deg, 3)),
+      "Lloyd" -> (() => SimilarityQueries.lloydTrainEn(en, seeds, 3)))
+
+    val failures = cases.flatMap { case (name, run) =>
+      val before = persisted()
+      val result = run()
+      val left = sc.getRDDStorageInfo
+        .filter(i => !before(i.id) && !leaves(result)(i.id))
+        .map(i => s"${i.name} (${i.memSize} B)")
+      val freed = callers.filterNot(persisted())
+      Option.when(left.nonEmpty || freed.nonEmpty)(s"$name: left persisted " +
+        s"[${left.mkString(", ")}], freed the caller's RDDs [${freed.mkString(", ")}]")
     }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("iteration counts match the reference on chain graphs (BASELINE.md exp 2)") {
@@ -264,39 +325,6 @@ class CCFSpec extends SparkSpec {
       assert(basic.assignments.collect().toSet === ss.assignments.collect().toSet, name)
       assert(basic.iterations === ss.iterations, name)
       assert(basic.assignments.schema("node").dataType.typeName.startsWith(name), name)
-    }
-  }
-
-  test("pollMetrics: a throwing read is retried, then delivered metrics win") {
-    // VERDICT r11 #1: Observation.getOrEmpty can THROW (Row.schema() null
-    // under concurrent metric delivery), not just return empty. A throwing
-    // poll must behave exactly like not-yet-delivered: retry to deadline,
-    // never propagate. Stub throws NPE twice, then delivers.
-    var calls = 0
-    val got = CCF.pollMetrics({ () =>
-      calls += 1
-      if (calls <= 2) throw new NullPointerException("schema null (simulated race)")
-      Map[String, Any]("newPair" -> java.lang.Long.valueOf(7L))
-    }, "stub", deadlineMs = 5000L)(fail("fallback must not run: metrics arrived"))
-    assert(got === Map("newPair" -> 7L))
-    assert(calls === 3)
-  }
-
-  test("pollMetrics: a read that always throws takes the loud count() fallback") {
-    var fellBack = false
-    val got = CCF.pollMetrics({ () =>
-      throw new NullPointerException("schema null (simulated race)")
-    }, "stub", deadlineMs = 50L) { fellBack = true; Map("newPair" -> 3L) }
-    assert(got === Map("newPair" -> 3L))
-    assert(fellBack)
-  }
-
-  test("pollMetrics: fatal errors are not swallowed") {
-    // NonFatal only: an OOM mid-poll must propagate, not be retried into
-    // a misleading metrics-timeout fallback.
-    intercept[OutOfMemoryError] {
-      CCF.pollMetrics({ () => throw new OutOfMemoryError("simulated") },
-        "stub", deadlineMs = 50L)(Map("n" -> 0L))
     }
   }
 }
