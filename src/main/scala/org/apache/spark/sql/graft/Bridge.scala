@@ -23,20 +23,6 @@ object Bridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
-  /** Rebuild a checkpointed DataFrame's `LogicalRDD` leaf with exact, bounded
-    * statistics from an observed row count.
-    *
-    * Why this exists: `Dataset.localCheckpoint` copies the origin plan's
-    * ESTIMATED `Statistics` into the `LogicalRDD` it produces. In an iterative
-    * join loop (CCF / pointer-jumping fixpoints) the estimate compounds — a
-    * join's default `sizeInBytes` estimate is the PRODUCT of its children's,
-    * so each round's checkpoint carries roughly the SQUARE of the previous
-    * round's estimate. The `BigInt` doubles in digit count per round and from
-    * ~round 18 planning time is 100% `BigInteger.multiply` (measured: ×2.9
-    * per round, 100+ s/round by round 24 on a 2 000-node toy graph).
-    * Supplying the true row count each round resets the estimate to the truth,
-    * keeps planning O(1) per round, and gives the planner an honest input for
-    * broadcast decisions. No-op for non-`LogicalRDD` plans. */
   /** Non-blocking-ish read of an `Observation`'s metrics (`getOrEmpty` is
     * `private[sql]`; it waits ≤100 ms internally, then returns empty if the
     * metrics haven't been delivered). Lets callers poll with a deadline
@@ -106,6 +92,20 @@ object Bridge {
     CheckpointHandle.of(materialize(onClone)).toDF(caller)
   }
 
+  /** Rebuild a checkpointed DataFrame's `LogicalRDD` leaf with exact, bounded
+    * statistics from an observed row count.
+    *
+    * Why this exists: `Dataset.localCheckpoint` copies the origin plan's
+    * ESTIMATED `Statistics` into the `LogicalRDD` it produces. In an iterative
+    * join loop (CCF / pointer-jumping fixpoints) the estimate compounds — a
+    * join's default `sizeInBytes` estimate is the PRODUCT of its children's,
+    * so each round's checkpoint carries roughly the SQUARE of the previous
+    * round's estimate. The `BigInt` doubles in digit count per round and from
+    * ~round 18 planning time is 100% `BigInteger.multiply` (measured: ×2.9
+    * per round, 100+ s/round by round 24 on a 2 000-node toy graph).
+    * Supplying the true row count each round resets the estimate to the truth,
+    * keeps planning O(1) per round, and gives the planner an honest input for
+    * broadcast decisions. No-op for non-`LogicalRDD` plans. */
   def withStats(df: org.apache.spark.sql.DataFrame, rowCount: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.Statistics
     import org.apache.spark.sql.execution.LogicalRDD

@@ -265,6 +265,7 @@ class CCFSpec extends SparkSpec {
       Option.when(left.nonEmpty || freed.nonEmpty)(s"$name: left persisted " +
         s"[${left.mkString(", ")}], freed the caller's RDDs [${freed.mkString(", ")}]")
     }
+    Seq(e, bi, deg, outE, en, seeds).foreach(graft.Checkpoints.free)
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
