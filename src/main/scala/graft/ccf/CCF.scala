@@ -1,14 +1,15 @@
 package graft.ccf
 
 import graft.Checkpoints
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.KnownNullable
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 /**
  * CCF (Connected Component Finder) — Spark-DataFrame-native implementation of
@@ -96,7 +97,7 @@ object CCF {
   /** The reference's kernel label (paper Fig. 2 Basic, Fig. 3 SecondarySort;
     * identical results, reference `report.md:161`). Both labels run the one
     * kernel in both round shapes: [[iterateBasic]] in a declarative round,
-    * [[MicroFixpoint.driverRound]] in a driver round. Fig. 3's
+    * [[MicroFixpoint.round]] in a driver round. Fig. 3's
     * secondary sort exists to bound the reducer's state, and Basic's
     * map-side partial `min` never builds a per-key neighbour list, so the
     * sort buys nothing here; the sort-based kernel lost every same-window
@@ -125,7 +126,8 @@ object CCF {
    * ONE LOOP, EACH ROUND SHAPED BY ITS OBSERVED INPUT SIZE (observe-then-
    * choose, like [[auto]]'s density rule): a round whose input is below
    * [[MicroFixpoint.FusedRows]] rows runs on the driver, in memory, with no
-   * plan and no job ([[MicroFixpoint]]); a larger round runs declaratively.
+   * plan and no job ([[MicroFixpoint]]: a primitive kernel over the keys'
+   * int ranks); a larger round runs declaratively.
    * Round 1 is sized by the input: a driver-local `LocalRelation`'s length,
    * or the count observed while the input is checkpointed at entry. Measured
    * on the reference's 34-run matrix, a declarative round's planning +
@@ -133,18 +135,20 @@ object CCF {
    * magnitude over the compute; the driver round won every per-round A/B up
    * to 684,715 input rows (ROADMAP item 6). At scale the declarative round
    * wins (codegen, AQE skew handling, partial aggregation) and is the engine
-   * of record. A run that ends on the driver returns a driver-local
-   * `LocalRelation`, so each of the reference matrix's fixpoints and its
-   * [[componentCount]] start no job from a driver-local input. The driver
-   * holds O([[MicroFixpoint.FusedRows]]) pairs.
+   * of record. Rows stay Catalyst-internal end to end: a driver-local input
+   * is read from its `LocalRelation`'s rows, and a run that ends on the
+   * driver returns a `LocalRelation` of internal rows, which
+   * [[componentCount]] counts in place. So each of the reference matrix's
+   * fixpoints and its component count start no job and no Catalyst action
+   * from a driver-local input. Between driver rounds the driver holds 8
+   * bytes per pair, below [[MicroFixpoint.FusedRows]] pairs, plus one
+   * dictionary of the run's keys.
    *
-   * Hand-offs: driver → declarative deduplicates the driver rows (every emit
-   * has src > dst, so `distinct` is CCF-Dedup) into an RDD-backed frame with
-   * exact row stats; declarative → driver collects the round's checkpoint
-   * (one job) and frees it. A driver-local input is read onto the driver at
-   * entry (no job), so a declarative round 1 over it reads the same hand-off
-   * frame, with the input's raw multiplicity. Checkpoints follow the free
-   * rule of [[graft.Checkpoints]].
+   * Hand-offs (see [[runSwitchable]]): driver → declarative decodes the
+   * deduplicated ranks into an RDD-backed frame with exact row stats;
+   * declarative → driver collects the round's checkpoint (one job), frees
+   * it and encodes its rows. Checkpoints follow
+   * the free rule of [[graft.Checkpoints]].
    *
    * Declarative round: ONE action — the round's tagged emits are
    * deduplicated and eagerly `localCheckpoint`'ed (truncating lineage), and
@@ -246,12 +250,27 @@ object CCF {
   /** The CCF fixpoint: one loop, one round per step, each round shaped by
     * the observed row count of its input (round 1: the input's). Below
     * [[MicroFixpoint.FusedRows]] the round runs on the driver
-    * ([[MicroFixpoint.driverRound]]); otherwise it runs declaratively
-    * ([[declarativeRound]]). Key types without a driver kernel, and sessions
-    * with reliable checkpoints (`spark.graft.checkpointDir`: a preemptible
-    * cluster, where each round's DFS checkpoint is the point), run every
-    * round declaratively. `armed` runs [[auto]]'s blowup detector, which
-    * ends the run with Right(Switched) when it fires. */
+    * ([[MicroFixpoint.round]] over int ranks); otherwise it runs
+    * declaratively ([[declarativeRound]]). Key types without a driver kernel,
+    * and sessions with reliable checkpoints (`spark.graft.checkpointDir`: a
+    * preemptible cluster, where each round's DFS checkpoint is the point),
+    * run every round declaratively. `armed` runs [[auto]]'s blowup detector,
+    * which ends the run with Right(Switched) when it fires.
+    *
+    * A pair set that comes onto the driver is encoded in a
+    * [[MicroFixpoint.Dictionary]] of its keys, which serves every driver
+    * round after it: CCF never creates a node, so a round's pairs are a
+    * subset of its input's nodes. Hand-offs:
+    *  - driver → declarative: the driver round's emits have src > dst, so
+    *    their pair-distinct is the CCF-Dedup the declarative round expects;
+    *    the ranks are decoded and `parallelize`d with exact stats
+    *    (`Bridge.parallelize`, the frame [[PointerJump.run]] reads a
+    *    driver-local input through);
+    *  - declarative → driver: the round's checkpoint is collected once as
+    *    internal rows, freed, and encoded in a dictionary of its own keys
+    *    (a subset of the run's);
+    *  - a driver-local input is encoded in place for a driver round 1, or
+    *    `parallelize`d as it is (raw multiplicity) for a declarative one. */
   private def runSwitchable(edges: DataFrame, maxIterations: Int,
                             armed: Boolean): Either[CCFResult, Switched] = {
     require(edges.columns.length == 2, s"edge list must have 2 columns, got ${edges.columns.length}")
@@ -265,18 +284,29 @@ object CCF {
       StructType(Seq(StructField(a, keyType), StructField(b, keyType)))
 
     // The pair set between rounds: `frame` ahead of a declarative round,
-    // `local` (rows on the driver) ahead of a driver round; one is null.
+    // `local` (ranks in `dict`) ahead of a driver round; one is null.
     var frame: DataFrame = null
-    var local: ArrayBuffer[(Any, Any)] = null
+    var local: MicroFixpoint.Pairs = null
+    var dict: MicroFixpoint.Dictionary = null // the keys of `local`'s ranks
     var ckpt: DataFrame = null // the checkpoint behind `frame`, if this loop made one
-    // A driver-local input is read onto the driver in place (no job; its
-    // row count is known), so even a declarative round 1 reads the
-    // RDD-backed hand-off frame, never the `LocalRelation` itself. Any other
-    // plan (scans, joins, prior fixpoint outputs) is checkpointed once, and
-    // its row count rides that job as an observed metric.
+    val reliableCkpt = spark.conf.getOption(Checkpoints.DirKey).exists(_.nonEmpty)
+    def onDriver(rows: Long) =
+      !reliableCkpt && MicroFixpoint.hasKernel(keyType) && rows < MicroFixpoint.FusedRows
+    def encode(rows: Seq[InternalRow]): Unit = {
+      val (d, p) = MicroFixpoint.encode(keyType, rows)
+      dict = d
+      local = p
+    }
+    // A driver-local input is read from its `LocalRelation` in place (no
+    // job, no action; its row count is known): encoded for a driver round 1,
+    // or handed to a declarative round 1 as an RDD-backed frame with the
+    // input's raw multiplicity, never as the `LocalRelation` itself. Any
+    // other plan (scans, joins, prior fixpoint outputs) is checkpointed once,
+    // and its row count rides that job as an observed metric.
     val (input, nInput) = inputDF.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        local = MicroFixpoint.collect(inputDF)
+      case lr: LocalRelation =>
+        if (onDriver(lr.data.length)) encode(lr.data)
+        else frame = Bridge.parallelize(spark, schemaOf("src", "dst"), lr.data)
         (inputDF, lr.data.length.toLong)
       case _ =>
         val m = Checkpoints.materialize(inputDF, "ccf input")()
@@ -291,36 +321,33 @@ object CCF {
       if (ckpt != null && (ckpt ne kept)) Checkpoints.free(ckpt)
       ckpt = null
     }
-    val reliableCkpt = spark.conf.getOption(Checkpoints.DirKey).exists(_.nonEmpty)
-    val driverOrd = if (reliableCkpt) None else MicroFixpoint.ordering(keyType)
 
     var inputRows = nInput
     var progress = MicroFixpoint.Progress.start(maxIterations, armed, nInput)
     val history = ArrayBuffer.empty[Long]
     while (!progress.done) {
-      val (newPairs, rows) = driverOrd match {
-        case Some(ord) if inputRows < MicroFixpoint.FusedRows =>
+      val (newPairs, rows) =
+        if (onDriver(inputRows)) {
           if (local == null) {
-            local = MicroFixpoint.collect(frame)
+            // declarative -> driver: one collect, encoded in its own keys
+            encode(Bridge.collectInternal(frame).toSeq)
             release()
             frame = null
           }
-          val (next, n) = MicroFixpoint.driverRound(local, dedup = progress.iterations > 0)(ord)
+          val (next, n) = MicroFixpoint.round(local, dict.size, dedup = progress.iterations > 0)
           local = next
           inputRows = next.size.toLong
           (n, inputRows)
-        case _ =>
+        } else {
           if (frame == null) {
-            // Driver rows after round 1 are pre-dedup emits, each with
-            // src > dst, so `distinct` is the CCF-Dedup the declarative round
-            // expects; round 1 reads the input as it is (raw multiplicity).
-            // An RDD-backed frame, not a `LocalRelation`: Catalyst optimizes
-            // a round over a 153k-row `LocalRelation` in ~4.8 s, over an RDD
-            // in ~0.1 s (string chain 1000's round 11).
-            val pairs = if (progress.iterations > 0) local.distinct else local
-            frame = Bridge.withStats(spark.createDataFrame(
-              spark.sparkContext.parallelize(pairs.map { case (a, b) => Row(a, b) }.toSeq),
-              schemaOf("src", "dst")), pairs.size.toLong)
+            // driver -> declarative, after a driver round: its emits have
+            // src > dst, so the pair-distinct is the CCF-Dedup the
+            // declarative round expects. An RDD-backed frame, not a
+            // `LocalRelation`: Catalyst optimizes a round over a 153k-row
+            // `LocalRelation` in ~4.8 s, over an RDD in ~0.1 s (string chain
+            // 1000's round 11).
+            val pairs = MicroFixpoint.distinct(local)
+            frame = Bridge.parallelize(spark, schemaOf("src", "dst"), dict.decode(pairs))
             local = null
           }
           val round = declarativeRound(frame, progress.iterations + 1)
@@ -329,7 +356,7 @@ object CCF {
           ckpt = frame
           inputRows = round.rows
           (round.metrics("newPairs"), round.metrics("emitted"))
-      }
+        }
       history += newPairs
       progress = progress.after(newPairs, rows)
     }
@@ -341,8 +368,8 @@ object CCF {
     // A run capped before convergence keeps pre-dedup driver rows: dedup them.
     val assignments =
       if (local != null)
-        spark.createDataFrame((if (progress.converged) local else local.distinct)
-          .map { case (a, b) => Row(a, b) }.asJava, schemaOf("node", "component"))
+        Bridge.localFrame(spark, schemaOf("node", "component"),
+          dict.decode(if (progress.converged) local else MicroFixpoint.distinct(local)))
       else {
         def nullable(c: String) = Bridge.column(KnownNullable(Bridge.expression(col(c))))
         frame.select(nullable("src").as("node"), nullable("dst").as("component"))
@@ -415,19 +442,20 @@ object CCF {
 
   /** O10: number of components = distinct component labels in the converged
     * assignment (reference `ccf_experiments.py:137`). A result whose
-    * optimized plan is a driver-local `LocalRelation` (a run whose last round
-    * ran on the driver, see [[run]]) is counted on the driver: `collect()` reads it without a
-    * job, while `distinct().count()` plans an aggregate over it and runs
-    * jobs like any other plan. Any other result keeps `distinct().count()`.
-    * This mirrors [[runSwitchable]]'s `LocalRelation` input shortcut. */
-  def componentCount(assignments: DataFrame): Long = {
-    val components = assignments.select("component")
-    components.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        components.collect().distinct.length.toLong
-      case _ => components.distinct().count()
+    * analyzed plan is a driver-local `LocalRelation` (a run whose last round
+    * ran on the driver, see [[run]]) is counted over the relation's own
+    * Catalyst rows: no plan to optimize, no action, no job. Any other result
+    * keeps `distinct().count()`, which plans an aggregate and runs jobs, over
+    * a `LocalRelation` too. */
+  def componentCount(assignments: DataFrame): Long =
+    assignments.queryExecution.analyzed match {
+      case lr: LocalRelation if lr.output.exists(_.name == "component") =>
+        val c = lr.output.indexWhere(_.name == "component")
+        val labels = new java.util.HashSet[Any]()
+        lr.data.foreach(r => labels.add(r.get(c, lr.output(c).dataType)))
+        labels.size.toLong
+      case _ => assignments.select("component").distinct().count()
     }
-  }
 
   /** O11: component → sorted member list, re-adding the representative (which
     * has no assignment row) — reference `CCFConnectedComponents.scala:287-295`. */

@@ -3,7 +3,9 @@ package graft.ccf
 import graft.Checkpoints
 import graft.Checkpoints.EagerOps
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /**
  * Pointer-jumping connected components — the long-diameter complement to
@@ -103,12 +105,19 @@ object PointerJump {
   def run(edges: DataFrame, maxIterations: Int = 100): CCF.CCFResult = {
     require(edges.columns.length == 2, s"edge list must have 2 columns, got ${edges.columns.length}")
     val spark = edges.sparkSession
+    // A driver-local input moves to an RDD-backed frame with exact stats, the
+    // frame CCF hands its driver rows over in: Catalyst spends seconds
+    // planning the bidirect + distinct over a large `LocalRelation`.
+    val named = edges.toDF("src", "dst")
+    val input = named.queryExecution.optimizedPlan match {
+      case lr: LocalRelation => Bridge.parallelize(spark, lr.schema, lr.data)
+      case _ => named
+    }
 
     // Static topology: canonical bidirected distinct edges, materialized once
     // with exact stats (estimates otherwise compound through the per-round
     // joins, Bridge.withStats).
-    val bi = Checkpoints.materialize(
-      CCF.bidirect(edges.toDF("src", "dst")).distinct(), "pj bidirect")()
+    val bi = Checkpoints.materialize(CCF.bidirect(input).distinct(), "pj bidirect")()
     // the label table is exactly one row per node, every round
     val lbl = Checkpoints.materialize(bi.df.groupBy(col("src").as("node"))
       .agg(least(col("src"), min(col("dst"))).as("lab")), "pj labels")()
@@ -132,7 +141,7 @@ object PointerJump {
           bi.rows / 100000L + 1L).toInt
         val b = bi.df.repartition(parts, col("src")).eagerCheckpointKeepPartitioning()
         Checkpoints.free(bi.df)
-        org.apache.spark.sql.graft.Bridge.withStats(b, bi.rows)
+        Bridge.withStats(b, bi.rows)
       } else bi.df
 
     val fix = Checkpoints.fixpoint(lbl.df, maxIterations, until = Some("changed"),

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Driver-side union-find ORACLE for the CCF component queries, closing the
@@ -76,7 +77,10 @@ object UnionFindOracle {
     (nodes.toArray, labels)
   }
 
-  /** String-keyed twin (lexicographic min member — CCF's string semantics). */
+  /** String-keyed twin (lexicographic min member — CCF's string semantics).
+    * Strings compare by their UTF-8 bytes, as Spark's `min` and `<` do
+    * (`UTF8String` order, which is code point order); Java's `<` compares
+    * UTF-16 units and puts a supplementary-plane character below U+E000. */
   def labelsString(edges: Iterator[(String, String)]): (Array[String], Array[String]) = {
     val idx = new scala.collection.mutable.AnyRefMap[String, Int](1 << 16)
     val nodes = new scala.collection.mutable.ArrayBuffer[String]
@@ -89,7 +93,8 @@ object UnionFindOracle {
     var i = 0
     while (i < n) {
       val r = dsu.find(i)
-      if (minOfRoot(r) == null || nodes(i) < minOfRoot(r)) minOfRoot(r) = nodes(i)
+      if (minOfRoot(r) == null || UTF8String.fromString(nodes(i))
+          .compareTo(UTF8String.fromString(minOfRoot(r))) < 0) minOfRoot(r) = nodes(i)
       i += 1
     }
     val labels = new Array[String](n)

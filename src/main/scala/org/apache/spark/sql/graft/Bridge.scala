@@ -92,6 +92,35 @@ object Bridge {
     CheckpointHandle.of(materialize(onClone)).toDF(caller)
   }
 
+  /** Driver-side Catalyst rows as a driver-local `LocalRelation` frame: no
+    * encoder and no conversion from external `Row`s. */
+  def localFrame(spark: org.apache.spark.sql.SparkSession,
+                 schema: org.apache.spark.sql.types.StructType,
+                 rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** Driver-side Catalyst rows as an RDD-backed frame (`parallelize`)
+    * stamped with their exact row count ([[withStats]]). Catalyst plans a
+    * query over it in the time it takes over any `LogicalRDD`, where over a
+    * large `LocalRelation` it spends seconds (CHANGES.md). */
+  def parallelize(spark: org.apache.spark.sql.SparkSession,
+                  schema: org.apache.spark.sql.types.StructType,
+                  rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    withStats(cs.internalCreateDataFrame(cs.sparkContext.parallelize(rows), schema), rows.length.toLong)
+  }
+
+  /** A frame's rows as Catalyst rows on the driver: one tracked action, the
+    * job `Dataset.collect` runs, without the conversion to external `Row`s. */
+  def collectInternal(df: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
+
   /** Rebuild a checkpointed DataFrame's `LogicalRDD` leaf with exact, bounded
     * statistics from an observed row count.
     *

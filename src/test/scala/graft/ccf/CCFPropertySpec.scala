@@ -93,6 +93,10 @@ class CCFPropertySpec extends SparkSpec {
     // every leaf
     "200-leaf string star" -> strEdges((1 to 200).map(i => "zhub" -> f"leaf$i%03d")),
     "empty" -> strEdges(Seq.empty),
+    // Spark orders strings by UTF-8 bytes (code points): U+E000 < U+FFFD <
+    // U+1F600, where Java's UTF-16 compareTo puts the surrogate pair first
+    "supplementary-plane keys" -> strEdges(Seq("\uFFFD" -> "\uD83D\uDE00",
+      "\uD83D\uDE00" -> "\uE000x")),
     "random 5000/15000" -> strEdges(Generators.randomGraph(5000, 15000)),
     "cluster 20x50/0" -> strEdges(Generators.clusterGraph(20, 50)),
     "string chain 500" -> strEdges(Generators.chainGraph(500)),

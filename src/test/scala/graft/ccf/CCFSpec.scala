@@ -180,6 +180,48 @@ class CCFSpec extends SparkSpec {
     assert(jobs === 2)
   }
 
+  /** The Catalyst actions `body` runs on `session`, counted by a
+    * QueryExecutionListener; a marker action, delivered after every action
+    * before it, proves that all have arrived. */
+  private def actionsOf[T](session: org.apache.spark.sql.SparkSession)(body: => T): (T, Int) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val marker = session.range(1).toDF("actions_marker")
+    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val delivered = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe eq marker.queryExecution) delivered.countDown() else actions.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        actions.incrementAndGet()
+    }
+    session.listenerManager.register(listener)
+    try {
+      val r = body
+      marker.collect()
+      assert(delivered.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (r, actions.get)
+    } finally session.listenerManager.unregister(listener)
+  }
+
+  test("driver rounds: CCF.run and componentCount on a driver-local input plan nothing") {
+    // every round of both runs is below MicroFixpoint.FusedRows: the input is
+    // read from its LocalRelation, the result is a LocalRelation and the
+    // count reads its rows, so neither a job nor a Catalyst action runs
+    val session = spark.newSession()
+    for ((name, edges, iters) <- Seq(
+        ("string chain 500", Generators.chainGraph(500), 12),
+        ("random 5000/15000", Generators.randomGraph(5000, 15000), 6))) {
+      val (((r, comps), jobs), actions) = actionsOf(session)(jobsOf {
+        val r = CCF.run(Generators.toDF(session, edges))
+        (r, CCF.componentCount(r.assignments))
+      })
+      assert(r.iterations === iters, name)
+      assert(comps === 1L, name)
+      assert(actions === 0, name)
+      assert(jobs === 0, name)
+    }
+  }
+
   test("micro engine: a pair set past the fused budget leaves the fused block") {
     // string chain 1000's round 10 emits 530,916 rows, past
     // MicroFixpoint.FusedRows: rounds 1-10 run on the driver, round 11 runs

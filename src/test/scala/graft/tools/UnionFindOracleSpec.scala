@@ -30,6 +30,20 @@ class UnionFindOracleSpec extends SparkSpec {
     assert(oracle === ccf)
   }
 
+  test("oracle orders strings by UTF-8 bytes, as Spark does") {
+    // UTF-8 (code point) order: U+E000 < U+FFFD < U+1F600; Java's UTF-16
+    // compareTo would pick the surrogate pair of U+1F600 as the minimum
+    val edges = Seq("\uFFFD" -> "\uD83D\uDE00", "\uD83D\uDE00" -> "\uE000x")
+    val (nodes, labels) = UnionFindOracle.labelsString(edges.iterator)
+    assert(nodes.length === 3)
+    assert(labels.toSet === Set("\uE000x"))
+    val df = Generators.toDF(spark, edges)
+    val oracle = UnionFindOracle.assignments(df)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val ccf = CCF.run(df).assignments.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(oracle === ccf)
+  }
+
   test("oracle == CCF on seeded random multi-component graphs") {
     for (seed <- Seq(3, 17)) {
       val edges = Generators.randomGraph(200, 300, seed)
