@@ -268,9 +268,7 @@ object CCF {
     *    driver-local input through);
     *  - declarative → driver: the round's checkpoint is collected once as
     *    internal rows, freed, and encoded in a dictionary of its own keys
-    *    (a subset of the run's);
-    *  - a driver-local input is encoded in place for a driver round 1, or
-    *    `parallelize`d as it is (raw multiplicity) for a declarative one. */
+    *    (a subset of the run's). */
   private def runSwitchable(edges: DataFrame, maxIterations: Int,
                             armed: Boolean): Either[CCFResult, Switched] = {
     require(edges.columns.length == 2, s"edge list must have 2 columns, got ${edges.columns.length}")
@@ -340,14 +338,9 @@ object CCF {
           (n, inputRows)
         } else {
           if (frame == null) {
-            // driver -> declarative, after a driver round: its emits have
-            // src > dst, so the pair-distinct is the CCF-Dedup the
-            // declarative round expects. An RDD-backed frame, not a
-            // `LocalRelation`: Catalyst optimizes a round over a 153k-row
-            // `LocalRelation` in ~4.8 s, over an RDD in ~0.1 s (string chain
-            // 1000's round 11).
-            val pairs = MicroFixpoint.distinct(local)
-            frame = Bridge.parallelize(spark, schemaOf("src", "dst"), dict.decode(pairs))
+            // driver -> declarative: the driver round's emits, deduplicated
+            frame = Bridge.parallelize(spark, schemaOf("src", "dst"),
+              dict.decode(MicroFixpoint.distinct(local)))
             local = null
           }
           val round = declarativeRound(frame, progress.iterations + 1)

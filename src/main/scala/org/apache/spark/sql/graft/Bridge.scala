@@ -104,8 +104,9 @@ object Bridge {
 
   /** Driver-side Catalyst rows as an RDD-backed frame (`parallelize`)
     * stamped with their exact row count ([[withStats]]). Catalyst plans a
-    * query over it in the time it takes over any `LogicalRDD`, where over a
-    * large `LocalRelation` it spends seconds (CHANGES.md). */
+    * query over it as over any `LogicalRDD`, where over a large
+    * `LocalRelation` it spends seconds: ~4.8 s to optimize one CCF round
+    * over 153k rows, against ~0.1 s over the same rows in an RDD. */
   def parallelize(spark: org.apache.spark.sql.SparkSession,
                   schema: org.apache.spark.sql.types.StructType,
                   rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame = {
