@@ -8,7 +8,8 @@ They are the trend counts of ROADMAP aim 2 (one default path per operator):
 
   scala_lines          lines of src/main/**/*.scala, comments included
   code_lines           non-blank lines of the same files with comments removed
-  graft_conf_keys      distinct "spark.graft.*" string literals
+  graft_conf_keys      distinct "spark.graft.*" string literals; the keys are
+                       printed to stderr
   conf_set_calls       conf.set( calls
   session_builders     SparkSession.builder calls
   cpus_env_reads       "SPARK_GRAFT_CPUS" string literals
@@ -150,10 +151,13 @@ def metrics(root):
     dead = unreferenced(root, code)
     for name in dead:
         print(f"unreferenced: {name}", file=sys.stderr)
+    keys = sorted(set(re.findall(r'"(spark\.graft\.[A-Za-z0-9_.]+)"', text)))
+    for key in keys:
+        print(f"graft_conf_key: {key}", file=sys.stderr)
     return {
         "scala_lines": lines,
         "code_lines": code_lines,
-        "graft_conf_keys": len(set(re.findall(r'"spark\.graft\.[A-Za-z0-9_.]+"', text))),
+        "graft_conf_keys": len(keys),
         "conf_set_calls": len(re.findall(r"\bconf\.set\(", text)),
         "session_builders": len(re.findall(r"\bSparkSession\.builder\b", text)),
         "cpus_env_reads": text.count('"SPARK_GRAFT_CPUS"'),

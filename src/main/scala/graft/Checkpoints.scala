@@ -9,7 +9,8 @@ import org.apache.spark.sql.graft.Bridge
  * shared build (CCF/PointerJump/LPA/PageRank/Lloyd rounds, SessionCache
  * entries, staged TF-IDF tables, incremental-dedup batches), and the one
  * round skeleton of the label fixpoints: [[materialize]], [[free]] and
- * [[fixpoint]].
+ * [[fixpoint]]. The row counts those rounds observe also decide their
+ * broadcasts, against one byte budget ([[broadcastable]]).
  *
  * Default is `localCheckpoint(eager = true)`: blocks live on executors —
  * fastest, but a lost executor loses its blocks and the job must rerun
@@ -37,6 +38,36 @@ object Checkpoints {
     * reliable `checkpoint()` into this directory instead of
     * `localCheckpoint()`. */
   val DirKey = "spark.graft.checkpointDir"
+
+  /** Session conf key overriding [[BroadcastBudget]] with a non-negative
+    * byte count; 0 drops every broadcast hint on a graph table (Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold` still applies to the plan). */
+  val BroadcastBudgetKey = "spark.graft.broadcastBudgetBytes"
+
+  /** The byte budget of one broadcast graph table: 512 MB, g1's packed
+    * closing edge list at 64M edges (8 B per row). A broadcast table is held
+    * whole on the driver and on every executor. */
+  val BroadcastBudget = 512L * 1000 * 1000
+
+  /** Whether a table of `rows` observed rows of `df`'s schema may be
+    * broadcast: its bytes, `rows` × the schema's `defaultSize` (Spark's
+    * row-width estimate), are within the session's budget. Every
+    * size-gated broadcast of a graph table (PointerJump's labels, g1's wedge
+    * build and closing edge list, g2's ranks and degrees, g3's labels)
+    * decides here, so one budget bounds them in bytes whatever the key width. */
+  def broadcastable(df: DataFrame, rows: Long): Boolean = {
+    val budget = df.sparkSession.conf.getOption(BroadcastBudgetKey).fold(BroadcastBudget) { v =>
+      v.trim.toLongOption.filter(_ >= 0L).getOrElse(throw new IllegalArgumentException(
+        s"$BroadcastBudgetKey must be a non-negative number of bytes, got '$v'"))
+    }
+    rows * df.schema.defaultSize <= budget
+  }
+
+  /** The row count a [[materialize]]d frame carries in its exact stats (a
+    * cached copy of one keeps them), so reading it starts no job; any other
+    * frame is counted. */
+  def observedRows(df: DataFrame): Long =
+    df.queryExecution.analyzed.stats.rowCount.fold(df.count())(_.toLong)
 
   /** Eagerly materialize `df` and truncate its lineage — local by default,
     * reliable when [[DirKey]] is set on the session. */

@@ -47,26 +47,18 @@ import org.apache.spark.sql.graft.Bridge
  * edge, and the component minimum m keeps lab(m) = m throughout, so the
  * constant is m.
  *
- * 100 TB notes: both joins hash-partition by node id; the label table is
- * n rows regardless of round; the static bidirected edge set is checkpointed
- * once and re-read each round (on a cluster: reliable-checkpoint / cache it).
+ * Round shapes: while the label table's bytes (observed rows × row width)
+ * are within [[graft.Checkpoints.broadcastable]]'s budget, a round
+ * broadcasts the label table over a src-partitioned topology
+ * ([[bcastRound]]); past it, both joins hash-partition by node id. The label
+ * table is n rows regardless of round; the static bidirected edge set is
+ * checkpointed once and re-read each round (on a cluster:
+ * reliable-checkpoint / cache it).
  * newPairsHistory reports the per-round CHANGED-LABEL count (this algorithm
  * has no NewPair notion; the count is 0 exactly at convergence, same
  * contract).
  */
 object PointerJump {
-
-  /** Label tables up to this many nodes are BROADCAST into each round
-    * (r18, the g2/g3 move — guide §2.4/§3.1): with the static bidirected
-    * topology hash-partitioned by src once at build, a round is then
-    * [broadcast-join labels → groupBy src] + [broadcast-join the n-row jump
-    * table] — ZERO exchanges over the edges (plan-pinned in PlanSpec;
-    * the [[hooked]] step adds one over the label rows) instead of
-    * re-shuffling the full edge stream every round. 8M nodes × ~16 B/row
-    * ≈ 128 MB per round, the same bound and rationale as g2's rank table;
-    * past it the rounds keep the shuffled-join shape. */
-  private[ccf] val MaxBroadcastNodes = 8L * 1000 * 1000
-  private[ccf] val MaxBroadcastNodesKey = "spark.graft.pj.maxBroadcastNodes"
 
   /** One broadcast-label round (r18): lab'(u) = least(lab(u), lab(lab(u)),
     * min over N(u) of lab(t)) — the same update as the shuffled
@@ -78,8 +70,9 @@ object PointerJump {
     * total: every node appears as src in the bidirected frame, and every
     * lab is a node id. The only broadcast payload is the label table (the
     * jump is a second lookup into it, not a second table): one n-row table
-    * per round transits the driver, which the [[MaxBroadcastNodesKey]]
-    * bound (~128 MB at 8M nodes) is sized for. */
+    * per round transits the driver, and [[run]] takes this round only while
+    * that table is within [[graft.Checkpoints.broadcastable]]'s byte budget
+    * (16 B per node with long keys: 32M nodes at the default 512 MB). */
   private[graft] def bcastRound(biRounds: DataFrame, lt: DataFrame): DataFrame = {
     val nm = biRounds.join(broadcast(lt), col("dst") === col("_t"))
       .groupBy(col("src")).agg(min(col("_tl")).as("nm"))
@@ -122,19 +115,21 @@ object PointerJump {
     val lbl = Checkpoints.materialize(bi.df.groupBy(col("src").as("node"))
       .agg(least(col("src"), min(col("dst"))).as("lab")), "pj labels")()
 
-    // r18 (guide §2.4): with the label table under the broadcast bound, the
-    // rounds' only distributed frame is the STATIC topology — partition it
-    // by src ONCE (checkpoint preserving the layout) and no round shuffles
+    // r18 (guide §2.4): with the label table within the broadcast budget,
+    // the rounds' only distributed frame is the STATIC topology — partition
+    // it by src ONCE (checkpoint preserving the layout) and no round shuffles
     // the edges: the neighbor-min groupBy(src) rides the build
     // partitioning, the label lookup and the n-row jump table are
-    // broadcasts (the hook shuffles only label rows). Past the bound the rounds keep the shuffled-join shape
-    // and bi keeps the distinct()'s layout (a src repartition would be a
-    // wasted extra shuffle there — the shuffled round joins by dst).
-    // The rounds inherit the repartition's partition count, so it is sized
-    // here: ~100k pairs per partition, at most the session's count — a small
-    // graph runs each round as one task at any cpu count.
-    val bcastLbl = lbl.rows <= spark.conf.getOption(MaxBroadcastNodesKey)
-      .map(_.toLong).getOrElse(MaxBroadcastNodes)
+    // broadcasts (the hook shuffles only label rows). Past the budget the
+    // rounds keep the shuffled-join shape and bi keeps the distinct()'s
+    // layout (a src repartition would be a wasted extra shuffle there — the
+    // shuffled round joins by dst). The budget is in bytes, so a
+    // string-keyed table (40 B per node) crosses it at fewer nodes than a
+    // long-keyed one (16 B). The rounds inherit the repartition's partition
+    // count, so it is sized here: ~100k pairs per partition, at most the
+    // session's count — a small graph runs each round as one task at any
+    // cpu count.
+    val bcastLbl = Checkpoints.broadcastable(lbl.df, lbl.rows)
     val biRounds =
       if (bcastLbl) {
         val parts = math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong,

@@ -41,14 +41,16 @@ object GraphQueries {
     * co-purchase graph — shared by g1 (orientation + packability probe) and
     * g2 (out-degree normalization + rank init), which each used to re-run
     * the same bidirect+groupBy pass (VERDICT r9 #2: attribute g2's build
-    * cost; sharing it also removes one full-edge aggregation per bench pass). */
+    * cost; sharing it also removes one full-edge aggregation per bench pass).
+    * Its row count rides the build job and stays in the checkpoint's exact
+    * stats, which the cache keeps ([[Checkpoints.observedRows]]). */
   private val degCache = new SessionCache[String]
 
   private def degrees(s: SparkSession, dir: String): DataFrame = {
     val e = edges(s, dir) // hoisted so a cold cache bills the edge build separately
     degCache.getOrElseUpdate(s, dir)(SharedBuilds.timed("copurchase_degrees")(
-      CCF.bidirect(e).groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("deg")).eagerCheckpoint()))
+      Checkpoints.materialize(CCF.bidirect(e).groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("deg")), "degrees")().df))
   }
 
   /** Memoized PageRank out-edge stream (src, dst, outdeg) — the build input
@@ -60,16 +62,16 @@ object GraphQueries {
   private def pagerankOutE(s: SparkSession, dir: String): DataFrame = {
     val e = edges(s, dir)
     val deg = degrees(s, dir)
+    val outdeg = deg.select(col("node").as("src"), col("deg").as("outdeg"))
     outECache.getOrElseUpdate(s, dir)(SharedBuilds.timed("pagerank_outE")(
-      // deg is O(nodes) — broadcast it below the same node bound the
-      // per-round rank broadcast uses; past the bound the planner shuffles
-      // this one-time build join, never the rounds. Plain checkpoint, not a
+      // deg is O(nodes) — broadcast it within the byte budget the per-round
+      // rank broadcast uses; past it the planner shuffles this one-time
+      // build join, never the rounds. Plain checkpoint, not a
       // dst-partitioned one: the rounds keep their one contribution
       // exchange, so partial collect_list and AQE coalescing stay (the
       // exchange-free r18 build was 5x slower at local[32], OPTIMIZATION_r19).
       CCF.bidirect(e)
-        .join(hint(deg.select(col("node").as("src"), col("deg").as("outdeg")),
-          broadcastRanks(s, deg.count())), "src")
+        .join(hint(outdeg, Checkpoints.broadcastable(outdeg, Checkpoints.observedRows(deg))), "src")
         .eagerCheckpoint()))
   }
 
@@ -197,7 +199,9 @@ object GraphQueries {
     // hub-skew failure mode the reference flags for CCF, solved structurally
     // here rather than by salting). Each triangle {a,b,c} is generated
     // exactly once, as a wedge at its orientation-minimum vertex, then
-    // credited to all three corners.
+    // credited to all three corners. The wedge build and the closing edge
+    // list each broadcast while their own bytes are within the broadcast
+    // budget (see [[trianglesOf]]).
     "g1_triangles" -> ((s, dir) =>
       trianglesOf(edges(s, dir), Some(degrees(s, dir)))),
 
@@ -212,7 +216,9 @@ object GraphQueries {
     // bit-identical across engines. Past [[MaxParityInDegree]] the core
     // swaps the fold for a plain codegen SUM by itself (order-free within fp
     // tolerance; same join/agg shape per round) — every fixture's max degree
-    // is far below it, so g2 stays on the oracle-parity fold.
+    // is far below it, so g2 stays on the oracle-parity fold. The rank table
+    // broadcasts into each round while its bytes are within the broadcast
+    // budget (see [[pagerankCore]]).
     "g2_pagerank" -> ((s, dir) =>
       pagerankCore(pagerankOutE(s, dir),
         degrees(s, dir).select(col("node").as("src"), col("deg").as("outdeg")),
@@ -229,12 +235,12 @@ object GraphQueries {
     // deterministic (synchronous LPA with a total tie order has no
     // run-to-run wobble, unlike the async variant).
     // r18: rounds run over the memoized dst-partitioned edge stream with the
-    // O(nodes) label table broadcast (below the g2 node bound) — zero
-    // exchanges per round; see [[bidirectByDst]]. Identical output: the
-    // mode-vote is integer-exact under any partitioning.
+    // O(nodes) label table broadcast (within the byte budget, see
+    // [[lpaOf]]) — zero exchanges per round; see [[bidirectByDst]].
+    // Identical output: the mode-vote is integer-exact under any
+    // partitioning.
     "g3_label_propagation" -> ((s, dir) =>
-      lpaOf(bidirectByDst(s, dir), LpaIters,
-        bcastLabels = broadcastRanks(s, degrees(s, dir).count())))
+      lpaOf(bidirectByDst(s, dir), LpaIters))
   )
 
   /** g3 round count (communities stabilize on the planted fixture in 3;
@@ -247,11 +253,12 @@ object GraphQueries {
     * Per-round cost: one join keyed src + two map-side-combinable
     * aggregates; the n-row label table is checkpointed per round (lineage
     * cut, same as the PageRank rank table) by [[graft.Checkpoints.fixpoint]],
-    * which frees the rounds by its one rule and never frees `bi`. At 100 TB
-    * the label table co-partitions with the edge list's src shuffle, so
-    * rounds reuse one exchange layout. */
-  private[graft] def lpaOf(bi: DataFrame, iters: Int,
-                           bcastLabels: Boolean = false): DataFrame = {
+    * which frees the rounds by its one rule and never frees `bi`. A round
+    * broadcasts its input label table while that table's observed rows are
+    * within [[graft.Checkpoints.broadcastable]]'s byte budget; past it the
+    * label join shuffles, and at 100 TB the label table co-partitions with
+    * the edge list's src shuffle, so rounds reuse one exchange layout. */
+  private[graft] def lpaOf(bi: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"lpa needs >= 1 round, got $iters")
     // Round 1 fused (r11): labels start as identity, so round 1's src-keyed
     // label join maps label := src — a no-op worth one m-row shuffle join
@@ -260,7 +267,8 @@ object GraphQueries {
     // (identical output: every node appears as dst in a bidirected frame),
     // and the loop starts from `bi` itself.
     Checkpoints.fixpoint(bi, iters) { (lab, i) =>
-      Checkpoints.materialize(if (i == 1) lpaStep1(bi) else lpaStep(bi, lab, bcastLabels),
+      Checkpoints.materialize(if (i == 1) lpaStep1(bi)
+        else lpaStep(bi, lab, Checkpoints.broadcastable(lab, Checkpoints.observedRows(lab))),
         s"lpa round $i")()
     }.result
   }
@@ -315,7 +323,7 @@ object GraphQueries {
     * frame, and that a dst-partitioned edge frame plans ZERO exchanges).
     * `bcastLabels` hints the O(nodes) label side into a broadcast join so a
     * dst-partitioned `bi` keeps its partitioning through the join (the g2
-    * rank-table move; callers gate it on the node bound). */
+    * rank-table move; [[lpaOf]] gates it on the byte budget). */
   private[queries] def lpaStep(bi: DataFrame, lab: DataFrame,
                                bcastLabels: Boolean = false): DataFrame =
     bi.join(hint(lab.select(col("node").as("src"), col("label")), bcastLabels), "src")
@@ -348,8 +356,6 @@ object GraphQueries {
     val packable = !ids.isNullAt(0) &&
       ids.getLong(0) >= 0L && ids.getLong(1) < (1L << 31)
     val nEdges = if (ids.isNullAt(2)) 0L else ids.getLong(2) / 2L
-    val maxBroadcast = e.sparkSession.conf
-      .getOption(MaxBroadcastEdgesKey).map(_.toLong).getOrElse(MaxBroadcastEdges)
     // r19 (guide §2.3 "narrower types"): when ids fit [0, 2^31) the (deg,
     // id) orientation key packs into ONE long — deg < 2^31 always (bounded
     // by node count), so deg<<32|id preserves the lexicographic (deg, id)
@@ -375,15 +381,16 @@ object GraphQueries {
       .eagerCheckpoint()
     // r19 (guide §2.4/§3.1): the wedge self-join was a SortMergeJoin —
     // TWO exchanges + two sorts of the full oriented table (plan dump
-    // plans/r18/g1_triangles_before.txt ops 3-9). Under the SAME observed
-    // edge bound the closing join already uses, broadcast the build side:
-    // each wedge is generated in its producing partition, zero wedge
-    // exchanges, and the whole wedge→close→explode→partial-agg chain runs
-    // as one map-side pipeline (the only remaining exchange is the final
-    // per-node count). Past the bound the self-join keeps the shuffled
-    // equi-join shape, unchanged (PlanSpec pins both shapes).
+    // plans/r18/g1_triangles_before.txt ops 3-9). While the oriented table's
+    // bytes (nEdges × 24 B packed) are within the broadcast budget,
+    // broadcast the build side: each wedge is generated in its producing
+    // partition, zero wedge exchanges, and the whole
+    // wedge→close→explode→partial-agg chain runs as one map-side pipeline
+    // (the only remaining exchange is the final per-node count). Past the
+    // budget the self-join keeps the shuffled equi-join shape, unchanged
+    // (PlanSpec pins both shapes).
     val wedgeBuild =
-      if (nEdges <= maxBroadcast) broadcast(oriented.as("b"))
+      if (Checkpoints.broadcastable(oriented, nEdges)) broadcast(oriented.as("b"))
       else oriented.as("b")
     val wedges = oriented.as("a").join(wedgeBuild,
         col("a.u") === col("b.u") && col("a.vkey") < col("b.vkey"))
@@ -393,10 +400,12 @@ object GraphQueries {
     //    wedges outnumber edges ~34x here (41M vs 1.2M), so shuffling them
     //    dominates everything; broadcast keeps each wedge in its producing
     //    partition. Selection is AUTOMATIC from the observed edge count
-    //    (VERDICT r07 #4): past [[MaxBroadcastEdges]] (conf-overridable) the
-    //    edge list would not fit a broadcast, so the hint is dropped and the
-    //    planner runs a shuffled equi-join — still no fan-out beyond the
-    //    wedge set, just an exchange on it.
+    //    (VERDICT r07 #4): past the byte budget (nEdges × 8 B packed, so
+    //    64M edges at the default) the edge list would not fit a broadcast,
+    //    so the hint is dropped and the planner runs a shuffled equi-join —
+    //    still no fan-out beyond the wedge set, just an exchange on it. The
+    //    closing list is a third of the wedge build's bytes, so between the
+    //    two it broadcasts while the wedge join shuffles.
     //  * pack the (x, y) pair into ONE long key when the observed id range
     //    allows (ids in [0, 2^31): x<<32|y is collision-free) — a
     //    single-long equi-join builds Spark's specialized LongHashedRelation
@@ -407,7 +416,7 @@ object GraphQueries {
       if (packable) oriented.select(
         shiftleft(col("u"), 32).bitwiseOR(col("v")).as("pq"))
       else oriented.select(col("u").as("x"), col("v").as("y"))
-    val build = if (nEdges <= maxBroadcast) broadcast(closing) else closing
+    val build = if (Checkpoints.broadcastable(closing, nEdges)) broadcast(closing) else closing
     val tri =
       if (packable)
         wedges.withColumn("pq", shiftleft(col("x"), 32).bitwiseOR(col("y")))
@@ -422,12 +431,13 @@ object GraphQueries {
     * notes above and the fixture spec. Builds the tables [[pagerankCore]]
     * takes; `step` as there.
     *
-    * Scale shape per round: ONE shuffle of the out-edge stream hash-joined
-    * against the O(nodes) rank table, then ONE aggregation exchange keyed by
-    * destination. The out-edge table (edges + contributor degree) is built
-    * once and eagerly checkpointed, and freed once the rounds are done; each
-    * round's rank table is checkpointed so planning stays O(1) in rounds
-    * (same pattern as the CCF fixpoint). */
+    * Scale shape per round: the O(nodes) rank table broadcast into the
+    * out-edge stream while it is within the byte budget (past it, ONE
+    * shuffle of the out-edge stream hash-joined against it), then ONE
+    * aggregation exchange keyed by destination. The out-edge table (edges +
+    * contributor degree) is built once and eagerly checkpointed, and freed
+    * once the rounds are done; each round's rank table is checkpointed so
+    * planning stays O(1) in rounds (same pattern as the CCF fixpoint). */
   private[graft] def pagerankOf(e0: DataFrame, iters: Int,
                                 step: Option[PagerankStep] = None): DataFrame = {
     val bi = CCF.bidirect(e0)
@@ -457,8 +467,18 @@ object GraphQueries {
                                   step: Option[PagerankStep] = None): DataFrame = {
     val (n, picked) = pagerankPlan(deg)
     val round = step.getOrElse(picked)
-    val bcast = broadcastRanks(deg.sparkSession, n)
-    Checkpoints.fixpoint(deg.select(col("src").as("node"), lit(1.0 / n).as("rank")), iters) {
+    val start = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
+    // The per-round rank table is O(nodes) x 16 B — broadcast it within the
+    // byte budget so each round's join is map-side and the out-edge stream
+    // never re-shuffles into the join (measured 6.9 → 5.7 s at sf0.1; the
+    // remaining round cost is the parity fold's per-dst contribution
+    // exchange, which the plain-SUM [[pagerankFastStep]] shrinks to
+    // partials). Past the budget the hint is dropped: the planner shuffles
+    // the exchange-keyed join, the 1000-executor layout (where you would
+    // ALSO pre-partition outE by src once and let every round reuse that
+    // exchange).
+    val bcast = Checkpoints.broadcastable(start, n)
+    Checkpoints.fixpoint(start, iters) {
       (ranks, i) => Checkpoints.materialize(round(outE, hint(ranks, bcast), 0.15 / n),
         s"pagerank round $i")()
     }.result.select(col("node"), col("rank").as("pagerank"))
@@ -474,29 +494,8 @@ object GraphQueries {
     (stats.getLong(0), step)
   }
 
-  /** The per-round rank table is O(nodes) x 16 B — broadcast it below
-    * [[MaxBroadcastNodes]] (conf-overridable) so each round's join is
-    * map-side and the out-edge stream never re-shuffles into the join
-    * (measured 6.9 → 5.7 s at sf0.1; the remaining round cost is the
-    * parity fold's per-dst contribution exchange, which the plain-SUM
-    * [[pagerankFastStep]] shrinks to partials). Past the threshold the hint
-    * is dropped: the planner shuffles the exchange-keyed join, the
-    * 1000-executor layout (where you would ALSO pre-partition outE by src
-    * once and let every round reuse that exchange). */
-  private def broadcastRanks(s: SparkSession, n: Long): Boolean =
-    n <= s.conf.getOption(MaxBroadcastNodesKey)
-      .map(_.toLong).getOrElse(MaxBroadcastNodes)
-
   private def hint(ranks: DataFrame, bcast: Boolean): DataFrame =
     if (bcast) broadcast(ranks) else ranks
-
-  /** 8M nodes x ~16 B/row ≈ 128 MB broadcast per round — large enough to
-    * cover any graph whose rank table plausibly fits every executor, small
-    * enough that a modest driver survives rebroadcasting it once per round
-    * (Spark's hard cap is 8 GB, but the driver holds the build side in
-    * memory for each round's hint). Past it the planner shuffles the join. */
-  private val MaxBroadcastNodes = 8L * 1000 * 1000
-  private[queries] val MaxBroadcastNodesKey = "spark.graft.g2.maxBroadcastNodes"
 
   /** One parity round (no checkpoint — PlanSpec plans it raw): join, then
     * the order-deterministic per-dst fold over collected contributions. */
@@ -565,12 +564,6 @@ object GraphQueries {
        |$steps
        |SELECT node, rank AS pagerank FROM r$iters""".stripMargin
   }
-
-  /** Above this many edges the closing join's edge list is not broadcast
-    * (packed: 8 B/row → ~512 MB at the default; a shuffled equi-join takes
-    * over). Override per session with [[MaxBroadcastEdgesKey]]. */
-  private val MaxBroadcastEdges = 64L * 1000 * 1000
-  private[queries] val MaxBroadcastEdgesKey = "spark.graft.g1.maxBroadcastEdges"
 
   val oracles: Map[String, String] = Map(
     "ccf_components" ->

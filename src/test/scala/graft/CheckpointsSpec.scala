@@ -2,8 +2,49 @@ package graft
 
 /** The round skeleton's metric read ([[Checkpoints.pollMetrics]]): a
   * bounded wait that never hangs and never kills a fixpoint over a metrics
-  * race. */
-class CheckpointsSpec extends org.scalatest.funsuite.AnyFunSuite {
+  * race; and the broadcast byte budget ([[Checkpoints.broadcastable]]). */
+class CheckpointsSpec extends SparkSpec {
+
+  test("broadcastable: observed rows times the schema's row width, against the budget") {
+    import org.apache.spark.sql.functions.col
+    // (node, lab) tables of 16 B (long) and 40 B (string) per row
+    def tables(s: org.apache.spark.sql.SparkSession) = {
+      val longs = s.range(1).select(col("id").as("node"), col("id").as("lab"))
+      (longs, longs.select(col("node").cast("string"), col("lab").cast("string")))
+    }
+    val (defaultLongs, _) = tables(spark.newSession())
+    assert(Checkpoints.broadcastable(defaultLongs, 32L * 1000 * 1000)) // 512 MB
+    assert(!Checkpoints.broadcastable(defaultLongs, 32L * 1000 * 1000 + 1))
+    val s = spark.newSession()
+    val (longs, strings) = tables(s)
+    s.conf.set(Checkpoints.BroadcastBudgetKey, "1600")
+    assert(Checkpoints.broadcastable(longs, 100))
+    assert(!Checkpoints.broadcastable(longs, 101))
+    assert(Checkpoints.broadcastable(strings, 40))
+    assert(!Checkpoints.broadcastable(strings, 41))
+    s.conf.set(Checkpoints.BroadcastBudgetKey, "0")
+    assert(Checkpoints.broadcastable(longs, 0))
+    assert(!Checkpoints.broadcastable(longs, 1))
+  }
+
+  /** The refusal a session with `value` under the budget key meets. */
+  private def refused(value: String): IllegalArgumentException = {
+    val s = spark.newSession()
+    s.conf.set(Checkpoints.BroadcastBudgetKey, value)
+    intercept[IllegalArgumentException](Checkpoints.broadcastable(s.range(1).toDF(), 1L))
+  }
+
+  test("broadcast budget: a non-numeric value is refused with the key's name") {
+    val e = refused("512MB")
+    assert(e.getMessage.contains(Checkpoints.BroadcastBudgetKey), e.getMessage)
+    assert(e.getMessage.contains("512MB"), e.getMessage)
+  }
+
+  test("broadcast budget: a negative value is refused with the key's name") {
+    val e = refused("-1")
+    assert(e.getMessage.contains(Checkpoints.BroadcastBudgetKey), e.getMessage)
+    assert(e.getMessage.contains("-1"), e.getMessage)
+  }
 
   test("pollMetrics: a throwing read is retried, then delivered metrics win") {
     // VERDICT r11 #1: Observation.getOrEmpty can THROW (Row.schema() null

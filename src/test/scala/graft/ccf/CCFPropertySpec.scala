@@ -259,13 +259,32 @@ class CCFPropertySpec extends SparkSpec {
     val expected = pointerJumpModel(edges)
     assert(expected.length === 11)
     val shuffled = spark.newSession()
-    shuffled.conf.set(PointerJump.MaxBroadcastNodesKey, "0")
+    shuffled.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
     for ((shape, s) <- Seq("broadcast" -> spark, "shuffled" -> shuffled)) {
       val r = PointerJump.run(Generators.toDF(s, edges))
       assert(r.newPairsHistory === expected, s"$shape rounds")
       assert(r.converged, s"$shape rounds")
       assert(rows(r.assignments) === rows(CCF.run(Generators.toDF(spark, edges)).assignments),
         s"$shape rounds")
+    }
+  }
+
+  test("PointerJump: the label table's bytes, not its rows, pick the round shape") {
+    // two 200-node chains: long keys make a 200 x 16 B label table, string
+    // keys a 200 x 40 B one, and the budget lies between the two. Spark's own
+    // size-based broadcast is off, so every BroadcastExchange is PointerJump's
+    val n = 200
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set(graft.Checkpoints.BroadcastBudgetKey, (n * 28).toString)
+    for ((keys, edges, broadcasts) <- Seq(
+        ("long", Generators.chainLongDF(s, n), true),
+        ("string", Generators.toDF(s, Generators.chainGraph(n)), false))) {
+      val (r, plans) = actionPlans(s)(PointerJump.run(edges))
+      assert(r.converged, keys)
+      assert(plans.nonEmpty, keys)
+      assert(plans.exists(_.contains("BroadcastExchange")) === broadcasts, s"$keys keys")
+      assert(rows(r.assignments) === rows(CCF.run(edges).assignments), s"$keys keys")
     }
   }
 

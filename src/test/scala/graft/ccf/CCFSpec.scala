@@ -180,29 +180,6 @@ class CCFSpec extends SparkSpec {
     assert(jobs === 2)
   }
 
-  /** The Catalyst actions `body` runs on `session`, counted by a
-    * QueryExecutionListener; a marker action, delivered after every action
-    * before it, proves that all have arrived. */
-  private def actionsOf[T](session: org.apache.spark.sql.SparkSession)(body: => T): (T, Int) = {
-    import org.apache.spark.sql.execution.QueryExecution
-    val marker = session.range(1).toDF("actions_marker")
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val delivered = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe eq marker.queryExecution) delivered.countDown() else actions.incrementAndGet()
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        actions.incrementAndGet()
-    }
-    session.listenerManager.register(listener)
-    try {
-      val r = body
-      marker.collect()
-      assert(delivered.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (r, actions.get)
-    } finally session.listenerManager.unregister(listener)
-  }
-
   test("driver rounds: CCF.run and componentCount on a driver-local input plan nothing") {
     // every round of both runs is below MicroFixpoint.FusedRows: the input is
     // read from its LocalRelation, the result is a LocalRelation and the
@@ -211,13 +188,13 @@ class CCFSpec extends SparkSpec {
     for ((name, edges, iters) <- Seq(
         ("string chain 500", Generators.chainGraph(500), 12),
         ("random 5000/15000", Generators.randomGraph(5000, 15000), 6))) {
-      val (((r, comps), jobs), actions) = actionsOf(session)(jobsOf {
+      val (((r, comps), jobs), actions) = actionPlans(session)(jobsOf {
         val r = CCF.run(Generators.toDF(session, edges))
         (r, CCF.componentCount(r.assignments))
       })
       assert(r.iterations === iters, name)
       assert(comps === 1L, name)
-      assert(actions === 0, name)
+      assert(actions.isEmpty, name)
       assert(jobs === 0, name)
     }
   }
@@ -263,7 +240,8 @@ class CCFSpec extends SparkSpec {
     val callers = Seq(e, bi, deg, outE, en, seeds).flatMap(leaves).toSet
 
     val shuffled = spark.newSession()
-    shuffled.conf.set(PointerJump.MaxBroadcastNodesKey, "0")
+    shuffled.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
+    val shuffledE = Generators.randomDF(shuffled, 100, 300)
     val chain = Generators.chainGraph(200)
     def decimalChain = Generators.chainLongDF(spark, 50)
       .select(col("src").cast("decimal(20,0)"), col("dst").cast("decimal(20,0)"))
@@ -288,12 +266,13 @@ class CCFSpec extends SparkSpec {
       "PointerJump, shuffled rounds" -> (() =>
         PointerJump.run(Generators.toDF(shuffled, chain)).assignments),
       "lpaUntilStable" -> (() => GraphQueries.lpaUntilStable(bi, maxIters = 10).labels),
-      "lpaOf" -> (() => GraphQueries.lpaOf(bi, 3)),
-      "lpaOf, broadcast labels" -> (() => GraphQueries.lpaOf(bi, 3, bcastLabels = true)),
+      "lpaOf, broadcast labels" -> (() => GraphQueries.lpaOf(bi, 3)),
+      "lpaOf, shuffled labels" -> (() => GraphQueries.lpaOf(CCF.bidirect(shuffledE), 3)),
       "pagerankOf, parity step" -> (() =>
         GraphQueries.pagerankOf(e, 3, Some(GraphQueries.pagerankParityStep))),
       "pagerankOf, fast step" -> (() =>
         GraphQueries.pagerankOf(e, 3, Some(GraphQueries.pagerankFastStep))),
+      "pagerankOf, shuffled ranks" -> (() => GraphQueries.pagerankOf(shuffledE, 3)),
       "pagerankCore over the caller's tables" -> (() => GraphQueries.pagerankCore(outE, deg, 3)),
       "Lloyd" -> (() => SimilarityQueries.lloydTrainEn(en, seeds, 3)))
 

@@ -476,7 +476,7 @@ class PlanSpec extends SparkSpec {
 
   test("g1 triangles: wedge build and closing edge list broadcast under the edge bound, neither at 0") {
     // the library's hints only: Spark's own size-based broadcast is off, so
-    // every BroadcastExchange below comes from trianglesOf's edge bound
+    // every BroadcastExchange below comes from trianglesOf's byte budget
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     val e = GraphBuilders.copurchaseEdges(spark, sf())
@@ -487,13 +487,40 @@ class PlanSpec extends SparkSpec {
       val fin = p.split("== Initial Plan ==")(0)
       assert("BroadcastExchange".r.findAllIn(fin).size === 2, p)
       assert("BroadcastHashJoin".r.findAllIn(fin).size === 2, p)
-      spark.conf.set(GraphQueries.MaxBroadcastEdgesKey, "0")
+      spark.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
       val p0 = finalPlan(GraphQueries.trianglesOf(e))
       assert(!p0.contains("BroadcastExchange"), p0)
       assert(!p0.contains("BroadcastHashJoin"), p0)
+      // 16 B per edge holds the packed closing list (8 B per edge) but not
+      // the wedge build (24 B): the closing join alone broadcasts
+      spark.conf.set(graft.Checkpoints.BroadcastBudgetKey, (e.count() * 16).toString)
+      val pm = finalPlan(GraphQueries.trianglesOf(e)).split("== Initial Plan ==")(0)
+      assert("BroadcastExchange".r.findAllIn(pm).size === 1, pm)
+      assert("BroadcastHashJoin".r.findAllIn(pm).size === 1, pm)
     } finally {
       spark.conf.set(key, prev)
-      spark.conf.unset(GraphQueries.MaxBroadcastEdgesKey)
+      spark.conf.unset(graft.Checkpoints.BroadcastBudgetKey)
+    }
+  }
+
+  test("g2/g3 rounds: the rank and label tables broadcast within the byte budget, never at 0") {
+    // the library's hints only, as above; the rounds run on sessions of
+    // their own, so the shared session's conf is untouched
+    for ((budget, broadcasts) <- Seq(None -> true, Some("0") -> false)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      budget.foreach(s.conf.set(graft.Checkpoints.BroadcastBudgetKey, _))
+      val e = GraphBuilders.copurchaseEdges(s, sf())
+      for ((name, run) <- Seq[(String, () => Unit)](
+          "pagerankOf, parity step" -> (() => GraphQueries.pagerankOf(e, 2,
+            Some(GraphQueries.pagerankParityStep)).collect()),
+          "pagerankOf, fast step" -> (() => GraphQueries.pagerankOf(e, 2,
+            Some(GraphQueries.pagerankFastStep)).collect()),
+          "lpaOf" -> (() => GraphQueries.lpaOf(graft.ccf.CCF.bidirect(e), 2).collect()))) {
+        val (_, plans) = actionPlans(s)(run())
+        assert(plans.exists(_.contains("BroadcastExchange")) === broadcasts,
+          s"$name, budget $budget:\n${plans.mkString("\n")}")
+      }
     }
   }
 

@@ -510,19 +510,24 @@ class QueriesSpec extends SparkSpec {
       fixture.select((col("src") + big).as("src"), (col("dst") + big).as("dst")))
       .collect().map(r => (r.getLong(0) - big) -> r.getLong(1)).toMap
     assert(wide === got)
-    // edge-count auto-selection (VERDICT r07 #4): cap at 0 edges so the
-    // broadcast hint is dropped and the SHUFFLED closing join runs — both the
+    // byte-budget auto-selection (VERDICT r07 #4): at 0 bytes both broadcast
+    // hints are dropped and the SHUFFLED wedge and closing joins run; at 150
+    // bytes the fixture's 8 edges fit as a closing list (8 B packed, 16 B
+    // wide per edge) but not as a wedge build (24 B packed, 32 B wide), so
+    // the closing join broadcasts and the wedge join shuffles — both the
     // packed and unpacked variants must agree with the broadcast results
-    spark.conf.set(GraphQueries.MaxBroadcastEdgesKey, "0")
-    try {
-      val shuffledPacked = GraphQueries.trianglesOf(fixture)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(shuffledPacked === got)
-      val shuffledWide = GraphQueries.trianglesOf(
-        fixture.select((col("src") + big).as("src"), (col("dst") + big).as("dst")))
-        .collect().map(r => (r.getLong(0) - big) -> r.getLong(1)).toMap
-      assert(shuffledWide === got)
-    } finally spark.conf.unset(GraphQueries.MaxBroadcastEdgesKey)
+    for (budget <- Seq("0", "150")) {
+      spark.conf.set(graft.Checkpoints.BroadcastBudgetKey, budget)
+      try {
+        val shuffledPacked = GraphQueries.trianglesOf(fixture)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(shuffledPacked === got, s"budget $budget")
+        val shuffledWide = GraphQueries.trianglesOf(
+          fixture.select((col("src") + big).as("src"), (col("dst") + big).as("dst")))
+          .collect().map(r => (r.getLong(0) - big) -> r.getLong(1)).toMap
+        assert(shuffledWide === got, s"budget $budget")
+      } finally spark.conf.unset(graft.Checkpoints.BroadcastBudgetKey)
+    }
     // agreement with the orientation-free formulation on the real graph
     val e = graft.graph.GraphBuilders.copurchaseEdges(spark, sf())
     val naive = e.as("e1")
@@ -536,6 +541,14 @@ class QueriesSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(oriented === naive)
     assert(oriented.nonEmpty)
+    // and in the mixed shape: a budget of 16 B per edge holds the packed
+    // closing list (8 B) but not the wedge build (24 B)
+    spark.conf.set(graft.Checkpoints.BroadcastBudgetKey, (e.count() * 16).toString)
+    try {
+      val mixed = GraphQueries.trianglesOf(e)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(mixed === naive)
+    } finally spark.conf.unset(graft.Checkpoints.BroadcastBudgetKey)
   }
 
   test("g2 pagerank: uniform on a cycle; mass conserved; hubs outrank leaves") {
@@ -590,6 +603,34 @@ class QueriesSpec extends SparkSpec {
     val parity = ranks(GraphQueries.pagerankOf(star, 3, Some(GraphQueries.pagerankParityStep)))
     assert(fast.keySet === parity.keySet)
     for ((k, v) <- parity) assert(math.abs(fast(k) - v) < 1e-12, s"node $k")
+  }
+
+  test("g2 and g3 rounds without broadcasts: a zero budget gives the default session's ranks and labels") {
+    // a session whose budget is 0, with Spark's own size-based broadcast
+    // off, runs every PageRank and LPA round as a shuffled join (PlanSpec
+    // pins the plans); the parity fold and the mode vote are exact under any
+    // partitioning, the plain SUM within fp reordering
+    val shuffled = spark.newSession()
+    shuffled.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    shuffled.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
+    def edges(s: org.apache.spark.sql.SparkSession) = graft.graph.GraphBuilders.copurchaseEdges(s, sf())
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def pagerank(s: org.apache.spark.sql.SparkSession, step: GraphQueries.PagerankStep) =
+      ranks(GraphQueries.pagerankOf(edges(s), 3, Some(step)))
+    val parity = pagerank(spark, GraphQueries.pagerankParityStep)
+    assert(parity.nonEmpty)
+    assert(pagerank(shuffled, GraphQueries.pagerankParityStep) === parity)
+    val fast = pagerank(spark, GraphQueries.pagerankFastStep)
+    val fastShuffled = pagerank(shuffled, GraphQueries.pagerankFastStep)
+    assert(fastShuffled.keySet === fast.keySet)
+    for ((k, v) <- fast) assert(math.abs(fastShuffled(k) - v) < 1e-12, s"node $k")
+    def labels(s: org.apache.spark.sql.SparkSession) =
+      GraphQueries.lpaOf(graft.ccf.CCF.bidirect(edges(s)), GraphQueries.LpaIters)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val lpa = labels(spark)
+    assert(lpa.nonEmpty)
+    assert(labels(shuffled) === lpa)
   }
 
   test("e10 funnel: planted fixture — strict ordering, out-of-order stages don't count") {
