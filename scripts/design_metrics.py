@@ -16,6 +16,10 @@ They are the trend counts of ROADMAP aim 2 (one default path per operator):
   eager_checkpoints    .eagerCheckpoint() / .eagerCheckpointKeepPartitioning()
                        / Checkpoints.materialize( call sites
   observations         Observation( sites (observed-metric points)
+  broadcast_gates      broadcastable( call sites outside graft/Checkpoints.scala:
+                       code that branches on the byte budget itself instead
+                       of taking Checkpoints.broadcastWithinBudget's hint; the
+                       sites are printed to stderr
   unreferenced         top-level objects and object members of src/main whose
                        name appears nowhere else in src/main, src/test or
                        perfbench/scala; the names are printed to stderr
@@ -136,6 +140,15 @@ def unreferenced(root, main_code):
             and not (obj and obj.has_main)]
 
 
+def broadcast_gates(root, main_code):
+    """path:line of each broadcastable( call in main_code outside
+    graft/Checkpoints.scala, the one place the byte budget picks a hint."""
+    home = os.path.join("graft", "Checkpoints.scala")
+    return [f"{os.path.relpath(path, root)}:{code.count(chr(10), 0, m.start()) + 1}"
+            for path, code in sorted(main_code.items()) if not path.endswith(home)
+            for m in re.finditer(r"\bbroadcastable\(", code)]
+
+
 def metrics(root):
     files = []
     for d, _, names in os.walk(os.path.join(root, "src", "main")):
@@ -151,6 +164,9 @@ def metrics(root):
     dead = unreferenced(root, code)
     for name in dead:
         print(f"unreferenced: {name}", file=sys.stderr)
+    gates = broadcast_gates(root, code)
+    for site in gates:
+        print(f"broadcast_gate: {site}", file=sys.stderr)
     keys = sorted(set(re.findall(r'"(spark\.graft\.[A-Za-z0-9_.]+)"', text)))
     for key in keys:
         print(f"graft_conf_key: {key}", file=sys.stderr)
@@ -165,6 +181,7 @@ def metrics(root):
             r"\.eagerCheckpoint(?:KeepPartitioning)?\(|\bCheckpoints\.materialize\(", text)),
         "observations": len(re.findall(r"\bObservation\(", text)),
         "unreferenced": len(dead),
+        "broadcast_gates": len(gates),
     }
 
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.{broadcast, count, lit}
 import org.apache.spark.sql.graft.Bridge
 
 /**
@@ -9,8 +9,10 @@ import org.apache.spark.sql.graft.Bridge
  * shared build (CCF/PointerJump/LPA/PageRank/Lloyd rounds, SessionCache
  * entries, staged TF-IDF tables, incremental-dedup batches), and the one
  * round skeleton of the label fixpoints: [[materialize]], [[free]] and
- * [[fixpoint]]. The row counts those rounds observe also decide their
- * broadcasts, against one byte budget ([[broadcastable]]).
+ * [[fixpoint]]. The row counts those rounds observe also pick their join
+ * hints, against one byte budget: every size-gated broadcast of a graph
+ * table takes its hint from [[broadcastWithinBudget]], so the budget picks
+ * how a table travels (broadcast or shuffle), never which code path runs.
  *
  * Default is `localCheckpoint(eager = true)`: blocks live on executors —
  * fastest, but a lost executor loses its blocks and the job must rerun
@@ -51,10 +53,8 @@ object Checkpoints {
 
   /** Whether a table of `rows` observed rows of `df`'s schema may be
     * broadcast: its bytes, `rows` × the schema's `defaultSize` (Spark's
-    * row-width estimate), are within the session's budget. Every
-    * size-gated broadcast of a graph table (PointerJump's labels, g1's wedge
-    * build and closing edge list, g2's ranks and degrees, g3's labels)
-    * decides here, so one budget bounds them in bytes whatever the key width. */
+    * row-width estimate), are within the session's budget. The one test of
+    * the rule; callers take its answer as a hint ([[broadcastWithinBudget]]). */
   def broadcastable(df: DataFrame, rows: Long): Boolean = {
     val budget = df.sparkSession.conf.getOption(BroadcastBudgetKey).fold(BroadcastBudget) { v =>
       v.trim.toLongOption.filter(_ >= 0L).getOrElse(throw new IllegalArgumentException(
@@ -62,6 +62,17 @@ object Checkpoints {
     }
     rows * df.schema.defaultSize <= budget
   }
+
+  /** `df` with a broadcast hint while [[broadcastable]] holds for `rows`,
+    * `df` itself past the budget, where the planner shuffles the join. Every
+    * size-gated broadcast of a graph table (PointerJump's labels, g1's wedge
+    * build and closing edge list, g2's ranks and degrees, g3's labels) takes
+    * its hint here, so one budget bounds them in bytes whatever the key
+    * width, and one plan serves both sides of it. The hint survives
+    * projections over the returned frame (Spark pulls it through unary
+    * operators up to the join). */
+  def broadcastWithinBudget(df: DataFrame, rows: Long): DataFrame =
+    if (broadcastable(df, rows)) broadcast(df) else df
 
   /** The row count a [[materialize]]d frame carries in its exact stats (a
     * cached copy of one keeps them), so reading it starts no job; any other

@@ -47,50 +47,56 @@ import org.apache.spark.sql.graft.Bridge
  * edge, and the component minimum m keeps lab(m) = m throughout, so the
  * constant is m.
  *
- * Round shapes: while the label table's bytes (observed rows × row width)
- * are within [[graft.Checkpoints.broadcastable]]'s budget, a round
- * broadcasts the label table over a src-partitioned topology
- * ([[bcastRound]]); past it, both joins hash-partition by node id. The label
- * table is n rows regardless of round; the static bidirected edge set is
- * checkpointed once and re-read each round (on a cluster:
- * reliable-checkpoint / cache it).
+ * One round body at every size: the neighbor-min rides a src-partitioned
+ * topology, and the lab(u) and lab(lab(u)) terms are lookups into the label
+ * table ([[round]]). How that table travels is a join hint, not a second
+ * body: while its bytes (observed rows × row width) are within the byte
+ * budget it broadcasts ([[graft.Checkpoints.broadcastWithinBudget]]), and
+ * past it the same body plans shuffled joins. The label table is n rows
+ * regardless of round; the static bidirected edge set is checkpointed once
+ * and re-read each round (on a cluster: reliable-checkpoint / cache it).
  * newPairsHistory reports the per-round CHANGED-LABEL count (this algorithm
  * has no NewPair notion; the count is 0 exactly at convergence, same
  * contract).
  */
 object PointerJump {
 
-  /** One broadcast-label round (r18): lab'(u) = least(lab(u), lab(lab(u)),
-    * min over N(u) of lab(t)) — the same update as the shuffled
-    * unioned-targets join, split into its neighbor-min and jump terms so
-    * the edge stream never shuffles: nm rides `biRounds`' src partitioning
-    * (zero exchanges when the build repartitioned by src — plan-pinned in
-    * PlanSpec), and both the lab(u) and lab(lab(u)) terms are row-local
-    * broadcast lookups INTO the same n-row label table. Inner joins stay
-    * total: every node appears as src in the bidirected frame, and every
-    * lab is a node id. The only broadcast payload is the label table (the
-    * jump is a second lookup into it, not a second table): one n-row table
-    * per round transits the driver, and [[run]] takes this round only while
-    * that table is within [[graft.Checkpoints.broadcastable]]'s byte budget
-    * (16 B per node with long keys: 32M nodes at the default 512 MB). */
-  private[graft] def bcastRound(biRounds: DataFrame, lt: DataFrame): DataFrame = {
-    val nm = biRounds.join(broadcast(lt), col("dst") === col("_t"))
+  /** One round (r18): lab'(u) = least(lab(u), lab(lab(u)), min over N(u)
+    * of lab(t)), split into its neighbor-min and jump terms. nm rides the
+    * topology's src partitioning (zero edge exchanges when the label table
+    * broadcasts — plan-pinned in PlanSpec), and both the lab(u) and
+    * lab(lab(u)) terms are lookups INTO the same n-row label table `lt`
+    * (_t, _tl), not a second table. `lt` carries its caller's join hint,
+    * which its projections here keep: broadcast, every lookup is row-local
+    * and one n-row table per round transits the driver (16 B per node with
+    * long keys: 32M nodes at the default 512 MB); unhinted, the planner
+    * shuffles the joins. Inner joins stay total: every node appears as src
+    * in the bidirected frame, and every lab is a node id. */
+  private[graft] def round(topology: DataFrame, lt: DataFrame): DataFrame = {
+    val nm = topology.join(lt, col("dst") === col("_t"))
       .groupBy(col("src")).agg(min(col("_tl")).as("nm"))
     val lt1 = lt.select(col("_t").as("_t1"), col("_tl").as("_tl1"))
     val lt2 = lt.select(col("_t").as("_t2"), col("_tl").as("_tl2"))
-    nm.join(broadcast(lt1), col("src") === col("_t1")) // _tl1 = lab(u)
-      .join(broadcast(lt2), col("_tl1") === col("_t2")) // _tl2 = lab(lab(u))
+    nm.join(lt1, col("src") === col("_t1")) // _tl1 = lab(u)
+      .join(lt2, col("_tl1") === col("_t2")) // _tl2 = lab(lab(u))
       .select(col("src").as("node"), col("_tl1").as("lab"),
         least(col("_tl1"), col("_tl2"), col("nm")).as("newlab"))
   }
 
   /** The hook over a round's (node, lab, newlab) frame: each label m also
     * takes the smallest new label among the nodes labelled m. The round is
-    * planned twice; the hook's aggregate shuffles at most n label rows. */
+    * read ONCE: each row offers its new label to its own node (with its old
+    * label) and to its label m (with none), and one aggregate keyed by node
+    * takes both minima. Every lab is a node id, so the aggregate yields
+    * exactly one row per node; it shuffles at most 2n label rows, combined
+    * map-side, and never the edges. */
   private def hooked(round: DataFrame): DataFrame = {
-    val hooks = round.groupBy(col("lab").as("_m")).agg(min(col("newlab")).as("_hk"))
-    round.join(hooks, col("node") === col("_m"), "left")
-      .select(col("node"), col("lab"), least(col("newlab"), col("_hk")).as("newlab"))
+    val noLab = lit(null).cast(round.schema("lab").dataType)
+    round.select(explode(array(
+        struct(col("node").as("k"), col("lab").as("l"), col("newlab").as("v")),
+        struct(col("lab").as("k"), noLab.as("l"), col("newlab").as("v")))).as("o"))
+      .groupBy(col("o.k").as("node"))
+      .agg(min(col("o.l")).as("lab"), min(col("o.v")).as("newlab"))
   }
 
   /** Runs the label fixpoint. Rounds and their checkpoints go through
@@ -112,54 +118,27 @@ object PointerJump {
     // joins, Bridge.withStats).
     val bi = Checkpoints.materialize(CCF.bidirect(input).distinct(), "pj bidirect")()
     // the label table is exactly one row per node, every round
-    val lbl = Checkpoints.materialize(bi.df.groupBy(col("src").as("node"))
+    val init = Checkpoints.materialize(bi.df.groupBy(col("src").as("node"))
       .agg(least(col("src"), min(col("dst"))).as("lab")), "pj labels")()
 
-    // r18 (guide §2.4): with the label table within the broadcast budget,
-    // the rounds' only distributed frame is the STATIC topology — partition
-    // it by src ONCE (checkpoint preserving the layout) and no round shuffles
-    // the edges: the neighbor-min groupBy(src) rides the build
-    // partitioning, the label lookup and the n-row jump table are
-    // broadcasts (the hook shuffles only label rows). Past the budget the
-    // rounds keep the shuffled-join shape and bi keeps the distinct()'s
-    // layout (a src repartition would be a wasted extra shuffle there — the
-    // shuffled round joins by dst). The budget is in bytes, so a
-    // string-keyed table (40 B per node) crosses it at fewer nodes than a
-    // long-keyed one (16 B). The rounds inherit the repartition's partition
-    // count, so it is sized here: ~100k pairs per partition, at most the
-    // session's count — a small graph runs each round as one task at any
-    // cpu count.
-    val bcastLbl = Checkpoints.broadcastable(lbl.df, lbl.rows)
-    val biRounds =
-      if (bcastLbl) {
-        val parts = math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong,
-          bi.rows / 100000L + 1L).toInt
-        val b = bi.df.repartition(parts, col("src")).eagerCheckpointKeepPartitioning()
-        Checkpoints.free(bi.df)
-        Bridge.withStats(b, bi.rows)
-      } else bi.df
+    // r18 (guide §2.4): the rounds' only edge-sized frame is the STATIC
+    // topology — partition it by src ONCE (checkpoint preserving the layout)
+    // and the neighbor-min groupBy(src) rides that layout in every round.
+    // The rounds inherit the repartition's partition count, so it is sized
+    // here: ~100k pairs per partition, at most the session's count — a
+    // small graph runs each round as one task at any cpu count.
+    val parts = math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong,
+      bi.rows / 100000L + 1L).toInt
+    val topology = Bridge.withStats(
+      bi.df.repartition(parts, col("src")).eagerCheckpointKeepPartitioning(), bi.rows)
+    Checkpoints.free(bi.df)
 
-    val fix = Checkpoints.fixpoint(lbl.df, maxIterations, until = Some("changed"),
+    val fix = Checkpoints.fixpoint(init.df, maxIterations, until = Some("changed"),
         ownsStart = true) { (lbl, iteration) =>
-      val lt = lbl.select(col("node").as("_t"), col("lab").as("_tl"))
-      val round = hooked(if (bcastLbl) {
-        bcastRound(biRounds, lt)
-      } else {
-        // ONE lookup join serves both steps: look up the labels of
-        // N(u) ∪ {lab(u)} — the neighbor-min AND the pointer jump
-        // (lab(lab(u))) — then take the running min. Fixpoint condition is
-        // identical to applying the two steps separately: lab(u) ≤ lab(v)
-        // for every neighbor v and lab(u) ≤ lab(lab(u)).
-        val targets = biRounds.unionAll(
-          lbl.select(col("node").as("src"), col("lab").as("dst")))
-        // inner joins are total: every target is a node id, every node has a row
-        val looked = targets.join(lt, col("dst") === col("_t"))
-          .groupBy(col("src"))
-          .agg(min(col("_tl")).as("nm"))
-        lbl.join(looked, col("node") === col("src"))
-          .select(col("node"), col("lab"), least(col("lab"), col("nm")).as("newlab"))
-      })
-      Checkpoints.materialize(round, s"pj round $iteration",
+      // the label table is n rows in every round; its bytes pick the hint
+      val lt = Checkpoints.broadcastWithinBudget(
+        lbl.select(col("node").as("_t"), col("lab").as("_tl")), init.rows)
+      Checkpoints.materialize(hooked(round(topology, lt)), s"pj round $iteration",
           coalesce(sum(when(col("newlab") =!= col("lab"), 1L)), lit(0L)).as("changed"))(
         // the fallback diffs the new checkpoint against the previous label
         // table, which the loop frees only after this returns
@@ -168,7 +147,7 @@ object PointerJump {
           .where(col("nl") =!= col("ol")).count()),
         finish = _.select(col("node"), col("newlab").as("lab")))
     }
-    Checkpoints.free(biRounds) // the live topology checkpoint (bi itself off the bcast path)
+    Checkpoints.free(topology)
 
     val assignments = fix.result.where(col("lab") =!= col("node"))
       .select(col("node"), col("lab").as("component"))

@@ -71,7 +71,7 @@ object GraphQueries {
       // exchange, so partial collect_list and AQE coalescing stay (the
       // exchange-free r18 build was 5x slower at local[32], OPTIMIZATION_r19).
       CCF.bidirect(e)
-        .join(hint(outdeg, Checkpoints.broadcastable(outdeg, Checkpoints.observedRows(deg))), "src")
+        .join(Checkpoints.broadcastWithinBudget(outdeg, Checkpoints.observedRows(deg)), "src")
         .eagerCheckpoint()))
   }
 
@@ -200,8 +200,9 @@ object GraphQueries {
     // here rather than by salting). Each triangle {a,b,c} is generated
     // exactly once, as a wedge at its orientation-minimum vertex, then
     // credited to all three corners. The wedge build and the closing edge
-    // list each broadcast while their own bytes are within the broadcast
-    // budget (see [[trianglesOf]]).
+    // list each take their join hint from the byte budget
+    // (Checkpoints.broadcastWithinBudget): broadcast while their own bytes
+    // fit, shuffled past it, one plan either way (see [[trianglesOf]]).
     "g1_triangles" -> ((s, dir) =>
       trianglesOf(edges(s, dir), Some(degrees(s, dir)))),
 
@@ -217,8 +218,8 @@ object GraphQueries {
     // swaps the fold for a plain codegen SUM by itself (order-free within fp
     // tolerance; same join/agg shape per round) — every fixture's max degree
     // is far below it, so g2 stays on the oracle-parity fold. The rank table
-    // broadcasts into each round while its bytes are within the broadcast
-    // budget (see [[pagerankCore]]).
+    // takes its join hint from the byte budget: broadcast into each round
+    // while its bytes fit, shuffled past it (see [[pagerankCore]]).
     "g2_pagerank" -> ((s, dir) =>
       pagerankCore(pagerankOutE(s, dir),
         degrees(s, dir).select(col("node").as("src"), col("deg").as("outdeg")),
@@ -235,7 +236,7 @@ object GraphQueries {
     // deterministic (synchronous LPA with a total tie order has no
     // run-to-run wobble, unlike the async variant).
     // r18: rounds run over the memoized dst-partitioned edge stream with the
-    // O(nodes) label table broadcast (within the byte budget, see
+    // O(nodes) label table broadcast (its hint from the byte budget, see
     // [[lpaOf]]) — zero exchanges per round; see [[bidirectByDst]].
     // Identical output: the mode-vote is integer-exact under any
     // partitioning.
@@ -253,11 +254,12 @@ object GraphQueries {
     * Per-round cost: one join keyed src + two map-side-combinable
     * aggregates; the n-row label table is checkpointed per round (lineage
     * cut, same as the PageRank rank table) by [[graft.Checkpoints.fixpoint]],
-    * which frees the rounds by its one rule and never frees `bi`. A round
-    * broadcasts its input label table while that table's observed rows are
-    * within [[graft.Checkpoints.broadcastable]]'s byte budget; past it the
-    * label join shuffles, and at 100 TB the label table co-partitions with
-    * the edge list's src shuffle, so rounds reuse one exchange layout. */
+    * which frees the rounds by its one rule and never frees `bi`. A round's
+    * input label table takes its hint from its observed rows
+    * ([[graft.Checkpoints.broadcastWithinBudget]]): broadcast within the
+    * byte budget; past it the label join shuffles, and at 100 TB the label
+    * table co-partitions with the edge list's src shuffle, so rounds reuse
+    * one exchange layout. */
   private[graft] def lpaOf(bi: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"lpa needs >= 1 round, got $iters")
     // Round 1 fused (r11): labels start as identity, so round 1's src-keyed
@@ -268,7 +270,7 @@ object GraphQueries {
     // and the loop starts from `bi` itself.
     Checkpoints.fixpoint(bi, iters) { (lab, i) =>
       Checkpoints.materialize(if (i == 1) lpaStep1(bi)
-        else lpaStep(bi, lab, Checkpoints.broadcastable(lab, Checkpoints.observedRows(lab))),
+        else lpaStep(bi, Checkpoints.broadcastWithinBudget(lab, Checkpoints.observedRows(lab))),
         s"lpa round $i")()
     }.result
   }
@@ -308,7 +310,8 @@ object GraphQueries {
       lab.join(prev.select(col("node"), col("label").as("prev_label")), "node")
     val fix = Checkpoints.fixpoint(start.df, maxIters, until = Some("changed"),
         ownsStart = true) { (prev, i) =>
-      Checkpoints.materialize(diff(lpaStep(bi, prev), prev), s"lpa round $i",
+      val labels = Checkpoints.broadcastWithinBudget(prev, start.rows)
+      Checkpoints.materialize(diff(lpaStep(bi, labels), prev), s"lpa round $i",
           coalesce(sum(when(col("label") =!= col("prev_label"), 1L)
             .otherwise(0L)), lit(0L)).as("changed"))(
         fallback = lab => Map("changed" ->
@@ -321,12 +324,12 @@ object GraphQueries {
   /** One synchronous LPA round (un-checkpointed — PlanSpec pins that both
     * aggregate levels carry map-side partials on an unpartitioned edge
     * frame, and that a dst-partitioned edge frame plans ZERO exchanges).
-    * `bcastLabels` hints the O(nodes) label side into a broadcast join so a
-    * dst-partitioned `bi` keeps its partitioning through the join (the g2
-    * rank-table move; [[lpaOf]] gates it on the byte budget). */
-  private[queries] def lpaStep(bi: DataFrame, lab: DataFrame,
-                               bcastLabels: Boolean = false): DataFrame =
-    bi.join(hint(lab.select(col("node").as("src"), col("label")), bcastLabels), "src")
+    * `lab` (node, label) carries its caller's join hint: both loops pass it
+    * through [[graft.Checkpoints.broadcastWithinBudget]], so within the
+    * budget the O(nodes) label side broadcasts and a dst-partitioned `bi`
+    * keeps its partitioning through the join (the g2 rank-table move). */
+  private[queries] def lpaStep(bi: DataFrame, lab: DataFrame): DataFrame =
+    bi.join(lab.select(col("node").as("src"), col("label")), "src")
       .groupBy(col("dst").as("node"), col("label"))
       .agg(count(lit(1)).as("c"))
       .groupBy("node")
@@ -387,11 +390,9 @@ object GraphQueries {
     // partition, zero wedge exchanges, and the whole
     // wedge→close→explode→partial-agg chain runs as one map-side pipeline
     // (the only remaining exchange is the final per-node count). Past the
-    // budget the self-join keeps the shuffled equi-join shape, unchanged
-    // (PlanSpec pins both shapes).
-    val wedgeBuild =
-      if (Checkpoints.broadcastable(oriented, nEdges)) broadcast(oriented.as("b"))
-      else oriented.as("b")
+    // budget the hint is dropped and the same self-join plans as a shuffled
+    // equi-join (PlanSpec pins both shapes).
+    val wedgeBuild = Checkpoints.broadcastWithinBudget(oriented, nEdges).as("b")
     val wedges = oriented.as("a").join(wedgeBuild,
         col("a.u") === col("b.u") && col("a.vkey") < col("b.vkey"))
       .select(col("a.u").as("u"), col("a.v").as("x"), col("b.v").as("y"))
@@ -416,7 +417,7 @@ object GraphQueries {
       if (packable) oriented.select(
         shiftleft(col("u"), 32).bitwiseOR(col("v")).as("pq"))
       else oriented.select(col("u").as("x"), col("v").as("y"))
-    val build = if (Checkpoints.broadcastable(closing, nEdges)) broadcast(closing) else closing
+    val build = Checkpoints.broadcastWithinBudget(closing, nEdges)
     val tri =
       if (packable)
         wedges.withColumn("pq", shiftleft(col("x"), 32).bitwiseOR(col("y")))
@@ -477,9 +478,8 @@ object GraphQueries {
     // the exchange-keyed join, the 1000-executor layout (where you would
     // ALSO pre-partition outE by src once and let every round reuse that
     // exchange).
-    val bcast = Checkpoints.broadcastable(start, n)
-    Checkpoints.fixpoint(start, iters) {
-      (ranks, i) => Checkpoints.materialize(round(outE, hint(ranks, bcast), 0.15 / n),
+    Checkpoints.fixpoint(start, iters) { (ranks, i) =>
+      Checkpoints.materialize(round(outE, Checkpoints.broadcastWithinBudget(ranks, n), 0.15 / n),
         s"pagerank round $i")()
     }.result.select(col("node"), col("rank").as("pagerank"))
   }
@@ -493,9 +493,6 @@ object GraphQueries {
       if (pagerankStrategy(maxDeg) == "fast") pagerankFastStep else pagerankParityStep
     (stats.getLong(0), step)
   }
-
-  private def hint(ranks: DataFrame, bcast: Boolean): DataFrame =
-    if (bcast) broadcast(ranks) else ranks
 
   /** One parity round (no checkpoint — PlanSpec plans it raw): join, then
     * the order-deterministic per-dst fold over collected contributions. */

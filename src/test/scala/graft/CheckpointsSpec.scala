@@ -2,7 +2,8 @@ package graft
 
 /** The round skeleton's metric read ([[Checkpoints.pollMetrics]]): a
   * bounded wait that never hangs and never kills a fixpoint over a metrics
-  * race; and the broadcast byte budget ([[Checkpoints.broadcastable]]). */
+  * race; and the broadcast byte budget ([[Checkpoints.broadcastable]],
+  * [[Checkpoints.broadcastWithinBudget]]). */
 class CheckpointsSpec extends SparkSpec {
 
   test("broadcastable: observed rows times the schema's row width, against the budget") {
@@ -25,6 +26,18 @@ class CheckpointsSpec extends SparkSpec {
     s.conf.set(Checkpoints.BroadcastBudgetKey, "0")
     assert(Checkpoints.broadcastable(longs, 0))
     assert(!Checkpoints.broadcastable(longs, 1))
+  }
+
+  test("broadcastWithinBudget: a broadcast hint exactly while broadcastable holds") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val s = spark.newSession()
+    val longs = s.range(1).select(org.apache.spark.sql.functions.col("id").as("node"))
+    s.conf.set(Checkpoints.BroadcastBudgetKey, "800")
+    Checkpoints.broadcastWithinBudget(longs, 100).queryExecution.analyzed match {
+      case h: ResolvedHint => assert(h.hints.strategy === Some(BROADCAST))
+      case other => fail(s"expected a broadcast hint, got $other")
+    }
+    assert(Checkpoints.broadcastWithinBudget(longs, 101) eq longs)
   }
 
   /** The refusal a session with `value` under the budget key meets. */

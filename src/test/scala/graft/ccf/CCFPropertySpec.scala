@@ -74,8 +74,8 @@ class CCFPropertySpec extends SparkSpec {
   // round below MicroFixpoint.FusedRows input rows runs on the driver and
   // each larger one declaratively, while a session with reliable
   // checkpoints runs every round declaratively. Both must agree on the
-  // whole result; PointerJump, and CCF.auto on either session, on the
-  // assignments.
+  // whole result; PointerJump (its rounds broadcast, and all shuffled), and
+  // CCF.auto on either session, on the assignments.
   private def strEdges(edges: Seq[(String, String)]): SparkSession => DataFrame =
     s => Generators.toDF(s, edges)
 
@@ -139,6 +139,15 @@ class CCFPropertySpec extends SparkSpec {
     s
   }
 
+  /** A session whose PointerJump rounds all shuffle: the byte budget drops
+    * the label table's hint and Spark's own size-based broadcast is off. */
+  private lazy val shuffledSession: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
+    s
+  }
+
   /** The declarative loop's result per input, run once for the specs that
     * compare against it. */
   private val declarativeRuns = scala.collection.mutable.Map.empty[String, CCF.CCFResult]
@@ -156,6 +165,9 @@ class CCFPropertySpec extends SparkSpec {
       assert(declarative.converged === micro.converged)
       assert(micro.converged)
       assert(rows(PointerJump.run(input(spark)).assignments) === expected)
+      val shuffledPj = PointerJump.run(input(shuffledSession))
+      assert(rows(shuffledPj.assignments) === expected, "PointerJump, shuffled rounds")
+      assert(shuffledPj.converged, "PointerJump, shuffled rounds")
       for ((engine, s) <- Seq("micro" -> spark, "declarative" -> declSession)) {
         val auto = CCF.auto(input(s))
         assert(rows(auto.assignments) === expected, s"auto on the $engine engine")
@@ -258,9 +270,7 @@ class CCFPropertySpec extends SparkSpec {
     val edges = Generators.chainGraph(500)
     val expected = pointerJumpModel(edges)
     assert(expected.length === 11)
-    val shuffled = spark.newSession()
-    shuffled.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
-    for ((shape, s) <- Seq("broadcast" -> spark, "shuffled" -> shuffled)) {
+    for ((shape, s) <- Seq("broadcast" -> spark, "shuffled" -> shuffledSession)) {
       val r = PointerJump.run(Generators.toDF(s, edges))
       assert(r.newPairsHistory === expected, s"$shape rounds")
       assert(r.converged, s"$shape rounds")

@@ -592,7 +592,7 @@ class PlanSpec extends SparkSpec {
     val bi = graft.ccf.CCF.bidirect(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
       .repartition(col("dst")).eagerCheckpointKeepPartitioning()
     val lab = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("node", "label")
-    val g3p = finalPlan(GraphQueries.lpaStep(bi, lab, bcastLabels = true))
+    val g3p = finalPlan(GraphQueries.lpaStep(bi, broadcast(lab)))
     assert(!g3p.contains("Exchange hashpartitioning"), g3p)
     val g3p1 = finalPlan(GraphQueries.lpaStep1(bi))
     assert(!g3p1.contains("Exchange hashpartitioning"), g3p1)
@@ -600,7 +600,7 @@ class PlanSpec extends SparkSpec {
 
   test("r18: pj broadcast-label round over a src-partitioned topology plans zero exchanges") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{broadcast, col}
     import graft.Checkpoints.EagerOps
     val bi = graft.ccf.CCF.bidirect(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
       .distinct().repartition(col("src")).eagerCheckpointKeepPartitioning()
@@ -619,8 +619,26 @@ class PlanSpec extends SparkSpec {
     }
     val lbl = Seq((1L, 1L), (2L, 1L), (3L, 2L)).toDF("node", "lab")
     val lt = lbl.select(col("node").as("_t"), col("lab").as("_tl"))
-    val p = finalPlan(graft.ccf.PointerJump.bcastRound(bi, lt))
+    val p = finalPlan(graft.ccf.PointerJump.round(bi, broadcast(lt)))
     assert(!p.contains("Exchange hashpartitioning"), p)
+  }
+
+  test("pj round: one action reads the topology once, the hook included, on both budgets") {
+    // the topology is the only checkpoint with (src, dst) columns; the label
+    // table's is (node, lab). AQE prints the final plan, then the initial
+    // one: count in the first, where a reused exchange has no subtree
+    for (budget <- Seq(None, Some("0"))) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      budget.foreach(s.conf.set(graft.Checkpoints.BroadcastBudgetKey, _))
+      val edges = graft.ccf.Generators.chainLongDF(s, 50)
+      val (r, plans) = actionPlans(s)(graft.ccf.PointerJump.run(edges, maxIterations = 1))
+      assert(r.iterations === 1)
+      val rounds = plans.map(_.split("== Initial Plan ==")(0)).filter(_.contains("_tl1"))
+      assert(rounds.size === 1, s"budget $budget:\n${plans.mkString("\n")}")
+      assert("ExistingRDD\\[src#".r.findAllIn(rounds.head).size === 1,
+        s"budget $budget:\n${rounds.head}")
+    }
   }
 
   test("t10 chunking: map-side generate only — zero exchanges") {

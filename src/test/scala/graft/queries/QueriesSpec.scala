@@ -633,6 +633,42 @@ class QueriesSpec extends SparkSpec {
     assert(labels(shuffled) === lpa)
   }
 
+  test("g2 differential: parity and fast steps agree across budgets on adversarial inputs") {
+    // canonical (src < dst, distinct) edge sets: empty, one hub with 1,000
+    // leaves, two seeded random components, and ids at or above 2^31. Parity
+    // ranks are exact under any partitioning, so equal at both budgets; the
+    // plain SUM is within fp reordering of them
+    val rng = new scala.util.Random(20)
+    def component(base: Long, n: Int, m: Int): Seq[(Long, Long)] =
+      (1 until n).map(i => (base + rng.nextInt(i), base + i)) ++ // spanning tree
+        Seq.fill(m)((rng.nextInt(n), rng.nextInt(n))).collect {
+          case (a, b) if a < b => (base + a, base + b)
+        }
+    val big = 1L << 31
+    val inputs: Seq[(String, Seq[(Long, Long)])] = Seq(
+      "empty" -> Seq.empty,
+      "hub with 1,000 leaves" -> (1L to 1000L).map(l => (0L, l)),
+      "two components" -> (component(0L, 60, 120) ++ component(1000L, 40, 80)),
+      "ids >= 2^31" -> component(big, 50, 100))
+    val shuffled = spark.newSession()
+    shuffled.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    shuffled.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
+    for ((name, edges) <- inputs) {
+      val canonical = edges.distinct
+      def ranks(s: org.apache.spark.sql.SparkSession, step: GraphQueries.PagerankStep) =
+        GraphQueries.pagerankOf(s.createDataFrame(canonical).toDF("src", "dst"), 3, Some(step))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val parity = ranks(spark, GraphQueries.pagerankParityStep)
+      assert(parity.size === canonical.flatMap(e => Seq(e._1, e._2)).distinct.size, name)
+      assert(ranks(shuffled, GraphQueries.pagerankParityStep) === parity, name)
+      for (s <- Seq(spark, shuffled)) {
+        val fast = ranks(s, GraphQueries.pagerankFastStep)
+        assert(fast.keySet === parity.keySet, name)
+        for ((k, v) <- parity) assert(math.abs(fast(k) - v) < 1e-12, s"$name, node $k")
+      }
+    }
+  }
+
   test("e10 funnel: planted fixture — strict ordering, out-of-order stages don't count") {
     import spark.implicits._
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
@@ -869,8 +905,9 @@ class QueriesSpec extends SparkSpec {
     import spark.implicits._
     // same bridged-clique fixture as above: labels stabilize after round 3,
     // so the observed changed-count hits 0 on round 4 and the loop ends
-    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (10L, 12L),
-      (11L, 12L), (3L, 10L)).toDF("src", "dst")
+    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (10L, 12L),
+      (11L, 12L), (3L, 10L))
+    val e = pairs.toDF("src", "dst")
     val r = GraphQueries.lpaUntilStable(graft.ccf.CCF.bidirect(e))
     assert(r.converged)
     assert(r.iterations === 4) // 3 changing rounds + the zero-change confirm
@@ -881,6 +918,16 @@ class QueriesSpec extends SparkSpec {
     val fixed = GraphQueries.lpaOf(graft.ccf.CCF.bidirect(e), 3)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(out === fixed)
+    // at a zero budget, with Spark's own size-based broadcast off, every
+    // label join shuffles: the same labels in the same rounds
+    val shuffled = spark.newSession()
+    shuffled.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    shuffled.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
+    val r0 = GraphQueries.lpaUntilStable(graft.ccf.CCF.bidirect(
+      shuffled.createDataFrame(pairs).toDF("src", "dst")))
+    assert(r0.converged)
+    assert(r0.iterations === r.iterations)
+    assert(r0.labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap === out)
   }
 
   test("t11 subword stats: BPE-ish splitting on planted mixed text") {
