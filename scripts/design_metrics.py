@@ -20,6 +20,11 @@ They are the trend counts of ROADMAP aim 2 (one default path per operator):
                        code that branches on the byte budget itself instead
                        of taking Checkpoints.broadcastWithinBudget's hint; the
                        sites are printed to stderr
+  stream_runs          Trigger.AvailableNow( sites: places that start a
+                       stream and run it to the end of its input; 1 while
+                       every run*Once goes through the one harness in
+                       graft/streaming/Streams.scala; the sites are printed
+                       to stderr
   unreferenced         top-level objects and object members of src/main whose
                        name appears nowhere else in src/main, src/test or
                        perfbench/scala; the names are printed to stderr
@@ -140,13 +145,24 @@ def unreferenced(root, main_code):
             and not (obj and obj.has_main)]
 
 
+def sites(root, main_code, pattern, skip=None):
+    """path:line of each match of `pattern` in main_code, outside files
+    whose path ends with `skip`."""
+    return [f"{os.path.relpath(path, root)}:{code.count(chr(10), 0, m.start()) + 1}"
+            for path, code in sorted(main_code.items())
+            if not (skip and path.endswith(skip))
+            for m in re.finditer(pattern, code)]
+
+
 def broadcast_gates(root, main_code):
     """path:line of each broadcastable( call in main_code outside
     graft/Checkpoints.scala, the one place the byte budget picks a hint."""
-    home = os.path.join("graft", "Checkpoints.scala")
-    return [f"{os.path.relpath(path, root)}:{code.count(chr(10), 0, m.start()) + 1}"
-            for path, code in sorted(main_code.items()) if not path.endswith(home)
-            for m in re.finditer(r"\bbroadcastable\(", code)]
+    return sites(root, main_code, r"\bbroadcastable\(", os.path.join("graft", "Checkpoints.scala"))
+
+
+def stream_runs(root, main_code):
+    """path:line of each Trigger.AvailableNow( site in main_code."""
+    return sites(root, main_code, r"\bTrigger\.AvailableNow\(")
 
 
 def metrics(root):
@@ -167,6 +183,9 @@ def metrics(root):
     gates = broadcast_gates(root, code)
     for site in gates:
         print(f"broadcast_gate: {site}", file=sys.stderr)
+    runs = stream_runs(root, code)
+    for site in runs:
+        print(f"stream_run: {site}", file=sys.stderr)
     keys = sorted(set(re.findall(r'"(spark\.graft\.[A-Za-z0-9_.]+)"', text)))
     for key in keys:
         print(f"graft_conf_key: {key}", file=sys.stderr)
@@ -182,6 +201,7 @@ def metrics(root):
         "observations": len(re.findall(r"\bObservation\(", text)),
         "unreferenced": len(dead),
         "broadcast_gates": len(gates),
+        "stream_runs": len(runs),
     }
 
 

@@ -1,16 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import java.sql.Timestamp
 
 /**
- * Structured Streaming pipelines over the events schema (SURVEY.md §1.3 noted
- * streaming as out of reference scope; the driver north-star includes it for
- * the events table). Each pipeline is the streaming twin of a batch query in
- * [[graft.queries.EventQueries]], so batch results are the correctness oracle
- * (StreamingSpec runs both and diffs).
+ * Structured Streaming twins of the batch queries (SURVEY.md §1.3 noted
+ * streaming as out of reference scope; the driver north-star includes it).
+ * The twins span the event queries ([[graft.queries.EventQueries]]:
+ * windows, sessions, funnel, join, rate monitor), curation (sampling,
+ * domain cap), text (chunking, heavy hitters), dedup (exact, admission,
+ * substring probe, the composed day-2 gate), similarity (vector ingest and
+ * probe) and multimodal (media ingest and probe). Each batch twin is the
+ * correctness oracle: StreamingSpec runs both and diffs.
+ *
+ * Every `run*Once` entry point runs through ONE harness, [[runToEnd]]
+ * (`Trigger.AvailableNow`: process what the source holds, then stop), most
+ * of them via its memory-sink form [[toMemory]]; every file-backed source
+ * reads through ONE function, [[fileStream]].
  *
  * Design for scale:
  *  - file source with `maxFilesPerTrigger`/`Trigger.AvailableNow` — replayable
@@ -21,6 +30,43 @@ import java.sql.Timestamp
  *    canonical unbounded-keyed-state pattern with explicit state eviction.
  */
 object Streams {
+
+  /** The one streaming file source: the parquet files under `dir` whose
+    * leaf name matches `glob` (every file when None), read with `schema`;
+    * a positive `maxFilesPerTrigger` caps the files each trigger takes. */
+  private def fileStream(spark: SparkSession, dir: String, schema: StructType,
+                         glob: Option[String], maxFilesPerTrigger: Int = -1): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .options(glob.map("pathGlobFilter" -> _).toMap ++
+        Option.when(maxFilesPerTrigger > 0)("maxFilesPerTrigger" -> maxFilesPerTrigger.toString))
+      .parquet(dir)
+
+  /** The schema of the parquet files already under `dir` (`glob`-filtered),
+    * or `fallback` of the read's error when none is readable yet — the
+    * stream-before-data case, where the feed directory starts empty. */
+  private def fileSchemaOr(spark: SparkSession, dir: String, glob: Option[String])(
+      fallback: AnalysisException => StructType): StructType =
+    try spark.read.options(glob.map("pathGlobFilter" -> _).toMap).parquet(dir).schema
+    catch { case e: AnalysisException => fallback(e) }
+
+  /** The one run-to-end step of every `run*Once`: process everything the
+    * source holds now (`Trigger.AvailableNow`), then stop. A failure inside
+    * a micro-batch terminates the query and surfaces here, thrown by
+    * `awaitTermination` with the original error in its cause chain. */
+  private[streaming] def runToEnd[T](writer: DataStreamWriter[T]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** [[runToEnd]] into an in-memory sink named `queryName`; returns its
+    * table. */
+  private[streaming] def toMemory(df: Dataset[_], queryName: String,
+                                  mode: OutputMode = OutputMode.Append()): DataFrame = {
+    runToEnd(df.writeStream.format("memory").queryName(queryName).outputMode(mode))
+    df.sparkSession.table(queryName)
+  }
 
   /** Schema of the events stream = batch schema with ts normalized to a
     * microsecond TIMESTAMP (ltz). The on-disk flavor has varied across
@@ -35,21 +81,14 @@ object Streams {
     * whose first files arrive in a DIFFERENT historical flavor must be
     * defined after at least one file exists so the peek can see it. */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema =
-      try spark.read.option("pathGlobFilter", "events.parquet").parquet(dir).schema
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => staticEventSchema
-      }
-    graft.sources.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    val glob = Some("events.parquet")
+    graft.sources.Tables.normalizeEventTs(fileStream(spark, dir,
+      fileSchemaOr(spark, dir, glob)(_ => staticEventSchema), glob))
   }
 
   /** Fallback events schema for defining the stream before any data lands
     * (FIXTURES.md events table, naive-µs ts flavor). */
-  private[graft] val staticEventSchema: org.apache.spark.sql.types.StructType = {
+  private[graft] val staticEventSchema: StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("event_id", LongType),
@@ -194,31 +233,13 @@ object Streams {
     * Complete mode so trailing windows (younger than the watermark at end of
     * input) are also emitted — under a live Append-mode sink those would
     * emit on the next watermark advance. */
-  def runHourlyAggOnce(spark: SparkSession, dir: String, queryName: String = "hourly_agg"): DataFrame = {
-    val q: StreamingQuery = hourlyAgg(eventStream(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+  def runHourlyAggOnce(spark: SparkSession, dir: String, queryName: String = "hourly_agg"): DataFrame =
+    toMemory(hourlyAgg(eventStream(spark, dir)), queryName, OutputMode.Complete())
 
   /** Run the hopping-window aggregation end-to-end (same harness as
     * [[runHourlyAggOnce]]). */
-  def runHoppingAggOnce(spark: SparkSession, dir: String, queryName: String = "hopping_agg"): DataFrame = {
-    val q: StreamingQuery = hoppingAgg(eventStream(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+  def runHoppingAggOnce(spark: SparkSession, dir: String, queryName: String = "hopping_agg"): DataFrame =
+    toMemory(hoppingAgg(eventStream(spark, dir)), queryName, OutputMode.Complete())
 
   /** Stream-stream inner join with event-time bounds: each purchase joined
     * to the same user's clicks in the preceding hour. Both sides carry
@@ -358,38 +379,23 @@ object Streams {
     * readable at `spark.table(queryName)` for population-level asserts. */
   def runFunnelOnce(spark: SparkSession, dir: String, queryName: String = "funnel"): DataFrame = {
     import spark.implicits._
-    val q = funnelStream(eventStream(spark, dir).as[Event])
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val emitted = toMemory(funnelStream(eventStream(spark, dir).as[Event]), queryName,
+      OutputMode.Update())
     // The memory sink in Update mode APPENDS each trigger's re-emissions
     // rather than upserting, so a user whose stage advanced across
     // micro-batches leaves stale lower-stage rows behind. A journey's
     // stages only ever increase and a conversion's 3 dominates any later
     // re-entry journey's stages, so max(stage_reached) per user IS the
     // upsert a real key-value sink would hold.
-    spark.table(queryName)
+    emitted
       .groupBy(col("user_id"))
       .agg(max(col("stage_reached")).as("stage_reached"))
       .where(col("stage_reached") >= 1)
   }
 
   /** Run the purchase↔click stream-stream join end-to-end. */
-  def runStreamJoinOnce(spark: SparkSession, dir: String, queryName: String = "pcjoin"): DataFrame = {
-    val q = purchaseClickJoin(eventStream(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+  def runStreamJoinOnce(spark: SparkSession, dir: String, queryName: String = "pcjoin"): DataFrame =
+    toMemory(purchaseClickJoin(eventStream(spark, dir)), queryName)
 
   /** Streaming exact dedup: state holds one key per event inside the
     * watermark horizon and is evicted past it (the streaming twin of the
@@ -408,17 +414,8 @@ object Streams {
   /** Run streaming dedup over the events file UNIONed with itself (so every
     * row is duplicated) — output must equal the distinct input. */
   def runDedupOnce(spark: SparkSession, dir: String, queryName: String = "dedup"): DataFrame = {
-    val s = eventStream(spark, dir)
-    val doubled = s.unionByName(eventStream(spark, dir))
-    val q = dedupStream(doubled, Seq("event_id"))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    val doubled = eventStream(spark, dir).unionByName(eventStream(spark, dir))
+    toMemory(dedupStream(doubled, Seq("event_id")), queryName)
   }
 
   /** Stream-static enrichment: streaming events joined to a STATIC customer
@@ -443,15 +440,7 @@ object Streams {
       .join(graft.sources.Tables.nation(spark, dir),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("c_mktsegment"), col("n_name").as("c_nation"))
-    val q = enrichStream(eventStream(spark, dir), cust)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    toMemory(enrichStream(eventStream(spark, dir), cust), queryName)
   }
 
   /** CHECKPOINTED INGEST: process whatever is new under `inDir` since the
@@ -466,48 +455,37 @@ object Streams {
     * no-duplication, and idempotent re-run). */
   def runCheckpointedIngestOnce(spark: SparkSession, inDir: String,
                                 checkpointDir: String, outDir: String,
-                                schemaFallback: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+                                schemaFallback: Option[StructType] = None): Unit = {
     // stream-before-data (the eventStream pattern): an ingest deployed
     // ahead of its feed must not die on the empty/absent input dir — take
     // the caller's fallback schema and checkpoint an empty first pass
-    val schema =
-      try spark.read.parquet(inDir).schema
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          schemaFallback.getOrElse(throw new IllegalStateException(
-            s"runCheckpointedIngestOnce: $inDir has no readable parquet yet and no " +
-              "schemaFallback was supplied — pass the feed's schema to start the " +
-              "ingest before its first file lands", e))
-      }
-    val q = spark.readStream.schema(schema).parquet(inDir)
+    val schema = fileSchemaOr(spark, inDir, None)(e =>
+      schemaFallback.getOrElse(throw new IllegalStateException(
+        s"runCheckpointedIngestOnce: $inDir has no readable parquet yet and no " +
+          "schemaFallback was supplied — pass the feed's schema to start the " +
+          "ingest before its first file lands", e)))
+    runToEnd(fileStream(spark, inDir, schema, None)
       .writeStream
       .format("parquet")
       .option("checkpointLocation", checkpointDir)
       .option("path", outDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode(OutputMode.Append()))
   }
 
   /** The documents feed schema — ONE definition (a second hand-written copy
     * in the domain-cap harness drifted-by-construction; r15 review). */
-  private val DocumentsSchema =
-    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+  private val DocumentsSchema = StructType.fromDDL(
+    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
 
-  /** Streaming document source (same file-source pattern as [[eventStream]]). */
+  /** Streaming document source ([[fileStream]], like [[eventStream]]). */
   def documentStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    fileStream(spark, dir, DocumentsSchema, Some("documents.parquet"))
 
-  /** Streaming embedding source (same file-source pattern as the others). */
+  /** Streaming embedding source ([[fileStream]], like the others). */
   def embeddingStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    fileStream(spark, dir,
+      StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"),
+      Some("embeddings.parquet"))
 
   /** ONLINE VECTOR INGEST: assign each streamed embedding to its IVF cell
     * entirely map-side — the k trained centroids (bounded, driver-collected)
@@ -585,17 +563,8 @@ object Streams {
   /** Run the streaming vector ingest end-to-end (AvailableNow, memory sink). */
   def runVectorIngestOnce(spark: SparkSession, dir: String,
                           cents: Seq[(Long, Seq[Double])],
-                          queryName: String = "vector_ingest"): DataFrame = {
-    val q = assignVectorsStream(embeddingStream(spark, dir), cents)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+                          queryName: String = "vector_ingest"): DataFrame =
+    toMemory(assignVectorsStream(embeddingStream(spark, dir), cents), queryName)
 
   /** STREAMING CHUNKING: t10's overlapping token-window transform applied
     * to the document stream — a pure per-row generate (no state, no
@@ -607,17 +576,8 @@ object Streams {
     graft.queries.TextQueries.chunksOf(documents)
 
   def runChunkingOnce(spark: SparkSession, dir: String,
-                      queryName: String = "chunking"): DataFrame = {
-    val q = chunkStream(documentStream(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+                      queryName: String = "chunking"): DataFrame =
+    toMemory(chunkStream(documentStream(spark, dir)), queryName)
 
   /** STREAMING MEDIA INGEST (VERDICT r15 missing #3 — embeddings had the
     * r09 vector-ingest twin but arriving MEDIA ran batch-only): each landed
@@ -637,17 +597,8 @@ object Streams {
 
   /** Run the streaming media ingest end-to-end (AvailableNow, memory sink). */
   def runMediaIngestOnce(spark: SparkSession, dir: String,
-                         queryName: String = "media_ingest"): DataFrame = {
-    val q = mediaIngestStream(documentStream(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+                         queryName: String = "media_ingest"): DataFrame =
+    toMemory(mediaIngestStream(documentStream(spark, dir)), queryName)
 
   /** STREAMING MEDIA NEAR-DUP PROBE (r16 — the online DECISION on top of
     * [[mediaIngestStream]]'s features): each arriving document's media is
@@ -724,22 +675,10 @@ object Streams {
   def runDomainCapOnce(spark: SparkSession, dir: String,
                        queryName: String = "domain_cap",
                        maxFilesPerTrigger: Int = -1,
-                       glob: String = "documents.parquet"): DataFrame = {
-    val src = spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", glob)
-    val srcOpt = if (maxFilesPerTrigger > 0)
-      src.option("maxFilesPerTrigger", maxFilesPerTrigger) else src
-    val q = domainCapStream(srcOpt.parquet(dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+                       glob: String = "documents.parquet"): DataFrame =
+    toMemory(
+      domainCapStream(fileStream(spark, dir, DocumentsSchema, Some(glob), maxFilesPerTrigger)),
+      queryName, OutputMode.Update())
 
   /** Per-type state of [[rateAnomalyStream]]: counts for the hours a future
     * verdict can still reference (the open hour + its trailing
@@ -864,16 +803,8 @@ object Streams {
                          queryName: String = "rate_anomaly"): DataFrame = {
     import spark.implicits._
     val horizon = s"${graft.queries.EventQueries.TrailHours} hours"
-    val q = rateAnomalyStream(
-      eventStream(spark, dir).withWatermark("ts", horizon).as[Event])
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    toMemory(rateAnomalyStream(
+      eventStream(spark, dir).withWatermark("ts", horizon).as[Event]), queryName)
   }
 
   /** Streaming twin of the curation hash-sampler (c1_hash_sample): the salted
@@ -982,30 +913,14 @@ object Streams {
                                  k: Int = graft.queries.TextQueries.HeavyK,
                                  windowDur: String = "1 hour",
                                  watermarkDelay: String = "2 hours",
-                                 queryName: String = "heavy_hitters_day"): DataFrame = {
-    val q = heavyHittersStream(streamDocs, k, windowDur, watermarkDelay)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recountHeavyHitters(spark.table(queryName), batchDocs, k, windowDur)
-  }
+                                 queryName: String = "heavy_hitters_day"): DataFrame =
+    recountHeavyHitters(
+      toMemory(heavyHittersStream(streamDocs, k, windowDur, watermarkDelay), queryName),
+      batchDocs, k, windowDur)
 
   /** Run the streaming sampler end-to-end (AvailableNow, memory sink). */
-  def runSampleOnce(spark: SparkSession, dir: String, queryName: String = "sample"): DataFrame = {
-    val q = sampleStream(documentStream(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+  def runSampleOnce(spark: SparkSession, dir: String, queryName: String = "sample"): DataFrame =
+    toMemory(sampleStream(documentStream(spark, dir)), queryName)
 
   /** Streaming lake ingest: events → DATE-PARTITIONED parquet file sink —
     * the layout every long-lived ingest lands on (and the one
@@ -1028,16 +943,13 @@ object Streams {
     // real ingest's task count (each trigger then drops up to that many
     // files into every date leaf it touches: the small-file genesis that
     // compactPartitionedParquet exists to clean up)
-    val q = parallelism.fold(dated)(n => dated.repartition(n))
+    runToEnd(parallelism.fold(dated)(n => dated.repartition(n))
       .writeStream
       .format("parquet")
       .option("path", outPath)
       .option("checkpointLocation", checkpointPath)
       .partitionBy("event_date")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode(OutputMode.Append()))
   }
 
   /** Streaming admission — the 16th pipeline: p2's corpus-near-dup
@@ -1105,28 +1017,16 @@ object Streams {
       .agg(collect_list(struct(col("doc_id").as("cid"), col("sh").as("csh"))).as("posts"))
   }
 
-  /** VERSIONED publish/load pair for the persisted postings artifact
-    * (VERDICT r14 missing #2, stream side): `appendBandIndex`-style
-    * in-place parquet appends are racy for an ALWAYS-ON reader on
-    * rename-less object stores — a micro-batch re-plan can list a
-    * half-written append. Publish each corpus version's postings as an
-    * immutable [[graft.sources.Manifests]] segment instead; the loader
-    * resolves the newest COMPLETE segment set once, driver-side, so the
-    * stream probes a consistent snapshot (re-create the stream to adopt a
-    * later version — the freshness contract the StreamingSpec append test
-    * drives). Cross-segment duplicate bkeys are exactly the
-    * append-maintained shape [[admissionStreamAgainst]] re-groups. */
-  def publishAdmissionPostings(postings: DataFrame, root: String): Long =
-    graft.sources.Manifests.appendSegment(postings, root)
-
-  /** The current complete postings snapshot under a versioned root. */
-  def admissionPostingsVersioned(s: org.apache.spark.sql.SparkSession,
-                                 root: String): DataFrame =
-    graft.sources.Manifests.readSegments(s, root)
-
   /** [[admissionStream]] against a caller-supplied postings map — pass a
     * frame backed by persisted files to have per-micro-batch re-planning
-    * pick up corpus appends without a stream restart.
+    * pick up corpus appends without a stream restart. On a rename-less
+    * object store, in-place parquet appends are racy for an always-on
+    * reader (a micro-batch re-plan can list a half-written append): publish
+    * each corpus version's postings as an immutable segment with
+    * [[graft.sources.Manifests.appendSegment]] and pass
+    * [[graft.sources.Manifests.readSegments]], which resolves the newest
+    * complete segment set once, driver-side (re-create the stream to adopt
+    * a later version).
     *
     * The supplied frame need NOT be bkey-unique (ADVICE r13): a postings
     * artifact maintained by per-version APPENDS naturally accumulates
@@ -1308,8 +1208,7 @@ object Streams {
     *
     * SNAPSHOT semantics, not append: model and thresholds are not
     * unionable, so each corpus build publishes a complete fresh bundle
-    * (contrast [[publishAdmissionPostings]]'s append-maintained segment
-    * root, which serves streams that track index growth WITHIN a corpus
+    * (contrast the admission postings' append-maintained segment root, which serves streams that track index growth WITHIN a corpus
     * version). Superseded bundle dirs stay on disk for reader grace — a
     * stream resolved against bundle n keeps reading it after n+1 publishes;
     * reap them with [[graft.sources.Manifests.vacuumSnapshots]] (retention
@@ -1320,15 +1219,32 @@ object Streams {
     * unreferenced-means-leaked rule is an APPEND-protocol invariant and
     * would delete every superseded snapshot immediately). Single publisher
     * per root (the Manifests discipline); returns the manifest number. */
-  def publishDay2Artifacts(art: Day2Artifacts, root: String): Long = {
-    val s = art.benchGrams.sparkSession
+  def publishDay2Artifacts(art: Day2Artifacts, root: String): Long =
+    publishBundle(root, "bench_grams" -> art.benchGrams, "model" -> art.model,
+      "thresholds" -> art.thresholds, "postings" -> art.postings)
+
+  /** The one snapshot publish behind both day-2 bundle forms: each named
+    * leg is written under a fresh `bundle-<uuid>` directory (ErrorIfExists),
+    * then one [[graft.sources.Manifests]] manifest names that directory. */
+  private def publishBundle(root: String, legs: (String, DataFrame)*): Long = {
     val bundle = s"bundle-${java.util.UUID.randomUUID()}"
-    val EIE = org.apache.spark.sql.SaveMode.ErrorIfExists
-    art.benchGrams.write.mode(EIE).parquet(s"$root/$bundle/bench_grams")
-    art.model.write.mode(EIE).parquet(s"$root/$bundle/model")
-    art.thresholds.write.mode(EIE).parquet(s"$root/$bundle/thresholds")
-    art.postings.write.mode(EIE).parquet(s"$root/$bundle/postings")
-    graft.sources.Manifests.publish(s, root, Seq(bundle))
+    legs.foreach { case (name, df) =>
+      df.write.mode(SaveMode.ErrorIfExists).parquet(s"$root/$bundle/$name")
+    }
+    graft.sources.Manifests.publish(legs.head._2.sparkSession, root, Seq(bundle))
+  }
+
+  /** The one bundle directory `root`'s manifest names; refuses, naming the
+    * root and `caller`, unless it resolves to exactly one `bundle-<uuid>`
+    * line. */
+  private def resolveBundle(s: SparkSession, root: String, caller: String,
+                            publisher: String): String = {
+    val lines = graft.sources.Manifests.resolve(s, root)
+    require(lines.length == 1 && lines.head.startsWith("bundle-"),
+      s"$caller: $root resolves to $lines — not a day-2 bundle manifest " +
+        "(expected exactly one bundle-<uuid> line; was this root published " +
+        s"by $publisher?)")
+    s"$root/${lines.head}"
   }
 
   /** The current complete bundle under a versioned root, each frame
@@ -1340,12 +1256,7 @@ object Streams {
     * later publish (the [[substringArtifactsVersioned]] freshness
     * contract). */
   def day2ArtifactsVersioned(s: SparkSession, root: String): Day2Artifacts = {
-    val lines = graft.sources.Manifests.resolve(s, root)
-    require(lines.length == 1 && lines.head.startsWith("bundle-"),
-      s"day2ArtifactsVersioned: $root resolves to $lines — not a day-2 bundle " +
-        "manifest (expected exactly one bundle-<uuid> line; was this root " +
-        "published by publishDay2Artifacts?)")
-    val b = s"$root/${lines.head}"
+    val b = resolveBundle(s, root, "day2ArtifactsVersioned", "publishDay2Artifacts")
     Day2Artifacts(
       graft.Checkpoints.eager(s.read.parquet(s"$b/bench_grams")),
       graft.Checkpoints.eager(s.read.parquet(s"$b/model")),
@@ -1360,17 +1271,9 @@ object Streams {
     * .vacuumSnapshots]]), with the LM written as plain parquet TABLES: the
     * legs that outgrow the broadcast form stay scannable and
     * semi-join-prunable at rest instead of riding one driver row. */
-  def publishDay2ShardedArtifacts(art: Day2ShardedArtifacts, root: String): Long = {
-    val s = art.benchGrams.sparkSession
-    val bundle = s"bundle-${java.util.UUID.randomUUID()}"
-    val EIE = org.apache.spark.sql.SaveMode.ErrorIfExists
-    art.benchGrams.write.mode(EIE).parquet(s"$root/$bundle/bench_grams")
-    art.cnt.write.mode(EIE).parquet(s"$root/$bundle/cnt")
-    art.pre.write.mode(EIE).parquet(s"$root/$bundle/pre")
-    art.thresholds.write.mode(EIE).parquet(s"$root/$bundle/thresholds")
-    art.postings.write.mode(EIE).parquet(s"$root/$bundle/postings")
-    graft.sources.Manifests.publish(s, root, Seq(bundle))
-  }
+  def publishDay2ShardedArtifacts(art: Day2ShardedArtifacts, root: String): Long =
+    publishBundle(root, "bench_grams" -> art.benchGrams, "cnt" -> art.cnt, "pre" -> art.pre,
+      "thresholds" -> art.thresholds, "postings" -> art.postings)
 
   /** The current complete TABLE-form bundle under a versioned root.
     * bench/thresholds/postings are eager-checkpointed as in
@@ -1381,12 +1284,8 @@ object Streams {
     * broadcast loader. */
   def day2ShardedArtifactsVersioned(s: SparkSession,
                                     root: String): Day2ShardedArtifacts = {
-    val lines = graft.sources.Manifests.resolve(s, root)
-    require(lines.length == 1 && lines.head.startsWith("bundle-"),
-      s"day2ShardedArtifactsVersioned: $root resolves to $lines — not a day-2 " +
-        "bundle manifest (expected exactly one bundle-<uuid> line; was this " +
-        "root published by publishDay2ShardedArtifacts?)")
-    val b = s"$root/${lines.head}"
+    val b = resolveBundle(s, root, "day2ShardedArtifactsVersioned",
+      "publishDay2ShardedArtifacts")
     Day2ShardedArtifacts(
       graft.Checkpoints.eager(s.read.parquet(s"$b/bench_grams")),
       s.read.parquet(s"$b/cnt"),
@@ -1534,8 +1433,8 @@ object Streams {
     * progress. */
   def runDay2AdmissionShardedOnce(arrivals: DataFrame, art: Day2ShardedArtifacts,
                                   outDir: String,
-                                  checkpointDir: String): StreamingQuery = {
-    val q = arrivals.writeStream
+                                  checkpointDir: String): StreamingQuery =
+    runToEnd(arrivals.writeStream
       .foreachBatch { (mb: DataFrame, id: Long) =>
         // persist the micro-batch: the scorer's plan reads the arrivals
         // several times (the binst prune legs + the scored branch) and an
@@ -1543,16 +1442,11 @@ object Streams {
         // observed 4× input_rows in the rehearsal before this
         val batch = mb.persist()
         try day2AdmissionShardedBatch(batch, art)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .write.mode(SaveMode.Overwrite)
           .parquet(s"$outDir/batch_id=$id")
         finally batch.unpersist()
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      .option("checkpointLocation", checkpointDir))
 
   /** The persisted probe side of the STREAMING substring twin: the corpus's
     * capped content-defined anchor postings, (h, cid, c_pos). Production
@@ -1606,7 +1500,7 @@ object Streams {
     *    rows twice, and duplicate token rows would multiply every hit (the
     *    admission stream's re-group rationale).
     * Both are one pass over the artifact at stream build, resolved once. */
-  def substringArtifactsVersioned(s: org.apache.spark.sql.SparkSession,
+  def substringArtifactsVersioned(s: SparkSession,
                                   root: String): (DataFrame, DataFrame) = {
     val D = graft.queries.DedupQueries
     // capPostings keys on h only — the (h, cid, c_pos) schema passes through
@@ -1710,32 +1604,14 @@ object Streams {
   /** Run the streaming admission end-to-end (AvailableNow, memory sink):
     * `corpus` static, the documents table replayed as the arrival stream. */
   def runAdmissionOnce(spark: SparkSession, dir: String, corpus: DataFrame,
-                       queryName: String = "admission"): DataFrame = {
-    val q = admissionStream(documentStream(spark, dir), corpus)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+                       queryName: String = "admission"): DataFrame =
+    toMemory(admissionStream(documentStream(spark, dir), corpus), queryName)
 
   /** Run sessionization end-to-end (AvailableNow, memory sink); returns the
     * CLOSED sessions emitted by the stream (open sessions remain in state —
     * the streaming contract). */
   def runSessionizeOnce(spark: SparkSession, dir: String, queryName: String = "sessions"): DataFrame = {
     import spark.implicits._
-    val ev = eventStream(spark, dir).as[Event]
-    val q = sessionize(ev)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    toMemory(sessionize(eventStream(spark, dir).as[Event]), queryName)
   }
 }

@@ -140,7 +140,7 @@ class StreamingSpec extends SparkSpec {
     //  - user 300 views inside the horizon → (1, open) only, state kept;
     //  - user 400 clicks but never views → NO state, NO rows (a funnel
     //    starts at a view; nothing to time out).
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.OutputMode
     val dir = java.nio.file.Files.createTempDirectory("graft-funnel-evict").toString
     val base = 1704067200L * 1000000L // 2024-01-01 00:00:00 UTC in µs
     val H = Streams.FunnelHorizonUs
@@ -161,10 +161,10 @@ class StreamingSpec extends SparkSpec {
       .find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/events.parquet"))
 
-    val q = Streams.funnelStream(Streams.eventStream(spark, dir).as[Streams.Event])
-      .writeStream.format("memory").queryName("funnel_evict_spec")
-      .outputMode(OutputMode.Update()).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val q = Streams.runToEnd(
+      Streams.funnelStream(Streams.eventStream(spark, dir).as[Streams.Event])
+        .writeStream.format("memory").queryName("funnel_evict_spec")
+        .outputMode(OutputMode.Update()))
     val raw = spark.table("funnel_evict_spec")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
@@ -445,7 +445,6 @@ class StreamingSpec extends SparkSpec {
     // per arrival with the dup count summed across versions (ADVICE r13).
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def doc(p: String) = (0 until 12).map(i => s"$p$i").mkString(" ")
     val posts = java.nio.file.Files.createTempDirectory("postings").toString +
@@ -453,12 +452,9 @@ class StreamingSpec extends SparkSpec {
     def runOnce(name: String): Map[Long, (Int, Boolean)] = {
       val input = MemoryStream[(Long, String)]
       input.addData((20L, doc("c")), (21L, doc("x")), (22L, doc("f")))
-      val q = Streams.admissionStreamAgainst(
-          input.toDF().toDF("doc_id", "text"), spark.read.parquet(posts))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      Streams.toMemory(Streams.admissionStreamAgainst(
+          input.toDF().toDF("doc_id", "text"), spark.read.parquet(posts)), name)
+        .collect()
         .map(r => r.getLong(0) -> (r.getInt(1), r.getBoolean(2))).toMap
     }
     // version 1: only doc("c") content is indexed
@@ -483,31 +479,27 @@ class StreamingSpec extends SparkSpec {
     // probe side of an always-on stream.
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    import graft.sources.Manifests
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def doc(p: String) = (0 until 12).map(i => s"$p$i").mkString(" ")
     val root = java.nio.file.Files.createTempDirectory("postings-v").toString
     def runOnce(name: String): Map[Long, (Int, Boolean)] = {
       val input = MemoryStream[(Long, String)]
       input.addData((20L, doc("c")), (21L, doc("x")), (22L, doc("f")))
-      val q = Streams.admissionStreamAgainst(
-          input.toDF().toDF("doc_id", "text"),
-          Streams.admissionPostingsVersioned(spark, root))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      Streams.toMemory(Streams.admissionStreamAgainst(
+          input.toDF().toDF("doc_id", "text"), Manifests.readSegments(spark, root)), name)
+        .collect()
         .map(r => r.getLong(0) -> (r.getInt(1), r.getBoolean(2))).toMap
     }
     // version 1: only doc("c") content is indexed
-    Streams.publishAdmissionPostings(
+    Manifests.appendSegment(
       Streams.admissionPostings(Seq((1L, doc("c"))).toDF("doc_id", "text")), root)
     assert(runOnce("admv_v1") ===
       Map(20L -> (1, false), 21L -> (0, true), 22L -> (0, true)))
     // version 2 published: doc("x") newly indexed + doc("c") re-indexed
     // under a new id — duplicate bkeys across segments, re-grouped to one
     // verdict per arrival with the dup count summed (the append contract)
-    Streams.publishAdmissionPostings(
+    Manifests.appendSegment(
       Streams.admissionPostings(
         Seq((2L, doc("c")), (10L, doc("x"))).toDF("doc_id", "text")), root)
     // a torn manifest ABOVE the live one (crashed publisher) must not hide
@@ -527,7 +519,6 @@ class StreamingSpec extends SparkSpec {
     // row, not one per ~span/stride anchors, with zero streaming state.
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def w(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
     val A = w("aa", 600); val B = w("bb", 40)
@@ -541,12 +532,8 @@ class StreamingSpec extends SparkSpec {
     val store = graft.Checkpoints.eager(Streams.substringTokenStore(corpus))
     val input = MemoryStream[(Long, String)]
     input.addData(arrivals: _*)
-    val q = Streams.substringHitStream(
-        input.toDF().toDF("doc_id", "text"), posts, store)
-      .writeStream.format("memory").queryName("substr_hits")
-      .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("substr_hits").collect()
+    val got = Streams.toMemory(Streams.substringHitStream(
+        input.toDF().toDF("doc_id", "text"), posts, store), "substr_hits").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
     // batch twin: d16 over corpus ∪ arrivals, restricted to (corpus,
     // arrival) pairs — arrival-arrival spans (10 and 12 share aa0..aa99)
@@ -574,7 +561,6 @@ class StreamingSpec extends SparkSpec {
     // never resolve a posting whose cid the token store lacks
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def w(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
     val root = java.nio.file.Files.createTempDirectory("substr-v").toString
@@ -582,12 +568,9 @@ class StreamingSpec extends SparkSpec {
       val (posts, toks) = Streams.substringArtifactsVersioned(spark, root)
       val input = MemoryStream[(Long, String)]
       input.addData((20L, w("aa", 40)), (21L, w("bb", 40)))
-      val q = Streams.substringHitStream(
-          input.toDF().toDF("doc_id", "text"), posts, toks)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      Streams.toMemory(Streams.substringHitStream(
+          input.toDF().toDF("doc_id", "text"), posts, toks), name)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     // corpus v1: only the aa content exists
     Streams.publishSubstringArtifacts(Seq((1L, w("aa", 40))).toDF("doc_id", "text"), root)
@@ -606,12 +589,9 @@ class StreamingSpec extends SparkSpec {
       val (posts, toks) = Streams.substringArtifactsVersioned(spark, root)
       val input = MemoryStream[(Long, String)]
       input.addData((30L, w("bb", 40)))
-      val q = Streams.substringHitStream(
-          input.toDF().toDF("doc_id", "text"), posts, toks)
-        .writeStream.format("memory").queryName("sub_v3")
-        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table("sub_v3").collect().map(r => (r.getLong(0), r.getLong(1)))
+      Streams.toMemory(Streams.substringHitStream(
+          input.toDF().toDF("doc_id", "text"), posts, toks), "sub_v3")
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
     assert(hits.toSeq === Seq((30L, 2L)), s"duplicate publish must not multiply hits: ${hits.toSeq}")
   }
@@ -1035,7 +1015,6 @@ class StreamingSpec extends SparkSpec {
     // never pair a new index with an old model
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def w(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
     val C = graft.queries.CurationQueries
@@ -1059,12 +1038,9 @@ class StreamingSpec extends SparkSpec {
         (aAdmit, "en", "src1", w("dd", 40)),  // clean → admitted (v1)
         (aDup, "en", "src1", w("cc", 40)),    // exact dup of kept doc 2
         (aBench, "en", "src1", w("bz", 8) + " tail0")) // bench 8-gram overlap
-      val q = Streams.day2AdmissionStream(
-          input.toDF().toDF("doc_id", "lang", "source", "text"), art)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      Streams.toMemory(Streams.day2AdmissionStream(
+          input.toDF().toDF("doc_id", "lang", "source", "text"), art), name)
+        .collect()
         .map(r => r.getLong(0) -> (r.getInt(1), r.getBoolean(2))).toMap
     }
     val expect1 = Map(aAdmit -> (15, true), aDup -> (3, false), aBench -> (0, false))
@@ -1140,5 +1116,144 @@ class StreamingSpec extends SparkSpec {
     val cands = spark.table("hh_day_spec").collect()
       .map(r => (r.getTimestamp(0), r.getString(4))).toSet
     assert(cands.size > expected.size, s"expected over-report: $cands vs $expected")
+  }
+
+  /** Seeded events for the stateful property specs: time-sorted by
+    * (µs, event_id), all inside a 100-minute span (under the 2-hour
+    * watermark delay, so no timeout fires and no row is late). Timestamps
+    * cluster around three centres 40 minutes apart, so per-user gaps both
+    * above and below 30 min occur. Planted: user ids at or above 2^31, events
+    * in the same millisecond, and one gap of exactly 30 min. */
+  private def propertyEvents(rng: scala.util.Random): Seq[(Streams.Event, Long)] = {
+    val base = 1704067200L * 1000000L
+    val min = 60L * 1000000L
+    def ev(id: Long, us: Long, user: Long) = {
+      val t = new java.sql.Timestamp(math.floorDiv(us, 1000000L) * 1000L)
+      t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
+      Streams.Event(id, t, user, "view", 1.0, "{}") -> us
+    }
+    val users = (0 until 8).map(_.toLong) ++ (0 until 8).map(i => (1L << 31) + i)
+    val n = 200 + rng.nextInt(200)
+    val drawn = (1 to n).map { i =>
+      val us = base + rng.nextInt(3) * 40 * min + (rng.nextDouble() * 12 * min).toLong
+      ev(i.toLong, us, users(rng.nextInt(users.size)))
+    }
+    // same millisecond as a drawn event: a different microsecond, or for
+    // j = 0 and 5 the same one
+    val sameMs = drawn.take(10).zipWithIndex.map { case ((e, us), j) =>
+      ev(n + 1L + j, us - math.floorMod(us, 1000L) + (if (j % 5 == 0) math.floorMod(us, 1000L)
+        else (math.floorMod(us, 1000L) + 1 + j) % 1000), e.user_id)
+    }
+    // a gap of exactly 30 min does not split; a gap of 31 min does; the
+    // session opens with a same-millisecond pair whose ids run against its
+    // microseconds, so only a µs-first order starts it at `base`
+    val edge = Seq(0L, 30L, 61L).zipWithIndex.map { case (m, j) =>
+      ev(n + 100L + j, base + m * min, 1L << 32) } :+ ev(n + 99L, base + 900L, 1L << 32)
+    (drawn ++ sameMs ++ edge).sortBy { case (e, us) => (us, e.event_id) }
+  }
+
+  test("sessionize property: random event streams over random trigger splits == driver model") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.OutputMode
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val gapUs = 30L * 60 * 1000000
+    val rng = new scala.util.Random(5151)
+    for (round <- 1 to 3) {
+      val timed = propertyEvents(rng)
+      // exact duplicate rows: a duplicate counts as one more event
+      val feed = timed.flatMap(t => if (rng.nextInt(10) == 0) Seq(t, t) else Seq(t))
+      val input = MemoryStream[Streams.Event]
+      val name = s"sessionize_prop_$round"
+      val q = Streams.sessionize(input.toDS())
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        var rest = feed.map(_._1)
+        while (rest.nonEmpty) {
+          val take = 1 + rng.nextInt(80)
+          input.addData(rest.take(take)); q.processAllAvailable()
+          rest = rest.drop(take)
+        }
+      } finally q.stop()
+      val streamed = spark.table(name)
+        .select(col("user_id"), col("session_id"), col("n_events"),
+          unix_micros(col("session_start")), unix_micros(col("session_end")))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toSet
+      // driver model: per user, sort by (µs, event_id), split where the gap
+      // exceeds 30 min, drop the last (still open) session
+      val model = feed.groupBy(_._1.user_id).toSeq.flatMap { case (user, evs) =>
+        val us = evs.sortBy { case (e, t) => (t, e.event_id) }.map(_._2)
+        val sessions = us.tail.foldLeft(Vector(Vector(us.head))) { (acc, t) =>
+          if (t - acc.last.last > gapUs) acc :+ Vector(t) else acc.init :+ (acc.last :+ t)
+        }
+        sessions.init.zipWithIndex.map { case (s, i) =>
+          (user, i + 1L, s.size.toLong, s.head, s.last) }
+      }.toSet
+      assert(streamed === model, s"round $round (${feed.size} rows)")
+      assert(model.exists(_._1 >= (1L << 31)), "ids at or above 2^31 close sessions")
+      assert(model.exists(s => s._1 == (1L << 32) && s._5 - s._4 == gapUs),
+        "a gap of exactly 30 min stays inside one session")
+    }
+  }
+
+  test("dedupStream property: each event_id emitted once when copies span triggers") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.OutputMode
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val rng = new scala.util.Random(6262)
+    for (round <- 1 to 3) {
+      val events = propertyEvents(rng).map(_._1)
+      // the first copy goes to a random trigger; each later copy (up to two
+      // more) to a strictly later one
+      val nTriggers = 4 + rng.nextInt(6)
+      val triggers = Array.fill(nTriggers + 2)(Vector.empty[Streams.Event])
+      events.zipWithIndex.foreach { case (e, i) =>
+        val first = i * nTriggers / events.size
+        (0 until 1 + rng.nextInt(3)).foreach(c => triggers(first + c) :+= e)
+      }
+      val input = MemoryStream[Streams.Event]
+      val name = s"dedup_prop_$round"
+      val q = Streams.dedupStream(input.toDF(), Seq("event_id"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try triggers.filter(_.nonEmpty).foreach { t => input.addData(t); q.processAllAvailable() }
+      finally q.stop()
+      val ids = spark.table(name).collect().map(_.getAs[Long]("event_id")).toSeq
+      assert(ids.sorted === events.map(_.event_id).sorted, s"round $round")
+    }
+  }
+
+  test("a micro-batch failure makes run*Once throw and leaves no active query") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def causes(e: Throwable): Seq[String] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf).toSeq
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val rows = Seq(ts -> "a b c", ts -> "boom", ts -> "d e f")
+    val input = MemoryStream[(java.sql.Timestamp, String)]
+    input.addData(rows: _*)
+    val failing = input.toDF().toDF("ts", "text").withColumn("text",
+      when(col("text") === "boom", raise_error(lit("planted row failure")))
+        .otherwise(col("text")))
+    val e = intercept[Exception] {
+      Streams.runHeavyHittersRecountOnce(spark, failing, rows.toDF("ts", "text"),
+        queryName = "failing_memory_sink").collect()
+    }
+    assert(causes(e).exists(_.contains("planted row failure")), causes(e).mkString("\n"))
+    assert(spark.streams.active.isEmpty)
+    // the foreachBatch sink fails the same way
+    val again = MemoryStream[Long]
+    again.addData(1L, 2L)
+    val e2 = intercept[Exception] {
+      Streams.runToEnd(again.toDF().writeStream.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new IllegalStateException("planted batch failure")
+      })
+    }
+    assert(causes(e2).exists(_.contains("planted batch failure")), causes(e2).mkString("\n"))
+    assert(spark.streams.active.isEmpty)
   }
 }
