@@ -28,12 +28,17 @@ They are the trend counts of ROADMAP aim 2 (one default path per operator):
   unreferenced         top-level objects and object members of src/main whose
                        name appears nowhere else in src/main, src/test or
                        perfbench/scala; the names are printed to stderr
+  test_only            top-level objects and object members of src/main whose
+                       name appears in src/main only where it is declared,
+                       never in perfbench/scala, and at least once in
+                       src/test: library surface that only specs reach; the
+                       names are printed to stderr
 
 Every count except scala_lines is taken with comments removed, so a
 scaladoc that mentions a call does not count as one. unreferenced skips
 objects with a `def main` (entry points), GraftExtensions (Spark loads it
 by name), and members the compiler calls for the code: override, implicit,
-apply/unapply.
+apply/unapply; test_only skips the same names.
 """
 import json
 from collections import Counter
@@ -126,22 +131,26 @@ def declarations(code):
     return found
 
 
-def unreferenced(root, main_code):
+def word_counts(root, sub):
+    """Occurrences of each word in the comment-stripped .scala files under
+    ROOT/sub."""
+    uses = Counter()
+    for d, _, names in os.walk(os.path.join(root, *sub)):
+        for f in names:
+            if f.endswith(".scala"):
+                with open(os.path.join(d, f), encoding="utf-8") as fh:
+                    uses.update(re.findall(r"\w+", strip_comments(fh.read())))
+    return uses
+
+
+def declared_names(root, main_code, keep):
     """path:name of each declaration in main_code (path -> stripped source)
-    whose name appears nowhere else in src/main, src/test or perfbench/scala.
-    Objects with a `def main` are entry points and are not listed."""
-    corpus = list(main_code.values())
-    for sub in (("src", "test"), ("perfbench", "scala")):
-        for d, _, names in os.walk(os.path.join(root, *sub)):
-            for f in names:
-                if f.endswith(".scala"):
-                    with open(os.path.join(d, f), encoding="utf-8") as fh:
-                        corpus.append(strip_comments(fh.read()))
-    uses = Counter(w for text in corpus for w in re.findall(r"\w+", text))
+    for which keep(name) holds. Objects with a `def main` are entry points,
+    and names Spark loads by name are not code references; neither is listed."""
     return [f"{os.path.relpath(path, root)}:{name}"
             for path, code in sorted(main_code.items())
             for name, obj in declarations(code)
-            if uses[name] <= 1 and name not in LOADED_BY_NAME
+            if keep(name) and name not in LOADED_BY_NAME
             and not (obj and obj.has_main)]
 
 
@@ -177,9 +186,17 @@ def metrics(root):
         code[path] = strip_comments(src)
         code_lines += sum(1 for line in code[path].split("\n") if line.strip())
     text = "\n".join(code.values())
-    dead = unreferenced(root, code)
+    main_uses = Counter(re.findall(r"\w+", text))
+    test_uses = word_counts(root, ("src", "test"))
+    perf_uses = word_counts(root, ("perfbench", "scala"))
+    dead = declared_names(root, code, lambda name:
+                          main_uses[name] + test_uses[name] + perf_uses[name] <= 1)
     for name in dead:
         print(f"unreferenced: {name}", file=sys.stderr)
+    only_tested = declared_names(root, code, lambda name:
+                                 main_uses[name] <= 1 and not perf_uses[name] and test_uses[name])
+    for name in only_tested:
+        print(f"test_only: {name}", file=sys.stderr)
     gates = broadcast_gates(root, code)
     for site in gates:
         print(f"broadcast_gate: {site}", file=sys.stderr)
@@ -200,6 +217,7 @@ def metrics(root):
             r"\.eagerCheckpoint(?:KeepPartitioning)?\(|\bCheckpoints\.materialize\(", text)),
         "observations": len(re.findall(r"\bObservation\(", text)),
         "unreferenced": len(dead),
+        "test_only": len(only_tested),
         "broadcast_gates": len(gates),
         "stream_runs": len(runs),
     }

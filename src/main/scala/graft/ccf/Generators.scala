@@ -84,29 +84,10 @@ object Generators {
     * LEXICOGRAPHIC ("10000" < "2"), which scatters intermediate minima along
     * the chain and inflates the intermediate pair sets far beyond the numeric
     * ordering's clean doubling pattern — fine at reference sizes (≤1000),
-    * pathological at 10k+. Use [[chainLongDF]] for scale tests. */
+    * pathological at 10k+. Scale specs use the numeric-key chain in the test
+    * sources (`graft.ccf.ScaleGenerators.chainLongDF`). */
   def chainDF(spark: SparkSession, n: Long): DataFrame =
     spark.range(n - 1).select(
       col("id").cast("string").as("src"),
       (col("id") + 1).cast("string").as("dst"))
-
-  /** Numeric-key distributed chain: the scale path (numeric min-propagation
-    * has the O(log d) doubling dynamics the CCF paper analyzes). */
-  def chainLongDF(spark: SparkSession, n: Long): DataFrame =
-    spark.range(n - 1).select(col("id").as("src"), (col("id") + 1).as("dst"))
-
-  /** Distributed random-graph generator — the scale path the reference's
-    * driver-side rejection sampler cannot take (it materializes every edge on
-    * the driver). Deterministic hash-based sampling via xxhash64: ~nEdges
-    * distinct canonical edges over [0, nNodes), O(1) driver memory, fully
-    * parallel. Long ids (numeric ordering) — intended for scale tests, not
-    * reference-CSV parity. */
-  def randomDF(spark: SparkSession, nNodes: Long, nEdges: Long, seed: Int = 42): DataFrame =
-    spark.range(nEdges)
-      .select(
-        pmod(xxhash64(col("id") * 2 + seed), lit(nNodes)).as("a"),
-        pmod(xxhash64(col("id") * 2 + 1 + seed), lit(nNodes)).as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("src"), greatest(col("a"), col("b")).as("dst"))
-      .distinct()
 }

@@ -1,70 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, LongType}
-
-/**
- * N-ary Morton interleave (Delta/Iceberg's OPTIMIZE ZORDER takes N columns;
- * so do we): output bit `b*n + i` is child i's bit b, each child
- * contributing the low 64/n bits. n=2 takes the masked-spread fast path and
- * equals [[InterleaveBits]] exactly (ZOrderSpec pins the agreement).
- * NULL in any child yields NULL (layout callers coalesce first).
- */
-case class InterleaveBitsN(children: Seq[Expression]) extends Expression {
-
-  override def prettyName: String = "graft_interleave_bits_n"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.size < 2 || children.size > 8)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName takes 2..8 inputs, got ${children.size}")
-    else if (children.forall(_.dataType == LongType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires long inputs")
-
-  override def eval(input: InternalRow): Any = {
-    val xs = new Array[Long](children.size)
-    var i = 0
-    while (i < xs.length) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      xs(i) = v.asInstanceOf[Long]
-      i += 1
-    }
-    ZOrder.interleaveN(xs)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val arr = ctx.freshName("zin")
-    // short-circuit null like nullSafeCodeGen does for the binary form
-    val fills = evals.zipWithIndex.map { case (e, i) =>
-      s"""${e.code}
-         |if (${e.isNull}) { ${ev.isNull} = true; } else { $arr[$i] = ${e.value}; }
-         |if (!${ev.isNull}) {""".stripMargin
-    }
-    val closes = "}" * evals.size
-    val code =
-      code"""
-         |boolean ${ev.isNull} = false;
-         |long ${ev.value} = 0L;
-         |long[] $arr = new long[${evals.size}];
-         |${fills.mkString("\n")}
-         |  ${ev.value} = graft.functions.ZOrder.interleaveN($arr);
-         |$closes
-       """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
-}
 
 /**
  * Morton (Z-order) bit interleave of two long keys — the layout primitive
@@ -78,10 +17,8 @@ case class InterleaveBitsN(children: Seq[Expression]) extends Expression {
  * on BOTH columns — the standard lakehouse answer to two-column point/range
  * lookups without duplicating the table.
  *
- * Input contract: both children are longs whose meaningful range fits 32
- * bits (the layout path feeds quantile-bucket ids, which fit by
- * construction); only the low 32 bits of each participate. NULL in either
- * child yields NULL (layout callers coalesce first).
+ * Input contract: both children are longs; only the low 32 bits of each
+ * participate. NULL in either child yields NULL.
  */
 case class InterleaveBits(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -123,35 +60,4 @@ object ZOrder {
   /** Morton code: a's bits at even positions, b's at odd. */
   def interleave(a: Long, b: Long): Long =
     spread(a) | (spread(b) << 1)
-
-  /** N-ary Morton code: child i's bit b lands at output bit b*n + i
-    * (64/n meaningful bits per child). n=2 delegates to the masked-spread
-    * fast path; the general loop covers 3..8 dimensions. */
-  def interleaveN(xs: Array[Long]): Long = {
-    val n = xs.length
-    if (n == 2) return interleave(xs(0), xs(1))
-    val bitsPer = 64 / n
-    var out = 0L
-    var i = 0
-    while (i < n) {
-      val x = xs(i)
-      var b = 0
-      while (b < bitsPer) {
-        out |= ((x >>> b) & 1L) << (b * n + i)
-        b += 1
-      }
-      i += 1
-    }
-    out
-  }
-
-  /** Column form of [[InterleaveBits]]. */
-  def interleaveBits(a: Column, b: Column): Column =
-    Bridge.column(InterleaveBits(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Column form of [[InterleaveBitsN]] (2-column input routes to the
-    * binary fast-path expression). */
-  def interleaveBitsN(cols: Seq[Column]): Column =
-    if (cols.size == 2) interleaveBits(cols(0), cols(1))
-    else Bridge.column(InterleaveBitsN(cols.map(Bridge.expression)))
 }

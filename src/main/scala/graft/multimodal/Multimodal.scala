@@ -131,13 +131,4 @@ object Multimodal {
     import spark.implicits._
     media.mapPartitions { it => it.map(FakeCodec.resize(_, target)) }
   }
-
-  /** Metadata-only scan: payload column untouched (column pruning keeps the
-    * binary out of the scan entirely). */
-  def metadataSummary(media: Dataset[Media]): DataFrame =
-    media.toDF()
-      .groupBy("kind", "mime")
-      .agg(count(lit(1)).as("n"),
-           max("duration_ms").as("max_duration_ms"),
-           max("width").as("max_width"))
 }

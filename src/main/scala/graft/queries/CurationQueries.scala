@@ -361,11 +361,9 @@ object CurationQueries {
     // curation pipeline has, with the threshold COMPUTED from the data, not
     // configured. Exact `percentile` (== DuckDB quantile_cont, parity proven
     // by q25) per source; thresholds are one tiny row per source, broadcast
-    // back, so the doc stream is filtered with NO second shuffle. The exact
-    // per-group percentile collects each group's values (the oracle-parity
-    // choice); the 100 TB path is the mergeable-sketch approx_percentile
-    // twin [[quantileThresholdsApprox]] — same plan shape minus the collect,
-    // spec pins approx-vs-exact agreement.
+    // back, so the doc stream is filtered with NO second shuffle. Exact
+    // `percentile` is the one path: it collects each group's values, which
+    // is what DuckDB parity needs.
     "c8_quantile_filter" -> ((s, d) => {
       val dcs = docs(s, d)
       val th = dcs.groupBy("source")
@@ -375,15 +373,6 @@ object CurationQueries {
         .select(col("doc_id"), col("source"), col("n_chars"), col("p75"))
     })
   )
-
-  /** The c8 scale path: per-group thresholds from the mergeable
-    * approx_percentile sketch (map-side partial aggregation — the group's
-    * values are never collected anywhere). Same output contract as the
-    * exact aggregate it replaces. */
-  private[queries] def quantileThresholdsApprox(documents: DataFrame,
-                                               p: Double, acc: Int = 10000): DataFrame =
-    documents.groupBy("source")
-      .agg(percentile_approx(col("n_chars").cast("double"), lit(p), lit(acc)).as("p75"))
 
   /** The c6 distributed prefix-sum pipeline on any (doc_id, n_chars) frame —
     * parametric for the property spec (which checks it against a sequential

@@ -617,7 +617,7 @@ object DedupQueries {
 
   /** The corpus's persistable LSH band index: (doc_id, bkey) — ONE row per
     * doc per band. This is the table a production ingest writes once per
-    * admitted batch (via [[graft.sources.Sinks.writeParquet]]) and re-reads
+    * admitted batch (a plain parquet write) and re-reads
     * on the next batch, so the corpus's text is never re-shingled wholesale;
     * pass it to [[incrementalDedup]] as `oldIndex`. */
   def lshBandIndex(docs: DataFrame): DataFrame = lshBands(shingleSetsOf(docs))

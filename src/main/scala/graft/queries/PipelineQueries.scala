@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
  * n_chars→shards), so the single-scan shape loses nothing to column
  * pruning. Per stage the scale shapes are inherited from the proven
  * operators: the bench gram set blooms map-side (c7), per-lang thresholds
- * broadcast (t12 — swap in [[TextQueries.lmThresholdsApprox]] at scale),
+ * broadcast (t12),
  * banding bounds the candidate join (d3), the shard pack is the c6
  * distributed prefix sum. The verdict assembly left-joins five SHRINKING
  * doc_id sets keyed by doc_id — O(sample) rows each after stage 1.

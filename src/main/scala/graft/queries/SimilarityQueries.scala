@@ -304,25 +304,6 @@ object SimilarityQueries {
       iters)
   }
 
-  /** The 100 TB training path, as code rather than a comment: fit the
-    * quantizer on a deterministic salted-hash SAMPLE of the corpus (the c1
-    * sampler's replay-stable shape — never rand()), so the per-(cell, dim)
-    * collect-based means are bounded by sample size, not corpus size. Seeds
-    * are the k lowest vec_ids PRESENT in the sample (the unsampled gated
-    * path keeps its `vec_id < k` contract untouched). `permille` = sample
-    * rate in 1/1000ths. Spec pins that sample-trained centroids still beat
-    * the untrained seed on the FULL corpus and stay close to full
-    * training. */
-  def trainCentroidsSampled(s: SparkSession, d: String, iters: Int,
-                            permille: Int = 100): DataFrame = {
-    val ed = edOf(s, d)
-    val sample = ed.where(pmod(xxhash64(col("vec_id"), lit("ivf-train")), lit(1000)) < permille)
-    lloydTrain(sample,
-      sample.orderBy("vec_id").limit(NumCentroids)
-        .select(col("vec_id").as("cid"), col("v").as("cv")),
-      iters)
-  }
-
   /** Bounded seed-candidate pool for [[retrainCentroids]] — collected to the
     * driver (≤ this many rows regardless of corpus size). */
   private val SeedPoolSize = 1000

@@ -109,9 +109,7 @@ object TextQueries {
     // 100 TB notes: same shape as c8 — the per-lang thresholds are a
     // languages-row aggregate joined back by BROADCAST; the gate itself is
     // map-side. The exact `percentile` aggregate buffers each lang's scores
-    // on its reducer (oracle-parity choice); production swaps in the
-    // mergeable percentile_approx sketch via [[lmThresholdsApprox]] — same
-    // output contract, spec pins approx tracks exact.
+    // on its reducer (oracle-parity choice), as in c8.
     "t12_lm_quality" -> ((s, d) => {
       val scored = defs("t9_bigram_lm")(s, d)
       // r18 (guide §7.2): sl feeds the per-lang percentile AND the gate
@@ -430,14 +428,6 @@ object TextQueries {
         collect_list(struct(col("g").as("g"), col("p").as("t"))))
         / count(lit(1))).as("avg_p"))
   }
-
-  /** t12's scale path for the per-lang cut, exactly [[CurationQueries]]'
-    * c8 move: the mergeable approx_percentile sketch (map-side partials,
-    * no per-lang value buffering) replacing the exact `percentile`. */
-  private[queries] def lmThresholdsApprox(scoredWithLang: DataFrame,
-                                          p: Double, acc: Int = 10000): DataFrame =
-    scoredWithLang.groupBy("lang")
-      .agg(percentile_approx(col("avg_p"), lit(p), lit(acc)).as("p30"))
 
   val oracles: Map[String, String] = Map(
     "t1_token_stats" ->

@@ -923,17 +923,14 @@ object Streams {
     toMemory(sampleStream(documentStream(spark, dir)), queryName)
 
   /** Streaming lake ingest: events → DATE-PARTITIONED parquet file sink —
-    * the layout every long-lived ingest lands on (and the one
-    * [[graft.sources.Sinks.compactPartitionedParquet]] maintains: a
-    * per-trigger micro-batch leaves small files in every `event_date=` leaf).
+    * the layout every long-lived ingest lands on (a per-trigger micro-batch
+    * leaves small files in every `event_date=` leaf).
     * Exactly-once via the checkpoint + the sink's `_spark_metadata` log;
     * downstream batch readers prune on `event_date`.
     *
     * 100 TB notes: partitioning by event date keeps each trigger's append
     * localized to the dates it carries; the partition column comes from the
-    * event time (not processing time) so replays land in the same leaves.
-    * Compact a RETIRED prefix only — compaction finalizes the sink's metadata
-    * log away (see compactPartitionedParquet's scaladoc). */
+    * event time (not processing time) so replays land in the same leaves. */
   def runEventsToPartitionedParquet(spark: SparkSession, dir: String,
                                     outPath: String, checkpointPath: String,
                                     parallelism: Option[Int] = None): Unit = {
@@ -941,8 +938,7 @@ object Streams {
       .withColumn("event_date", to_date(col("ts")))
     // the sink writes one file per task per leaf — `parallelism` models a
     // real ingest's task count (each trigger then drops up to that many
-    // files into every date leaf it touches: the small-file genesis that
-    // compactPartitionedParquet exists to clean up)
+    // files into every date leaf it touches)
     runToEnd(parallelism.fold(dated)(n => dated.repartition(n))
       .writeStream
       .format("parquet")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.Checkpoints.EagerOps
-import graft.ccf.{CCF, Generators, PointerJump}
+import graft.ccf.{CCF, Generators, PointerJump, ScaleGenerators}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.functions.col
@@ -38,7 +38,7 @@ class SessionConfSpec extends SparkSpec {
       CCF.run(Generators.toDF(s, Generators.randomGraph(300, 600, seed = 7)))
         .assignments.count()
       PointerJump.run(Generators.chainDF(s, 2000)).assignments.count()
-      val large = Generators.randomDF(s, 20000, 60000)
+      val large = ScaleGenerators.randomDF(s, 20000, 60000)
       assert(CCF.bidirect(large).distinct().count() > 100000L)
       PointerJump.run(large).assignments.count()
       val dense = CCF.auto(Generators.toDF(s, Generators.randomGraph(200, 4000, seed = 3)))
@@ -47,7 +47,7 @@ class SessionConfSpec extends SparkSpec {
       val handOff = CCF.auto(Generators.chainDF(s, 500))
       assert(handOff.engine === "ccf+pj")
       handOff.assignments.count()
-      Generators.chainLongDF(s, 100).repartition(col("src"))
+      ScaleGenerators.chainLongDF(s, 100).repartition(col("src"))
         .eagerCheckpointKeepPartitioning().count()
       SparkEntry.queries("q8_rollup")(s, sf()).count()
     } finally {

@@ -113,7 +113,7 @@ class CCFPropertySpec extends SparkSpec {
     // 533,247 long-keyed input pairs from a plan: round 1 runs declaratively
     // over the entry checkpoint, its deduplicated output drops below
     // MicroFixpoint.FusedRows, and rounds 2-3 run on the driver
-    "dense randomDF 2000/620000" -> (s => Generators.randomDF(s, 2000, 620000)),
+    "dense randomDF 2000/620000" -> (s => ScaleGenerators.randomDF(s, 2000, 620000)),
     // 529,000 driver-local pairs, past MicroFixpoint.FusedRows, 2,000 of them
     // repeated and 2,000 reversed: round 1 runs declaratively over the
     // RDD-backed hand-off frame, not the LocalRelation, and counts NewPairs
@@ -288,7 +288,7 @@ class CCFPropertySpec extends SparkSpec {
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set(graft.Checkpoints.BroadcastBudgetKey, (n * 28).toString)
     for ((keys, edges, broadcasts) <- Seq(
-        ("long", Generators.chainLongDF(s, n), true),
+        ("long", ScaleGenerators.chainLongDF(s, n), true),
         ("string", Generators.toDF(s, Generators.chainGraph(n)), false))) {
       val (r, plans) = actionPlans(s)(PointerJump.run(edges))
       assert(r.converged, keys)

@@ -227,7 +227,7 @@ class CCFSpec extends SparkSpec {
 
     // the callers' checkpoints: a long-keyed canonical edge set, its
     // bidirected frame, PageRank's build tables, and Lloyd's vectors and seeds
-    val e = Generators.randomDF(spark, 100, 300).eagerCheckpoint()
+    val e = ScaleGenerators.randomDF(spark, 100, 300).eagerCheckpoint()
     val bi = CCF.bidirect(e).eagerCheckpoint()
     val deg = CCF.bidirect(e).groupBy("src").agg(count(lit(1)).as("outdeg")).eagerCheckpoint()
     val outE = CCF.bidirect(e).join(deg, "src").eagerCheckpoint()
@@ -241,9 +241,9 @@ class CCFSpec extends SparkSpec {
 
     val shuffled = spark.newSession()
     shuffled.conf.set(graft.Checkpoints.BroadcastBudgetKey, "0")
-    val shuffledE = Generators.randomDF(shuffled, 100, 300)
+    val shuffledE = ScaleGenerators.randomDF(shuffled, 100, 300)
     val chain = Generators.chainGraph(200)
-    def decimalChain = Generators.chainLongDF(spark, 50)
+    def decimalChain = ScaleGenerators.chainLongDF(spark, 50)
       .select(col("src").cast("decimal(20,0)"), col("dst").cast("decimal(20,0)"))
     val cases: Seq[(String, () => DataFrame)] = Seq(
       // string chain 1000 hands round 11 from the driver to a declarative

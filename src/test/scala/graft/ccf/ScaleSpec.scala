@@ -13,17 +13,17 @@ class ScaleSpec extends SparkSpec {
     // chains are CCF's intermediate-data worst case (pair sets double per
     // round — see CCF scaladoc), so the scale knob here is deliberately
     // modest; the random-graph test below is the realistic-topology scale run
-    val r = CCF.run(Generators.chainLongDF(spark, 2000))
+    val r = CCF.run(ScaleGenerators.chainLongDF(spark, 2000))
     assert(r.converged)
     assert(r.iterations >= 12 && r.iterations <= 18, r.iterations.toString)
     assert(CCF.componentCount(r.assignments) === 1L)
   }
 
   test("distributed random graph: 50k edges, deterministic, converges") {
-    val g = Generators.randomDF(spark, 10000, 50000)
+    val g = ScaleGenerators.randomDF(spark, 10000, 50000)
     val edgeCount = g.count()
     assert(edgeCount > 40000) // distinct-sampled, close to requested
-    assert(Generators.randomDF(spark, 10000, 50000).count() === edgeCount) // deterministic
+    assert(ScaleGenerators.randomDF(spark, 10000, 50000).count() === edgeCount) // deterministic
     val r = CCF.run(g)
     assert(r.converged)
     // at density ~5 edges/node a random graph is 1 giant component whp

@@ -4,7 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Morton interleave: known bit patterns, curve locality, and
-  * codegen/interpreted agreement. */
+  * codegen/interpreted agreement through the SQL-registered
+  * `graft_interleave_bits`. */
 class ZOrderSpec extends SparkSpec {
 
   test("known bit patterns") {
@@ -27,68 +28,28 @@ class ZOrderSpec extends SparkSpec {
 
   test("codegen agrees with interpreted eval") {
     import spark.implicits._
+    GraftFunctions.registerAll(spark)
     val df = (0L until 1000L).map(i => (i * 2654435761L & 0xFFFFFFFFL,
       i * 40503L & 0xFFFFFFFFL)).toDF("a", "b")
-    val viaDf = df.select(ZOrder.interleaveBits(col("a"), col("b")))
+    val viaDf = df.select(expr("graft_interleave_bits(a, b)"))
       .collect().map(_.getLong(0))
     val direct = df.collect().map(r => ZOrder.interleave(r.getLong(0), r.getLong(1)))
     assert(viaDf.toSeq === direct.toSeq)
     val prev = spark.conf.get("spark.sql.codegen.wholeStage")
     try {
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      val interp = df.select(ZOrder.interleaveBits(col("a"), col("b")))
+      val interp = df.select(expr("graft_interleave_bits(a, b)"))
         .collect().map(_.getLong(0))
       assert(interp.toSeq === direct.toSeq)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
-  }
-
-  test("N-ary interleave: known patterns, 2-ary agreement, codegen, nulls") {
-    import spark.implicits._
-    // 3-D: child i's bit b lands at output bit 3b+i
-    assert(ZOrder.interleaveN(Array(1L, 0L, 0L)) === 1L)
-    assert(ZOrder.interleaveN(Array(0L, 1L, 0L)) === 2L)
-    assert(ZOrder.interleaveN(Array(0L, 0L, 1L)) === 4L)
-    assert(ZOrder.interleaveN(Array(3L, 3L, 3L)) === 63L)   // 0b111111
-    assert(ZOrder.interleaveN(Array(0L, 0L, 2L)) === 32L)   // bit 1 of dim 2 -> bit 5
-    // n=2 must equal the masked-spread fast path bit-for-bit
-    (0L until 500L).foreach { i =>
-      val (a, b) = (i * 2654435761L & 0xFFFFFFFFL, i * 40503L & 0xFFFFFFFFL)
-      assert(ZOrder.interleaveN(Array(a, b)) === ZOrder.interleave(a, b))
-    }
-    // 3-D curve locality: a 2x2x2-aligned block is 8 consecutive codes
-    for (bx <- 0 until 4; by <- 0 until 4; bz <- 0 until 4) {
-      val codes = for (dx <- 0 to 1; dy <- 0 to 1; dz <- 0 to 1)
-        yield ZOrder.interleaveN(Array(bx * 2L + dx, by * 2L + dy, bz * 2L + dz))
-      val s = codes.sorted
-      assert(s.last - s.head === 7L, s"block ($bx,$by,$bz): $s")
-    }
-    // codegen and interpreted agree through the Column API
-    val df = (0L until 500L).map(i => (i % 16, (i / 16) % 16, i / 256)).toDF("a", "b", "c")
-    val viaDf = df.select(ZOrder.interleaveBitsN(Seq(col("a"), col("b"), col("c"))))
-      .collect().map(_.getLong(0))
-    val direct = df.collect().map(r =>
-      ZOrder.interleaveN(Array(r.getLong(0), r.getLong(1), r.getLong(2))))
-    assert(viaDf.toSeq === direct.toSeq)
-    val prev = spark.conf.get("spark.sql.codegen.wholeStage")
-    try {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      val interp = df.select(ZOrder.interleaveBitsN(Seq(col("a"), col("b"), col("c"))))
-        .collect().map(_.getLong(0))
-      assert(interp.toSeq === direct.toSeq)
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
-    // null in any input yields null
-    val nf = Seq((Some(1L), Some(1L), None: Option[Long]),
-      (Some(1L), Some(1L), Some(1L))).toDF("a", "b", "c")
-    val out = nf.select(ZOrder.interleaveBitsN(Seq(col("a"), col("b"), col("c")))).collect()
-    assert(out.count(_.isNullAt(0)) === 1)
-    assert(out.exists(r => !r.isNullAt(0) && r.getLong(0) === 7L))
   }
 
   test("null in either input yields null") {
     import spark.implicits._
+    GraftFunctions.registerAll(spark)
     val df = Seq((Some(1L), None: Option[Long]), (None: Option[Long], Some(2L)),
       (Some(1L), Some(1L))).toDF("a", "b")
-    val out = df.select(ZOrder.interleaveBits(col("a"), col("b"))).collect()
+    val out = df.select(expr("graft_interleave_bits(a, b)")).collect()
     assert(out.count(_.isNullAt(0)) === 2)
     assert(out.exists(r => !r.isNullAt(0) && r.getLong(0) === 3L))
   }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.sources.{Sinks, Tables}
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 /** End-to-end composition: the library's operators chained the way a
@@ -46,7 +46,7 @@ class CurationPipelineSpec extends SparkSpec {
     // 5. sink: partitioned by lang, read back identical
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
     try {
-      Sinks.writePartitionedParquet(sampled, out, "lang")
+      sampled.write.mode("overwrite").partitionBy("lang").parquet(out)
       val back = spark.read.parquet(out)
         .select("doc_id", "lang", "source", "n_chars")
       assert(back.collect().toSet ===

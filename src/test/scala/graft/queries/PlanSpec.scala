@@ -631,7 +631,7 @@ class PlanSpec extends SparkSpec {
       val s = spark.newSession()
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       budget.foreach(s.conf.set(graft.Checkpoints.BroadcastBudgetKey, _))
-      val edges = graft.ccf.Generators.chainLongDF(s, 50)
+      val edges = graft.ccf.ScaleGenerators.chainLongDF(s, 50)
       val (r, plans) = actionPlans(s)(graft.ccf.PointerJump.run(edges, maxIterations = 1))
       assert(r.iterations === 1)
       val rounds = plans.map(_.split("== Initial Plan ==")(0)).filter(_.contains("_tl1"))

@@ -900,66 +900,26 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === ev.count())
   }
 
-  test("lake maintenance: file sink -> date partitions -> compaction -> pruned re-read") {
-    // The composed pipeline the r6/r7 sink features exist for: a streaming
-    // ingest lands date-partitioned parquet with many small files; the
-    // maintenance pass compacts each leaf; readers still prune and see
-    // identical data.
+  test("lake ingest: file sink -> date partitions -> pruned re-read") {
+    // a streaming ingest lands date-partitioned parquet; batch readers see
+    // the batch table's rows and prune on the partition column
     val tmp = java.nio.file.Files.createTempDirectory("graft-lake").toString
     val lake = s"$tmp/events_lake"
     Streams.runEventsToPartitionedParquet(spark, sf(), lake, s"$tmp/ckpt",
       parallelism = Some(4))
     val batch = graft.sources.Tables.events(spark, sf())
       .withColumn("event_date", to_date(col("ts")))
-    // stream == batch before compaction (exactly-once file sink)
-    val before = spark.read.parquet(lake)
-    assert(before.count() === batch.count())
-    // the sink is retired at this point; without the explicit finalize flag
-    // compaction must refuse to touch the sink's commit log
-    val refused = intercept[IllegalArgumentException] {
-      graft.sources.Sinks.compactPartitionedParquet(
-        spark, lake, s"$tmp/events_lake.compact", targetBytes = 64L * 1024 * 1024)
-    }
-    assert(refused.getMessage.contains("_spark_metadata"), refused.getMessage)
-    assert(new java.io.File(s"$lake/_spark_metadata").exists())
-    // a bad tmpPath (different filesystem) must ALSO fail with the commit
-    // log untouched — the destructive finalize comes after ALL validation
-    intercept[IllegalArgumentException] {
-      graft.sources.Sinks.compactPartitionedParquet(
-        spark, lake, "hdfs://elsewhere/x", targetBytes = 64L * 1024 * 1024,
-        finalizeStreamingSink = true)
-    }
-    assert(new java.io.File(s"$lake/_spark_metadata").exists(),
-      "the sink log must survive a failed-validation finalize attempt")
-    // plant an UNCOMMITTED part-file (a crashed batch's leftover — on disk
-    // but absent from the commit log): finalization must delete it, not
-    // silently legitimize its rows via plain listing
-    val leafDir = new java.io.File(lake).listFiles().filter(_.isDirectory)
-      .map(_.getName).find(_.startsWith("event_date=")).get
-    val orphanSrc = batch.limit(7).drop("event_date") // the leaf-file schema
-    orphanSrc.coalesce(1).write.parquet(s"$tmp/orphan_stage")
-    val orphanPart = new java.io.File(s"$tmp/orphan_stage").listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    val planted = java.nio.file.Files.copy(orphanPart.toPath,
-      java.nio.file.Path.of(lake, leafDir, "part-uncommitted-orphan.parquet"))
-    val (nBefore, nAfter) = graft.sources.Sinks.compactPartitionedParquet(
-      spark, lake, s"$tmp/events_lake.compact", targetBytes = 64L * 1024 * 1024,
-      finalizeStreamingSink = true)
-    assert(!java.nio.file.Files.exists(planted),
-      "the uncommitted orphan must be reconciled away before the log drops")
-    assert(nAfter < nBefore, s"$nAfter !< $nBefore")
-    // the sink's transaction log was finalized away — plain listing reads work
-    assert(!new java.io.File(s"$lake/_spark_metadata").exists())
-    val after = spark.read.parquet(lake)
-    assert(after.count() === batch.count())
-    assert(after.agg(sum("event_id")).head.getLong(0) ===
+    // stream == batch (exactly-once file sink)
+    val landed = spark.read.parquet(lake)
+    assert(landed.count() === batch.count())
+    assert(landed.agg(sum("event_id")).head.getLong(0) ===
       batch.agg(sum("event_id")).head.getLong(0))
-    // partition pruning survives compaction: filter on event_date reaches the
-    // scan as a PartitionFilter and returns exactly that date's rows
+    // a filter on event_date reaches the scan as a PartitionFilter and
+    // returns exactly that date's rows
     val d = new java.io.File(lake).listFiles().filter(_.isDirectory)
       .map(_.getName).find(_.startsWith("event_date=")).get
       .stripPrefix("event_date=")
-    val pruned = after.where(col("event_date") === lit(d).cast("date"))
+    val pruned = landed.where(col("event_date") === lit(d).cast("date"))
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(event_date"), plan)
     assert(pruned.count() ===
